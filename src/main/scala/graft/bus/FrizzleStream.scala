@@ -314,26 +314,21 @@ final class FrizzleStream(
         col("dest").cast("string").as("dest"), col("failed").cast("boolean").as("failed"))
       .persist()
     try {
-      // Single stats pass: one aggregation job yields every counter (a
-      // count() per counter would launch one job each — needless work per
-      // epoch at high trigger rates). Per-dest send counts ride along via
-      // a pivot-free map aggregation.
-      val statRow = routed.agg(
-        count(lit(1)).as("total"),
-        count(when(col("failed"), 1)).as("n_failed"),
-        count(when(!col("failed") && col("dest").isNotNull, 1)).as("n_send"))
-        .head()
-      val total = statRow.getLong(0)
-      val nFailed = statRow.getLong(1)
-      val nSend = statRow.getLong(2)
+      // Single stats pass: one (dest, failed) census yields every counter
+      // and the per-dest send counts. Destinations are topic names — a
+      // small bounded set by design, so collecting one micro-batch's census
+      // (≤ 3 rows per dest) is driver-safe at any data scale. A row whose
+      // `failed` is null, or that is not failed and has a null `dest`,
+      // counts in rcv and ack only: it is neither failed nor sendable.
+      val census = routed.groupBy("dest", "failed").count()
+        .as[(Option[String], Option[Boolean], Long)].collect()
+      val total = census.map(_._3).sum
+      val nFailed = census.collect { case (_, Some(true), n) => n }.sum
+      val destCounts = census.collect { case (Some(d), Some(false), n) => (d, n) }
+      val nSend = destCounts.map(_._2).sum
       stats.addRcv(total)
 
-      // Destinations are topic names — a small bounded set by design, so
-      // collecting one micro-batch's per-dest counts is driver-safe at any
-      // data scale (one groupBy job yields the dest list AND the row counts
-      // the dead-letter accounting needs).
       val sendable = routed.filter(!col("failed") && col("dest").isNotNull)
-      val destCounts = sendable.groupBy("dest").count().as[(String, Long)].collect()
 
       // A4/A7 unaddressable-dest routing: dest is a data-computed value, so
       // a dest the sink cannot address (sink.safeDest) must dead-letter the

@@ -4,7 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
-import org.apache.spark.broadcast.Broadcast
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,24 +28,26 @@ import org.apache.spark.util.sketch.BloomFilter
   *   - the append for epoch N OVERWRITES `epoch=N`, so a replay converges
   *     to the same index state instead of double-appending.
   *
-  * == Per-epoch cost is ∝ BATCH size, not index size (r20) ==
+  * == Per-epoch cost is ∝ BATCH size, not index size ==
   *
-  * The r19 soak measured the previous shape's honest weakness: a plain
-  * `batch LEFT ANTI JOIN index` re-reads AND re-shuffles the whole index
-  * every epoch, so throughput decayed 121 k → 47 k msg/s as the index
-  * grew to 90 M hashes — the one super-linear-in-time path in the engine.
-  * Three structural changes make the lookup batch-proportional:
+  * A plain `batch LEFT ANTI JOIN index` re-reads AND re-shuffles the whole
+  * index every epoch, so throughput decays as the index grows — the one
+  * super-linear-in-time path a perpetual bus would have. Three structural
+  * changes make the lookup batch-proportional:
   *
-  *   1. '''Bloom sidecars, probe-side pruning.''' Every run carries a
+  *   1. '''Bloom sidecars, probed on the driver.''' Every run carries a
   *      `_bloom` sidecar (Spark's 64-bit-hash sketch, fpp 1e-5 — the
-  *      `bloomFpp` default below, ~24 bits/hash — built
-  *      from the run's own parquet). An epoch's distinct hashes probe the
-  *      (broadcast, executor-cached) blooms in ONE narrow mapPartitions
-  *      pass; only (hash, run) pairs the bloom cannot rule out — true
-  *      duplicates plus ~fpp·|batch| false positives per run — go to
-  *      exact verification. A bloom has NO false negatives, so every
-  *      truly-seen hash reaches verification: the final answer stays
-  *      exact, the sketch only prunes reads.
+  *      `bloomFpp` default below, ~24 bits/hash). An epoch's distinct
+  *      hashes are collected to the driver once and probed against the
+  *      driver-held blooms, with no Spark job and no broadcast; only
+  *      (hash, run) pairs the bloom cannot rule out — true duplicates plus
+  *      ~fpp·|batch| false positives per run — go to exact verification. A
+  *      bloom has NO false negatives, so every truly-seen hash reaches
+  *      verification: the final answer stays exact, the sketch only prunes
+  *      reads. The collect is bounded by the micro-batch's distinct-hash
+  *      count — trigger-bounded by A3's
+  *      maxFilesPerTrigger/maxOffsetsPerTrigger, the same knob that
+  *      bounds every other per-epoch resource.
   *   2. '''Hash-bucketed merged runs, bucket-pruned verification.'''
   *      Compaction lays a merged run out as `b=pmod(h, N)/` partitions
   *      (N sized for ~256 k hashes per bucket file, `_nbuckets` sidecar).
@@ -52,16 +56,16 @@ import org.apache.spark.util.sketch.BloomFilter
   *      bucket files (~2 MB each), not a 67 M-row scan. Raw epoch runs
   *      stay single-file — they are batch-sized by construction, so
   *      reading one whole is already ∝ batch.
-  *   3. '''Broadcast-reversed joins, zero index shuffle.''' The pruned
-  *      index slice is probed with `LEFT SEMI JOIN broadcast(candidates)`
-  *      (index rows stream in place against an in-memory set ≤ |batch|),
-  *      and survivors come from `batch LEFT ANTI JOIN broadcast(seen)`.
-  *      The old shape shuffled 90 M index rows per epoch because a LEFT
-  *      ANTI join can never broadcast its left (batch) side; both new
-  *      joins broadcast the SMALL side. The broadcast is bounded by the
-  *      micro-batch's distinct-hash count — trigger-bounded by A3's
-  *      maxFilesPerTrigger/maxOffsetsPerTrigger, the same knob that
-  *      bounds every other per-epoch resource.
+  *   3. '''One materialization, broadcast-side joins, zero index
+  *      shuffle.''' Each epoch hashes its payloads and picks the in-epoch
+  *      first copy ONCE, into one checkpointed frame; the source is never
+  *      read again. The pruned index slice is probed with
+  *      `LEFT SEMI JOIN broadcast(candidates)` (index rows stream in place
+  *      against an in-memory set ≤ |batch|) in the epoch's one
+  *      verification job, and survivors come from
+  *      `firsts LEFT ANTI JOIN broadcast(seen)`. Both joins broadcast the
+  *      SMALL side: a LEFT ANTI join can never broadcast its left (batch)
+  *      side, so `batch ANTI index` would shuffle the whole index.
   *
   * A run whose `_bloom` sidecar is missing (legacy layout, or a crash
   * between the parquet commit and the sidecar write) degrades safely:
@@ -69,16 +73,16 @@ import org.apache.spark.util.sketch.BloomFilter
   * exact); [[bloomFor]] self-heals by rebuilding the sidecar from the
   * run's parquet on first touch.
   *
-  * Compaction (r12, tiered r13): a long-running bus writes one `epoch=N/`
-  * directory per micro-batch — ~86k/day at a 1 s trigger. [[compact]]
-  * merges runs in SIZE CLASSES (LSM shape): each hash is rewritten
-  * O(log epochs) times over the index's lifetime and the directory count
-  * stays O(fanout · log epochs), vs the r12 single-level merge that
-  * rewrote the ENTIRE index every compaction (O(N²/k) cumulative bytes on
-  * a perpetual bus). With `compactEvery > 0` the [[dedupEpoch]] stage
-  * self-compacts whenever the partition count reaches the threshold, the
-  * bounding mechanism the reference gets from acking its unacked map
-  * (/root/reference/common/unacked.go:30-38).
+  * Compaction: a long-running bus writes one `epoch=N/` directory per
+  * micro-batch — ~86k/day at a 1 s trigger. [[compact]] merges runs in
+  * SIZE CLASSES (LSM shape): each hash is rewritten O(log epochs) times
+  * over the index's lifetime and the directory count stays
+  * O(fanout · log epochs), vs a single-level merge that rewrites the
+  * ENTIRE index every compaction (O(N²/k) cumulative bytes on a perpetual
+  * bus). With `compactEvery > 0` the [[dedupEpoch]] stage self-compacts
+  * whenever the partition count reaches the threshold, the bounding
+  * mechanism the reference gets from acking its unacked map (its
+  * `common/unacked.go`).
   *
   * @param compactEvery compact when the index holds this many epoch
   *   partitions (0 = never); also the tiering fanout (runs per size class
@@ -133,13 +137,15 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     * grows with index size even when only two bucket files are read —
     * exactly the ∝-index creep this class exists to kill. One listing per
     * run lifetime; [[evictCached]] drops the entry when the run is
-    * overwritten (replay) or deleted (compaction).
+    * overwritten (replay) or deleted (compaction). The data schema is
+    * given, not inferred: inference is one footer-reading Spark job per
+    * run on first touch (a bucketed run's `b` still comes from its paths).
     */
   private val runFrameCache = mutable.Map[Long, DataFrame]()
 
   private def readRun(label: Long, buckets: Option[Seq[Int]]): DataFrame = {
     val base = runFrameCache.getOrElseUpdate(label,
-      spark.read.parquet(s"$dir/epoch=$label"))
+      spark.read.schema("h BIGINT").parquet(s"$dir/epoch=$label"))
     val pruned = (buckets, nBucketsOf(label)) match {
       case (Some(bs), nb) if nb > 1 => base.filter(col("b").isin(bs: _*))
       case _ => base
@@ -157,27 +163,7 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     hashes.toDF("h").distinct()
       .write.mode("overwrite").parquet(out)
     writeBloom(out)
-    // replay overwrite ⇒ any cached bloom/broadcast for this label is stale
-    evictCached(epochId)
-  }
-
-  /** [[dedupEpoch]]'s append fast path: `hashes` is KNOWN distinct (the
-    * in-epoch first-copy window) and already materialized (checkpointed),
-    * so the generic path's re-distinct shuffle and read-back-for-bloom
-    * scan are pure overhead — at a 1 s trigger that overhead is paid
-    * every epoch forever. The bloom builds driver-side from one collect
-    * of the survivor hashes: bounded by the micro-batch's distinct-hash
-    * count (the same bound as the `seen` broadcast — A3's trigger knob),
-    * never by index size.
-    */
-  private def appendDistinct(hashes: DataFrame, epochId: Long): Unit = {
-    val out = s"$dir/epoch=$epochId"
-    hashes.write.mode("overwrite").parquet(out)
-    val hs = hashes.select("h").as[Long].collect()
-    val bf = BloomFilter.create(math.max(1L, hs.length.toLong), bloomFpp)
-    hs.foreach(bf.putLong)
-    val os = Files.newOutputStream(Paths.get(out, "_bloom"))
-    try bf.writeTo(os) finally os.close()
+    // replay overwrite ⇒ any cached bloom/frame for this label is stale
     evictCached(epochId)
   }
 
@@ -353,9 +339,29 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     Files.deleteIfExists(p)
   }
 
-  /** Row count of a run from parquet footers (metadata-only job). */
-  private def rowCountOf(e: Long): Long =
-    spark.read.parquet(s"$dir/epoch=$e").count()
+  /** Row count of a run from its parquet footers, read on the driver (no
+    * Spark job). Data files are the visible `.parquet` files, at the top
+    * level of a raw run or under a bucketed run's `b=` directories.
+    */
+  private def rowCountOf(e: Long): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    val st = Files.walk(Paths.get(s"$dir/epoch=$e"))
+    try {
+      var rows = 0L
+      val it = st.iterator()
+      while (it.hasNext) {
+        val f = it.next()
+        val name = f.getFileName.toString
+        if (Files.isRegularFile(f) && name.endsWith(".parquet") &&
+            !name.startsWith("_") && !name.startsWith(".")) {
+          val r = ParquetFileReader.open(
+            HadoopInputFile.fromPath(new HPath(f.toUri), conf))
+          try rows += r.getRecordCount finally r.close()
+        }
+      }
+      rows
+    } finally st.close()
+  }
 
   /** Build and stage `runDir/_bloom` from the run's own parquet. */
   private def writeBloom(runDir: String, expectedItems: Long = -1L): Unit = {
@@ -366,50 +372,53 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     try bf.writeTo(os) finally os.close()
   }
 
-  /** The run's bloom, executor-broadcast and cached per label. A missing
+  /** The run's bloom, loaded on the driver and cached per label. A missing
     * sidecar on a run self-heals (rebuilt from parquet, then cached);
     * rebuild failure degrades to None = every hash is a candidate.
     */
-  private val bloomCache = mutable.Map[Long, Broadcast[Option[BloomFilter]]]()
+  private val bloomCache = mutable.Map[Long, Option[BloomFilter]]()
 
-  private def bloomFor(label: Long): Broadcast[Option[BloomFilter]] =
+  private def bloomFor(label: Long): Option[BloomFilter] =
     bloomCache.getOrElseUpdate(label, {
       val p = Paths.get(s"$dir/epoch=$label", "_bloom")
-      val loaded =
-        try {
-          if (!Files.exists(p)) writeBloom(s"$dir/epoch=$label")
-          val is = Files.newInputStream(p)
-          try Some(BloomFilter.readFrom(is)) finally is.close()
-        } catch { case _: Exception => None }
-      spark.sparkContext.broadcast(loaded)
+      try {
+        if (!Files.exists(p)) writeBloom(s"$dir/epoch=$label")
+        val is = Files.newInputStream(p)
+        try Some(BloomFilter.readFrom(is)) finally is.close()
+      } catch { case _: Exception => None }
     })
 
   private def evictCached(label: Long): Unit = {
-    bloomCache.remove(label).foreach(_.destroy())
+    bloomCache.remove(label)
     runFrameCache.remove(label)
   }
 
-  /** The bus epoch stage over (id, data, ts) message frames: drop messages
-    * whose payload hash is already in the index, keep the first copy per
-    * hash WITHIN the epoch (min id), then append the survivors' hashes as
-    * this epoch's partition. Wire as
+  /** The bus epoch stage over (id, data, ts) message frames: keep the first
+    * copy per payload hash WITHIN the epoch (min id, nulls first), drop the
+    * copies whose hash is already in the index, then append the survivors'
+    * hashes as this epoch's partition. Wire as
     * `epochProcess = Some((df, e) => route(idx.dedupEpoch(df, e)))`.
     *
-    * Lookup shape (see class doc): distinct batch hashes → one bloom-probe
-    * pass → candidate (run, bucket, hash) rows → bucket-pruned per-run
-    * reads LEFT SEMI joined against the broadcast candidates → `seen` →
-    * `batch LEFT ANTI broadcast(seen)`. Work per epoch is bounded by the
-    * batch's distinct hashes (+ fpp·|batch| false-positive reads per
-    * run), independent of total index size.
+    * Lookup shape (see class doc): `firsts` = hash + first-copy window,
+    * materialized once → its hashes collected to the driver → driver-side
+    * bloom probe naming the touched (run, bucket) pairs and the candidate
+    * hashes → ONE job reading the bucket-pruned runs LEFT SEMI joined
+    * against the broadcast candidates, collected as `seen` →
+    * `firsts LEFT ANTI broadcast(seen)`. The survivor hashes and their
+    * bloom come from the driver-held arrays. Work per epoch is bounded by
+    * the batch's distinct hashes (+ fpp·|batch| false-positive reads per
+    * run), independent of total index size. Filtering seen hashes after
+    * the window is equivalent to before it: all copies of a hash are seen
+    * or none are.
     */
   def dedupEpoch(batch: DataFrame, epochId: Long): DataFrame = {
     // free the PREVIOUS epoch's checkpoint blocks first: foreachBatch's
     // sequential contract means they are fully consumed, but the block
     // manager only drops them on a GC-driven ContextCleaner pass — on a
     // perpetual bus that is an unbounded block-manager accretion (~MBs per
-    // epoch, measured as eviction-pressure throughput decay in the r20
-    // soak). Only OUR tracked ids are touched — a blanket unpersist would
-    // evict concurrent streams' cached frames in a shared session.
+    // epoch, eviction pressure that decays throughput). Only OUR tracked
+    // ids are touched — a blanket unpersist would evict concurrent
+    // streams' cached frames in a shared session.
     prevEpochBlocks.foreach(id =>
       spark.sparkContext.getPersistentRDDs.get(id)
         .foreach(_.unpersist(blocking = false)))
@@ -419,61 +428,69 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     // side thread) keeps the single-writer invariant for free.
     if (compactEvery > 0 && epochs().count(_ < epochId) >= compactEvery)
       compact(epochId)
-    val hashed = batch.withColumn("__h", xxhash64(col("data")))
-    val runs = epochs().filter(_ < epochId).sorted
-    val seen: DataFrame = if (runs.isEmpty) emptyHashes else {
-      // (label, nBuckets, bloom) triples; broadcast stubs serialize into
-      // the probe closure, values are fetched once per executor
-      val infos = runs.map(l => (l, nBucketsOf(l), bloomFor(l)))
-      val cand = hashed.select(col("__h").as("h")).dropDuplicates("h")
-        .as[Long]
-        .mapPartitions { it =>
-          val rs = infos.map { case (l, nb, bc) => (l, nb, bc.value) }
-          it.flatMap { h =>
-            rs.iterator.collect {
-              case (l, nb, bOpt) if bOpt.forall(_.mightContainLong(h)) =>
-                (l, (((h % nb) + nb) % nb).toInt, h)
-            }
-          }
-        }
-        .toDF("run", "b", "h")
-        // two consumers (bucket census + semi-join probe set); candidate
-        // volume is ≤ |batch hashes| · |runs| in the adversarial
-        // everything-collides case and ~(dups + fpp·|batch|·runs) in
-        // practice — batch-bounded either way, never index-bounded
-        .transform(checkpointTracked)
-      val touched = cand.select("run", "b").distinct()
-        .as[(Long, Int)].collect().groupBy(_._1)
-      if (touched.isEmpty) emptyHashes
-      else touched.toSeq.map { case (label, bs) =>
-        readRun(label, Some(bs.map(_._2).toSeq))
-      }.reduce(_.union(_))
-        .join(broadcast(cand.select("h").distinct()), Seq("h"), "left_semi")
-        // distinct: a torn compaction can leave the same hash in two runs
-        .distinct()
-    }
     val w = Window.partitionBy("__h").orderBy(asc_nulls_first("id"))
-    val survivors = hashed
-      .join(broadcast(seen.withColumnRenamed("h", "__h")), Seq("__h"),
-        "left_anti")
+    // materialize once: the first copies feed the hash collect AND the
+    // returned frame, and the source must not be read twice
+    val firsts = batch.withColumn("__h", xxhash64(col("data")))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
-      // materialize once: the survivor set feeds the index append AND the
-      // returned frame — recomputing it after the append would anti-join
-      // the epoch against itself
       .transform(checkpointTracked)
-    appendDistinct(survivors.select(col("__h").as("h")), epochId)
-    survivors.drop("__h")
+    val hashes = firsts.select("__h").as[Long].collect()
+    val seen = seenOf(hashes, epochId)
+    val survivors = hashes.filterNot(seen.contains)
+    appendKnownDistinct(survivors, epochId)
+    val kept =
+      if (seen.isEmpty) firsts
+      else firsts.join(broadcast(seen.toSeq.toDF("__h")), Seq("__h"), "left_anti")
+    kept.drop("__h")
+  }
+
+  /** The subset of `hashes` present in runs below `epochId`: a driver-side
+    * bloom probe, then one verification job over the touched buckets.
+    */
+  private def seenOf(hashes: Array[Long], epochId: Long): Set[Long] = {
+    val candidates = mutable.HashSet[Long]()
+    val touched = epochs().filter(_ < epochId).sorted.flatMap { label =>
+      val nb = nBucketsOf(label)
+      val bloom = bloomFor(label)
+      val buckets = mutable.SortedSet[Int]()
+      hashes.foreach { h =>
+        if (bloom.forall(_.mightContainLong(h))) {
+          candidates += h
+          buckets += (((h % nb) + nb) % nb).toInt
+        }
+      }
+      if (buckets.isEmpty) None else Some(readRun(label, Some(buckets.toSeq)))
+    }
+    if (touched.isEmpty) Set.empty
+    else touched.reduce(_.union(_))
+      .join(broadcast(candidates.toSeq.toDF("h")), Seq("h"), "left_semi")
+      // a torn compaction can leave the same hash in two runs
+      .as[Long].collect().toSet
+  }
+
+  /** Write `hashes` (distinct by construction) as epoch `epochId`'s run —
+    * one file, overwrite = replay idempotent — with its `_bloom` built from
+    * the same driver-held array: no re-distinct shuffle, no read-back scan.
+    */
+  private def appendKnownDistinct(hashes: Array[Long], epochId: Long): Unit = {
+    val out = s"$dir/epoch=$epochId"
+    hashes.toSeq.toDF("h").coalesce(1).write.mode("overwrite").parquet(out)
+    val bf = BloomFilter.create(math.max(1L, hashes.length.toLong), bloomFpp)
+    hashes.foreach(bf.putLong)
+    val os = Files.newOutputStream(Paths.get(out, "_bloom"))
+    try bf.writeTo(os) finally os.close()
+    evictCached(epochId)
   }
 
   /** localCheckpoint with its materialized RDD ids recorded, so the NEXT
     * epoch can free them (see [[dedupEpoch]]). The ids are read from the
-    * returned frame's OWN plan (its LogicalRDD nodes — r21, closing the
-    * r20 ADVICE race): the previous getPersistentRDDs-set diff could
-    * capture a CONCURRENT stream's RDD persisted inside the bracket, and
-    * unpersisting a stranger's localCheckpointed RDD (truncated lineage)
-    * crashes that query's later access instead of recomputing.
+    * returned frame's OWN plan (its LogicalRDD nodes): a
+    * getPersistentRDDs-set diff could capture a CONCURRENT stream's RDD
+    * persisted inside the bracket, and unpersisting a stranger's
+    * localCheckpointed RDD (truncated lineage) crashes that query's later
+    * access instead of recomputing.
     */
   private var prevEpochBlocks: Seq[Int] = Nil
 

@@ -271,13 +271,18 @@ class BusSpec extends SparkSpec {
       // must dead-letter those rows, never let the sink throw (a throw
       // would terminate the query and replay the poison on every
       // checkpoint restart: a permanent halt)
+      //
+      // "nullfail" gets a null `failed` and "nodest" a null `dest` (not
+      // failed): both count in rcv and ack only — never sent, never failed
       FrizzleStream.exprProcessor(
-        dest = col("data").cast("string"),
-        failed = col("data").cast("string") === "fail"),
+        dest = when(col("data").cast("string") =!= "nodest", col("data").cast("string")),
+        failed = when(col("data").cast("string") =!= "nullfail",
+          col("data").cast("string") === "fail")),
       new FileAdapters.ParquetDirSink(spool), Some(dlq),
       checkpointDir = Some(Files.createTempDirectory("poison_ck").toString))
     bus.start()
-    src.put(Msg.utf8("1", "ok"), Msg.utf8("2", "a*b"), Msg.utf8("3", "fail"))
+    src.put(Msg.utf8("1", "ok"), Msg.utf8("2", "a*b"), Msg.utf8("3", "fail"),
+      Msg.utf8("4", "nullfail"), Msg.utf8("5", "nodest"))
     bus.awaitIdle() // must NOT throw: the poison dest never reaches sink.write
     assert(spark.read.parquet(spool)
       .select(col("data").cast("string")).as[String].collect().toSeq == Seq("ok"))
@@ -286,7 +291,7 @@ class BusSpec extends SparkSpec {
     // would be deduped away by an idempotent fail sink)
     assert(dlq.sent("failed").map(_.dataUtf8).sorted == Seq("a*b", "fail"))
     assert(bus.stats.snapshot == Map(
-      "rcv" -> 3L, "send" -> 1L, "ack" -> 1L, "fail" -> 2L,
+      "rcv" -> 5L, "send" -> 1L, "ack" -> 3L, "fail" -> 2L,
       "failsink" -> 2L, "error" -> 0L))
     assert(bus.events.exists(e =>
       e.level == "error" && e.message.contains("unaddressable")),
@@ -518,8 +523,23 @@ class BusSpec extends SparkSpec {
       src.put(msgs(g): _*)
       bus.awaitIdle()
     }
+    // one more epoch: copies of a fresh payload, one with a null id, and
+    // copies of an already-ingested payload. The first-copy window runs
+    // before the index anti-join: exactly the null-id copy must survive
+    // (nulls order first), and every already-seen copy must be dropped.
+    val fresh = "window-order fresh payload"
+    val seenText = docs.head._2
+    src.put(Msg.utf8("900002", fresh), Msg.utf8(null, fresh),
+      Msg.utf8("900001", fresh), Msg.utf8("900003", seenText),
+      Msg.utf8("900004", seenText))
+    bus.awaitIdle()
     bus.flushAndClose(20000)
-    val got = sink.sent("kept").map(_.id.toLong).filter(_ >= 100L).toSet
+    val kept = sink.sent("kept")
+    val freshIds = kept.filter(_.dataUtf8 == fresh).map(_.id)
+    assert(freshIds == Seq(null), s"only the null-id copy may survive: $freshIds")
+    assert(!kept.exists(m => m.id != null && m.id.startsWith("9000")),
+      "no later copy of the fresh payload and no already-seen copy may survive")
+    val got = kept.filter(_.id != null).map(_.id.toLong).filter(_ >= 100L).toSet
     assert(got == want,
       s"streaming survivors must equal the batch answer: " +
         s"missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
@@ -911,6 +931,47 @@ class BusSpec extends SparkSpec {
         s"per-epoch parquet reads must be batch-bounded: read $read " +
           "records against a 60k-hash index (the pre-bucketed shape reads 60k+)")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("dedup epoch job count: one materialization, driver-side bloom probe, one verification job") {
+    // the per-epoch fixed cost as a contention-immune number: Spark jobs
+    // started by one non-compacting dedupEpoch call plus one collect of its
+    // output (the bus consumes the frame it returns), against a warm
+    // 3-run index with true duplicates of two runs and in-epoch copies.
+    import spark.implicits._
+    val idx = new SeenHashIndex(spark,
+      Files.createTempDirectory("seenidx_jobs").toString)
+    def epoch(e: Int, ps: Seq[String]) = ps.zipWithIndex
+      .map { case (p, i) => (f"$e%03d-$i%05d", p) }.toDF("id", "data")
+    for (e <- 0 until 3)
+      idx.dedupEpoch(epoch(e, (0 until 200).map(i => s"jobs-$e-$i")), e).collect()
+    val fresh = (0 until 100).map(i => s"jobs-new-$i")
+    val batch = epoch(3, (0 until 50).map(i => s"jobs-0-$i") ++
+      (0 until 50).map(i => s"jobs-1-$i") ++ fresh ++ fresh.take(20))
+    val group = s"dedup-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "dedupEpoch job count")
+    val out = try idx.dedupEpoch(batch, 3).select("data").as[String].collect()
+    finally {
+      spark.sparkContext.clearJobGroup()
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(out.sorted.toSeq == fresh.sorted,
+      "exactly one copy of each fresh payload must survive")
+    assert(idx.epochs().sorted == Seq(0L, 1L, 2L, 3L), "no compaction ran")
+    // 8 = window shuffle + checkpoint, hash collect, candidate broadcast +
+    // verification, append write, seen broadcast + output collect
+    assert(jobs.get <= 8,
+      s"one dedup epoch started ${jobs.get} Spark jobs, bound 8")
   }
 
   test("tiered compaction soak: 600 epochs hold the log asymptote") {
