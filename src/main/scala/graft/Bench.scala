@@ -1,17 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Path, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(master = s"local[$cpus]",
+      shufflePartitions = cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warm-up: a fresh JVM runs ~2-5× slower until codegen + JIT
     // compile the hot paths. Warm one query per major codegen shape (scan/
@@ -107,29 +101,17 @@ object Bench {
     // than the driver's 2,000-byte log-tail window, so it must not be last).
     println(s"""{"metric":"per_query","unit":"sec","queries":$qs,"failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir"}""")
     // ALSO persist the per-query map as its own artifact: at 188 keys the
-    // stdout line is ~4.5 KB and the driver's tail capture keeps only its
-    // end, blinding round-over-round per-query diffs to the first ~111
-    // keys (r19 verdict "What's wrong" #3). One key per line so plain git
-    // diff shows movers; written to the working directory (the repo root
-    // under the driver's sbt invocation) so it lands in the round commit.
-    // r22 (r21 verdict "What's wrong" #1): the driver runs the bench TWICE
-    // per round (32-core primary, then an 8-core scaling run) and the
-    // second run used to OVERWRITE the single artifact — the r21 PERF
-    // comparison came up empty because BENCH_PERQUERY.json held the c8
-    // map. Each core count now writes its own BENCH_PERQUERY_c${cpus}.json;
-    // the legacy name is kept as a copy of the CURRENT run so existing
-    // consumers still find a file (per-core files are the authoritative,
-    // clobber-proof record).
+    // stdout line is ~4.5 KB and a log-tail capture keeps only its end,
+    // blinding per-query diffs to the first ~111 keys. One key per line so
+    // plain git diff shows movers; written to the working directory (the
+    // repo root under `sbt runMain`) so it lands in the commit.
     try {
       val lines = results.sortBy(_._1).map { case (k, v, ok) =>
         s"""  "$k": ${if (ok) r3(v) else "\"FAILED\""}"""
       }
       val body =
         lines.mkString(s"""{\n  "_sf": "$sfDir",\n  "_cpus": "$cpus",\n""", ",\n", "\n}\n")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"BENCH_PERQUERY_c$cpus.json"), body)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("BENCH_PERQUERY.json"), body)
+      writePerQuery(Paths.get("."), body, cpus.toInt)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] per-query artifact write failed: $e")
     }
@@ -137,4 +119,25 @@ object Bench {
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"sf":"$sfDir"}""")
     if (failed.nonEmpty) sys.exit(1)
   }
+
+  /** Write one run's per-query map into `dir`: always as
+    * `BENCH_PERQUERY_c$cpus.json`, and under the legacy name
+    * `BENCH_PERQUERY.json` only if [[replacesLegacy]] lets this run
+    * replace what is there. The bench runs on several core counts (a
+    * 32-core primary run, an 8-core scaling run), and the legacy file must
+    * hold the primary map whichever run comes last.
+    */
+  def writePerQuery(dir: Path, body: String, cpus: Int): Unit = {
+    Files.writeString(dir.resolve(s"BENCH_PERQUERY_c$cpus.json"), body)
+    val legacy = dir.resolve("BENCH_PERQUERY.json")
+    val existing = if (Files.exists(legacy)) Some(Files.readString(legacy)) else None
+    if (replacesLegacy(existing, cpus)) Files.writeString(legacy, body)
+  }
+
+  /** A run on `cpus` cores may (re)write the legacy per-query file when it
+    * is absent, carries no `_cpus`, or holds a run on at most `cpus` cores.
+    */
+  def replacesLegacy(existing: Option[String], cpus: Int): Boolean =
+    existing.flatMap(""""_cpus":\s*"(\d+)"""".r.findFirstMatchIn(_))
+      .forall(_.group(1).toInt <= cpus)
 }

@@ -5,53 +5,56 @@ import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 /** One-call entry point for users of this engine: a SparkSession with the
   * engine's required/recommended configuration applied and the native SQL
   * functions registered — the "switch your app to this library" surface.
+  * Every main, tool, example and the test JVM builds its session here.
   *
-  * Required for correctness on the fixture data:
-  *   - UTC session timezone (cross-engine timestamp determinism);
-  *   - nanosAsLong for parquet timestamp[ns] columns (see graft.ops.tbl).
-  * Recommended at any scale:
-  *   - shuffle partitions sized to the cluster (NOT the 200 default —
-  *     pass ~2-3× total executor cores; AQE coalesces downward at runtime).
+  * Recommended at any scale: shuffle partitions sized to the cluster (NOT
+  * the 200 default — pass ~2-3× total executor cores; AQE coalesces
+  * downward at runtime).
   *
   * The ObjectHashAggregate sort-based fallback threshold stays at Spark's
   * 128 default session-wide — that low default is the memory safety valve
   * for every unbounded object aggregate (collect_list/collect_set and any
-  * user-added typed agg), and r19 MEASURED why it must stay: a raised
-  * 2^21 threshold OOMed a 15 M-group small-k aggregate (q_topk_agg,
-  * ~0.5 KB boxed buffer per group × 32 concurrent tasks) at sf100 inside
-  * the standard 8 GB heap — the per-group buffer bound alone does not cap
-  * memory; group count per task does, and that is data-dependent. The
-  * engine's bounded typed aggregates that genuinely need the hash path at
-  * high group counts (the BottomKPairs kNN fold — a sort-based demotion
-  * re-introduces exactly the per-partition n log n the aggregate exists
-  * to avoid) get the raise PER QUERY via [[boundedAggFrame]]: the frame
-  * is re-homed onto a cloned session whose only delta is the threshold,
-  * so the override travels with that frame's executions and never governs
-  * sibling queries (r18 ADVICE closed by scoping, not documentation).
+  * user-added typed agg). A raised 2^21 threshold was measured to OOM a
+  * 15 M-group small-k aggregate (q_topk_agg, ~0.5 KB boxed buffer per
+  * group × 32 concurrent tasks) at sf100 inside the standard 8 GB heap —
+  * the per-group buffer bound alone does not cap memory; group count per
+  * task does, and that is data-dependent. The engine's bounded typed
+  * aggregates that genuinely need the hash path at high group counts (the
+  * BottomKPairs kNN fold — a sort-based demotion re-introduces exactly the
+  * per-partition n log n the aggregate exists to avoid) get the raise PER
+  * QUERY via [[boundedAggFrame]]: the frame is re-homed onto a cloned
+  * session whose only delta is the threshold, so the override travels with
+  * that frame's executions and never governs sibling queries.
   */
 object Graft {
+
+  /** The engine confs every session carries, stated once:
+    *   - UTC session timezone (cross-engine timestamp determinism);
+    *   - nanosAsLong for parquet timestamp[ns] columns (see graft.ops.tbl);
+    *   - AQE may re-optimize CACHED plans while keeping their output
+    *     partitioning visible: the iterative operators (connected
+    *     components, PageRank) persist their edge frames pre-partitioned
+    *     on the per-round join key so rounds stop re-shuffling the edge
+    *     set; without this flag the cached subplan skips AQE partition
+    *     coalescing and pins shuffle-partition-count tasks onto every
+    *     downstream stage at small scale. Physical-only: results identical.
+    */
+  val EngineConf: Seq[(String, String)] = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
 
   def session(
       master: String = "local[*]",
       shufflePartitions: Int = Runtime.getRuntime.availableProcessors(),
-      appName: String = "graft",
-      ui: Boolean = false): SparkSession = {
-    val spark = SparkSession.builder()
+      appName: String = "graft"): SparkSession = {
+    val base = SparkSession.builder()
       .master(master)
       .appName(appName)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Let AQE re-optimize CACHED plans while keeping their output
-      // partitioning visible (r21): the iterative operators (connected
-      // components, PageRank) persist their edge frames pre-partitioned on
-      // the per-round join key so rounds stop re-shuffling the edge set;
-      // without this flag the cached subplan skips AQE partition
-      // coalescing and pins shuffle-partition-count tasks onto every
-      // downstream stage at small scale. Physical-only: results identical.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", ui)
+      .config("spark.ui.enabled", false)
+    val spark = EngineConf
+      .foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     graft.expr.GraftExtensions.register(spark)
     spark
@@ -72,33 +75,15 @@ object Graft {
   /** Re-home `df` onto a session clone whose ObjectHashAggregate fallback
     * threshold is raised to [[BoundedAggFallbackThreshold]] — the scoped
     * form of the conf for SMALL-BOUNDED-buffer typed aggregates over
-    * high-cardinality groups (the kNN BottomKPairs fold).
-    *
-    * One clone is cached PER PARENT SESSION, for the life of the
-    * SparkContext. (r22: was a WeakHashMap claiming entries die with
-    * their parent — false, r21 ADVICE: the clone strongly references its
-    * parent via shared session state, and each `cloneSession()` registers
-    * session-state listeners on the shared context bus that are never
-    * torn down — which is also why cloning per call would slowly
-    * accumulate sessions/listeners in a long-lived process that rebuilds
-    * plans repeatedly, r19 ADVICE. The map now states the real lifetime:
-    * bounded at exactly one immortal clone per parent session.)
-    * Conf drift is not a concern: the clone's only delta is the one
-    * threshold constant, and runtime conf changes a caller makes on the
-    * PARENT after the clone exists are deliberate non-propagation (the
-    * same isolation the scoping exists for).
+    * high-cardinality groups (the kNN BottomKPairs fold). The clone is
+    * the one [[GraftBridge.sessionWithConf]] caches for this parent.
     */
   def boundedAggFrame(df: DataFrame): DataFrame =
-    GraftBridge.rehome(boundedAggSession(df.sparkSession), df)
-
-  private val boundedAggClones =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
-
-  private def boundedAggSession(parent: SparkSession): SparkSession =
-    boundedAggClones.computeIfAbsent(parent, p =>
-      GraftBridge.sessionWithConf(p,
+    GraftBridge.rehome(
+      GraftBridge.sessionWithConf(df.sparkSession,
         "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        BoundedAggFallbackThreshold.toString))
+        BoundedAggFallbackThreshold.toString),
+      df)
 
   /** Register the fixture tables of `dir` as temp views so plain
     * `spark.sql` works over them (events gets the ns→µs timestamp
@@ -110,15 +95,12 @@ object Graft {
       .foreach(n => graft.ops.tbl(spark, dir, n).createOrReplaceTempView(n))
 
   /** Apply the engine configuration to an EXISTING session (a shared
-    * cluster session the caller does not own): runtime-settable confs +
-    * function registration. The parquet-nanos flag is read at scan
-    * planning, so it applies to subsequent reads.
+    * cluster session the caller does not own): [[EngineConf]] + function
+    * registration. The parquet-nanos flag is read at scan planning, so it
+    * applies to subsequent reads.
     */
   def configure(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set(
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+    EngineConf.foreach { case (k, v) => spark.conf.set(k, v) }
     graft.expr.GraftExtensions.register(spark)
     spark
   }

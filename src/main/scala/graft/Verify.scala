@@ -20,14 +20,8 @@ object Verify {
     val only: Set[String] = args.drop(2).headOption
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).getOrElse(Set.empty)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(master = s"local[$cpus]",
+      shufflePartitions = cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     val failed = dump(spark, SparkEntry.queries, SparkEntry.oracleSql,
       sfDir, outDir, only)

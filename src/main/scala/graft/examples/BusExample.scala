@@ -2,7 +2,6 @@ package graft.examples
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.bus._
@@ -17,11 +16,7 @@ import graft.bus._
   */
 object BusExample {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(master = "local[4]", shufflePartitions = 4)
     spark.sparkContext.setLogLevel("ERROR")
 
     val src = new MemorySource(spark)

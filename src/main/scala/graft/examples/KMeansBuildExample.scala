@@ -1,6 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
@@ -25,13 +24,7 @@ object KMeansBuildExample {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val k = args.lift(1).map(_.toInt).getOrElse(8)
     val maxRounds = args.lift(2).map(_.toInt).getOrElse(5)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(master = "local[4]", shufflePartitions = 4)
     spark.sparkContext.setLogLevel("ERROR")
 
     val emb = graft.ops.tbl(spark, sfDir, "embeddings")

@@ -297,7 +297,7 @@ object Similarity {
       // anywhere. The price is re-computing the cheap int-fold qdist once
       // per duplicate collision instead of once per pair — the r16
       // distinct existed to avoid exactly that, but it predates the r18
-      // fold; measured at sf0.1 (PlanStats): shuffle records 969 k →
+      // fold; measured at sf0.1 (Profile counts): shuffle records 969 k →
       // ~165 k, bytes 7.2 → ~2.5 MB, same rows out. Identical output by
       // the fold's contract (qdist ASC, dst ASC, rn = position+1);
       // SimilaritySpec pins the two strategies' equality. Same

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Bpe
@@ -21,13 +20,9 @@ object BpeBench {
     val nMerges = args.headOption.map(_.toInt).getOrElse(1000)
     val batchCap = args.lift(1).map(_.toInt).getOrElse(32)
     val nWords = args.lift(2).map(_.toInt).getOrElse(30000)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(
+      master = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
+      shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     // Deterministic word corpus: word i = base-12 digits of xxhash64(i)

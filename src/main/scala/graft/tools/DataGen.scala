@@ -52,13 +52,8 @@ object DataGen {
     val sf = args.headOption.map(_.toDouble).getOrElse(1.0)
     val outDir = args.lift(1).getOrElse(s"/tmp/graft-testdata/sf$sf")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(master = s"local[$cpus]",
+      shufflePartitions = cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     generate(spark, sf, outDir)
     spark.stop()

@@ -1,14 +1,8 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** Driver-contract smoke: SparkEntry.entry must return >0 rows on sf0.001. */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session(master = "local[4]", shufflePartitions = 4)
     spark.sparkContext.setLogLevel("ERROR")
     val n = graft.SparkEntry.entry(spark).count()
     println(s"entry rows=$n")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan of selected declared
   * queries (all, or those named in args). Used to keep the plan shapes
   * honest at scale: filters/projections must reach the parquet scan,
@@ -14,14 +12,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(master = "local[4]", shufflePartitions = 4)
     spark.sparkContext.setLogLevel("ERROR")
     // audit the full pre-checkpoint plan (see graft.ops.sortOnce)
     spark.conf.set("graft.sortOnce.nocheckpoint", "true")

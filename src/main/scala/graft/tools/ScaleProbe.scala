@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Times the LIBRARY path of the LSH/embedding family — the auto-sized
@@ -27,13 +26,8 @@ object ScaleProbe {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(master = s"local[$cpus]",
+      shufflePartitions = cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     val emb = graft.ops.tbl(spark, sfDir, "embeddings")

@@ -19,12 +19,26 @@ object GraftBridge {
     * `SQLExecution` propagates the conf of the Dataset's OWN session at
     * action time, so the override travels with the returned frame and
     * never leaks into sibling queries.
+    *
+    * One clone is cached per (parent, key, value) for the life of the
+    * SparkContext, so equal arguments return the same clone. Entries are
+    * not collectable: the clone strongly references its parent through
+    * shared session state, and each `cloneSession()` registers
+    * session-state listeners on the shared context bus that are never torn
+    * down — cloning per call would accumulate sessions and listeners in a
+    * long-lived process that rebuilds plans repeatedly. Runtime conf
+    * changes made on the PARENT after the clone exists deliberately do not
+    * propagate (the same isolation the scoping exists for).
     */
-  def sessionWithConf(spark: SparkSession, key: String, value: String): SparkSession = {
-    val c = spark.asInstanceOf[classic.SparkSession].cloneSession()
-    c.conf.set(key, value)
-    c
-  }
+  def sessionWithConf(spark: SparkSession, key: String, value: String): SparkSession =
+    confClones.computeIfAbsent((spark, key, value), _ => {
+      val c = spark.asInstanceOf[classic.SparkSession].cloneSession()
+      c.conf.set(key, value)
+      c
+    })
+
+  private val confClones = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String, String), SparkSession]()
 
   /** Re-home `df`'s logical plan onto `session` (see [[sessionWithConf]]). */
   def rehome(session: SparkSession, df: Dataset[Row]): DataFrame =

@@ -27,13 +27,33 @@ class ApiSpec extends SparkSpec {
   }
 
   test("Graft.configure wires an existing session for the engine") {
-    Graft.configure(spark)
-    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    // a session the engine did not build: default conf, builtin functions
+    val shared = spark.newSession()
+    Graft.EngineConf.foreach { case (k, _) => shared.conf.unset(k) }
+    Graft.configure(shared)
+    // the one conf list holds on a configured session and on the test
+    // JVM's session alike
+    for (s <- Seq(shared, TestSpark.spark); (k, v) <- Graft.EngineConf)
+      assert(s.conf.get(k) == v, s"$k")
     // native SQL functions registered
-    assert(spark.sql("SELECT vector_dot(array(CAST(1.0 AS FLOAT)), " +
+    assert(shared.sql("SELECT vector_dot(array(CAST(1.0 AS FLOAT)), " +
       "array(CAST(2.0 AS FLOAT))) AS d").as[Double].head() == 2.0)
     // nanos flag lets the events table read directly
-    assert(spark.read.parquet(s"$sfDir/events.parquet").count() > 0)
+    assert(shared.read.parquet(s"$sfDir/events.parquet").count() > 0)
+  }
+
+  test("sessionWithConf caches one clone per (parent, key, value)") {
+    import org.apache.spark.sql.GraftBridge.sessionWithConf
+    val key = "spark.sql.files.maxPartitionBytes"
+    val a = sessionWithConf(spark, key, "4194304")
+    assert(sessionWithConf(spark, key, "4194304") eq a)
+    val b = sessionWithConf(spark, key, "8388608")
+    assert(!(b eq a))
+    assert(a.conf.get(key) == "4194304" && b.conf.get(key) == "8388608")
+    assert(spark.conf.get(key) != "4194304", "the parent keeps its conf")
+    // every scoped frame of one parent rides the same clone
+    assert(Graft.boundedAggFrame(spark.range(1).toDF()).sparkSession eq
+      Graft.boundedAggFrame(spark.range(2).toDF()).sparkSession)
   }
 
   test("BusConfig.fromEnv maps the reference's documented variables") {

@@ -354,13 +354,14 @@ class ScaleSpec extends SparkSpec {
   test("bucketed tables join without an exchange on either side") {
     spark.sql("DROP TABLE IF EXISTS b_orders")
     spark.sql("DROP TABLE IF EXISTS b_cust")
-    // managed-table locations survive a crashed prior run; clear them
+    // managed-table locations outlive the JVM's in-memory catalog (a prior
+    // run's tables are unknown here but their directories remain); clear
+    // them in the configured warehouse
+    val warehouse = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"))
+    val fs = warehouse.getFileSystem(spark.sparkContext.hadoopConfiguration)
     Seq("b_orders", "b_cust").foreach { t =>
-      val dir = new java.io.File(s"spark-warehouse/$t")
-      if (dir.exists()) {
-        import scala.reflect.io.Directory
-        new Directory(dir).deleteRecursively()
-      }
+      fs.delete(new org.apache.hadoop.fs.Path(warehouse, t), true)
     }
     graft.ops.tbl(spark, sfDir, "orders")
       .write.mode("overwrite").bucketBy(8, "o_custkey").sortBy("o_custkey")

@@ -90,7 +90,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("vector_dot is callable from SQL after extension registration") {
-    graft.expr.GraftExtensions.register(spark)
     val v = spark.sql("SELECT vector_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
       "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d").as[Double].head()
     assert(v == 11.0)

@@ -2,7 +2,8 @@
 # Run a graft main class straight from compiled classes, bypassing sbt —
 # sbt holds a global server/target lock, so long profiling campaigns would
 # otherwise serialize against test runs. Mirrors build.sbt's forked-JVM
-# options (JDK17 add-opens + the session confs). Compile first: sbt compile.
+# options (JDK17 add-opens + heap); the session confs come from
+# graft.Graft.session. Compile first: sbt compile.
 #
 #   tools/runmain.sh graft.tools.Profile /tmp/graft-testdata/sf100 3 q_rollup
 set -euo pipefail
@@ -19,9 +20,6 @@ done
 # snapshot copy so a concurrent sbt recompile can't swap class files under
 # a live JVM mid-campaign.
 exec java "${ADD_OPENS[@]}" \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
-  -Dspark.sql.legacy.parquet.nanosAsLong=true \
   "-Xmx${SPARK_DRIVER_MEM:-8g}" \
   -cp "${GRAFT_CLASSES:-target/scala-2.13/classes}:/opt/spark/jars/*" \
   "$@"
