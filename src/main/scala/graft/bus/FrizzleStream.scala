@@ -1,11 +1,12 @@
 package graft.bus
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.{CompletableFuture, CompletionException,
+  ConcurrentLinkedQueue, ExecutorService, Executors, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 
@@ -73,6 +74,10 @@ private[bus] final case class FailConfig(sink: Option[BusSink], dest: String)
   *     to the fail sink (dead-letter) inside the same epoch.
   *   - Backpressure is trigger pacing (`maxPerTrigger`) instead of the
   *     reference's unbuffered channel handoff.
+  *   - An epoch's sink writes (the dead letters plus one write per
+  *     destination) run as ONE concurrent wave on a bus-owned pool, the
+  *     analog of the reference's sinks being called from many goroutines;
+  *     the epoch commits only after every write has returned.
   *   - AddOptions works on a LIVE bus (/root/reference/frizzle.go:82-87,
   *     including FailSink rewiring mid-run, options.go:35-41,88-90), with
   *     EPOCH granularity: receive transforms, send transforms, the fail
@@ -128,6 +133,15 @@ final class FrizzleStream(
   // checkpoint corruption) — those must still count once (reference parity:
   // one ctr.error per occurrence, /root/reference/options.go:95-99)
   @volatile private var batchErrorCounted = false
+
+  // The epoch's sink writes run here (see runBatch). Sized by the cluster's
+  // parallelism, not by the destination count: dests are data-computed, so
+  // extra writes queue. Created in start(); flushAndClose shuts it down and
+  // joins its threads once the query has stopped, before any sink closes.
+  @volatile private var writePool: ExecutorService = _
+  private val writeThreads = new ConcurrentLinkedQueue[Thread]()
+  private[graft] val writeThreadPrefix =
+    s"frizzle-write-${FrizzleStream.busIds.incrementAndGet()}-"
 
   // live-mutable configuration (AddOptions parity; see class scaladoc).
   // Volatile: mutators may run on a user thread while foreachBatch reads on
@@ -277,6 +291,13 @@ final class FrizzleStream(
           "sink (safeDest=false): the first dead-letter write would " +
           "permanently poison the bus — fix the failDest before start()")
     }
+    val threadIds = new AtomicInteger()
+    writePool = Executors.newFixedThreadPool(spark.sparkContext.defaultParallelism, r => {
+      val t = new Thread(r, writeThreadPrefix + threadIds.incrementAndGet())
+      t.setDaemon(true)
+      writeThreads.add(t)
+      t
+    })
     spark.streams.addListener(listener)
     // receive transforms apply per-epoch inside runBatch (live-rewirable);
     // the streaming plan is just the raw source
@@ -349,25 +370,31 @@ final class FrizzleStream(
       // fail sink dedups on (batchId, dest), so two separate writes to
       // (batchId, failDest) would silently drop the second set.
       val nDead = nFailed + nUnsafe
-      if (nDead > 0) {
+      val deadWrite = if (nDead == 0) None else epochFailCfg.sink.map { fs =>
         val unsafeSet = unsafeDests.map(_._1).toSeq
         val unsafeCond =
           if (unsafeSet.isEmpty) lit(false)
           else !col("failed") && col("dest").isin(unsafeSet: _*)
         val dead = routed.filter(col("failed") || unsafeCond)
           .select("id", "data", "ts").as[Msg]
-        stats.addFail(nDead)
-        epochFailCfg.sink.foreach { fs =>
-          fs.write(dead, epochFailCfg.dest, batchId)
-          stats.addFailsink(nDead)
-        }
+        () => fs.write(dead, epochFailCfg.dest, batchId)
       }
 
       // A4 send + send-transform chain, routed per (addressable) destination.
-      safeDests.foreach { case (dest, _) =>
+      val destWrites = safeDests.toSeq.map { case (dest, _) =>
         val out0 = sendable.filter(col("dest") === dest).select("id", "data", "ts")
         val out = epochSendTransforms.foldLeft(out0)((df, t) => t.onSend(df)).as[Msg]
-        sink.write(out, dest, batchId)
+        () => sink.write(out, dest, batchId)
+      }
+
+      // stats stay on this thread, after every write has returned; a dead
+      // letter counts in failsink only once its write succeeded
+      val errors = writeAll(deadWrite.toSeq ++ destWrites)
+      if (nDead > 0) stats.addFail(nDead)
+      if (deadWrite.isDefined && errors.head.isEmpty) stats.addFailsink(nDead)
+      errors.flatten match {
+        case first +: rest => rest.foreach(first.addSuppressed); throw first
+        case _ =>
       }
       stats.addSend(nSend - nUnsafe)
 
@@ -382,6 +409,24 @@ final class FrizzleStream(
         throw e
     } finally routed.unpersist()
   }
+
+  /** Run one epoch's writes as one concurrent wave on the write pool and
+    * return each one's failure, in order — only once EVERY write has
+    * returned. `CompletableFuture.join` waits through interrupts (and
+    * re-asserts the flag), so even `q.stop()` interrupting the micro-batch
+    * thread cannot end the epoch while one of its writes still runs: a
+    * replay of the epoch never races a leftover write to the same
+    * (dest, batchId). The writes carry this thread's Spark local
+    * properties (job group, batch id), so `q.stop()` cancels their jobs.
+    */
+  private def writeAll(writes: Seq[() => Unit]): Seq[Option[Throwable]] =
+    writes.map { w =>
+      try GraftBridge.submitCaptured(writePool)(w())
+      catch { case e: Throwable => CompletableFuture.failedFuture[Unit](e) }
+    }.map { f =>
+      try { f.join(); None }
+      catch { case e: CompletionException => Some(Option(e.getCause).getOrElse(e)) }
+    }
 
   /** A15 drain + flush: stop admitting input, process everything available
     * within the timeout, then close in reference order (sink → source →
@@ -411,6 +456,14 @@ final class FrizzleStream(
       }
       q.stop()
       q.awaitTermination(timeoutMs)
+    }
+    // no epoch runs now, so no write is queued or running: retire the pool
+    // and its threads before any sink closes
+    val pool = writePool
+    if (pool != null) {
+      pool.shutdown()
+      pool.awaitTermination(timeoutMs, TimeUnit.MILLISECONDS)
+      writeThreads.forEach(_.join(timeoutMs))
     }
     sink.close()
     source.close()
@@ -457,6 +510,8 @@ final class FrizzleStream(
 }
 
 object FrizzleStream {
+  private val busIds = new AtomicLong()
+
   /** Lift a per-message routing rule into the set-oriented processor: the
     * rule is a pair of Column expressions over (id, data, ts).
     */

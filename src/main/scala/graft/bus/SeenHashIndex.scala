@@ -7,7 +7,7 @@ import scala.collection.mutable
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -56,16 +56,16 @@ import org.apache.spark.util.sketch.BloomFilter
   *      bucket files (~2 MB each), not a 67 M-row scan. Raw epoch runs
   *      stay single-file — they are batch-sized by construction, so
   *      reading one whole is already ∝ batch.
-  *   3. '''One materialization, broadcast-side joins, zero index
+  *   3. '''One materialization, driver-set filters, zero index
   *      shuffle.''' Each epoch hashes its payloads and picks the in-epoch
   *      first copy ONCE, into one checkpointed frame; the source is never
-  *      read again. The pruned index slice is probed with
-  *      `LEFT SEMI JOIN broadcast(candidates)` (index rows stream in place
+  *      read again. The pruned index slice is probed with a filter on one
+  *      `InSet` node holding the candidates (index rows stream in place
   *      against an in-memory set ≤ |batch|) in the epoch's one
-  *      verification job, and survivors come from
-  *      `firsts LEFT ANTI JOIN broadcast(seen)`. Both joins broadcast the
-  *      SMALL side: a LEFT ANTI join can never broadcast its left (batch)
-  *      side, so `batch ANTI index` would shuffle the whole index.
+  *      verification job, and survivors come from `firsts` filtered by
+  *      `NOT InSet(seen)`. Both sets are already on the driver, so neither
+  *      probe needs a join or a broadcast job; `batch ANTI index` would
+  *      shuffle the whole index.
   *
   * A run whose `_bloom` sidecar is missing (legacy layout, or a crash
   * between the parquet commit and the sidecar write) degrades safely:
@@ -402,9 +402,9 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     * Lookup shape (see class doc): `firsts` = hash + first-copy window,
     * materialized once → its hashes collected to the driver → driver-side
     * bloom probe naming the touched (run, bucket) pairs and the candidate
-    * hashes → ONE job reading the bucket-pruned runs LEFT SEMI joined
-    * against the broadcast candidates, collected as `seen` →
-    * `firsts LEFT ANTI broadcast(seen)`. The survivor hashes and their
+    * hashes → ONE job reading the bucket-pruned runs filtered by
+    * `InSet(candidates)`, collected as `seen` → `firsts` filtered by
+    * `NOT InSet(seen)`. The survivor hashes and their
     * bloom come from the driver-held arrays. Work per epoch is bounded by
     * the batch's distinct hashes (+ fpp·|batch| false-positive reads per
     * run), independent of total index size. Filtering seen hashes after
@@ -442,7 +442,7 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     appendKnownDistinct(survivors, epochId)
     val kept =
       if (seen.isEmpty) firsts
-      else firsts.join(broadcast(seen.toSeq.toDF("__h")), Seq("__h"), "left_anti")
+      else firsts.filter(!GraftBridge.inSet(col("__h"), seen.toSet[Any]))
     kept.drop("__h")
   }
 
@@ -465,7 +465,7 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     }
     if (touched.isEmpty) Set.empty
     else touched.reduce(_.union(_))
-      .join(broadcast(candidates.toSeq.toDF("h")), Seq("h"), "left_semi")
+      .filter(GraftBridge.inSet(col("h"), candidates.toSet[Any]))
       // a torn compaction can leave the same hash in two runs
       .as[Long].collect().toSet
   }
@@ -496,7 +496,7 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
 
   private def checkpointTracked(df: DataFrame): DataFrame = {
     val out = df.localCheckpoint(eager = true)
-    prevEpochBlocks ++= org.apache.spark.sql.GraftBridge.checkpointedRddIds(out)
+    prevEpochBlocks ++= GraftBridge.checkpointedRddIds(out)
     out
   }
 }

@@ -31,6 +31,14 @@ trait BusSource {
   * (/root/reference/msg.go:34-38). Implementations must be idempotent per
   * (batchId, dest) for exactly-once sinks, or tolerate replays
   * (at-least-once) otherwise.
+  *
+  * Writes of one epoch may run CONCURRENTLY, as the reference's sinks are
+  * called from many goroutines: [[FrizzleStream]] writes every destination
+  * of an epoch at once (different `dest`, same `batchId`, on one sink) and
+  * the dead-letter write on the fail sink beside them. Each write runs
+  * under the epoch's Spark local properties, and the epoch commits only
+  * after all of them have returned. `close` is never called while a write
+  * runs.
   */
 trait BusSink {
   def write(batch: Dataset[Msg], dest: String, batchId: Long): Unit

@@ -1,6 +1,8 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import java.util.concurrent.{CompletableFuture, ExecutorService}
+
+import org.apache.spark.sql.catalyst.expressions.{Expression, InSet}
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Minimal bridge into `private[sql]` surface needed to expose custom
@@ -11,6 +13,21 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `c IN values` as ONE `InSet` node: a driver-held set of any size
+    * becomes a hash-set probe in the filter, with no join and no broadcast
+    * job (`isin` would build one `Literal` child per value).
+    */
+  def inSet(c: Column, values: Set[Any]): Column = column(InSet(expression(c), values))
+
+  /** Run `body` on `pool` under the calling thread's Spark local properties
+    * (job group, `streaming.sql.batchId`, SQL execution id) and active
+    * session, as if the calling thread had run it: its jobs are cancelled
+    * with the caller's job group and billed to the caller's batch.
+    */
+  def submitCaptured[T](pool: ExecutorService)(body: => T): CompletableFuture[T] =
+    execution.SQLExecution.withThreadLocalCaptured(
+      SparkSession.active.asInstanceOf[classic.SparkSession], pool)(body)
 
   /** Clone `spark` (shared context/catalog, copied session state) and set
     * `key`=`value` on the clone only. This is the per-QUERY conf scoping

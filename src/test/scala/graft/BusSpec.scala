@@ -611,6 +611,168 @@ class BusSpec extends SparkSpec {
       "replay must converge to the same index state, not grow it")
   }
 
+  /** A bus routing each message to the dest named by its payload. */
+  private def payloadRoutedBus(sink: BusSink, failSink: Option[BusSink] = None,
+      statsSink: StatsSink = NoopStatsSink) = {
+    val src = new MemorySource(spark)
+    val bus = new FrizzleStream(spark, src,
+      FrizzleStream.exprProcessor(dest = col("data").cast("string"),
+        failed = col("data").cast("string") === "dead"),
+      sink, failSink,
+      checkpointDir = Some(Files.createTempDirectory("buswave").toString),
+      statsSink = statsSink)
+    (src, bus)
+  }
+
+  private def liveThreads(prefix: String): Seq[String] =
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.isAlive && t.getName.startsWith(prefix)).map(_.getName)
+
+  test("one epoch's sink writes run concurrently") {
+    // each write waits for the other at a latch: serial writes would leave
+    // the first one waiting for a write that has not started
+    val met = new java.util.concurrent.CountDownLatch(2)
+    val inner = new MemorySink
+    val sink = new BusSink {
+      def write(batch: org.apache.spark.sql.Dataset[Msg], dest: String,
+          batchId: Long): Unit = {
+        met.countDown()
+        if (!met.await(30, java.util.concurrent.TimeUnit.SECONDS))
+          throw new IllegalStateException(s"the write to $dest ran alone")
+        inner.write(batch, dest, batchId)
+      }
+    }
+    val (src, bus) = payloadRoutedBus(sink)
+    bus.start()
+    src.put(Msg.utf8("1", "a"), Msg.utf8("2", "b"))
+    bus.awaitIdle()
+    assert(inner.sent("a").map(_.dataUtf8) == Seq("a"))
+    assert(inner.sent("b").map(_.dataUtf8) == Seq("b"))
+    assert(bus.stats.snapshot("send") == 2 && bus.stats.snapshot("error") == 0)
+    assert(bus.flushAndClose(10000))
+  }
+
+  test("every sink write runs under its epoch's streaming batch id") {
+    // the writes leave the micro-batch thread; the engine's batch-id
+    // property must travel with each one (a pool thread created in an
+    // earlier epoch would otherwise still hold that epoch's)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
+    def recording(inner: BusSink) = new BusSink {
+      def write(batch: org.apache.spark.sql.Dataset[Msg], dest: String,
+          batchId: Long): Unit = {
+        seen.add((batchId, spark.sparkContext.getLocalProperty("streaming.sql.batchId")))
+        inner.write(batch, dest, batchId)
+      }
+    }
+    val (src, bus) = payloadRoutedBus(recording(new MemorySink),
+      Some(recording(new MemorySink)))
+    bus.start()
+    src.put(Msg.utf8("1", "a"), Msg.utf8("2", "b"), Msg.utf8("3", "dead"))
+    bus.awaitIdle()
+    src.put(Msg.utf8("4", "a"), Msg.utf8("5", "b"), Msg.utf8("6", "dead"))
+    bus.awaitIdle()
+    val writes = seen.asScala.toSeq
+    assert(writes.size == 6 && writes.map(_._1).distinct.size == 2,
+      s"two epochs of two routes and one dead-letter write each: $writes")
+    assert(writes.forall { case (b, p) => p == b.toString },
+      s"streaming.sql.batchId must equal the write's batchId: $writes")
+    assert(bus.flushAndClose(10000))
+  }
+
+  test("a failed write fails the epoch only after its sibling writes returned") {
+    val order = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val badThrown = new java.util.concurrent.CountDownLatch(1)
+    val errorCounted = new java.util.concurrent.CountDownLatch(1)
+    val sink = new BusSink {
+      def write(batch: org.apache.spark.sql.Dataset[Msg], dest: String,
+          batchId: Long): Unit = dest match {
+        case "bad" =>
+          order.add("bad-thrown")
+          badThrown.countDown()
+          throw new IllegalStateException("write to bad failed")
+        case _ =>
+          // held until its sibling has failed, then held on: a bus that
+          // failed the epoch now would count the error while this write
+          // still runs. The order below is the proof; the bounded wait
+          // only gives such a bus the time to show itself.
+          if (!badThrown.await(30, java.util.concurrent.TimeUnit.SECONDS))
+            throw new IllegalStateException("the failing write never ran")
+          errorCounted.await(3, java.util.concurrent.TimeUnit.SECONDS)
+          order.add("held-returned")
+      }
+    }
+    val errors = new StatsSink {
+      def increment(bucket: String, n: Long): Unit =
+        if (bucket == "error") { order.add("error"); errorCounted.countDown() }
+      def gauge(name: String, value: Double): Unit = ()
+    }
+    val (src, bus) = payloadRoutedBus(sink, statsSink = errors)
+    bus.start()
+    src.put(Msg.utf8("1", "bad"), Msg.utf8("2", "held"))
+    val err = intercept[Exception](bus.awaitIdle())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("write to bad failed")), err)
+    assert(order.asScala.toSeq == Seq("bad-thrown", "held-returned", "error"),
+      s"the epoch must fail only after every write returned: $order")
+    assert(bus.stats.error.get == 1 && bus.stats.send.get == 0)
+    try bus.flushAndClose(5000) catch { case _: Exception => () } // already dead
+  }
+
+  test("flushAndClose leaves no write-pool thread alive after a drain") {
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val inner = new MemorySink
+    val sink = new BusSink {
+      def write(batch: org.apache.spark.sql.Dataset[Msg], dest: String,
+          batchId: Long): Unit = {
+        ran.add(Thread.currentThread.getName)
+        inner.write(batch, dest, batchId)
+      }
+    }
+    val (src, bus) = payloadRoutedBus(sink)
+    bus.start()
+    src.put(Msg.utf8("1", "a"), Msg.utf8("2", "b"))
+    bus.awaitIdle()
+    assert(bus.flushAndClose(10000))
+    assert(ran.size == 2 && ran.asScala.forall(_.startsWith(bus.writeThreadPrefix)),
+      s"writes must run on the bus's write pool: $ran")
+    assert(liveThreads(bus.writeThreadPrefix).isEmpty,
+      s"write-pool threads alive after close: ${liveThreads(bus.writeThreadPrefix)}")
+  }
+
+  test("a timed-out drain cancels the in-flight write and leaves no write-pool thread") {
+    // the write runs a Spark job that would stall for a minute; q.stop()
+    // cancels it through the query's job group, carried onto the pool
+    val stalled = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty("busspec.stall") != null)
+          stalled.countDown()
+    }
+    val sink = new BusSink {
+      def write(batch: org.apache.spark.sql.Dataset[Msg], dest: String,
+          batchId: Long): Unit = {
+        spark.sparkContext.setLocalProperty("busspec.stall", "1")
+        batch.foreach((_: Msg) => Thread.sleep(60000L))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (src, bus) = payloadRoutedBus(sink)
+    try {
+      bus.start()
+      src.put(Msg.utf8("1", "a"))
+      assert(stalled.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the stalling write's job never started")
+      val t0 = System.nanoTime()
+      assert(!bus.flushAndClose(500), "the drain timed out: must report false")
+      val closeMs = (System.nanoTime() - t0) / 1e6
+      assert(closeMs < 30000,
+        f"q.stop() must cancel the write's job, but close took $closeMs%.0f ms")
+      assert(liveThreads(bus.writeThreadPrefix).isEmpty,
+        s"write-pool threads alive after close: ${liveThreads(bus.writeThreadPrefix)}")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("A17: shutdown sequence flushes and closes the bus BEFORE the app callback") {
     // reference ordering (options.go:116-135): FlushAndClose completes,
     // THEN appShutdown runs — so the app can tear down resources the bus
@@ -968,10 +1130,10 @@ class BusSpec extends SparkSpec {
     assert(out.sorted.toSeq == fresh.sorted,
       "exactly one copy of each fresh payload must survive")
     assert(idx.epochs().sorted == Seq(0L, 1L, 2L, 3L), "no compaction ran")
-    // 8 = window shuffle + checkpoint, hash collect, candidate broadcast +
-    // verification, append write, seen broadcast + output collect
-    assert(jobs.get <= 8,
-      s"one dedup epoch started ${jobs.get} Spark jobs, bound 8")
+    // 6 = window shuffle + checkpoint, hash collect, verification, append
+    // write, output collect: both set probes are InSet filters, no broadcast
+    assert(jobs.get <= 6,
+      s"one dedup epoch started ${jobs.get} Spark jobs, bound 6")
   }
 
   test("tiered compaction soak: 600 epochs hold the log asymptote") {
