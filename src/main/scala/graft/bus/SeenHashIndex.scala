@@ -1,12 +1,20 @@
 package graft.bus
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.column.impl.ColumnReadStoreImpl
+import org.apache.parquet.conf.PlainParquetConfiguration
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
+import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter}
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -65,7 +73,9 @@ import org.apache.spark.util.sketch.BloomFilter
   *      verification job, and survivors come from `firsts` filtered by
   *      `NOT InSet(seen)`. Both sets are already on the driver, so neither
   *      probe needs a join or a broadcast job; `batch ANTI index` would
-  *      shuffle the whole index.
+  *      shuffle the whole index. The survivors' run is written on the
+  *      driver too (one parquet file plus its bloom, from the same array),
+  *      so the append is no Spark job either.
   *
   * A run whose `_bloom` sidecar is missing (legacy layout, or a crash
   * between the parquet commit and the sidecar write) degrades safely:
@@ -82,7 +92,10 @@ import org.apache.spark.util.sketch.BloomFilter
   * bus). With `compactEvery > 0` the [[dedupEpoch]] stage self-compacts
   * whenever the partition count reaches the threshold, the bounding
   * mechanism the reference gets from acking its unacked map (its
-  * `common/unacked.go`).
+  * `common/unacked.go`). Most merges are small — a few epochs' hashes —
+  * so a merge below the bucket threshold (`2·bucketRows` hashes) reads,
+  * dedups and writes its run on the driver with no Spark job; only a
+  * merge that will be bucketed runs as a Spark job.
   *
   * @param compactEvery compact when the index holds this many epoch
   *   partitions (0 = never); also the tiering fanout (runs per size class
@@ -100,7 +113,8 @@ import org.apache.spark.util.sketch.BloomFilter
   *   (~3 B) per hash and ~2 spurious bucket reads per tier per 200 k-row
   *   epoch.
   * @param bucketRows target hashes per bucket file in merged runs; also
-  *   the threshold below which a merged run stays unbucketed. Smaller
+  *   the threshold below which a merged run stays unbucketed and is
+  *   merged on the driver (fewer than 2·bucketRows hashes). Smaller
   *   buckets shrink the per-false-positive read but multiply file count
   *   (listing cost on an object store): 2^17 ⇒ ~1 MB files, ~700 per
   *   90 M-hash tier.
@@ -154,18 +168,11 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
   }
 
   /** Record `hashes` as epoch `epochId`'s survivors (overwrite = replay
-    * idempotent), then stage the run's `_bloom` sidecar from the
-    * just-written parquet (so the bloom is decoupled from the caller's
-    * plan — one metadata count + one batch-sized scan).
+    * idempotent): their distinct values are collected to the driver (a raw
+    * run is batch-sized) and written like a [[dedupEpoch]] run.
     */
-  def append(hashes: DataFrame, epochId: Long): Unit = {
-    val out = s"$dir/epoch=$epochId"
-    hashes.toDF("h").distinct()
-      .write.mode("overwrite").parquet(out)
-    writeBloom(out)
-    // replay overwrite ⇒ any cached bloom/frame for this label is stale
-    evictCached(epochId)
-  }
+  def append(hashes: DataFrame, epochId: Long): Unit =
+    appendKnownDistinct(hashes.toDF("h").distinct().as[Long].collect(), epochId)
 
   /** Epoch partition values currently on disk. */
   def epochs(): Seq[Long] = {
@@ -224,7 +231,7 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     * mid-deletion leaves whole duplicate runs — both harmless to the
     * lookup (a duplicate hash cannot re-admit a document) and
     * self-healing (leftovers are ordinary runs that a later compaction
-    * folds in and `distinct()` dedups). No recovery step exists because
+    * folds in and dedups). No recovery step exists because
     * none is needed.
     *
     * Safety vs replays: callers pass `uptoEpoch = the currently-running
@@ -254,42 +261,52 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
   }
 
   /** Merge one size-class group into a single run at a fresh negative
-    * label — hash-BUCKETED (`b = pmod(h, N)` partitions) once the merged
-    * size clears ~2 bucket files, so [[dedupEpoch]]'s verification can
-    * read candidate buckets instead of the whole tier. Inputs are read
-    * per-run (mixed raw/bucketed layouts), the bucket repartition rides
-    * on the distinct's exchange output (one extra batch of bucket-count
-    * files, each written whole by one task). Deletes the inputs only
-    * after the staged write — data, weight, bucket count AND bloom — is
-    * complete, keeping the crash window's only artifacts harmless
-    * duplicates.
+    * label. Below ~2 bucket files of hashes (`rowBound < 2·bucketRows`)
+    * the merge runs on the driver with no Spark job: the inputs' `h`
+    * values are read from their parquet files, deduplicated, and written
+    * as one file with a bloom built from the same array. Above it the
+    * merged run is hash-BUCKETED (`b = pmod(h, N)` partitions) by a Spark
+    * job, so [[dedupEpoch]]'s verification can read candidate buckets
+    * instead of the whole tier; inputs are read per-run (mixed
+    * raw/bucketed layouts), and the bucket repartition rides on the
+    * distinct's exchange output (each bucket file written whole by one
+    * task). Either way the inputs are deleted only after the staged write
+    * — data, weight, bucket count AND bloom — is complete, keeping the
+    * crash window's only artifacts harmless duplicates.
     */
   private def mergeRuns(group: Seq[(Long, Long)]): Long = {
     val label = math.min(0L, epochs().min) - 1
-    val out = s"$dir/epoch=$label"
+    val out = Paths.get(s"$dir/epoch=$label")
     // parquet footer row counts: an upper bound on the merged distinct
     // cardinality (exact unless a torn compaction left duplicate runs),
-    // cheap enough to size buckets and bloom before the merge job runs
+    // cheap enough to pick the path and size buckets and bloom up front
     val rowBound = group.map { case (e, _) => rowCountOf(e) }.sum
-    val nb = if (rowBound >= 2 * bucketRows)
-      math.ceil(rowBound.toDouble / bucketRows).toInt else 1
-    val mergedRows = group.map { case (e, _) => readRun(e, None) }
-      .reduce(_.union(_)).distinct()
-    if (nb > 1)
-      mergedRows.withColumn("b", pmod(col("h"), lit(nb)).cast("int"))
+    val weight = group.map(_._2).sum.toString
+    if (rowBound < 2 * bucketRows) {
+      val all = new mutable.ArrayBuilder.ofLong
+      group.foreach { case (e, _) => readHashes(e, all) }
+      val merged = sortedDistinct(all.result())
+      Files.createDirectory(out) // a fresh label: never an existing run
+      writeHashes(out, merged)
+      Files.writeString(out.resolve("_run_weight"), weight)
+      writeBloom(out, bloomOf(merged))
+    } else {
+      val nb = math.ceil(rowBound.toDouble / bucketRows).toInt
+      group.map { case (e, _) => readRun(e, None) }
+        .reduce(_.union(_)).distinct()
+        .withColumn("b", pmod(col("h"), lit(nb)).cast("int"))
         .repartition(col("b"))
-        .write.partitionBy("b").mode("error").parquet(out)
-    else mergedRows.write.mode("error").parquet(out)
-    Files.writeString(Paths.get(out, "_run_weight"),
-      group.map(_._2).sum.toString)
-    if (nb > 1) Files.writeString(Paths.get(out, "_nbuckets"), nb.toString)
-    writeBloom(out, expectedItems = math.max(1L, rowBound))
+        .write.partitionBy("b").mode("error").parquet(out.toString)
+      Files.writeString(out.resolve("_run_weight"), weight)
+      Files.writeString(out.resolve("_nbuckets"), nb.toString)
+      writeBloom(out, sparkBloomOf(out, rowBound))
+    }
     onBeforeDelete()
     group.foreach { case (e, _) =>
       deleteRecursively(Paths.get(s"$dir/epoch=$e"))
       evictCached(e)
     }
-    dirBytes(Paths.get(out))
+    dirBytes(out)
   }
 
   /** Epoch count a run represents (its `_run_weight` sidecar; raw = 1). */
@@ -339,36 +356,111 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     Files.deleteIfExists(p)
   }
 
-  /** Row count of a run from its parquet footers, read on the driver (no
-    * Spark job). Data files are the visible `.parquet` files, at the top
-    * level of a raw run or under a bucketed run's `b=` directories.
+  /** A run's data files: the `.parquet` files a Spark read of the run
+    * lists — at the top level of a raw run or under a bucketed run's `b=`
+    * directories, with no `_`- or `.`-prefixed name on the way, so a
+    * hidden temp file or `_temporary` directory left by a crashed write is
+    * never read.
     */
-  private def rowCountOf(e: Long): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val st = Files.walk(Paths.get(s"$dir/epoch=$e"))
-    try {
-      var rows = 0L
-      val it = st.iterator()
-      while (it.hasNext) {
-        val f = it.next()
-        val name = f.getFileName.toString
-        if (Files.isRegularFile(f) && name.endsWith(".parquet") &&
-            !name.startsWith("_") && !name.startsWith(".")) {
-          val r = ParquetFileReader.open(
-            HadoopInputFile.fromPath(new HPath(f.toUri), conf))
-          try rows += r.getRecordCount finally r.close()
+  private def dataFilesOf(e: Long): Seq[Path] = {
+    val run = Paths.get(s"$dir/epoch=$e")
+    if (!Files.isDirectory(run)) return Nil
+    val st = Files.walk(run)
+    try st.iterator().asScala.filter { f =>
+      Files.isRegularFile(f) && f.getFileName.toString.endsWith(".parquet") &&
+        run.relativize(f).iterator().asScala.forall { part =>
+          val name = part.toString
+          !name.startsWith("_") && !name.startsWith(".")
         }
-      }
-      rows
-    } finally st.close()
+    }.toList
+    finally st.close()
   }
 
-  /** Build and stage `runDir/_bloom` from the run's own parquet. */
-  private def writeBloom(runDir: String, expectedItems: Long = -1L): Unit = {
-    val df = spark.read.parquet(runDir)
-    val n = if (expectedItems > 0) expectedItems else math.max(1L, df.count())
-    val bf = df.stat.bloomFilter("h", n, bloomFpp)
-    val os = Files.newOutputStream(Paths.get(runDir, "_bloom"))
+  /** Driver-side parquet access: plain options, no Hadoop configuration. */
+  private lazy val readOptions =
+    ParquetReadOptions.builder(new PlainParquetConfiguration()).build()
+
+  private def openFile(f: Path): ParquetFileReader =
+    ParquetFileReader.open(new LocalInputFile(f), readOptions)
+
+  /** Row count of a run from its parquet footers, read on the driver (no
+    * Spark job).
+    */
+  private[graft] def rowCountOf(e: Long): Long =
+    dataFilesOf(e).map { f =>
+      val r = openFile(f)
+      try r.getRecordCount finally r.close()
+    }.sum
+
+  /** Append every `h` value of run `e` to `into`, read on the driver (no
+    * Spark job) column-chunk by column-chunk.
+    */
+  private def readHashes(e: Long, into: mutable.ArrayBuilder.ofLong): Unit =
+    dataFilesOf(e).foreach { f =>
+      val r = openFile(f)
+      try {
+        val meta = r.getFooter.getFileMetaData
+        val h = meta.getSchema.getColumnDescription(Array("h"))
+        var rowGroup = r.readNextRowGroup()
+        while (rowGroup != null) {
+          val values = new ColumnReadStoreImpl(rowGroup,
+            SeenHashIndex.NoConverter, meta.getSchema, meta.getCreatedBy)
+            .getColumnReader(h)
+          var n = values.getTotalValueCount
+          while (n > 0) {
+            if (values.getCurrentDefinitionLevel == h.getMaxDefinitionLevel)
+              into += values.getLong
+            values.consume()
+            n -= 1
+          }
+          rowGroup = r.readNextRowGroup()
+        }
+      } finally r.close()
+    }
+
+  /** Write `hashes` as the run's one data file, `h BIGINT` as Spark
+    * writes it: to a hidden temp name (invisible to every reader), then an
+    * atomic rename. Plain-encoded and uncompressed — distinct 64-bit
+    * hashes neither compress nor repeat.
+    */
+  private def writeHashes(runDir: Path, hashes: Array[Long]): Unit = {
+    val name = s"part-00000-${java.util.UUID.randomUUID()}.parquet"
+    val tmp = runDir.resolve(s".$name")
+    val w = ExampleParquetWriter.builder(new LocalOutputFile(tmp))
+      .withConf(new PlainParquetConfiguration())
+      .withType(SeenHashIndex.HashSchema)
+      .withCompressionCodec(CompressionCodecName.UNCOMPRESSED)
+      .withDictionaryEncoding(false)
+      .build()
+    val rows = new SimpleGroupFactory(SeenHashIndex.HashSchema)
+    try hashes.foreach(h => w.write(rows.newGroup().append("h", h)))
+    finally w.close()
+    Files.move(tmp, runDir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** `hs` sorted with duplicates removed (sorts `hs` in place). */
+  private def sortedDistinct(hs: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(hs)
+    var n = 0
+    for (h <- hs) if (n == 0 || hs(n - 1) != h) { hs(n) = h; n += 1 }
+    java.util.Arrays.copyOf(hs, n)
+  }
+
+  private def bloomOf(hashes: Array[Long]): BloomFilter = {
+    val bf = BloomFilter.create(math.max(1L, hashes.length.toLong), bloomFpp)
+    hashes.foreach(bf.putLong)
+    bf
+  }
+
+  /** A run's bloom built by one Spark job over its parquet — for bucketed
+    * merges and the missing-sidecar self-heal.
+    */
+  private def sparkBloomOf(runDir: Path, expectedItems: Long): BloomFilter =
+    spark.read.schema("h BIGINT").parquet(runDir.toString)
+      .stat.bloomFilter("h", math.max(1L, expectedItems), bloomFpp)
+
+  private def writeBloom(runDir: Path, bf: BloomFilter): Unit = {
+    val os = Files.newOutputStream(runDir.resolve("_bloom"))
     try bf.writeTo(os) finally os.close()
   }
 
@@ -380,9 +472,10 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
 
   private def bloomFor(label: Long): Option[BloomFilter] =
     bloomCache.getOrElseUpdate(label, {
-      val p = Paths.get(s"$dir/epoch=$label", "_bloom")
+      val run = Paths.get(s"$dir/epoch=$label")
+      val p = run.resolve("_bloom")
       try {
-        if (!Files.exists(p)) writeBloom(s"$dir/epoch=$label")
+        if (!Files.exists(p)) writeBloom(run, sparkBloomOf(run, rowCountOf(label)))
         val is = Files.newInputStream(p)
         try Some(BloomFilter.readFrom(is)) finally is.close()
       } catch { case _: Exception => None }
@@ -404,8 +497,8 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     * bloom probe naming the touched (run, bucket) pairs and the candidate
     * hashes → ONE job reading the bucket-pruned runs filtered by
     * `InSet(candidates)`, collected as `seen` → `firsts` filtered by
-    * `NOT InSet(seen)`. The survivor hashes and their
-    * bloom come from the driver-held arrays. Work per epoch is bounded by
+    * `NOT InSet(seen)`. The survivor hashes and their bloom are written on
+    * the driver from the driver-held array. Work per epoch is bounded by
     * the batch's distinct hashes (+ fpp·|batch| false-positive reads per
     * run), independent of total index size. Filtering seen hashes after
     * the window is equivalent to before it: all copies of a hash are seen
@@ -470,17 +563,17 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
       .as[Long].collect().toSet
   }
 
-  /** Write `hashes` (distinct by construction) as epoch `epochId`'s run —
-    * one file, overwrite = replay idempotent — with its `_bloom` built from
-    * the same driver-held array: no re-distinct shuffle, no read-back scan.
+  /** Write `hashes` (distinct by construction) as epoch `epochId`'s run on
+    * the driver, with no Spark job — one file, overwrite = replay
+    * idempotent — and its `_bloom` built from the same array.
     */
   private def appendKnownDistinct(hashes: Array[Long], epochId: Long): Unit = {
-    val out = s"$dir/epoch=$epochId"
-    hashes.toSeq.toDF("h").coalesce(1).write.mode("overwrite").parquet(out)
-    val bf = BloomFilter.create(math.max(1L, hashes.length.toLong), bloomFpp)
-    hashes.foreach(bf.putLong)
-    val os = Files.newOutputStream(Paths.get(out, "_bloom"))
-    try bf.writeTo(os) finally os.close()
+    val out = Paths.get(s"$dir/epoch=$epochId")
+    deleteRecursively(out) // a replay overwrites its previous attempt
+    Files.createDirectories(out)
+    writeHashes(out, hashes)
+    writeBloom(out, bloomOf(hashes))
+    // replay overwrite ⇒ any cached bloom/frame for this label is stale
     evictCached(epochId)
   }
 
@@ -498,5 +591,21 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     val out = df.localCheckpoint(eager = true)
     prevEpochBlocks ++= GraftBridge.checkpointedRddIds(out)
     out
+  }
+}
+
+object SeenHashIndex {
+  /** A run's file schema: the one column Spark writes for `h BIGINT`. */
+  private val HashSchema =
+    MessageTypeParser.parseMessageType("message spark_schema { optional int64 h; }")
+
+  /** [[ColumnReadStoreImpl]] wants a record converter; the driver read
+    * takes values straight off the column reader and never calls it.
+    */
+  private object NoConverter extends GroupConverter {
+    private val leaf = new PrimitiveConverter {}
+    override def getConverter(i: Int): Converter = leaf
+    override def start(): Unit = ()
+    override def end(): Unit = ()
   }
 }

@@ -152,4 +152,14 @@ object BottomKPairs {
     GraftBridge.column(
       new BottomKPairs(GraftBridge.expression(dist),
         GraftBridge.expression(key), k).toAggregateExpression())
+
+  /** The column form over only the rows where `where` is true (the
+    * aggregate's FILTER clause).
+    */
+  def apply(dist: Column, key: Column, k: Int, where: Column): Column =
+    GraftBridge.column(
+      new BottomKPairs(GraftBridge.expression(dist),
+        GraftBridge.expression(key), k)
+        .toAggregateExpression(isDistinct = false,
+          filter = Some(GraftBridge.expression(where))))
 }

@@ -337,13 +337,7 @@ object Similarity {
           expr("aggregate(zip_with(cs, cd, (x, y) -> (CAST(x AS INT) - y) " +
             "* (CAST(x AS INT) - y)), " +
             "CAST(0 AS BIGINT), (acc, v) -> acc + v)").as("qdist"))
-      graft.Graft.boundedAggFrame(
-        scored
-          .groupBy("src")
-          .agg(graft.expr.BottomKPairs(col("qdist"), col("dst"), k).as("tk"))
-          .select(col("src"), posexplode(col("tk")).as(Seq("p", "e")))
-          .select(col("src"), col("e.id").as("dst"), col("e.qd").as("qdist"),
-            (col("p") + 1).cast("long").as("rn")))
+      knnFold(scored, k)
     } else {
       val buckets = withBucketCapSub(
         withPackedCodes(emb.select("vec_id", "embedding"),
@@ -375,7 +369,7 @@ object Similarity {
         // ONLY this query: the raise is scoped to a session clone carried
         // by the returned frame, so the caller's session keeps the
         // low-default safety valve for unbounded aggs (Graft.scala).
-        graft.Graft.boundedAggFrame(
+        knnFold(
           buckets.as("a").join(buckets.as("b"),
               col("a.tbl") === col("b.tbl") && col("a.bkt") === col("b.bkt")
                 && col("a.sub") === col("b.sub")
@@ -384,14 +378,34 @@ object Similarity {
               expr("aggregate(zip_with(a.codes, b.codes, (x, y) -> " +
                 "(CAST(x AS INT) - y) * (CAST(x AS INT) - y)), " +
                 "CAST(0 AS BIGINT), (acc, v) -> acc + v)")
-                .as("qd"))
-            .groupBy("src")
-            .agg(graft.expr.BottomKPairs(col("qd"), col("dst"), k).as("tk"))
-            .select(col("src"), posexplode(col("tk")).as(Seq("p", "e")))
-            .select(col("src"), col("e.id").as("dst"), col("e.qd").as("qdist"),
-              (col("p") + 1).cast("long").as("rn")))
+                .as("qdist")),
+          k)
     }
   }
+
+  /** Both kNN strategies' tail: fold the scored (src, dst, qdist) pair
+    * stream to each src's k nearest as (src, dst, qdist, rn) rows, qdist
+    * ASC then dst ASC, rn = position + 1.
+    *
+    * A pair whose qdist is null has no distance and no rank, and is left
+    * out of the fold. That happens when the two embeddings differ in
+    * length: zip_with pads the shorter code array with nulls. (A null
+    * element still quantizes to a code, and a null embedding has no
+    * buckets, so it never pairs at all.) The rule is the fold's FILTER
+    * clause, applied to the already computed qdist: a row filter on qdist
+    * may be pushed below the projection that computes it, evaluating
+    * every distance twice.
+    */
+  private def knnFold(scored: org.apache.spark.sql.DataFrame,
+      k: Int): org.apache.spark.sql.DataFrame =
+    graft.Graft.boundedAggFrame(
+      scored
+        .groupBy("src")
+        .agg(graft.expr.BottomKPairs(col("qdist"), col("dst"), k,
+          where = col("qdist").isNotNull).as("tk"))
+        .select(col("src"), posexplode(col("tk")).as(Seq("p", "e")))
+        .select(col("src"), col("e.id").as("dst"), col("e.qd").as("qdist"),
+          (col("p") + 1).cast("long").as("rn")))
 
   /** SEMANTIC decontamination — the two-frame generalization of
     * [[lshNearDupPairs]]: corpus rows whose embedding nearly matches ANY

@@ -946,8 +946,8 @@ class BusSpec extends SparkSpec {
     // BEFORE the inputs are deleted. History must never be lost — the
     // index still answers exactly (duplicate hashes across runs are
     // harmless to the anti-join), and the next compaction self-heals.
-    val idx2 = new SeenHashIndex(spark,
-      Files.createTempDirectory("seenidx_torn").toString, compactEvery = 3)
+    val tornDir = Files.createTempDirectory("seenidx_torn").toString
+    val idx2 = new SeenHashIndex(spark, tornDir, compactEvery = 3)
     val all = scala.collection.mutable.Set[String]()
     for (e <- 0 until 3) {
       val ps = (0 until 100).map(i => s"torn-$e-$i")
@@ -960,6 +960,13 @@ class BusSpec extends SparkSpec {
     val crash = intercept[RuntimeException](idx2.compact(3))
     assert(crash.getMessage.contains("injected"), crash.getMessage)
     idx2.onBeforeDelete = () => ()
+    // the crash hit the driver merge path: one staged, fully-sidecarred,
+    // unbucketed run beside its three intact inputs
+    val staged = idx2.epochs().filter(_ < 0)
+    assert(staged.size == 1 && idx2.epochs().count(_ >= 0) == 3 &&
+      runFiles(tornDir, staged.head).filterNot(_.endsWith(".parquet")) ==
+        Seq("_bloom", "_run_weight"),
+      s"staged run: ${staged.map(runFiles(tornDir, _))}")
     // staged run + intact inputs coexist: the DISTINCT answer is unchanged
     assert(idx2.seenBefore(3).distinct().count() == all.size.toLong,
       "torn compaction must not lose or duplicate logical history")
@@ -1095,22 +1102,11 @@ class BusSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("dedup epoch job count: one materialization, driver-side bloom probe, one verification job") {
-    // the per-epoch fixed cost as a contention-immune number: Spark jobs
-    // started by one non-compacting dedupEpoch call plus one collect of its
-    // output (the bus consumes the frame it returns), against a warm
-    // 3-run index with true duplicates of two runs and in-epoch copies.
-    import spark.implicits._
-    val idx = new SeenHashIndex(spark,
-      Files.createTempDirectory("seenidx_jobs").toString)
-    def epoch(e: Int, ps: Seq[String]) = ps.zipWithIndex
-      .map { case (p, i) => (f"$e%03d-$i%05d", p) }.toDF("id", "data")
-    for (e <- 0 until 3)
-      idx.dedupEpoch(epoch(e, (0 until 200).map(i => s"jobs-$e-$i")), e).collect()
-    val fresh = (0 until 100).map(i => s"jobs-new-$i")
-    val batch = epoch(3, (0 until 50).map(i => s"jobs-0-$i") ++
-      (0 until 50).map(i => s"jobs-1-$i") ++ fresh ++ fresh.take(20))
-    val group = s"dedup-jobs-${java.util.UUID.randomUUID()}"
+  /** `body`'s result and the Spark jobs it started, counted in its own
+    * job group.
+    */
+  private def jobsStartedBy[T](body: => T): (T, Int) = {
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -1120,20 +1116,191 @@ class BusSpec extends SparkSpec {
           jobs.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, "dedupEpoch job count")
-    val out = try idx.dedupEpoch(batch, 3).select("data").as[String].collect()
+    spark.sparkContext.setJobGroup(group, "job count")
+    val out = try body
     finally {
       spark.sparkContext.clearJobGroup()
       org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
       spark.sparkContext.removeSparkListener(listener)
     }
+    (out, jobs.get)
+  }
+
+  private def dedupFrame(e: Int, ps: Seq[String]) = {
+    import spark.implicits._
+    ps.zipWithIndex.map { case (p, i) => (f"$e%03d-$i%05d", p) }
+      .toDF("id", "data")
+  }
+
+  /** A run directory's files, as names relative to it. */
+  private def runFiles(idxDir: String, label: Long): Seq[String] = {
+    val run = java.nio.file.Paths.get(s"$idxDir/epoch=$label")
+    val st = Files.walk(run)
+    try st.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(run.relativize(_).toString).toList.sorted
+    finally st.close()
+  }
+
+  private def visibleParquet(idxDir: String, label: Long): Seq[String] =
+    runFiles(idxDir, label).filter(f =>
+      f.endsWith(".parquet") && !f.split('/').exists(n =>
+        n.startsWith(".") || n.startsWith("_")))
+
+  test("dedup epoch job count: one materialization, driver-side bloom probe, one verification job") {
+    // the per-epoch fixed cost as a contention-immune number: Spark jobs
+    // started by one non-compacting dedupEpoch call plus one collect of its
+    // output (the bus consumes the frame it returns), against a warm
+    // 3-run index with true duplicates of two runs and in-epoch copies.
+    import spark.implicits._
+    val idx = new SeenHashIndex(spark,
+      Files.createTempDirectory("seenidx_jobs").toString)
+    for (e <- 0 until 3)
+      idx.dedupEpoch(dedupFrame(e, (0 until 200).map(i => s"jobs-$e-$i")), e).collect()
+    val fresh = (0 until 100).map(i => s"jobs-new-$i")
+    val batch = dedupFrame(3, (0 until 50).map(i => s"jobs-0-$i") ++
+      (0 until 50).map(i => s"jobs-1-$i") ++ fresh ++ fresh.take(20))
+    val (out, jobs) = jobsStartedBy(
+      idx.dedupEpoch(batch, 3).select("data").as[String].collect())
     assert(out.sorted.toSeq == fresh.sorted,
       "exactly one copy of each fresh payload must survive")
     assert(idx.epochs().sorted == Seq(0L, 1L, 2L, 3L), "no compaction ran")
-    // 6 = window shuffle + checkpoint, hash collect, verification, append
-    // write, output collect: both set probes are InSet filters, no broadcast
-    assert(jobs.get <= 6,
-      s"one dedup epoch started ${jobs.get} Spark jobs, bound 6")
+    // 5 = window shuffle + checkpoint, hash collect, verification, output
+    // collect: both set probes are InSet filters, no broadcast, and the
+    // survivors' run is written on the driver
+    assert(jobs <= 5, s"one dedup epoch started $jobs Spark jobs, bound 5")
+  }
+
+  test("a dedup epoch that compacts sub-threshold runs starts no more jobs than one that does not") {
+    // two indexes fed the same epochs; only the second compacts (its three
+    // runs merge on the driver) when epoch 3 arrives
+    import spark.implicits._
+    val plain = new SeenHashIndex(spark,
+      Files.createTempDirectory("seenidx_plain").toString)
+    val compactingDir = Files.createTempDirectory("seenidx_compacting").toString
+    val compacting = new SeenHashIndex(spark, compactingDir, compactEvery = 3)
+    for (idx <- Seq(plain, compacting); e <- 0 until 3)
+      idx.dedupEpoch(dedupFrame(e, (0 until 200).map(i => s"cj-$e-$i")), e)
+        .collect()
+    val fresh = (0 until 100).map(i => s"cj-new-$i")
+    val batch = dedupFrame(3, (0 until 50).map(i => s"cj-0-$i") ++
+      (0 until 50).map(i => s"cj-2-$i") ++ fresh ++ fresh.take(20))
+    val (plainOut, plainJobs) = jobsStartedBy(
+      plain.dedupEpoch(batch, 3).select("data").as[String].collect())
+    val (compactOut, compactJobs) = jobsStartedBy(
+      compacting.dedupEpoch(batch, 3).select("data").as[String].collect())
+    assert(plainOut.sorted.toSeq == fresh.sorted &&
+      compactOut.sorted.toSeq == fresh.sorted,
+      "both indexes must keep exactly the fresh payloads")
+    val merged = compacting.epochs().filter(_ < 0)
+    assert(merged.size == 1 && compacting.epochs().count(_ >= 0) == 1,
+      s"epochs 0-2 must merge into one run: ${compacting.epochs().sorted}")
+    assert(!runFiles(compactingDir, merged.head).contains("_nbuckets"),
+      "a 600-hash merge stays below the bucket threshold")
+    assert(compactJobs <= plainJobs,
+      s"compacting epoch started $compactJobs Spark jobs, non-compacting $plainJobs")
+  }
+
+  test("index merges: below the bucket threshold on the driver with no job, above it bucketed on Spark") {
+    import spark.implicits._
+    val smallDir = Files.createTempDirectory("seenidx_drivermerge").toString
+    val bigDir = Files.createTempDirectory("seenidx_sparkmerge").toString
+    val small = new SeenHashIndex(spark, smallDir)
+    // bucketRows=64: the 600-hash merge clears 2·bucketRows and buckets
+    val big = new SeenHashIndex(spark, bigDir, bucketRows = 64L)
+    for (idx <- Seq(small, big); e <- 0 until 2)
+      idx.append(spark.range(e * 300L, (e + 1) * 300L).select(col("id").as("h")), e)
+    val (_, smallJobs) = jobsStartedBy(small.compact(2))
+    val (_, bigJobs) = jobsStartedBy(big.compact(2))
+    assert(smallJobs == 0, s"a sub-threshold merge started $smallJobs Spark jobs")
+    assert(bigJobs > 0, "a bucketed merge runs on Spark")
+    val Seq(s) = small.epochs()
+    assert(runFiles(smallDir, s).filterNot(_.endsWith(".parquet")) ==
+      Seq("_bloom", "_run_weight") && visibleParquet(smallDir, s).size == 1,
+      s"driver merge layout: ${runFiles(smallDir, s)}")
+    val Seq(b) = big.epochs()
+    val bucketDirs = visibleParquet(bigDir, b).map(_.takeWhile(_ != '/')).distinct
+    assert(runFiles(bigDir, b).contains("_nbuckets") &&
+      Files.readString(java.nio.file.Paths.get(s"$bigDir/epoch=$b", "_nbuckets"))
+        .trim.toInt == 10 && bucketDirs.size > 1 &&
+      bucketDirs.forall(_.startsWith("b=")),
+      s"Spark merge layout: ${runFiles(bigDir, b)}")
+    for (idx <- Seq(small, big))
+      assert(idx.seenBefore(2).as[Long].collect().sorted.toSeq == (0L until 600L),
+        "both merge paths must hold exactly the appended hashes")
+  }
+
+  test("driver-written raw and merged runs read back exactly through Spark and the driver") {
+    import spark.implicits._
+    val idxDir = Files.createTempDirectory("seenidx_interop").toString
+    val idx = new SeenHashIndex(spark, idxDir)
+    // overlapping raw runs, plus a run written by Spark itself (snappy,
+    // dictionary-encoded, no bloom) as an earlier layout would have left
+    for (e <- 0 until 4)
+      idx.append(spark.range(e * 100L, e * 100L + 150).select(col("id").as("h")), e)
+    spark.range(420L, 480L).select(col("id").as("h"))
+      .write.parquet(s"$idxDir/epoch=4")
+    val expected = (0L until 480L).toSet
+    assert(idx.seenBefore(5).as[Long].collect().toSet == expected)
+    idx.compact(5) // fanout 2: all five weight-1 runs merge on the driver
+    val Seq(merged) = idx.epochs()
+    assert(idx.rowCountOf(merged) == expected.size.toLong,
+      "the driver merge must dedup across runs")
+    for (e <- 5 until 7)
+      idx.append(spark.range(e * 1000L, e * 1000L + 50).select(col("id").as("h")), e)
+    val all = expected ++ (5000L until 5050L) ++ (6000L until 6050L)
+    assert(idx.seenBefore(7).as[Long].collect().sorted.toSeq == all.toSeq.sorted,
+      "Spark reads of driver-written runs must match the driver-side set exactly")
+  }
+
+  test("a replayed dedup epoch overwrites its driver-written run and converges") {
+    import spark.implicits._
+    val idxDir = Files.createTempDirectory("seenidx_replay").toString
+    val idx = new SeenHashIndex(spark, idxDir)
+    for (e <- 0 until 2)
+      idx.dedupEpoch(dedupFrame(e, (0 until 100).map(i => s"rp-$e-$i")), e).collect()
+    val batch = dedupFrame(2, (0 until 30).map(i => s"rp-1-$i") ++
+      (0 until 70).map(i => s"rp-new-$i"))
+    val first = idx.dedupEpoch(batch, 2).select("data").as[String].collect().toSet
+    val before = idx.seenBefore(3).as[Long].collect().sorted.toSeq
+    val Seq(firstFile) = visibleParquet(idxDir, 2)
+    val replay = idx.dedupEpoch(batch, 2).select("data").as[String].collect().toSet
+    assert(first == (0 until 70).map(i => s"rp-new-$i").toSet && replay == first,
+      "the replay must keep the same survivors")
+    val after = runFiles(idxDir, 2)
+    assert(after.size == 2 && after.contains("_bloom") &&
+      visibleParquet(idxDir, 2).size == 1 && !after.contains(firstFile),
+      s"the replay must replace the run, not add to it: $after")
+    assert(idx.seenBefore(3).as[Long].collect().sorted.toSeq == before,
+      "the replayed run must hold the same hashes")
+  }
+
+  test("a hidden temp file in a run is invisible to Spark reads, footer counts and the driver merge") {
+    import spark.implicits._
+    val idxDir = Files.createTempDirectory("seenidx_hidden").toString
+    val idx = new SeenHashIndex(spark, idxDir)
+    for (e <- 0 until 2)
+      idx.append(spark.range(e * 100L, e * 100L + 100).select(col("id").as("h")), e)
+    // the leftovers of crashed writes: a hidden temp data file (as the
+    // driver writer names it) and a Spark committer `_temporary` dir, both
+    // holding hashes no run has
+    val donorDir = Files.createTempDirectory("seenidx_donor").toString
+    new SeenHashIndex(spark, donorDir)
+      .append(spark.range(5000L, 5100L).select(col("id").as("h")), 0)
+    val donor = java.nio.file.Paths.get(s"$donorDir/epoch=0",
+      visibleParquet(donorDir, 0).head)
+    val run0 = java.nio.file.Paths.get(s"$idxDir/epoch=0")
+    Files.copy(donor, run0.resolve(".part-00000-crashed.parquet"))
+    val tempDir = Files.createDirectories(run0.resolve("_temporary/0"))
+    Files.copy(donor, tempDir.resolve("part-00000-attempt.parquet"))
+    val expected = (0L until 200L)
+    assert(idx.seenBefore(2).as[Long].collect().sorted.toSeq == expected,
+      "Spark reads must skip the hidden files")
+    assert(idx.rowCountOf(0) == 100L, "footer counts must skip the hidden files")
+    idx.compact(2)
+    val Seq(merged) = idx.epochs()
+    assert(idx.rowCountOf(merged) == 200L &&
+      idx.seenBefore(2).as[Long].collect().sorted.toSeq == expected,
+      "the driver merge must not read the hidden files")
   }
 
   test("tiered compaction soak: 600 epochs hold the log asymptote") {

@@ -541,12 +541,30 @@ class SimilaritySpec extends SparkSpec {
   test("knnGraphQuantized: dedup-first and fold-in-join strategies are result-identical") {
     import spark.implicits._
     val emb = graft.ops.tbl(spark, sfDir, "embeddings")
-    def run(dedupFirst: Boolean) =
+    def run(emb: org.apache.spark.sql.DataFrame, dedupFirst: Boolean) =
       graft.ops.Similarity.knnGraphQuantized(emb, k = 3, nBits = 5,
           nTables = 8, dedupFirst = Some(dedupFirst))
         .as[(Long, Long, Long, Long)].collect().sorted.toSeq
-    assert(run(true) == run(false),
+    val graph = run(emb, true)
+    assert(graph == run(emb, false),
       "the strategy knob must change the plan shape, never the graph")
+    // null cases: a null embedding (no buckets), and the first vector with
+    // its last element dropped (it shares most of that vector's buckets,
+    // but zip_with pads its shorter codes with nulls, so every distance it
+    // has is null). Neither has a rank, so neither enters the graph, and
+    // the rest of the graph is unchanged on both strategies.
+    val first = emb.orderBy("vec_id").limit(1)
+    val nextId = emb.agg(max("vec_id")).as[Long].head() + 1
+    val withNulls = emb
+      .unionByName(first.select(lit(nextId).as("vec_id"),
+        lit(null).cast(emb.schema("embedding").dataType).as("embedding"),
+        col("label")))
+      .unionByName(first.select(lit(nextId + 1).as("vec_id"),
+        expr("slice(embedding, 1, size(embedding) - 1)").as("embedding"),
+        col("label")))
+    for (dedupFirst <- Seq(true, false))
+      assert(run(withNulls, dedupFirst) == graph,
+        s"dedupFirst=$dedupFirst: null-distance pairs must stay out of the graph")
   }
 
   test("pageRankInt matches a hand-computed fixed-point reference") {
