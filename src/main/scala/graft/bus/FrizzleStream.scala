@@ -7,6 +7,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 
@@ -341,8 +342,14 @@ final class FrizzleStream(
       // (≤ 3 rows per dest) is driver-safe at any data scale. A row whose
       // `failed` is null, or that is not failed and has a null `dest`,
       // counts in rcv and ack only: it is neither failed nor sendable.
-      val census = routed.groupBy("dest", "failed").count()
-        .as[(Option[String], Option[Boolean], Long)].collect()
+      // Counted per partition and summed here: one job, no shuffle, and it
+      // fills `routed`'s cache for the writes. The rows are read as the
+      // plan's own internal rows, so the epoch pays for no encoder and no
+      // SQL execution around this bookkeeping job.
+      val census = routed.select("dest", "failed").queryExecution.toRdd
+        .mapPartitions(FrizzleStream.censusOf).collect()
+        .groupMapReduce(_._1)(_._2)(_ + _)
+        .toSeq.map { case ((d, f), n) => (d, f, n) }
       val total = census.map(_._3).sum
       val nFailed = census.collect { case (_, Some(true), n) => n }.sum
       val destCounts = census.collect { case (Some(d), Some(false), n) => (d, n) }
@@ -511,6 +518,18 @@ final class FrizzleStream(
 
 object FrizzleStream {
   private val busIds = new AtomicLong()
+
+  /** One partition's (dest, failed) rows counted by value. */
+  private def censusOf(rows: Iterator[InternalRow])
+      : Iterator[((Option[String], Option[Boolean]), Long)] = {
+    val n = scala.collection.mutable.HashMap[(Option[String], Option[Boolean]), Long]()
+    rows.foreach { r =>
+      val k = (if (r.isNullAt(0)) None else Some(r.getUTF8String(0).toString),
+        if (r.isNullAt(1)) None else Some(r.getBoolean(1)))
+      n(k) = n.getOrElse(k, 0L) + 1
+    }
+    n.iterator
+  }
 
   /** Lift a per-message routing rule into the set-oriented processor: the
     * rule is a pair of Column expressions over (id, data, ts).

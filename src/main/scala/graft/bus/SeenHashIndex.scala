@@ -16,7 +16,6 @@ import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
 import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter}
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -43,45 +42,54 @@ import org.apache.spark.util.sketch.BloomFilter
   * super-linear-in-time path a perpetual bus would have. Three structural
   * changes make the lookup batch-proportional:
   *
-  *   1. '''Bloom sidecars, probed on the driver.''' Every run carries a
-  *      `_bloom` sidecar (Spark's 64-bit-hash sketch, fpp 1e-5 — the
-  *      `bloomFpp` default below, ~24 bits/hash). An epoch's distinct
-  *      hashes are collected to the driver once and probed against the
-  *      driver-held blooms, with no Spark job and no broadcast; only
-  *      (hash, run) pairs the bloom cannot rule out — true duplicates plus
-  *      ~fpp·|batch| false positives per run — go to exact verification. A
-  *      bloom has NO false negatives, so every truly-seen hash reaches
-  *      verification: the final answer stays exact, the sketch only prunes
-  *      reads. The collect is bounded by the micro-batch's distinct-hash
-  *      count — trigger-bounded by A3's
+  *   1. '''Small runs live on the driver, probed exactly.''' An
+  *      unbucketed run — a raw epoch run, or a merge below the bucket
+  *      threshold (fewer than 2·bucketRows hashes) — is held on the driver
+  *      as a sorted `Array[Long]`, filled from the very array the driver
+  *      wrote it from (or read from its parquet on first touch after a
+  *      restart). An epoch's distinct hashes are binary-searched in these
+  *      arrays: an exact answer with no Spark job, no broadcast and no
+  *      sketch. The epoch's hashes reach the driver once, bounded by the
+  *      micro-batch's size — trigger-bounded by A3's
   *      maxFilesPerTrigger/maxOffsetsPerTrigger, the same knob that
   *      bounds every other per-epoch resource.
-  *   2. '''Hash-bucketed merged runs, bucket-pruned verification.'''
-  *      Compaction lays a merged run out as `b=pmod(h, N)/` partitions
-  *      (N sized for ~256 k hashes per bucket file, `_nbuckets` sidecar).
-  *      Verification reads ONLY the buckets named by surviving
-  *      candidates: a big tier hit by `c` false positives costs ≤ c
-  *      bucket files (~2 MB each), not a 67 M-row scan. Raw epoch runs
-  *      stay single-file — they are batch-sized by construction, so
-  *      reading one whole is already ∝ batch.
-  *   3. '''One materialization, driver-set filters, zero index
-  *      shuffle.''' Each epoch hashes its payloads and picks the in-epoch
-  *      first copy ONCE, into one checkpointed frame; the source is never
-  *      read again. The pruned index slice is probed with a filter on one
-  *      `InSet` node holding the candidates (index rows stream in place
-  *      against an in-memory set ≤ |batch|) in the epoch's one
-  *      verification job, and survivors come from `firsts` filtered by
-  *      `NOT InSet(seen)`. Both sets are already on the driver, so neither
-  *      probe needs a join or a broadcast job; `batch ANTI index` would
-  *      shuffle the whole index. The survivors' run is written on the
-  *      driver too (one parquet file plus its bloom, from the same array),
-  *      so the append is no Spark job either.
+  *   2. '''Hash-bucketed merged runs: bloom probe, bucket-pruned
+  *      verification.''' Compaction lays a merge of 2·bucketRows or more
+  *      hashes out as `b=pmod(h, N)/` partitions (N sized for ~bucketRows
+  *      hashes per bucket file, `_nbuckets` sidecar) with a `_bloom`
+  *      sidecar (Spark's 64-bit-hash sketch, fpp 1e-5 — the `bloomFpp`
+  *      default below, ~24 bits/hash) held on the driver. Only (hash, run)
+  *      pairs the bloom cannot rule out — true duplicates plus
+  *      ~fpp·|batch| false positives per run — go to the epoch's one
+  *      verification job, which reads ONLY the buckets they name, filtered
+  *      by one `InSet` node of the candidates: a big tier hit by `c` false
+  *      positives costs ≤ c bucket files, not a 67 M-row scan. A bloom has
+  *      NO false negatives, so the answer stays exact; the sketch only
+  *      prunes reads.
+  *   3. '''One materialization, first copies picked on the driver, zero
+  *      shuffle.''' Each epoch tags its rows with the payload hash and a
+  *      row id into one lazily checkpointed frame; the one collect of
+  *      (hash, id, row id, payload length) reads the source once and fills
+  *      the checkpoint in the same job. The driver picks each hash's first
+  *      copy, and the output is the checkpoint filtered by
+  *      `NOT InSet(dropped row ids)`: no window exchange, no join, no
+  *      broadcast. The survivors' run is written on the driver from the
+  *      same array, so the append is no Spark job either.
   *
-  * A run whose `_bloom` sidecar is missing (legacy layout, or a crash
-  * between the parquet commit and the sidecar write) degrades safely:
-  * every batch hash is a candidate for it (full-read verification, still
-  * exact); [[bloomFor]] self-heals by rebuilding the sidecar from the
-  * run's parquet on first touch.
+  * Driver memory: 8 B per hash of every unbucketed run, on top of the
+  * buckets' blooms (~3 B per hash). With compaction on, a size class
+  * holds at most ~compactEvery runs and every merged unbucketed run is
+  * under 2·bucketRows hashes (2 MiB at the default), so the arrays stay
+  * within ~compactEvery · 2 MiB per size class below the threshold plus
+  * the raw runs; with `compactEvery = 0` every run stays raw, so the whole
+  * index sits on the driver at 8 B per hash.
+  *
+  * A bucketed run whose `_bloom` sidecar is missing (a crash between the
+  * parquet commit and the sidecar write) degrades safely: every batch
+  * hash is a candidate for it (full-read verification, still exact);
+  * [[bloomFor]] self-heals by rebuilding the sidecar from the run's
+  * parquet on first touch. Unbucketed runs carry no `_bloom`; one left by
+  * an earlier layout is ignored.
   *
   * Compaction: a long-running bus writes one `epoch=N/` directory per
   * micro-batch — ~86k/day at a 1 s trigger. [[compact]] merges runs in
@@ -106,15 +114,16 @@ import org.apache.spark.util.sketch.BloomFilter
   *   the CURRENT epoch can replay, and it is never an input of
   *   compaction; merged runs live at fresh labels, never overwriting
   *   anything).
-  * @param bloomFpp per-run Bloom false-positive rate. The steady-state
-  *   verification read is ~fpp·|batch|·bucketRows rows per big tier per
-  *   epoch (each false positive drags in one bucket file), so fpp is the
-  *   read-amplification dial, not just a memory knob: 1e-5 ⇒ ~24 bits
-  *   (~3 B) per hash and ~2 spurious bucket reads per tier per 200 k-row
-  *   epoch.
+  * @param bloomFpp Bloom false-positive rate of each bucketed run. The
+  *   steady-state verification read is ~fpp·|batch|·bucketRows rows per
+  *   big tier per epoch (each false positive drags in one bucket file), so
+  *   fpp is the read-amplification dial, not just a memory knob: 1e-5 ⇒
+  *   ~24 bits (~3 B) per hash and ~2 spurious bucket reads per tier per
+  *   200 k-row epoch.
   * @param bucketRows target hashes per bucket file in merged runs; also
-  *   the threshold below which a merged run stays unbucketed and is
-  *   merged on the driver (fewer than 2·bucketRows hashes). Smaller
+  *   the threshold below which a merged run stays unbucketed, is merged on
+  *   the driver and is held there as a sorted array (fewer than
+  *   2·bucketRows hashes, so it also bounds driver memory). Smaller
   *   buckets shrink the per-false-positive read but multiply file count
   *   (listing cost on an object store): 2^17 ⇒ ~1 MB files, ~700 per
   *   90 M-hash tier.
@@ -129,7 +138,8 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     * the FULL logical view, one per-run streaming scan unioned (runs are
     * mixed-layout: raw single-file and bucketed merged dirs cannot share
     * one partition-discovery read). Audit/test surface; [[dedupEpoch]]
-    * itself reads bloom-and-bucket-pruned slices instead.
+    * itself probes driver-held arrays and bloom-and-bucket-pruned slices
+    * instead.
     */
   def seenBefore(epochId: Long): DataFrame = {
     val runs = epochs().filter(_ < epochId)
@@ -141,8 +151,7 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     spark.range(0).select(col("id").as("h"))
 
   /** One run's hashes; `buckets = Some(bs)` prunes a bucketed run to the
-    * named `b=` partitions (no-op selector on an unbucketed run — its
-    * only "bucket" is 0 and every candidate names it).
+    * named `b=` partitions.
     *
     * The base frame is CACHED per label: runs are immutable between
     * creation and deletion, but a fresh `spark.read.parquet` re-lists the
@@ -160,11 +169,7 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
   private def readRun(label: Long, buckets: Option[Seq[Int]]): DataFrame = {
     val base = runFrameCache.getOrElseUpdate(label,
       spark.read.schema("h BIGINT").parquet(s"$dir/epoch=$label"))
-    val pruned = (buckets, nBucketsOf(label)) match {
-      case (Some(bs), nb) if nb > 1 => base.filter(col("b").isin(bs: _*))
-      case _ => base
-    }
-    pruned.select("h")
+    buckets.fold(base)(bs => base.filter(col("b").isin(bs: _*))).select("h")
   }
 
   /** Record `hashes` as epoch `epochId`'s survivors (overwrite = replay
@@ -263,16 +268,17 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
   /** Merge one size-class group into a single run at a fresh negative
     * label. Below ~2 bucket files of hashes (`rowBound < 2·bucketRows`)
     * the merge runs on the driver with no Spark job: the inputs' `h`
-    * values are read from their parquet files, deduplicated, and written
-    * as one file with a bloom built from the same array. Above it the
-    * merged run is hash-BUCKETED (`b = pmod(h, N)` partitions) by a Spark
-    * job, so [[dedupEpoch]]'s verification can read candidate buckets
-    * instead of the whole tier; inputs are read per-run (mixed
-    * raw/bucketed layouts), and the bucket repartition rides on the
-    * distinct's exchange output (each bucket file written whole by one
-    * task). Either way the inputs are deleted only after the staged write
-    * — data, weight, bucket count AND bloom — is complete, keeping the
-    * crash window's only artifacts harmless duplicates.
+    * values (their driver-held arrays, or their parquet files when not
+    * held) are deduplicated, written as one file and kept as the new
+    * run's driver-held array. Above it the merged run is hash-BUCKETED
+    * (`b = pmod(h, N)` partitions) by a Spark job, so [[dedupEpoch]]'s
+    * verification can read candidate buckets instead of the whole tier;
+    * inputs are read per-run (mixed raw/bucketed layouts), and the bucket
+    * repartition rides on the distinct's exchange output (each bucket
+    * file written whole by one task). Either way the inputs are deleted
+    * only after the staged write — data, weight and, when bucketed, bucket
+    * count and bloom — is complete, keeping the crash window's only
+    * artifacts harmless duplicates.
     */
   private def mergeRuns(group: Seq[(Long, Long)]): Long = {
     val label = math.min(0L, epochs().min) - 1
@@ -284,12 +290,14 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     val weight = group.map(_._2).sum.toString
     if (rowBound < 2 * bucketRows) {
       val all = new mutable.ArrayBuilder.ofLong
-      group.foreach { case (e, _) => readHashes(e, all) }
+      group.foreach { case (e, _) =>
+        runHashes.get(e).fold(readHashes(e, all))(all ++= _)
+      }
       val merged = sortedDistinct(all.result())
       Files.createDirectory(out) // a fresh label: never an existing run
       writeHashes(out, merged)
       Files.writeString(out.resolve("_run_weight"), weight)
-      writeBloom(out, bloomOf(merged))
+      runHashes(label) = merged
     } else {
       val nb = math.ceil(rowBound.toDouble / bucketRows).toInt
       group.map { case (e, _) => readRun(e, None) }
@@ -446,12 +454,6 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     java.util.Arrays.copyOf(hs, n)
   }
 
-  private def bloomOf(hashes: Array[Long]): BloomFilter = {
-    val bf = BloomFilter.create(math.max(1L, hashes.length.toLong), bloomFpp)
-    hashes.foreach(bf.putLong)
-    bf
-  }
-
   /** A run's bloom built by one Spark job over its parquet — for bucketed
     * merges and the missing-sidecar self-heal.
     */
@@ -464,8 +466,8 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     try bf.writeTo(os) finally os.close()
   }
 
-  /** The run's bloom, loaded on the driver and cached per label. A missing
-    * sidecar on a run self-heals (rebuilt from parquet, then cached);
+  /** A bucketed run's bloom, loaded on the driver and cached per label. A
+    * missing sidecar self-heals (rebuilt from parquet, then cached);
     * rebuild failure degrades to None = every hash is a candidate.
     */
   private val bloomCache = mutable.Map[Long, Option[BloomFilter]]()
@@ -481,28 +483,43 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
       } catch { case _: Exception => None }
     })
 
+  /** An unbucketed run's hashes, sorted and distinct, held on the driver
+    * per label: filled by the driver writes ([[appendKnownDistinct]], the
+    * driver merge) from the arrays they wrote, or read from the run's
+    * parquet on first touch (a reopened index). See the class doc for the
+    * memory bound.
+    */
+  private val runHashes = mutable.Map[Long, Array[Long]]()
+
+  private def hashesOf(label: Long): Array[Long] =
+    runHashes.getOrElseUpdate(label, {
+      val all = new mutable.ArrayBuilder.ofLong
+      readHashes(label, all)
+      sortedDistinct(all.result())
+    })
+
   private def evictCached(label: Long): Unit = {
     bloomCache.remove(label)
     runFrameCache.remove(label)
+    runHashes.remove(label)
   }
 
-  /** The bus epoch stage over (id, data, ts) message frames: keep the first
-    * copy per payload hash WITHIN the epoch (min id, nulls first), drop the
-    * copies whose hash is already in the index, then append the survivors'
-    * hashes as this epoch's partition. Wire as
+  /** The bus epoch stage over (id, data, ts) message frames, string ids:
+    * keep the first copy per payload hash WITHIN the epoch (min id, nulls
+    * first), drop the copies whose hash is already in the index, then
+    * append the survivors' hashes as this epoch's partition. Wire as
     * `epochProcess = Some((df, e) => route(idx.dedupEpoch(df, e)))`.
     *
-    * Lookup shape (see class doc): `firsts` = hash + first-copy window,
-    * materialized once → its hashes collected to the driver → driver-side
-    * bloom probe naming the touched (run, bucket) pairs and the candidate
-    * hashes → ONE job reading the bucket-pruned runs filtered by
-    * `InSet(candidates)`, collected as `seen` → `firsts` filtered by
-    * `NOT InSet(seen)`. The survivor hashes and their bloom are written on
-    * the driver from the driver-held array. Work per epoch is bounded by
-    * the batch's distinct hashes (+ fpp·|batch| false-positive reads per
-    * run), independent of total index size. Filtering seen hashes after
-    * the window is equivalent to before it: all copies of a hash are seen
-    * or none are.
+    * Lookup shape (see class doc): the batch tagged with its payload hash
+    * and a row id, lazily checkpointed → ONE job collecting (hash, id, row
+    * id, payload length) that also fills the checkpoint → the driver picks
+    * each hash's first copy and probes the distinct hashes (driver-held
+    * arrays, then blooms and ONE verification job only if a bucketed run
+    * may hold one) → the checkpoint filtered by `NOT InSet(dropped row
+    * ids)`. The survivor hashes are written on the driver from the
+    * driver-held array. Work per epoch is bounded by the batch (+
+    * fpp·|batch| false-positive reads per bucketed run), independent of
+    * total index size.
     */
   def dedupEpoch(batch: DataFrame, epochId: Long): DataFrame = {
     // free the PREVIOUS epoch's checkpoint blocks first: foreachBatch's
@@ -521,64 +538,98 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     // side thread) keeps the single-writer invariant for free.
     if (compactEvery > 0 && epochs().count(_ < epochId) >= compactEvery)
       compact(epochId)
-    val w = Window.partitionBy("__h").orderBy(asc_nulls_first("id"))
-    // materialize once: the first copies feed the hash collect AND the
-    // returned frame, and the source must not be read twice
-    val firsts = batch.withColumn("__h", xxhash64(col("data")))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
+    // materialize once: the collect below computes the tagged rows into
+    // the checkpoint, which the returned frame then reads — the source is
+    // read once, and the row ids the driver picks by stay fixed
+    val tagged = batch.withColumn("__h", xxhash64(col("data")))
+      .withColumn("__rid", monotonically_increasing_id())
       .transform(checkpointTracked)
-    val hashes = firsts.select("__h").as[Long].collect()
+    // read as the plan's own internal rows: no encoder and no SQL
+    // execution around this bookkeeping collect
+    val rows = tagged.select(col("__h"), col("id").cast("binary"), col("__rid"),
+        coalesce(octet_length(col("data")), lit(0)))
+      .queryExecution.executedPlan.executeCollect()
+      .map(r => SeenHashIndex.Tag(r.getLong(0),
+        if (r.isNullAt(1)) null else r.getBinary(1), r.getLong(2), r.getInt(3)))
+    val first = mutable.LongMap[Int]() // hash -> index of its first copy
+    for (i <- rows.indices) {
+      val j = first.getOrElse(rows(i).h, -1)
+      if (j < 0 || SeenHashIndex.precedes(rows(i), rows(j))) first(rows(i).h) = i
+    }
+    val hashes = first.keys.toArray
     val seen = seenOf(hashes, epochId)
-    val survivors = hashes.filterNot(seen.contains)
-    appendKnownDistinct(survivors, epochId)
+    appendKnownDistinct(hashes.filterNot(seen), epochId)
+    val dropped = Set.newBuilder[Any]
+    var keptBytes = 0L
+    for (i <- rows.indices) {
+      val r = rows(i)
+      if (first(r.h) == i && !seen(r.h)) keptBytes += r.len else dropped += r.rid
+    }
+    val droppedSet = dropped.result()
     val kept =
-      if (seen.isEmpty) firsts
-      else firsts.filter(!GraftBridge.inSet(col("__h"), seen.toSet[Any]))
-    kept.drop("__h")
+      if (droppedSet.isEmpty) tagged
+      else tagged.filter(!GraftBridge.inSet(col("__rid"), droppedSet))
+    // the partitioning AQE gave the old window exchange's output: one
+    // partition per advisory size of payload, so each destination's write
+    // runs as one task per partition, not one per source split
+    val advisory = GraftBridge.advisoryPartitionBytes(spark)
+    val parts = math.max(1L, (keptBytes + advisory - 1) / advisory)
+    kept.drop("__h", "__rid").coalesce(parts.toInt)
   }
 
-  /** The subset of `hashes` present in runs below `epochId`: a driver-side
-    * bloom probe, then one verification job over the touched buckets.
+  /** The subset of `hashes` present in runs below `epochId`: unbucketed
+    * runs answer exactly from their driver-held arrays; bucketed runs by a
+    * driver-side bloom probe, then one verification job over the touched
+    * buckets (no job when no bucketed run may hold a hash).
     */
   private def seenOf(hashes: Array[Long], epochId: Long): Set[Long] = {
+    // a set: a torn compaction can leave the same hash in two runs
+    val seen = mutable.HashSet[Long]()
     val candidates = mutable.HashSet[Long]()
     val touched = epochs().filter(_ < epochId).sorted.flatMap { label =>
       val nb = nBucketsOf(label)
-      val bloom = bloomFor(label)
-      val buckets = mutable.SortedSet[Int]()
-      hashes.foreach { h =>
-        if (bloom.forall(_.mightContainLong(h))) {
-          candidates += h
-          buckets += (((h % nb) + nb) % nb).toInt
+      if (nb == 1) {
+        val run = hashesOf(label)
+        hashes.foreach(h => if (java.util.Arrays.binarySearch(run, h) >= 0) seen += h)
+        None
+      } else {
+        val bloom = bloomFor(label)
+        val buckets = mutable.SortedSet[Int]()
+        hashes.foreach { h =>
+          if (bloom.forall(_.mightContainLong(h))) {
+            candidates += h
+            buckets += (((h % nb) + nb) % nb).toInt
+          }
         }
+        if (buckets.isEmpty) None else Some(readRun(label, Some(buckets.toSeq)))
       }
-      if (buckets.isEmpty) None else Some(readRun(label, Some(buckets.toSeq)))
     }
-    if (touched.isEmpty) Set.empty
-    else touched.reduce(_.union(_))
-      .filter(GraftBridge.inSet(col("h"), candidates.toSet[Any]))
-      // a torn compaction can leave the same hash in two runs
-      .as[Long].collect().toSet
+    if (touched.nonEmpty)
+      seen ++= touched.reduce(_.union(_))
+        .filter(GraftBridge.inSet(col("h"), candidates.toSet[Any]))
+        .as[Long].collect()
+    seen.toSet
   }
 
-  /** Write `hashes` (distinct by construction) as epoch `epochId`'s run on
-    * the driver, with no Spark job — one file, overwrite = replay
-    * idempotent — and its `_bloom` built from the same array.
+  /** Write `hashes` (distinct by construction; sorted here, in place) as
+    * epoch `epochId`'s run on the driver, with no Spark job — one file,
+    * overwrite = replay idempotent — and hold the same array as the run's
+    * driver-held hashes.
     */
   private def appendKnownDistinct(hashes: Array[Long], epochId: Long): Unit = {
+    java.util.Arrays.sort(hashes)
     val out = Paths.get(s"$dir/epoch=$epochId")
     deleteRecursively(out) // a replay overwrites its previous attempt
     Files.createDirectories(out)
     writeHashes(out, hashes)
-    writeBloom(out, bloomOf(hashes))
-    // replay overwrite ⇒ any cached bloom/frame for this label is stale
+    // replay overwrite ⇒ anything cached for this label is stale
     evictCached(epochId)
+    runHashes(epochId) = hashes
   }
 
-  /** localCheckpoint with its materialized RDD ids recorded, so the NEXT
-    * epoch can free them (see [[dedupEpoch]]). The ids are read from the
+  /** A lazy localCheckpoint (its blocks fill on the first job that reads
+    * it) with its RDD ids recorded, so the NEXT epoch can free them (see
+    * [[dedupEpoch]]). The ids are read from the
     * returned frame's OWN plan (its LogicalRDD nodes): a
     * getPersistentRDDs-set diff could capture a CONCURRENT stream's RDD
     * persisted inside the bracket, and unpersisting a stranger's
@@ -588,13 +639,30 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
   private var prevEpochBlocks: Seq[Int] = Nil
 
   private def checkpointTracked(df: DataFrame): DataFrame = {
-    val out = df.localCheckpoint(eager = true)
+    val out = df.localCheckpoint(eager = false)
     prevEpochBlocks ++= GraftBridge.checkpointedRddIds(out)
     out
   }
 }
 
 object SeenHashIndex {
+  /** One collected row of an epoch: payload hash, id as UTF-8 bytes (null
+    * for a null id), row id, payload bytes.
+    */
+  private final case class Tag(h: Long, id: Array[Byte], rid: Long, len: Int)
+
+  /** Whether `a` is an earlier copy than `b`: smaller id, nulls first, in
+    * UTF-8 byte order — Spark's string order, which `String.compareTo`'s
+    * UTF-16 order is not — then smaller row id.
+    */
+  private def precedes(a: Tag, b: Tag): Boolean = {
+    val c =
+      if (a.id == null) { if (b.id == null) 0 else -1 }
+      else if (b.id == null) 1
+      else java.util.Arrays.compareUnsigned(a.id, b.id)
+    c < 0 || (c == 0 && a.rid < b.rid)
+  }
+
   /** A run's file schema: the one column Spark writes for `h BIGINT`. */
   private val HashSchema =
     MessageTypeParser.parseMessageType("message spark_schema { optional int64 h; }")

@@ -35,6 +35,10 @@ import org.apache.spark.sql.functions._
   */
 object MediaOps {
 
+  /** Byte count of each media fixture cache directory, computed once. */
+  private val cacheBytes =
+    new java.util.concurrent.ConcurrentHashMap[java.nio.file.Path, java.lang.Long]()
+
   /** Full-64-bit content hash for UNDECODABLE payloads: two 32-bit
     * murmur passes under different seeds packed into one long. A single
     * 32-bit murmur sign-extended to Long birthday-collides from ~10^5
@@ -584,30 +588,35 @@ object MediaOps {
     // bytes move ZERO times: decode runs where the scan reads.
     //
     // The split size derives from the fixture's own byte count —
-    // clamp(bytes / (4·defaultParallelism), 2 MB, 128 MB), i.e. ~4 decode
-    // tasks per core at small fixtures, saturating to the 128 MB session
-    // default as the fixture grows. The conf travels with the returned
-    // frame (any table composed downstream plans under it — that is what
-    // keeps the scan a REAL parquet scan, so metadata-only pipelines still
-    // prune the payload column, MultimodalSpec pins it); the clamp is what
+    // clamp(bytes / (4·defaultParallelism), 2 MB, 128 MB) rounded down to
+    // a power of two, i.e. ~4 decode tasks per core at small fixtures,
+    // saturating to the 128 MB session default as the fixture grows. The
+    // conf travels with the returned frame (any table composed downstream
+    // plans under it — that is what keeps the scan a REAL parquet scan, so
+    // metadata-only pipelines still prune the payload column,
+    // MultimodalSpec pins it); the clamp is what
     // bounds the scope creep: at corpus scale the override equals the
     // default, so a joined big side is never read at 2 MB splits.
     // An opaque pinned-RDD leaf was tried instead and rejected: it
     // confines the conf perfectly but defeats column pruning into the
     // scan — a metadata-only query over a media lake would read every
     // payload byte.
-    val fixtureBytes = {
-      val st = Files.walk(cache)
+    // The cache path is keyed by the content fingerprint, so its bytes
+    // never change once it exists: walk it once per JVM.
+    val fixtureBytes: Long = cacheBytes.computeIfAbsent(cache, { c =>
+      val st = Files.walk(c)
       try {
         import scala.jdk.CollectionConverters._
         st.iterator().asScala.filter(Files.isRegularFile(_))
           .map(Files.size).sum
       } finally st.close()
-    }
-    val splitBytes = math.min(128L << 20, math.max(2L << 20,
-      fixtureBytes / math.max(1, 4 * spark.sparkContext.defaultParallelism)))
-    // one cached clone per distinct derived split (the clamp keeps that
-    // to a handful per JVM)
+    })
+    // a power of two, so the clone key takes at most the seven values
+    // 2 MB … 128 MB
+    val splitBytes = java.lang.Long.highestOneBit(math.min(128L << 20,
+      math.max(2L << 20,
+        fixtureBytes / math.max(1, 4 * spark.sparkContext.defaultParallelism))))
+    // one cached clone per distinct split (at most seven per JVM)
     val scanSession = org.apache.spark.sql.GraftBridge.sessionWithConf(spark,
       "spark.sql.files.maxPartitionBytes", splitBytes.toString)
     // encoder from the caller's implicits import above — encoders are

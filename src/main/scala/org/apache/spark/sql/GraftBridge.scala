@@ -20,6 +20,14 @@ object GraftBridge {
     */
   def inSet(c: Column, values: Set[Any]): Column = column(InSet(expression(c), values))
 
+  /** The session's `spark.sql.adaptive.advisoryPartitionSizeInBytes`, its
+    * fallback resolved: the partition size AQE coalesces an exchange's
+    * output to.
+    */
+  def advisoryPartitionBytes(spark: SparkSession): Long =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
+      .getConf(internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+
   /** Run `body` on `pool` under the calling thread's Spark local properties
     * (job group, `streaming.sql.batchId`, SQL execution id) and active
     * session, as if the calling thread had run it: its jobs are cancelled

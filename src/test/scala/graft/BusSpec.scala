@@ -960,12 +960,12 @@ class BusSpec extends SparkSpec {
     val crash = intercept[RuntimeException](idx2.compact(3))
     assert(crash.getMessage.contains("injected"), crash.getMessage)
     idx2.onBeforeDelete = () => ()
-    // the crash hit the driver merge path: one staged, fully-sidecarred,
-    // unbucketed run beside its three intact inputs
+    // the crash hit the driver merge path: one staged unbucketed run (its
+    // weight written, no bloom) beside its three intact inputs
     val staged = idx2.epochs().filter(_ < 0)
     assert(staged.size == 1 && idx2.epochs().count(_ >= 0) == 3 &&
       runFiles(tornDir, staged.head).filterNot(_.endsWith(".parquet")) ==
-        Seq("_bloom", "_run_weight"),
+        Seq("_run_weight"),
       s"staged run: ${staged.map(runFiles(tornDir, _))}")
     // staged run + intact inputs coexist: the DISTINCT answer is unchanged
     assert(idx2.seenBefore(3).distinct().count() == all.size.toLong,
@@ -1146,7 +1146,7 @@ class BusSpec extends SparkSpec {
       f.endsWith(".parquet") && !f.split('/').exists(n =>
         n.startsWith(".") || n.startsWith("_")))
 
-  test("dedup epoch job count: one materialization, driver-side bloom probe, one verification job") {
+  test("dedup epoch job count: one materialization, driver-side first copies and probes") {
     // the per-epoch fixed cost as a contention-immune number: Spark jobs
     // started by one non-compacting dedupEpoch call plus one collect of its
     // output (the bus consumes the frame it returns), against a warm
@@ -1164,10 +1164,162 @@ class BusSpec extends SparkSpec {
     assert(out.sorted.toSeq == fresh.sorted,
       "exactly one copy of each fresh payload must survive")
     assert(idx.epochs().sorted == Seq(0L, 1L, 2L, 3L), "no compaction ran")
-    // 5 = window shuffle + checkpoint, hash collect, verification, output
-    // collect: both set probes are InSet filters, no broadcast, and the
-    // survivors' run is written on the driver
-    assert(jobs <= 5, s"one dedup epoch started $jobs Spark jobs, bound 5")
+    // 2 = the collect that reads the source and fills the checkpoint, and
+    // the output collect: the first copies are picked, every (unbucketed)
+    // run is probed and the survivors' run is written on the driver
+    assert(jobs <= 2, s"one dedup epoch started $jobs Spark jobs, bound 2")
+  }
+
+  test("dedup epoch keeps the first copies the row_number window keeps") {
+    import spark.implicits._
+    // the pre-driver-pick oracle: row_number over the payload hash, ids
+    // ascending with nulls first
+    def windowFirsts(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("rn", row_number().over(
+          org.apache.spark.sql.expressions.Window
+            .partitionBy(xxhash64(col("data"))).orderBy(asc_nulls_first("id"))))
+        .filter(col("rn") === 1).select("id", "data")
+    val rows = Seq[(String, String)](
+      ("b", "null-id"), (null, "null-id"), ("a", "null-id"),
+      ("same", "equal-ids"), ("same", "equal-ids"), ("same", "equal-ids"),
+      // UTF-16 order puts the surrogate pair of "😀" before "｡"; UTF-8
+      // order, Spark's, puts "｡" (EF BD A1) before "😀" (F0 9F 98 80)
+      ("😀", "utf8-order"), ("｡", "utf8-order")) ++
+      // copies in every slice, with smaller ids in later slices
+      (0 until 40).map(i => (f"s${39 - i}%02d", s"spread-${i % 5}"))
+    val df = spark.sparkContext.parallelize(rows, 4).toDF("id", "data")
+    assert(df.rdd.glom().collect().count(_.exists(_.getString(1).startsWith("spread"))) == 4,
+      "precondition: the copies span every source partition")
+    val idx = new SeenHashIndex(spark,
+      Files.createTempDirectory("seenidx_firsts").toString)
+    val got = idx.dedupEpoch(df, 0).select("id", "data").as[(String, String)]
+      .collect().toSeq
+    val want = windowFirsts(df).as[(String, String)].collect().toSeq
+    def sorted(xs: Seq[(String, String)]) = xs.sortBy { case (i, d) => (d, String.valueOf(i)) }
+    assert(sorted(got) == sorted(want), s"driver pick vs window: $got vs $want")
+    assert(got.count(_._2 == "equal-ids") == 1 && got.contains((null, "null-id")) &&
+      got.contains(("｡", "utf8-order")) &&
+      (0 until 5).forall(k => got.contains((f"s${4 - k}%02d", s"spread-$k"))),
+      s"first copies: $got")
+  }
+
+  test("a dedup epoch against a bucketed run answers exactly through one verification job") {
+    import spark.implicits._
+    val idxDir = Files.createTempDirectory("seenidx_bucket_jobs").toString
+    // bucketRows=64: the 4-run merge of 1200 hashes is bucketed
+    val idx = new SeenHashIndex(spark, idxDir, bucketRows = 64L)
+    for (e <- 0 until 4)
+      idx.dedupEpoch(dedupFrame(e, (0 until 300).map(i => s"bj-$e-$i")), e).collect()
+    idx.compact(4)
+    val Seq(merged) = idx.epochs()
+    assert(runFiles(idxDir, merged).contains("_nbuckets"), "precondition: bucketed")
+    val fresh = (0 until 100).map(i => s"bj-new-$i")
+    val batch = dedupFrame(4, (0 until 50).map(i => s"bj-1-$i") ++ fresh ++ fresh.take(10))
+    val (out, jobs) = jobsStartedBy(
+      idx.dedupEpoch(batch, 4).select("data").as[String].collect())
+    assert(out.sorted.toSeq == fresh.sorted, "exactly the fresh payloads survive")
+    // the materializing collect, the verification job, the output collect
+    assert(jobs == 3, s"a dedup epoch against a bucketed run started $jobs Spark jobs")
+  }
+
+  test("a reopened index rebuilds its unbucketed runs from disk and answers exactly") {
+    import spark.implicits._
+    val idxDir = Files.createTempDirectory("seenidx_reopen").toString
+    val first = new SeenHashIndex(spark, idxDir, compactEvery = 3)
+    for (e <- 0 until 4)
+      first.dedupEpoch(dedupFrame(e, (0 until 200).map(i => s"ro-$e-$i")), e).collect()
+    // epochs 0-2 merged on the driver at epoch 3, beside epoch 3's raw run
+    val runs = first.epochs().sorted
+    assert(runs.size == 2 && runs.head < 0 && runs(1) == 3L &&
+      runs.forall(l => !runFiles(idxDir, l).contains("_nbuckets")),
+      s"precondition: a driver-merged run and a raw run: $runs")
+    val reopened = new SeenHashIndex(spark, idxDir, compactEvery = 3)
+    val fresh = (0 until 100).map(i => s"ro-new-$i")
+    val batch = dedupFrame(4, (0 until 50).map(i => s"ro-0-$i") ++
+      (0 until 50).map(i => s"ro-3-$i") ++ fresh ++ fresh.take(10))
+    val (out, jobs) = jobsStartedBy(
+      reopened.dedupEpoch(batch, 4).select("data").as[String].collect())
+    assert(out.sorted.toSeq == fresh.sorted,
+      "seen payloads of the merged and the raw run must be dropped, fresh ones kept once")
+    assert(jobs <= 2, s"reading the runs back is driver work, yet $jobs Spark jobs ran")
+  }
+
+  test("a bus epoch on 3 destinations starts one census job and one job per write") {
+    // (group, batch id) of every job started while the bus runs; the
+    // epoch stage records its own (the micro-batch thread's), so jobs of
+    // any other query are not counted
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null)
+          started.add((j.properties.getProperty("spark.jobGroup.id"),
+            j.properties.getProperty("streaming.sql.batchId")))
+    }
+    val epochs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val route = FrizzleStream.exprProcessor(dest = col("data").cast("string"),
+      failed = lit(false))
+    val src = new MemorySource(spark)
+    val bus = new FrizzleStream(spark, src, route, new NoopSink,
+      checkpointDir = Some(Files.createTempDirectory("busjobs").toString),
+      epochProcess = Some((df, e) => {
+        epochs.add((spark.sparkContext.getLocalProperty("spark.jobGroup.id"),
+          e.toString))
+        route(df)
+      }))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      bus.start()
+      for (round <- 0 until 2) {
+        src.put((0 until 30).map(i => Msg.utf8(s"$round-$i", Seq("x", "y", "z")(i % 3))): _*)
+        bus.awaitIdle()
+      }
+      assert(bus.flushAndClose(10000))
+    } finally {
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val perEpoch = epochs.asScala.toSeq.map(k => started.asScala.count(_ == k))
+    assert(perEpoch.size == 2 && perEpoch.forall(_ == 4),
+      s"jobs per epoch (1 census + 3 writes each): $perEpoch")
+    assert(bus.stats.snapshot("send") == 60)
+  }
+
+  test("a dedup bus epoch over 4 source files writes one parquet file per destination") {
+    val root = Files.createTempDirectory("busparts")
+    val spool = Files.createDirectories(root.resolve("spool"))
+    val b64 = java.util.Base64.getEncoder
+    // every file carries every destination, and a copy of a payload that
+    // an earlier file also holds
+    for (f <- 0 until 4) {
+      val lines = (0 until 12).map { i =>
+        val payload = s"${Seq("x", "y", "z")(i % 3)};f$f-$i"
+        s"""{"id":"$f-$i","data_b64":"${b64.encodeToString(payload.getBytes("UTF-8"))}"}"""
+      } :+ s"""{"id":"$f-dup","data_b64":"${b64.encodeToString("x;shared".getBytes("UTF-8"))}"}"""
+      Files.write(spool.resolve(s"part-$f.json"), lines.asJava)
+    }
+    val idx = new SeenHashIndex(spark, root.resolve("index").toString)
+    val route = FrizzleStream.exprProcessor(
+      dest = substring_index(decode(col("data"), "UTF-8"), ";", 1),
+      failed = lit(false))
+    val out = root.resolve("sink")
+    val bus = new FrizzleStream(spark, new JsonDirSource(spool.toString, 10),
+      route, new FileAdapters.ParquetDirSink(out.toString),
+      checkpointDir = Some(root.resolve("ckpt").toString),
+      epochProcess = Some((df, e) => route(idx.dedupEpoch(df, e))))
+    bus.start()
+    bus.awaitIdle()
+    assert(bus.flushAndClose(10000))
+    assert(bus.stats.snapshot("rcv") == 4 * 12 + 1,
+      "one epoch: 48 distinct payloads and one of the 4 shared copies")
+    for (d <- Seq("x", "y", "z")) {
+      val dir = out.resolve(s"dest=$d/batch_id=0")
+      val st = Files.list(dir)
+      val parquet = try st.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).toList
+      finally st.close()
+      assert(parquet.size == 1, s"dest $d wrote ${parquet.size} files: $parquet")
+    }
   }
 
   test("a dedup epoch that compacts sub-threshold runs starts no more jobs than one that does not") {
@@ -1215,7 +1367,7 @@ class BusSpec extends SparkSpec {
     assert(bigJobs > 0, "a bucketed merge runs on Spark")
     val Seq(s) = small.epochs()
     assert(runFiles(smallDir, s).filterNot(_.endsWith(".parquet")) ==
-      Seq("_bloom", "_run_weight") && visibleParquet(smallDir, s).size == 1,
+      Seq("_run_weight") && visibleParquet(smallDir, s).size == 1,
       s"driver merge layout: ${runFiles(smallDir, s)}")
     val Seq(b) = big.epochs()
     val bucketDirs = visibleParquet(bigDir, b).map(_.takeWhile(_ != '/')).distinct
@@ -1267,8 +1419,8 @@ class BusSpec extends SparkSpec {
     assert(first == (0 until 70).map(i => s"rp-new-$i").toSet && replay == first,
       "the replay must keep the same survivors")
     val after = runFiles(idxDir, 2)
-    assert(after.size == 2 && after.contains("_bloom") &&
-      visibleParquet(idxDir, 2).size == 1 && !after.contains(firstFile),
+    assert(after.size == 1 && visibleParquet(idxDir, 2) == after &&
+      !after.contains(firstFile),
       s"the replay must replace the run, not add to it: $after")
     assert(idx.seenBefore(3).as[Long].collect().sorted.toSeq == before,
       "the replayed run must hold the same hashes")
