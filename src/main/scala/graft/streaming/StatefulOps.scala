@@ -3,7 +3,10 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import WatermarkFold.Next
 
 /** Custom keyed state over an unbounded stream via
   * KeyValueGroupedDataset.flatMapGroupsWithState — the extension point for
@@ -143,36 +146,28 @@ object StatefulOps {
     * groupBy can't do. Event-time (not processing-time) timeout on
     * purpose: processing-time timeouts force the engine into continuous
     * empty timeout-check batches; event-time expiry advances with the
-    * watermark like every other streaming state here.
+    * watermark like every other streaming state here ([[WatermarkFold]]).
     */
   def runningTotals(events: Dataset[KeyedEvent], idleMs: Long,
       lateness: String = "10 minutes"): Dataset[KeyProgress] = {
-    implicit val stEnc = Encoders.product[St]
-    implicit val outEnc = Encoders.product[KeyProgress]
-    implicit val keyEnc = Encoders.scalaLong
-    events
-      .withWatermark("ts", lateness)
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        (key: Long, rows: Iterator[KeyedEvent], state: GroupState[St]) => {
-          if (state.hasTimedOut) {
-            val st = state.get
-            state.remove()
-            Iterator.single(KeyProgress(key, st.events, st.total,
-              new Timestamp(st.lastMs), expired = true))
-          } else {
-            val prev = state.getOption.getOrElse(St(0L, 0.0, 0L))
-            val batch = rows.toSeq
-            val st = St(
-              prev.events + batch.size,
-              prev.total + batch.map(_.value).sum,
-              math.max(prev.lastMs, batch.map(_.ts.getTime).max))
-            state.update(st)
-            state.setTimeoutTimestamp(st.lastMs + idleMs)
-            Iterator.single(KeyProgress(key, st.events, st.total,
-              new Timestamp(st.lastMs), expired = false))
-          }
-        })
+    val spark = events.sparkSession
+    import spark.implicits._
+    WatermarkFold[Long, KeyedEvent, St, KeyProgress](events.toDF(), "ts",
+        lateness, col("key"), col("value"))(_.key) { (key, old, rows, _) =>
+      val prev = old.getOrElse(St(0L, 0.0, 0L))
+      val batch = rows.toSeq
+      if (batch.isEmpty) // the idle timeout fired: final record, state dropped
+        Next(Seq(KeyProgress(key, prev.events, prev.total,
+          new Timestamp(prev.lastMs), expired = true)), None)
+      else {
+        val st = St(
+          prev.events + batch.size,
+          prev.total + batch.map(_.value).sum,
+          math.max(prev.lastMs, batch.map(_.ts.getTime).max))
+        Next(Seq(KeyProgress(key, st.events, st.total,
+          new Timestamp(st.lastMs), expired = false)), Some(st),
+          Some(st.lastMs + idleMs))
+      }
+    }
   }
 }

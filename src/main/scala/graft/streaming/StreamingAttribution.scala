@@ -4,7 +4,8 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import WatermarkFold.Next
 
 /** One attribution-relevant event; `ts` is the watermarked event-time
   * column (must survive into the stateful operator), `us` its exact-µs
@@ -29,11 +30,11 @@ final case class Attribution(user_id: Long, purchase_id: Long, touch: String)
   * event_id) order, the batch window's exact tie rule — if that touch is
   * within `lookbackUs`, else 'none'.
   *
-  * Shape: `flatMapGroupsWithState` keyed on user with an EVENT-TIME
-  * timeout. Events buffer per user; a purchase finalizes only when the
-  * watermark passes its event time — until then a late-but-admissible
-  * touch could still be the most recent preceding one (an incremental fold
-  * would already have attributed wrongly). "Most recent preceding touch
+  * Shape: a [[WatermarkFold]] keyed on user. Events buffer per user; a
+  * purchase finalizes only when the watermark passes its event time —
+  * until then a late-but-admissible touch could still be the most recent
+  * preceding one (an incremental fold would already have attributed
+  * wrongly). "Most recent preceding touch
   * within the lookback, else none" equals the batch rule because the
   * lookback window is a SUFFIX of the preceding range: if any preceding
   * touch is in the window, the most recent preceding touch is too.
@@ -44,11 +45,6 @@ final case class Attribution(user_id: Long, purchase_id: Long, touch: String)
   * the buffer immediately; a user with nothing pending drops their state
   * entirely. Emission is append-mode, one row per purchase, so the
   * downstream per-touch rollup aggregates finalized rows only.
-  *
-  * Operational note (same as StreamingFunnel, measured on Spark 4): the
-  * event-time timeout sweep runs when a triggered batch delivers rows to
-  * the stateful operator — to finalize a quiescing stream, send any event
-  * under an excluded sentinel user.
   */
 object StreamingAttribution {
 
@@ -58,30 +54,22 @@ object StreamingAttribution {
       purchaseType: String = "purchase"): Dataset[Attribution] = {
     val spark = stream.sparkSession
     import spark.implicits._
-    stream
-      .withWatermark(tsCol, lateness)
-      .select(col(userCol).cast("long").as("user_id"),
-        col(idCol).cast("long").as("event_id"),
-        col(typeCol).as("event_type"),
-        unix_micros(col(tsCol)).as("us"),
-        col(tsCol).as("ts"))
-      .as[AttrEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AttrBuf, Attribution](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout)(
-        updateFn(lookbackUs, purchaseType))
+    WatermarkFold[Long, AttrEvent, AttrBuf, Attribution](stream, tsCol,
+      lateness, col(userCol).cast("long").as("user_id"),
+      col(idCol).cast("long").as("event_id"), col(typeCol).as("event_type"))(
+      _.user_id)(step(lookbackUs, purchaseType))
   }
 
-  private def updateFn(lookbackUs: Long, purchaseType: String)(
-      user: Long, it: Iterator[AttrEvent],
-      st: GroupState[AttrBuf]): Iterator[Attribution] = {
-    val old = st.getOption.getOrElse(
+  private def step(lookbackUs: Long, purchaseType: String)(
+      user: Long, old: Option[AttrBuf], it: Iterator[AttrEvent],
+      wmMs: Long): Next[AttrBuf, Attribution] = {
+    val buf = old.getOrElse(
       AttrBuf(Array.emptyLongArray, Array.empty[String], Array.emptyLongArray))
-    val add = if (st.hasTimedOut) Array.empty[AttrEvent] else it.toArray
-    val ids = old.ids ++ add.map(_.event_id)
-    val types = old.types ++ add.map(_.event_type)
-    val uss = old.uss ++ add.map(_.us)
-    val wUs = st.getCurrentWatermarkMs() * 1000L
+    val add = it.toArray
+    val ids = buf.ids ++ add.map(_.event_id)
+    val types = buf.types ++ add.map(_.event_type)
+    val uss = buf.uss ++ add.map(_.us)
+    val wUs = wmMs * 1000L
 
     // finalize every purchase strictly behind the watermark: all events at
     // or before its (us, id) position are in the buffer by the watermark
@@ -114,11 +102,8 @@ object StreamingAttribution {
       i += 1
     }
 
-    if (keep.isEmpty) {
-      st.remove()
-    } else {
-      st.update(AttrBuf(keep.map(ids).toArray, keep.map(types).toArray,
-        keep.map(uss).toArray))
+    if (keep.isEmpty) Next(out.toSeq, None)
+    else {
       // wake when the watermark passes the earliest pending purchase (to
       // finalize it) or, with only touches left, their prune horizon (to
       // release the state of a user who goes quiet)
@@ -126,9 +111,8 @@ object StreamingAttribution {
       val nextUs =
         if (pend.nonEmpty) pend.map(uss).min
         else keep.map(uss).max + lookbackUs
-      st.setTimeoutTimestamp(
-        math.max(nextUs / 1000L, st.getCurrentWatermarkMs() + 1L))
+      Next(out.toSeq, Some(AttrBuf(keep.map(ids).toArray,
+        keep.map(types).toArray, keep.map(uss).toArray)), Some(nextUs / 1000L))
     }
-    out.iterator
   }
 }

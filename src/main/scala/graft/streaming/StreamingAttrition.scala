@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import WatermarkFold.Next
 
 /** One attrition event: the 8-byte content hash, the per-row quality-gate
   * verdict (computed BEFORE state — strings never enter state, the dedup
@@ -27,8 +28,7 @@ final case class AttritionStage(day: java.sql.Timestamp, stage_ord: Long,
 /** Streaming face of the curation-funnel attrition census (batch
   * q_pipeline_attrition, graft.ops.Pipeline): per event-time day, the
   * raw → quality_gate → exact_dedup survivor counts with per-stage drops
-  * and pct-of-raw, emitted ONCE when the watermark passes the day's end —
-  * the last batch monitor without a streaming twin (r19 verdict stretch).
+  * and pct-of-raw, emitted ONCE when the watermark passes the day's end.
   *
   * Stage semantics are the batch pipeline's, at day grain:
   *   - `raw` — every arrival;
@@ -59,50 +59,42 @@ object StreamingAttrition {
     val spark = stream.sparkSession
     import spark.implicits._
     val nTokens = size(split(col(textCol), " "))
-    stream
-      .withWatermark(tsCol, lateness)
-      .select(xxhash64(col(textCol)).as("h"),
-        // MUST stay the Pipeline.qualityGate predicate (20..80 tokens);
-        // parity is pinned by StreamingAttritionSpec's batch comparison
-        nTokens.between(20, 80).as("gated"),
-        unix_micros(col(tsCol)).as("us"), col(tsCol).as("ts"))
-      .as[AttritionEvent]
-      .groupByKey(e => e.us - java.lang.Math.floorMod(e.us, DayUs))
-      .flatMapGroupsWithState[AttritionState, AttritionStage](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout)(updateFn)
+    WatermarkFold[Long, AttritionEvent, AttritionState, AttritionStage](
+      stream, tsCol, lateness, xxhash64(col(textCol)).as("h"),
+      // MUST stay the Pipeline.qualityGate predicate (20..80 tokens);
+      // parity is pinned by StreamingAttritionSpec's batch comparison
+      nTokens.between(20, 80).as("gated"))(
+      e => e.us - java.lang.Math.floorMod(e.us, DayUs))(step)
   }
 
-  private def updateFn(dayUs: Long, it: Iterator[AttritionEvent],
-      st: GroupState[AttritionState]): Iterator[AttritionStage] = {
-    if (st.hasTimedOut) {
+  private def step(dayUs: Long, old: Option[AttritionState],
+      it: Iterator[AttritionEvent],
+      wmMs: Long): Next[AttritionState, AttritionStage] = {
+    if (!it.hasNext) {
       // watermark passed the day's end: no admissible arrival can change
       // any stage count — finalize the whole 3-row funnel exactly once
-      val s = st.get
-      st.remove()
+      val s = old.get
       val day = new java.sql.Timestamp(dayUs / 1000L)
       val raw = s.nRaw
       val uniq = s.hs.length.toLong
-      Iterator(
+      Next(Seq(
         AttritionStage(day, 0L, "raw", raw, 0L, 1.0),
         AttritionStage(day, 1L, "quality_gate", s.nGated, raw - s.nGated,
           s.nGated.toDouble / raw.toDouble),
         AttritionStage(day, 2L, "exact_dedup", uniq, s.nGated - uniq,
-          uniq.toDouble / raw.toDouble))
+          uniq.toDouble / raw.toDouble)), None)
     } else {
-      val old = st.getOption.getOrElse(AttritionState(Array.empty, 0L, 0L))
-      var raw = old.nRaw
-      var gated = old.nGated
-      val set = scala.collection.mutable.Set(old.hs: _*)
+      val s = old.getOrElse(AttritionState(Array.empty, 0L, 0L))
+      var raw = s.nRaw
+      var gated = s.nGated
+      val set = scala.collection.mutable.Set(s.hs: _*)
       it.foreach { e =>
         raw += 1
         if (e.gated) { gated += 1; set += e.h }
       }
-      st.update(AttritionState(set.toArray.sorted, raw, gated))
-      // finalize when the watermark passes the day end (never earlier
-      // than wm+1, or an already-passed day would never fire its timeout)
-      st.setTimeoutTimestamp(
-        math.max((dayUs + DayUs) / 1000L, st.getCurrentWatermarkMs() + 1L))
-      Iterator.empty
+      // finalize when the watermark passes the day end
+      Next(Nil, Some(AttritionState(set.toArray.sorted, raw, gated)),
+        Some((dayUs + DayUs) / 1000L))
     }
   }
 }

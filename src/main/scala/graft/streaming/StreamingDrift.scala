@@ -1,24 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-/** One drift-relevant event: the watermarked event-time column must survive
-  * into the stateful operator for the event-time timeout to be legal; `us`
-  * is its exact-µs integer used by all day arithmetic.
-  */
-final case class DriftEvent(event_type: String, us: Long,
-    ts: java.sql.Timestamp)
-
-/** Per-type drift state: counts for OPEN (not yet watermark-finalized) UTC
-  * days as parallel sorted arrays, plus the ring of the ≤8 most recently
-  * FINALIZED (day, cnt) pairs that the EWMA looks back over. Bounded by
-  * construction: open days are bounded by the lateness horizon (a day
-  * closes once the watermark passes its end), the ring is capped at 8.
-  */
-final case class DriftState(openDays: Array[Long], openCnts: Array[Long],
-    ringDays: Array[Long], ringCnts: Array[Long])
 
 /** A finalized day's drift row — the same frame the batch q_ewma_drift
   * emits: NULL ewma/drift for a type's first-ever day (no trailing days).
@@ -30,25 +12,18 @@ final case class DriftRow(event_type: String, day: java.sql.Timestamp,
   * graft.ops.TimeWindows): per event type, each UTC day's count is compared
   * against the α=1/2 EWMA of the trailing ≤8 PRESENT days. The batch query
   * phrases the EWMA as 8 lags over the (type × day) frame; here the same
-  * numbers fall out of a ring of finalized days carried in
-  * `flatMapGroupsWithState` state. Arithmetic is the batch query's exactly:
-  * integer numerator Σ cnt_j·2^(7−j) (j = 0 the most recent trailing day)
-  * and present-days denominator, then ewma and drift as single IEEE
-  * divisions — so a replayed stream matches the DuckDB-hash-checked batch
-  * frame BIT-for-bit (StreamingDriftSpec pins it).
+  * numbers fall out of the ring of ≤8 finalized day counts that
+  * [[WatermarkFold.bucketRing]] carries per type. Arithmetic is the batch
+  * query's exactly: integer numerator Σ cnt_j·2^(7−j) (j = 0 the most
+  * recent trailing day) and present-days denominator, then ewma and drift
+  * as single IEEE divisions — so a replayed stream matches the
+  * DuckDB-hash-checked batch frame BIT-for-bit (StreamingDriftSpec pins
+  * it).
   *
-  * 100 TB shape: state per event type is ≤8 ring pairs + the open-day
-  * counts inside the lateness horizon — constant, independent of event
-  * volume; each day finalizes exactly once (watermark passes its end) and
-  * emits one append-mode row. Events for a day older than the newest
-  * finalized day are beyond the lateness bound and are dropped (the batch
-  * query, which sees all data at once, has no such horizon).
-  *
-  * Operational note (the StreamingFunnel measurement, Spark 4): the
-  * event-time timeout sweep runs when a triggered batch delivers rows TO
-  * the stateful operator, so a quiescing stream finalizes its tail only
-  * when nudged by any further row (tests use far-future rows under an
-  * excluded sentinel type).
+  * 100 TB shape: state per event type is the ≤8-count ring plus the
+  * open-day counts inside the lateness horizon — constant, independent of
+  * event volume; each day finalizes exactly once and emits one
+  * append-mode row.
   */
 object StreamingDrift {
 
@@ -58,65 +33,19 @@ object StreamingDrift {
       lateness: String): Dataset[DriftRow] = {
     val spark = stream.sparkSession
     import spark.implicits._
-    stream
-      .withWatermark(tsCol, lateness)
-      .select(col(typeCol).as("event_type"),
-        unix_micros(col(tsCol)).as("us"), col(tsCol).as("ts"))
-      .as[DriftEvent]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[DriftState, DriftRow](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout)(updateFn)
-  }
-
-  private def updateFn(key: String, it: Iterator[DriftEvent],
-      st: GroupState[DriftState]): Iterator[DriftRow] = {
-    val old = st.getOption.getOrElse(
-      DriftState(Array.emptyLongArray, Array.emptyLongArray,
-        Array.emptyLongArray, Array.emptyLongArray))
-    val open = scala.collection.mutable.TreeMap.empty[Long, Long]
-    var i = 0
-    while (i < old.openDays.length) {
-      open(old.openDays(i)) = old.openCnts(i); i += 1
-    }
-    var ringD = old.ringDays
-    var ringC = old.ringCnts
-    // fold the batch's events into open-day counts; a day at or before the
-    // newest FINALIZED day is beyond the lateness bound — dropped
-    it.foreach { e =>
-      val day = e.us - java.lang.Math.floorMod(e.us, DayUs)
-      if (ringD.isEmpty || day > ringD.last)
-        open(day) = open.getOrElse(day, 0L) + 1L
-    }
-    // finalize every open day whose end the watermark has passed, in day
-    // order, emitting the batch-exact row and rolling the day into the ring
-    val wmMs = st.getCurrentWatermarkMs()
-    val out = Seq.newBuilder[DriftRow]
-    while (open.nonEmpty && (open.head._1 + DayUs) / 1000L <= wmMs) {
-      val (day, cnt) = open.head
-      open.remove(day)
-      val m = ringD.length
+    WatermarkFold.bucketRing(stream, tsCol, typeCol, lateness, DayUs,
+        ringLen = 8) { (key, day, cnt, ring) =>
       var num = 0L
       var den = 0L
       var j = 0
-      while (j < m && j < 8) { // j = 0 the most recent trailing day
-        num += ringC(m - 1 - j) * (1L << (7 - j))
+      while (j < ring.length) { // j = 0 the most recent trailing day
+        num += ring(ring.length - 1 - j) * (1L << (7 - j))
         den += 1L << (7 - j)
         j += 1
       }
       val ewma = if (den > 0) Some(num.toDouble / den.toDouble) else None
-      out += DriftRow(key, new java.sql.Timestamp(day / 1000L), cnt, ewma,
+      DriftRow(key, new java.sql.Timestamp(day / 1000L), cnt, ewma,
         ewma.map(e => cnt.toDouble / e))
-      ringD = (ringD :+ day).takeRight(8)
-      ringC = (ringC :+ cnt).takeRight(8)
     }
-    st.update(DriftState(open.keys.toArray, open.values.toArray,
-      ringD, ringC))
-    // wake when the earliest still-open day becomes finalizable; a type
-    // with no open days needs no timeout (the ring alone never expires —
-    // it is the lookback for this type's NEXT day)
-    if (open.nonEmpty)
-      st.setTimeoutTimestamp(
-        math.max((open.head._1 + DayUs) / 1000L + 1L, wmMs + 1L))
-    out.result().iterator
   }
 }

@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import WatermarkFold.Next
 
 /** One dedup-census event: the watermarked event-time column plus its
   * exact-µs twin and the 8-byte content hash (strings never enter state —
@@ -57,39 +58,30 @@ object StreamingDupRatio {
       textCol: String, lateness: String): Dataset[DupDay] = {
     val spark = stream.sparkSession
     import spark.implicits._
-    stream
-      .withWatermark(tsCol, lateness)
-      .select(col(sourceCol).cast("string").as("source"),
-        xxhash64(col(textCol)).as("h"),
-        unix_micros(col(tsCol)).as("us"), col(tsCol).as("ts"))
-      .as[DupEvent]
-      .groupByKey(e => (e.source, e.us - java.lang.Math.floorMod(e.us, DayUs)))
-      .flatMapGroupsWithState[DupState, DupDay](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout)(updateFn)
+    WatermarkFold[(String, Long), DupEvent, DupState, DupDay](stream, tsCol,
+      lateness, col(sourceCol).cast("string").as("source"),
+      xxhash64(col(textCol)).as("h"))(
+      e => (e.source, e.us - java.lang.Math.floorMod(e.us, DayUs)))(step)
   }
 
-  private def updateFn(key: (String, Long), it: Iterator[DupEvent],
-      st: GroupState[DupState]): Iterator[DupDay] = {
+  private def step(key: (String, Long), old: Option[DupState],
+      it: Iterator[DupEvent], wmMs: Long): Next[DupState, DupDay] = {
     val (source, dayUs) = key
-    if (st.hasTimedOut) {
+    if (!it.hasNext) {
       // watermark passed the day's end: no admissible arrival can change
       // the counts any more — finalize exactly once and drop the state
-      val s = st.get
-      st.remove()
-      Iterator.single(DupDay(source,
-        new java.sql.Timestamp(dayUs / 1000L), s.nDocs, s.hs.length.toLong,
-        1.0 - s.hs.length.toDouble / s.nDocs.toDouble))
+      val s = old.get
+      Next(Seq(DupDay(source, new java.sql.Timestamp(dayUs / 1000L),
+        s.nDocs, s.hs.length.toLong,
+        1.0 - s.hs.length.toDouble / s.nDocs.toDouble)), None)
     } else {
-      val old = st.getOption.getOrElse(DupState(Array.empty, 0L))
-      var n = old.nDocs
-      val set = scala.collection.mutable.Set(old.hs: _*)
+      val s = old.getOrElse(DupState(Array.empty, 0L))
+      var n = s.nDocs
+      val set = scala.collection.mutable.Set(s.hs: _*)
       it.foreach { e => n += 1; set += e.h }
-      st.update(DupState(set.toArray.sorted, n))
-      // finalize when the watermark passes the day end (never earlier
-      // than wm+1, or an already-passed day would never fire its timeout)
-      st.setTimeoutTimestamp(
-        math.max((dayUs + DayUs) / 1000L, st.getCurrentWatermarkMs() + 1L))
-      Iterator.empty
+      // finalize when the watermark passes the day end
+      Next(Nil, Some(DupState(set.toArray.sorted, n)),
+        Some((dayUs + DayUs) / 1000L))
     }
   }
 }

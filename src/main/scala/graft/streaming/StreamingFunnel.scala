@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import WatermarkFold.Next
 
 /** One funnel-relevant event. `ts` is the WATERMARKED event-time column —
   * it must survive into the stateful operator for the event-time timeout
@@ -30,12 +31,12 @@ final case class FunnelUser(user_id: Long, stage: Long)
   * after the previous stage's time and within `windowUs` of it; a user's
   * depth is the number of stages reached.
   *
-  * Shape: `flatMapGroupsWithState` keyed on user with an EVENT-TIME
-  * timeout. Events are buffered per user and the stage machine is
-  * evaluated once, at finalization — so the answer is independent of
-  * arrival order within the watermark bound (a late-but-admissible signup
-  * can still lower t1 and re-qualify an earlier-buffered click; an
-  * incremental fold would have already dropped it). Finalization fires
+  * Shape: a [[WatermarkFold]] keyed on user. Events are buffered per
+  * user and the stage machine is evaluated once, at finalization — so the
+  * answer is independent of arrival order within the watermark bound (a
+  * late-but-admissible signup can still lower t1 and re-qualify an
+  * earlier-buffered click; an incremental fold would have already dropped
+  * it). Finalization fires
   * when the watermark passes first-signup + (stages−1)·window — past that
   * point no admissible event can change the user's depth, because t_k ≤
   * t1 + (k−1)·window by induction.
@@ -49,15 +50,9 @@ final case class FunnelUser(user_id: Long, stage: Long)
   * — one funnel per user, ever); non-converting users are dropped
   * entirely once the watermark passes their last event + span. Emission
   * is append-mode (one final row per converting user), so a downstream
-  * per-stage rollup is a 3-row aggregation of finalized rows.
-  *
-  * Operational note (measured, Spark 4): the event-time timeout sweep
-  * runs when a triggered batch delivers rows TO THE STATEFUL OPERATOR —
-  * rows filtered out upstream (a non-stage event type) still advance the
-  * watermark but do not cause an eviction pass. A continuously-fed
-  * production stream sweeps every batch for free; to finalize a
-  * quiescing stream, send any stage-typed event (tests use a
-  * far-future signup under an excluded sentinel user).
+  * per-stage rollup is a 3-row aggregation of finalized rows. Only
+  * stage-typed rows reach the fold, so only they can finalize a quiescing
+  * stream.
   */
 object StreamingFunnel {
 
@@ -73,48 +68,35 @@ object StreamingFunnel {
     val spark = stream.sparkSession
     import spark.implicits._
     require(stages.nonEmpty, "at least one funnel stage")
-    stream
-      .withWatermark(tsCol, lateness)
-      .filter(col(typeCol).isin(stages: _*))
-      .select(col(userCol).cast("long").as("user_id"),
-        col(typeCol).as("event_type"),
-        unix_micros(col(tsCol)).as("us"),
-        col(tsCol).as("ts"))
-      .as[FunnelEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelBuf, FunnelUser](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout)(
-        updateFn(stages.toIndexedSeq, windowUs))
+    WatermarkFold[Long, FunnelEvent, FunnelBuf, FunnelUser](
+      stream.filter(col(typeCol).isin(stages: _*)), tsCol, lateness,
+      col(userCol).cast("long").as("user_id"),
+      col(typeCol).as("event_type"))(_.user_id)(
+      step(stages.toIndexedSeq, windowUs))
   }
 
-  private def updateFn(stages: IndexedSeq[String], windowUs: Long)(
-      user: Long, it: Iterator[FunnelEvent],
-      st: GroupState[FunnelBuf]): Iterator[FunnelUser] = {
-    if (st.hasTimedOut) {
-      val depth = finalDepth(stages.length, windowUs, st.get)
-      if (depth > 0) {
-        // emitted once; keep an empty tombstone (no further timeout) so a
-        // later signup cannot restart this user's funnel — batch t₁ is the
-        // global minimum, one funnel per user, ever
-        st.update(FunnelBuf(Array.emptyIntArray, Array.emptyLongArray,
-          done = true))
-        Iterator.single(FunnelUser(user, depth))
-      } else {
-        // never signed up inside the horizon: drop the state entirely — a
-        // future signup legitimately starts this user's (first) funnel,
-        // and the watermark guarantees the dropped events are all older
-        // than it, so none could have qualified for a later stage anyway
-        st.remove()
-        Iterator.empty
-      }
-    } else if (st.getOption.exists(_.done)) {
-      Iterator.empty // finalized: ignore all further events
-    } else {
-      val old = st.getOption.getOrElse(
+  private def step(stages: IndexedSeq[String], windowUs: Long)(
+      user: Long, old: Option[FunnelBuf], it: Iterator[FunnelEvent],
+      wmMs: Long): Next[FunnelBuf, FunnelUser] = old match {
+    case Some(buf) if buf.done => Next(Nil, old) // finalized: ignore events
+    case Some(buf) if !it.hasNext =>
+      val depth = finalDepth(stages.length, windowUs, buf)
+      // emitted once; keep an empty tombstone (no further timeout) so a
+      // later signup cannot restart this user's funnel — batch t₁ is the
+      // global minimum, one funnel per user, ever
+      if (depth > 0) Next(Seq(FunnelUser(user, depth)), Some(
+        FunnelBuf(Array.emptyIntArray, Array.emptyLongArray, done = true)))
+      // never signed up inside the horizon: drop the state entirely — a
+      // future signup legitimately starts this user's (first) funnel, and
+      // the watermark guarantees the dropped events are all older than it,
+      // so none could have qualified for a later stage anyway
+      else Next(Nil, None)
+    case _ =>
+      val buf = old.getOrElse(
         FunnelBuf(Array.emptyIntArray, Array.emptyLongArray, done = false))
       val add = it.toArray
-      var types = old.types ++ add.map(e => stages.indexOf(e.event_type))
-      var uss = old.uss ++ add.map(_.us)
+      var types = buf.types ++ add.map(e => stages.indexOf(e.event_type))
+      var uss = buf.uss ++ add.map(_.us)
       // earliest first-stage time seen so far; it can only DECREASE as
       // more events arrive, so anything beyond its reachable horizon
       // (t1 + (n−1)·window bounds every later stage) is safely pruned
@@ -132,7 +114,6 @@ object StreamingFunnel {
           uss = keep.map(uss).toArray
         }
       }
-      st.update(FunnelBuf(types, uss, done = false))
       // finalize when no admissible event can change the outcome: the
       // watermark passing the reachable horizon (or, for users with no
       // first-stage event yet, the last seen event + full span — a signup
@@ -140,10 +121,8 @@ object StreamingFunnel {
       val horizonUs =
         if (sigMin != Long.MaxValue) sigMin + (stages.length - 1).toLong * windowUs
         else uss.max + stages.length.toLong * windowUs
-      st.setTimeoutTimestamp(
-        math.max(horizonUs / 1000L + 1L, st.getCurrentWatermarkMs() + 1L))
-      Iterator.empty
-    }
+      Next(Nil, Some(FunnelBuf(types, uss, done = false)),
+        Some(horizonUs / 1000L + 1L))
   }
 
   /** Evaluate the stage machine over the full buffer: t₀ = min stage-0

@@ -1,25 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-/** One traffic event for the week-over-week monitor; the watermarked
-  * event-time column must survive into the stateful operator for the
-  * event-time timeout to be legal.
-  */
-final case class PeriodEvent(event_type: String, us: Long,
-    ts: java.sql.Timestamp)
-
-/** Per-type state: counts for OPEN (not yet watermark-finalized) UTC weeks
-  * as parallel sorted arrays, plus the previously-finalized week's start
-  * and count — the batch query's `lag(cnt, 1)` needs a ring of exactly
-  * one, and the week start doubles as the lateness fence (a row for a
-  * week at or before it is beyond the horizon). Bounded: open weeks are
-  * bounded by the lateness horizon, the lag ring is one pair.
-  */
-final case class PeriodState(openWeeks: Array[Long], openCnts: Array[Long],
-    prevWeek: Long, prevCnt: Long, hasPrev: Boolean)
 
 /** A finalized week's row — the frame batch q_period_over_period emits:
   * NULL prev/pct_change for a type's first-ever week.
@@ -31,84 +12,30 @@ final case class PeriodRow(event_type: String, week: java.sql.Timestamp,
   * (q_period_over_period, graft.ops.TimeWindows): per event type, each
   * Monday-00:00-UTC week's count and its delta vs the previous present
   * week, emitted append-mode once the watermark passes the week's end.
-  * Arithmetic is the batch query's exactly — exact BIGINT counts, ONE
-  * IEEE division for pct_change — so a replayed stream matches the
-  * DuckDB-hash-checked batch frame bit-for-bit (StreamingPeriodSpec).
-  *
-  * 100 TB shape: state per event type is the open weeks inside the
-  * lateness horizon plus ONE finalized (week, count) pair — constant,
-  * independent of event volume; each week finalizes exactly once. Events
-  * for a week at or before the newest finalized week are beyond the
-  * lateness bound and dropped (the batch query, seeing all data at once,
-  * has no horizon).
+  * It is [[WatermarkFold.bucketRing]] at week width with a ring of one —
+  * the batch query's `lag(cnt, 1)`. Arithmetic is the batch query's
+  * exactly — exact BIGINT counts, ONE IEEE division for pct_change — so a
+  * replayed stream matches the DuckDB-hash-checked batch frame bit-for-bit
+  * (StreamingPeriodSpec).
   */
 object StreamingPeriod {
 
-  private val DayUs = 86400000000L
-  private val WeekUs = 7L * DayUs
+  private val WeekUs = 7L * 86400000000L
 
-  /** Monday-00:00-UTC week start for an epoch-µs instant: epoch day 0
-    * (1970-01-01) was a THURSDAY, so day-of-week with Monday = 0 is
-    * (d + 3) mod 7. Agrees with both engines' date_trunc('week', ts). */
-  private[graft] def weekStartUs(us: Long): Long = {
-    val dayUs = us - java.lang.Math.floorMod(us, DayUs)
-    val d = dayUs / DayUs
-    (d - java.lang.Math.floorMod(d + 3L, 7L)) * DayUs
-  }
+  /** Monday-00:00-UTC week start for an epoch-µs instant. Agrees with both
+    * engines' date_trunc('week', ts). */
+  private[graft] def weekStartUs(us: Long): Long =
+    WatermarkFold.bucketStart(us, WeekUs)
 
   def weekOverWeek(stream: DataFrame, tsCol: String, typeCol: String,
       lateness: String): Dataset[PeriodRow] = {
     val spark = stream.sparkSession
     import spark.implicits._
-    stream
-      .withWatermark(tsCol, lateness)
-      .select(col(typeCol).as("event_type"),
-        unix_micros(col(tsCol)).as("us"), col(tsCol).as("ts"))
-      .as[PeriodEvent]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[PeriodState, PeriodRow](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout)(updateFn)
-  }
-
-  private def updateFn(key: String, it: Iterator[PeriodEvent],
-      st: GroupState[PeriodState]): Iterator[PeriodRow] = {
-    val old = st.getOption.getOrElse(
-      PeriodState(Array.emptyLongArray, Array.emptyLongArray,
-        Long.MinValue, 0L, hasPrev = false))
-    val open = scala.collection.mutable.TreeMap.empty[Long, Long]
-    var i = 0
-    while (i < old.openWeeks.length) {
-      open(old.openWeeks(i)) = old.openCnts(i); i += 1
-    }
-    var prevWeek = old.prevWeek
-    var prevCnt = old.prevCnt
-    var hasPrev = old.hasPrev
-    // fold events into open-week counts; a week at or before the newest
-    // FINALIZED week is beyond the lateness bound — dropped
-    it.foreach { e =>
-      val wk = weekStartUs(e.us)
-      if (!hasPrev || wk > prevWeek)
-        open(wk) = open.getOrElse(wk, 0L) + 1L
-    }
-    // finalize every open week whose end the watermark has passed, in
-    // order, emitting the batch-exact row and rolling the lag ring
-    val wmMs = st.getCurrentWatermarkMs()
-    val out = Seq.newBuilder[PeriodRow]
-    while (open.nonEmpty && (open.head._1 + WeekUs) / 1000L <= wmMs) {
-      val (wk, cnt) = open.head
-      open.remove(wk)
-      val prev = if (hasPrev) Some(prevCnt) else None
-      out += PeriodRow(key, new java.sql.Timestamp(wk / 1000L), cnt, prev,
+    WatermarkFold.bucketRing(stream, tsCol, typeCol, lateness, WeekUs,
+        ringLen = 1) { (key, week, cnt, ring) =>
+      val prev = ring.lastOption
+      PeriodRow(key, new java.sql.Timestamp(week / 1000L), cnt, prev,
         prev.map(p => (cnt - p).toDouble / p.toDouble))
-      prevWeek = wk
-      prevCnt = cnt
-      hasPrev = true
     }
-    st.update(PeriodState(open.keys.toArray, open.values.toArray,
-      prevWeek, prevCnt, hasPrev))
-    if (open.nonEmpty)
-      st.setTimeoutTimestamp(
-        math.max((open.head._1 + WeekUs) / 1000L + 1L, wmMs + 1L))
-    out.result().iterator
   }
 }

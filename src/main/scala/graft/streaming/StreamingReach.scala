@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import WatermarkFold.Next
 
 /** One reach-relevant event (watermarked event time + its exact-µs twin). */
 final case class ReachEvent(user_id: Long, us: Long, ts: java.sql.Timestamp)
@@ -65,14 +66,8 @@ object StreamingReach {
       lateness: String): Dataset[FirstSeen] = {
     val spark = stream.sparkSession
     import spark.implicits._
-    stream
-      .withWatermark(tsCol, lateness)
-      .select(col(userCol).cast("long").as("user_id"),
-        unix_micros(col(tsCol)).as("us"), col(tsCol).as("ts"))
-      .as[ReachEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[ReachState, FirstSeen](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout)(updateFn)
+    WatermarkFold[Long, ReachEvent, ReachState, FirstSeen](stream, tsCol,
+      lateness, col(userCol).cast("long").as("user_id"))(_.user_id)(step)
   }
 
   /** How long past the watermark an emitted user's tombstone is held
@@ -85,36 +80,29 @@ object StreamingReach {
     * horizon: longer = fewer re-emissions, more state. */
   private val TombstoneTtlMs = 30L * 86400000L
 
-  private def updateFn(user: Long, it: Iterator[ReachEvent],
-      st: GroupState[ReachState]): Iterator[FirstSeen] = {
-    val old = st.getOption.getOrElse(ReachState(Long.MaxValue, done = false))
-    if (old.done) {
+  private def step(user: Long, old: Option[ReachState],
+      it: Iterator[ReachEvent], wmMs: Long): Next[ReachState, FirstSeen] = {
+    val st = old.getOrElse(ReachState(Long.MaxValue, done = false))
+    if (st.done) {
       // already emitted: every further event is a RETURN visit, not reach.
       // Expire the tombstone TTL past the watermark (see TombstoneTtlMs);
       // a live return visit pushes the expiry out again.
-      if (st.hasTimedOut) st.remove()
-      else st.setTimeoutTimestamp(st.getCurrentWatermarkMs() + TombstoneTtlMs)
-      Iterator.empty
+      if (it.hasNext) Next(Nil, old, Some(wmMs + TombstoneTtlMs))
+      else Next(Nil, None)
     } else {
-      var minDay = old.minDayUs
+      var minDay = st.minDayUs
       it.foreach { e =>
         val day = e.us - java.lang.Math.floorMod(e.us, DayUs)
         if (day < minDay) minDay = day
       }
-      val wmMs = st.getCurrentWatermarkMs()
-      if (minDay != Long.MaxValue && (minDay + DayUs) / 1000L <= wmMs) {
+      if ((minDay + DayUs) / 1000L <= wmMs)
         // no admissible event can precede this day any more — finalize;
         // the tombstone gets a TTL expiry so it cannot accrete forever
-        st.update(ReachState(minDay, done = true))
-        st.setTimeoutTimestamp(wmMs + TombstoneTtlMs)
-        Iterator.single(FirstSeen(user, new java.sql.Timestamp(minDay / 1000L)))
-      } else {
-        st.update(ReachState(minDay, done = false))
-        if (minDay != Long.MaxValue)
-          st.setTimeoutTimestamp(
-            math.max((minDay + DayUs) / 1000L + 1L, wmMs + 1L))
-        Iterator.empty
-      }
+        Next(Seq(FirstSeen(user, new java.sql.Timestamp(minDay / 1000L))),
+          Some(ReachState(minDay, done = true)), Some(wmMs + TombstoneTtlMs))
+      else
+        Next(Nil, Some(ReachState(minDay, done = false)),
+          Some((minDay + DayUs) / 1000L + 1L))
     }
   }
 }

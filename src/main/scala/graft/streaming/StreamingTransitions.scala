@@ -4,7 +4,8 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import WatermarkFold.Next
 
 /** One transition-relevant event (same shape as AttrEvent: `ts` is the
   * watermarked event-time column, `us` its exact-µs integer, `event_id`
@@ -48,31 +49,23 @@ object StreamingTransitions {
       typeCol: String, idCol: String, lateness: String): Dataset[Transition] = {
     val spark = stream.sparkSession
     import spark.implicits._
-    stream
-      .withWatermark(tsCol, lateness)
-      .select(col(userCol).cast("long").as("user_id"),
-        col(idCol).cast("long").as("event_id"),
-        col(typeCol).as("event_type"),
-        unix_micros(col(tsCol)).as("us"),
-        col(tsCol).as("ts"))
-      .as[TransEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[TransBuf, Transition](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout)(updateFn)
+    WatermarkFold[Long, TransEvent, TransBuf, Transition](stream, tsCol,
+      lateness, col(userCol).cast("long").as("user_id"),
+      col(idCol).cast("long").as("event_id"), col(typeCol).as("event_type"))(
+      _.user_id)(step)
   }
 
-  private def updateFn(user: Long, it: Iterator[TransEvent],
-      st: GroupState[TransBuf]): Iterator[Transition] = {
-    val old = st.getOption.getOrElse(
+  private def step(user: Long, old: Option[TransBuf], it: Iterator[TransEvent],
+      wmMs: Long): Next[TransBuf, Transition] = {
+    val buf = old.getOrElse(
       TransBuf(Array.emptyLongArray, Array.empty[String], Array.emptyLongArray))
-    val add = if (st.hasTimedOut) Array.empty[TransEvent] else it.toArray
     // merge + total order (us, event_id): the buffer is small (carry +
     // in-flight window), so a per-trigger sort is cheap and keeps the
     // invariant trivially
-    val all = (old.ids.indices.map(i => (old.uss(i), old.ids(i), old.types(i)))
-      ++ add.map(e => (e.us, e.event_id, e.event_type)))
+    val all = (buf.ids.indices.map(i => (buf.uss(i), buf.ids(i), buf.types(i)))
+      ++ it.map(e => (e.us, e.event_id, e.event_type)))
       .sortBy { case (us, id, _) => (us, id) }
-    val wUs = st.getCurrentWatermarkMs() * 1000L
+    val wUs = wmMs * 1000L
 
     // emit every consecutive pair whose LATER member is behind the
     // watermark; keep from the last finalized event onward (it is the
@@ -88,22 +81,14 @@ object StreamingTransitions {
       i += 1
     }
     val keep = all.drop(math.max(lastFinal, 0))
-    if (keep.isEmpty) {
-      st.remove()
-    } else {
-      st.update(TransBuf(keep.map(_._2).toArray, keep.map(_._3).toArray,
-        keep.map(_._1).toArray))
-      if (keep.length >= 2)
-        // a pending pair: wake when the watermark passes its later member
-        // (same quiesce pattern as StreamingAttribution — the sweep runs
-        // on triggered batches that deliver rows to the operator)
-        st.setTimeoutTimestamp(
-          math.max(keep(1)._1 / 1000L, st.getCurrentWatermarkMs() + 1L))
-      // a lone carry registers no timeout: it is the next pair's source
-      // for as long as the user may still produce events (production
-      // deployments wanting idle-state reclaim add a TTL timeout here —
-      // dropping the carry only forgets one edge at the idle boundary)
-    }
-    out.iterator
+    if (keep.isEmpty) Next(out.toSeq, None)
+    // a pending pair wakes when the watermark passes its later member; a
+    // lone carry registers no timeout: it is the next pair's source for as
+    // long as the user may still produce events (production deployments
+    // wanting idle-state reclaim add a TTL wake here — dropping the carry
+    // only forgets one edge at the idle boundary)
+    else Next(out.toSeq, Some(TransBuf(keep.map(_._2).toArray,
+      keep.map(_._3).toArray, keep.map(_._1).toArray)),
+      if (keep.length >= 2) Some(keep(1)._1 / 1000L) else None)
   }
 }

@@ -2,18 +2,15 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** One event for the day×type ledger; keyed by UTC day downstream. */
-final case class DayTypeEvent(day_us: Long, event_type: String,
-    ts: java.sql.Timestamp)
+import WatermarkFold.Next
 
 /** Per-DAY state: the day's per-type counts as parallel arrays (types is
   * a small bounded set by design — single-digit in the fixture). The
   * whole group finalizes at once when the watermark passes the day's
   * end, so state per key exists only inside the lateness horizon and is
-  * REMOVED on emission — the day-keyed analog of StreamingDrift's
-  * open-day map.
+  * REMOVED on emission — the day-keyed analog of [[BucketRing]]'s open
+  * buckets.
   */
 final case class DayTypeState(types: Array[String], cnts: Array[Long])
 
@@ -51,44 +48,30 @@ object StreamingTypeCorr {
       lateness: String): Dataset[DayTypeCount] = {
     val spark = stream.sparkSession
     import spark.implicits._
-    stream
-      .withWatermark(tsCol, lateness)
-      .select(
-        (unix_micros(col(tsCol)) -
-          pmod(unix_micros(col(tsCol)), lit(DayUs))).as("day_us"),
-        col(typeCol).as("event_type"), col(tsCol).as("ts"))
-      .as[DayTypeEvent]
-      .groupByKey(_.day_us)
-      .flatMapGroupsWithState[DayTypeState, DayTypeCount](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout)(updateFn)
+    WatermarkFold[Long, TypeEvent, DayTypeState, DayTypeCount](stream, tsCol,
+      lateness, col(typeCol).as("event_type"))(
+      e => e.us - java.lang.Math.floorMod(e.us, DayUs))(step)
   }
 
-  private def updateFn(dayUs: Long, it: Iterator[DayTypeEvent],
-      st: GroupState[DayTypeState]): Iterator[DayTypeCount] = {
+  private def step(dayUs: Long, old: Option[DayTypeState],
+      it: Iterator[TypeEvent], wmMs: Long): Next[DayTypeState, DayTypeCount] = {
     // a day whose group state was already removed re-entering here would
     // double-emit; that cannot happen inside the horizon (the watermark
     // only passes a day's end once), and beyond it the rows are
     // inadmissible by the watermark contract — nothing to guard.
     val counts = scala.collection.mutable.TreeMap.empty[String, Long]
-    st.getOption.foreach { s =>
-      var i = 0
-      while (i < s.types.length) { counts(s.types(i)) = s.cnts(i); i += 1 }
-    }
+    old.foreach(s => counts ++= s.types.zip(s.cnts))
     it.foreach { e =>
       counts(e.event_type) = counts.getOrElse(e.event_type, 0L) + 1L
     }
-    val wmMs = st.getCurrentWatermarkMs()
-    if ((dayUs + DayUs) / 1000L <= wmMs) {
+    val endMs = (dayUs + DayUs) / 1000L
+    if (endMs <= wmMs) {
       // day complete: emit every type's cell and drop the group's state
-      st.remove()
       val day = new java.sql.Timestamp(dayUs / 1000L)
-      counts.iterator.map { case (t, n) => DayTypeCount(day, t, n) }
-        .toIndexedSeq.iterator
-    } else {
-      st.update(DayTypeState(counts.keys.toArray, counts.values.toArray))
-      st.setTimeoutTimestamp(math.max((dayUs + DayUs) / 1000L + 1L, wmMs + 1L))
-      Iterator.empty
-    }
+      Next(counts.toSeq.map { case (t, n) => DayTypeCount(day, t, n) }, None)
+    } else
+      Next(Nil, Some(DayTypeState(counts.keys.toArray, counts.values.toArray)),
+        Some(endMs + 1L))
   }
 
   /** The pair-Pearson census over a finalized (day, event_type, n)

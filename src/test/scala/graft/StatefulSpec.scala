@@ -50,6 +50,49 @@ class StatefulSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("runningTotals survives an admissible straggler whose idle deadline " +
+      "the watermark has already passed") {
+    // the late-row filter runs on the PREVIOUS batch's watermark, the
+    // timeout on the current one: key 1's 11:00 row is admitted in batch 2
+    // while its deadline (11:01) is behind the 11:50 watermark — the wake
+    // time must clamp to wm + 1, not kill the query. No-data batches are
+    // off so the straggler lands in the very next batch.
+    val conf = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val saved = spark.conf.getOption(conf)
+    spark.conf.set(conf, "false")
+    val in = MemoryStream[KeyedEvent](spark)
+    val out = StatefulOps.runningTotals(in.toDS(), idleMs = 60 * 1000L,
+      lateness = "10 minutes")
+    val q = out.writeStream.format("memory").queryName("stateful_straggler")
+      .outputMode(OutputMode.Append()).start()
+    try {
+      in.addData(KeyedEvent(1L, ts("2024-01-01 10:00:00"), 2.0),
+        KeyedEvent(2L, ts("2024-01-01 12:00:00"), 5.0))
+      q.processAllAvailable()
+      in.addData(KeyedEvent(1L, ts("2024-01-01 11:00:00"), 3.0))
+      q.processAllAvailable()
+      // two far-future rows: the first moves the watermark past every
+      // deadline, the second runs the timeout sweep
+      in.addData(KeyedEvent(9L, ts("2024-01-01 14:00:00"), 1.0))
+      q.processAllAvailable()
+      in.addData(KeyedEvent(9L, ts("2024-01-01 14:00:01"), 1.0))
+      q.processAllAvailable()
+      val rows = spark.table("stateful_straggler")
+        .select($"key", $"events", $"total", $"expired")
+        .as[(Long, Long, Double, Boolean)].collect().toSeq
+      assert(rows.contains((1L, 2L, 5.0, false)),
+        "the straggler must fold into key 1's state")
+      assert(rows.contains((1L, 2L, 5.0, true)), "key 1 must still expire")
+      assert(rows.contains((2L, 1L, 5.0, true)), "key 2 must expire")
+    } finally {
+      q.stop()
+      saved match {
+        case Some(v) => spark.conf.set(conf, v)
+        case None => spark.conf.unset(conf)
+      }
+    }
+  }
+
   test("trendingTokens: streaming MG state equals the sequential batch fold, " +
       "with the heavy-hitter guarantee at every emission") {
     import graft.streaming.StatefulOps.Tok

@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.{asc_nulls_first, col}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.streaming.StreamingDrift
@@ -18,34 +18,31 @@ class StreamingDriftSpec extends SparkSpec {
 
   import spark.implicits._
 
-  test("streaming EWMA drift over the replayed fixture equals batch q_ewma_drift bit-for-bit") {
-    // replay the fixture in ts order under a lateness horizon wider than
-    // the data span (nothing dropped), then advance the watermark with two
-    // far-future rows under an excluded sentinel type: the first moves the
-    // watermark past every real day's end, the second delivers rows to the
-    // stateful operator so the timeout sweep finalizes the tail (the
-    // StreamingFunnel operational note).
-    val fixture = graft.ops.tbl(spark, sfDir, "events")
-      .select(col("ts"), col("event_type"))
-      .orderBy(asc_nulls_first("ts"), asc_nulls_first("event_id"))
-      .as[(Timestamp, String)].collect()
-
+  /** Replays `fx` in three micro-batches, then two far-future rows under an
+    * excluded sentinel type placed `sentinelGapMs` past the last event: the
+    * first moves the watermark past every real day's end, the second
+    * delivers rows to the stateful operator so the timeout sweep finalizes
+    * the tail. Asserts the result equals batch q_ewma_drift bit-for-bit.
+    */
+  private def assertReplayEqualsBatch(name: String,
+      fx: Array[(Timestamp, String)], lateness: String,
+      sentinelGapMs: Long): Unit = {
     val in = MemoryStream[(Timestamp, String)](spark)
     val out = StreamingDrift.ewmaDrift(
-      in.toDF().toDF("ts", "event_type"), "ts", "event_type", "0 seconds")
-    val q = out.writeStream.format("memory").queryName("replay_drift")
+      in.toDF().toDF("ts", "event_type"), "ts", "event_type", lateness)
+    val q = out.writeStream.format("memory").queryName(name)
       .outputMode(OutputMode.Append())
       .start()
     try {
-      fixture.grouped(fixture.length / 3 + 1)
+      fx.grouped(fx.length / 3 + 1)
         .foreach { g => in.addData(g.toSeq); q.processAllAvailable() }
-      val maxMs = fixture.map(_._1.getTime).max
-      in.addData((new Timestamp(maxMs + 5L * 86400 * 1000), "zz_sentinel"))
+      val maxMs = fx.map(_._1.getTime).max
+      in.addData((new Timestamp(maxMs + sentinelGapMs), "zz_sentinel"))
       q.processAllAvailable()
-      in.addData((new Timestamp(maxMs + 6L * 86400 * 1000), "zz_sentinel"))
+      in.addData((new Timestamp(maxMs + sentinelGapMs + 86400000L), "zz_sentinel"))
       q.processAllAvailable()
 
-      val streaming = spark.table("replay_drift")
+      val streaming = spark.table(name)
         .filter(col("event_type") =!= "zz_sentinel")
         .select(col("event_type"), col("day").cast("string"), col("cnt"),
           col("ewma"), col("drift"))
@@ -61,6 +58,19 @@ class StreamingDriftSpec extends SparkSpec {
       assert(streaming == batch,
         "streaming EWMA drift must equal the batch frame bit-for-bit")
     } finally q.stop()
+  }
+
+  test("streaming EWMA drift over the replayed fixture equals batch q_ewma_drift bit-for-bit") {
+    // in ts order, so a zero lateness drops nothing
+    assertReplayEqualsBatch("replay_drift", typedEvents(shuffled = false),
+      "0 seconds", sentinelGapMs = 5L * 86400000L)
+  }
+
+  test("shuffled replay under a wide lateness equals batch q_ewma_drift bit-for-bit") {
+    // lateness wider than the span so nothing drops; the sentinels sit
+    // beyond it so the first still moves the watermark past every day
+    assertReplayEqualsBatch("replay_drift_shuffled", typedEvents(shuffled = true),
+      "3650 days", sentinelGapMs = (3650L + 5L) * 86400000L)
   }
 
   test("streaming EWMA drift drops a day-late row but keeps state bounded and the ring rolling") {

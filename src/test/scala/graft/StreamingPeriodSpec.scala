@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.{asc_nulls_first, col}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.streaming.StreamingPeriod
@@ -18,31 +18,31 @@ class StreamingPeriodSpec extends SparkSpec {
 
   import spark.implicits._
 
-  test("streaming week-over-week over the replayed fixture equals batch q_period_over_period bit-for-bit") {
-    val fixture = graft.ops.tbl(spark, sfDir, "events")
-      .select(col("ts"), col("event_type"))
-      .orderBy(asc_nulls_first("ts"), asc_nulls_first("event_id"))
-      .as[(Timestamp, String)].collect()
-
+  /** Replays `fx` in three micro-batches, then two sentinel rows
+    * `sentinelGapMs` past the last event: the first advances the watermark
+    * past every real week's end, the second delivers rows so the timeout
+    * sweep finalizes the tail. Asserts the result equals batch
+    * q_period_over_period bit-for-bit.
+    */
+  private def assertReplayEqualsBatch(name: String,
+      fx: Array[(Timestamp, String)], lateness: String,
+      sentinelGapMs: Long): Unit = {
     val in = MemoryStream[(Timestamp, String)](spark)
     val out = StreamingPeriod.weekOverWeek(
-      in.toDF().toDF("ts", "event_type"), "ts", "event_type", "0 seconds")
-    val q = out.writeStream.format("memory").queryName("replay_wow")
+      in.toDF().toDF("ts", "event_type"), "ts", "event_type", lateness)
+    val q = out.writeStream.format("memory").queryName(name)
       .outputMode(OutputMode.Append())
       .start()
     try {
-      fixture.grouped(fixture.length / 3 + 1)
+      fx.grouped(fx.length / 3 + 1)
         .foreach { g => in.addData(g.toSeq); q.processAllAvailable() }
-      // two sentinel rows: the first advances the watermark past every
-      // real week's end, the second delivers rows so the timeout sweep
-      // finalizes the tail (the StreamingFunnel operational note)
-      val maxMs = fixture.map(_._1.getTime).max
-      in.addData((new Timestamp(maxMs + 15L * 86400 * 1000), "zz_sentinel"))
+      val maxMs = fx.map(_._1.getTime).max
+      in.addData((new Timestamp(maxMs + sentinelGapMs), "zz_sentinel"))
       q.processAllAvailable()
-      in.addData((new Timestamp(maxMs + 16L * 86400 * 1000), "zz_sentinel"))
+      in.addData((new Timestamp(maxMs + sentinelGapMs + 86400000L), "zz_sentinel"))
       q.processAllAvailable()
 
-      val streaming = spark.table("replay_wow")
+      val streaming = spark.table(name)
         .filter(col("event_type") =!= "zz_sentinel")
         .select(col("event_type"), col("week").cast("string"), col("cnt"),
           col("prev"), col("pct_change"))
@@ -58,6 +58,18 @@ class StreamingPeriodSpec extends SparkSpec {
       assert(streaming == batch,
         "streaming week-over-week must equal the batch frame bit-for-bit")
     } finally q.stop()
+  }
+
+  test("streaming week-over-week over the replayed fixture equals batch q_period_over_period bit-for-bit") {
+    assertReplayEqualsBatch("replay_wow", typedEvents(shuffled = false),
+      "0 seconds", sentinelGapMs = 15L * 86400000L)
+  }
+
+  test("shuffled replay under a wide lateness equals batch q_period_over_period bit-for-bit") {
+    // lateness wider than the span so nothing drops; the sentinels sit
+    // beyond it so the first still moves the watermark past every week
+    assertReplayEqualsBatch("replay_wow_shuffled", typedEvents(shuffled = true),
+      "3650 days", sentinelGapMs = (3650L + 15L) * 86400000L)
   }
 
   test("weekStartUs truncates to Monday 00:00 UTC like date_trunc('week')") {

@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.{asc_nulls_first, col}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.streaming.StreamingTypeCorr
@@ -19,31 +19,33 @@ class StreamingTypeCorrSpec extends SparkSpec {
 
   import spark.implicits._
 
-  test("streaming day-type ledger -> pearsonCensus equals batch q_type_corr bit-for-bit") {
-    val fixture = graft.ops.tbl(spark, sfDir, "events")
-      .select(col("ts"), col("event_type"))
-      .orderBy(asc_nulls_first("ts"), asc_nulls_first("event_id"))
-      .as[(Timestamp, String)].collect()
-
+  /** Replays `fx` in three micro-batches plus two sentinel rows
+    * `sentinelGapMs` past the last event (the first moves the watermark
+    * past every real day, the second runs the timeout sweep), then asserts
+    * the ledger's Pearson census equals batch q_type_corr bit-for-bit.
+    */
+  private def assertReplayEqualsBatch(name: String,
+      fx: Array[(Timestamp, String)], lateness: String,
+      sentinelGapMs: Long): Unit = {
     val in = MemoryStream[(Timestamp, String)](spark)
     val out = StreamingTypeCorr.dayTypeCounts(
-      in.toDF().toDF("ts", "event_type"), "ts", "event_type", "0 seconds")
-    val q = out.writeStream.format("memory").queryName("replay_dtc")
+      in.toDF().toDF("ts", "event_type"), "ts", "event_type", lateness)
+    val q = out.writeStream.format("memory").queryName(name)
       .outputMode(OutputMode.Append())
       .start()
     try {
-      fixture.grouped(fixture.length / 3 + 1)
+      fx.grouped(fx.length / 3 + 1)
         .foreach { g => in.addData(g.toSeq); q.processAllAvailable() }
-      val maxMs = fixture.map(_._1.getTime).max
-      in.addData((new Timestamp(maxMs + 5L * 86400 * 1000), "zz_sentinel"))
+      val maxMs = fx.map(_._1.getTime).max
+      in.addData((new Timestamp(maxMs + sentinelGapMs), "zz_sentinel"))
       q.processAllAvailable()
-      in.addData((new Timestamp(maxMs + 6L * 86400 * 1000), "zz_sentinel"))
+      in.addData((new Timestamp(maxMs + sentinelGapMs + 86400000L), "zz_sentinel"))
       q.processAllAvailable()
 
       // sentinel rows land on far-future days; dropping the TYPE also
       // drops those days from the ledger's day spine (no other type
       // fires there), so the census grid matches the batch grid
-      val ledger = spark.table("replay_dtc")
+      val ledger = spark.table(name)
         .filter(col("event_type") =!= "zz_sentinel")
       val streaming = StreamingTypeCorr.pearsonCensus(ledger)
         .select(col("ta"), col("tb"), col("n_days"), col("pearson_r"))
@@ -58,6 +60,18 @@ class StreamingTypeCorrSpec extends SparkSpec {
       assert(streaming == batch,
         "ledger-derived Pearson census must equal the batch frame bit-for-bit")
     } finally q.stop()
+  }
+
+  test("streaming day-type ledger -> pearsonCensus equals batch q_type_corr bit-for-bit") {
+    assertReplayEqualsBatch("replay_dtc", typedEvents(shuffled = false),
+      "0 seconds", sentinelGapMs = 5L * 86400000L)
+  }
+
+  test("shuffled replay under a wide lateness: ledger -> pearsonCensus equals batch q_type_corr") {
+    // lateness wider than the span so nothing drops; the sentinels sit
+    // beyond it so the first still moves the watermark past every day
+    assertReplayEqualsBatch("replay_dtc_shuffled", typedEvents(shuffled = true),
+      "3650 days", sentinelGapMs = (3650L + 5L) * 86400000L)
   }
 
   test("a finalized day's group state is removed; late rows for it are dropped") {
