@@ -37,12 +37,27 @@ object Graft {
     *     on the per-round join key so rounds stop re-shuffling the edge
     *     set; without this flag the cached subplan skips AQE partition
     *     coalescing and pins shuffle-partition-count tasks onto every
-    *     downstream stage at small scale. Physical-only: results identical.
+    *     downstream stage at small scale. Physical-only: results identical;
+    *   - the `file:` filesystem, for `FileSystem` and for `FileContext`, is
+    *     [[graft.io.ForkFreeLocalFileSystem]] / [[graft.io.ForkFreeLocalFs]].
+    *     Without `libhadoop`, Hadoop's own local filesystem forks `chmod`
+    *     for every file and directory it creates and `readlink` for every
+    *     link-status lookup, which `FileContext.rename` makes on both its
+    *     paths: a bus epoch with a checkpoint dir and parquet sinks started
+    *     up to 54 child processes (~6 ms each) in its sink writes and
+    *     checkpoint-log commits.
+    *
+    * Keys outside `spark.` are Hadoop keys: [[session]] sets them with the
+    * `spark.hadoop.` prefix (into the context's Hadoop conf), and
+    * [[configure]] sets them as they are, because the session's Hadoop conf
+    * (`newHadoopConf`) copies session conf keys verbatim.
     */
   val EngineConf: Seq[(String, String)] = Seq(
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    "fs.file.impl" -> classOf[graft.io.ForkFreeLocalFileSystem].getName,
+    "fs.AbstractFileSystem.file.impl" -> classOf[graft.io.ForkFreeLocalFs].getName)
 
   def session(
       master: String = "local[*]",
@@ -54,7 +69,8 @@ object Graft {
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.ui.enabled", false)
     val spark = EngineConf
-      .foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
+      .foldLeft(base) { case (b, (k, v)) =>
+        b.config(if (k.startsWith("spark.")) k else s"spark.hadoop.$k", v) }
       .getOrCreate()
     graft.expr.GraftExtensions.register(spark)
     spark
@@ -97,7 +113,9 @@ object Graft {
   /** Apply the engine configuration to an EXISTING session (a shared
     * cluster session the caller does not own): [[EngineConf]] + function
     * registration. The parquet-nanos flag is read at scan planning, so it
-    * applies to subsequent reads.
+    * applies to subsequent reads. The `file:` binding reaches `FileContext`
+    * at once; a `FileSystem` the JVM already cached for `file:` stays in
+    * use for `FileSystem.get` (Hadoop caches it per scheme, not per conf).
     */
   def configure(spark: SparkSession): SparkSession = {
     EngineConf.foreach { case (k, v) => spark.conf.set(k, v) }

@@ -639,7 +639,7 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
   private var prevEpochBlocks: Seq[Int] = Nil
 
   private def checkpointTracked(df: DataFrame): DataFrame = {
-    val out = df.localCheckpoint(eager = false)
+    val out = GraftBridge.lazyLocalCheckpoint(df)
     prevEpochBlocks ++= GraftBridge.checkpointedRddIds(out)
     out
   }

@@ -96,6 +96,20 @@ object GraftBridge {
     }
   }
 
+  /** `df.localCheckpoint(eager = false)` without the SQL execution that
+    * `Dataset.localCheckpoint` wraps around planning it: the same RDD
+    * (`executedPlan.execute()`, rows copied, marked for local checkpoint)
+    * under the same `LogicalRDD`; its blocks fill on the first job that
+    * reads the returned frame.
+    */
+  def lazyLocalCheckpoint(df: Dataset[Row]): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val rdd = ds.queryExecution.executedPlan.execute().map(_.copy())
+    rdd.localCheckpoint()
+    classic.Dataset.ofRows(ds.sparkSession,
+      execution.LogicalRDD.fromDataset(rdd, ds, ds.isStreaming))
+  }
+
   /** RDD ids a (materialized) localCheckpoint pinned into the block
     * manager for `df` — read from the Dataset's OWN plan (the LogicalRDD
     * nodes a checkpoint leaves behind), so a caller that frees blocks

@@ -32,9 +32,15 @@ class ApiSpec extends SparkSpec {
     Graft.EngineConf.foreach { case (k, _) => shared.conf.unset(k) }
     Graft.configure(shared)
     // the one conf list holds on a configured session and on the test
-    // JVM's session alike
-    for (s <- Seq(shared, TestSpark.spark); (k, v) <- Graft.EngineConf)
-      assert(s.conf.get(k) == v, s"$k")
+    // JVM's session alike; `session` sets the Hadoop keys (outside
+    // `spark.`) through the context, so they hold in its Hadoop conf
+    val testHadoopConf = TestSpark.spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.newHadoopConf()
+    for ((k, v) <- Graft.EngineConf) {
+      assert(shared.conf.get(k) == v, s"$k")
+      assert((if (k.startsWith("spark.")) TestSpark.spark.conf.get(k) else testHadoopConf.get(k)) == v,
+        s"$k")
+    }
     // native SQL functions registered
     assert(shared.sql("SELECT vector_dot(array(CAST(1.0 AS FLOAT)), " +
       "array(CAST(2.0 AS FLOAT))) AS d").as[Double].head() == 2.0)

@@ -1285,6 +1285,47 @@ class BusSpec extends SparkSpec {
     assert(bus.stats.snapshot("send") == 60)
   }
 
+  test("bus epochs with a checkpoint and parquet sinks start no chmod or readlink process") {
+    // every process the JVM starts while two epochs run: file source log,
+    // offsets and commits logs, route and dead-letter parquet writes
+    val root = Files.createTempDirectory("busforks")
+    val spool = Files.createDirectories(root.resolve("spool"))
+    val b64 = java.util.Base64.getEncoder
+    def put(f: Int): Unit = {
+      val lines = (0 until 9).map { i =>
+        val payload = Seq("x", "y", "fail")(i % 3)
+        s"""{"id":"$f-$i","data_b64":"${b64.encodeToString(payload.getBytes("UTF-8"))}"}"""
+      }
+      val tmp = Files.write(root.resolve(s"part-$f.json"), lines.asJava)
+      Files.move(tmp, spool.resolve(tmp.getFileName), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    }
+    val data = col("data").cast("string")
+    val bus = new FrizzleStream(spark, new JsonDirSource(spool.toString, 1),
+      FrizzleStream.exprProcessor(dest = when(data =!= "fail", data), failed = data === "fail"),
+      new FileAdapters.ParquetDirSink(root.resolve("out").toString),
+      Some(new FileAdapters.ParquetDirSink(root.resolve("dlq").toString)),
+      checkpointDir = Some(root.resolve("ckpt").toString))
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    val commands = try {
+      rec.start()
+      bus.start()
+      for (f <- 0 until 2) { put(f); bus.awaitIdle() }
+      assert(bus.flushAndClose(10000))
+      rec.stop()
+      val dump = root.resolve("forks.jfr")
+      rec.dump(dump)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command"))
+    } finally rec.close()
+    assert(bus.stats.snapshot("send") == 12 && bus.stats.snapshot("failsink") == 6)
+    for (d <- Seq("out/dest=x", "out/dest=y", "dlq/dest=failed"))
+      assert(Files.isDirectory(root.resolve(s"$d/batch_id=1")), d)
+    val forks = commands.filter(_.matches("""(\S*/)?(chmod|readlink)\b.*"""))
+    assert(forks.isEmpty, s"${forks.size} of ${commands.size} process starts " +
+      s"${forks.groupBy(_.takeWhile(_ != ' ')).view.mapValues(_.size).toMap}: ${forks.take(4)}")
+  }
+
   test("a dedup bus epoch over 4 source files writes one parquet file per destination") {
     val root = Files.createTempDirectory("busparts")
     val spool = Files.createDirectories(root.resolve("spool"))
