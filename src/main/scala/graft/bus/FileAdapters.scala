@@ -1,6 +1,7 @@
 package graft.bus
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -55,7 +56,7 @@ object FileAdapters {
         // may live on any Spark-supported filesystem (hdfs://, s3a://…),
         // where File would mangle the URI and mkdir a bogus local path.
         // mkdirs is a no-op if the subtree already exists.
-        val p = new org.apache.hadoop.fs.Path(dir)
+        val p = new Path(dir)
         p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
       }
       spark.readStream
@@ -89,7 +90,7 @@ object FileAdapters {
     // creation is deferred to stream() where a SparkSession's Hadoop conf
     // is available (the subtree may not exist until the upstream's first
     // write).
-    val d = new org.apache.hadoop.fs.Path(spoolDir, s"dest=$dest")
+    val d = new Path(spoolDir, s"dest=$dest")
     new ParquetDirSource(d.toString, maxFilesPerTrigger,
       recursive = true, ensureDir = true)
   }
@@ -109,6 +110,14 @@ object FileAdapters {
     * MemorySink's replay dedup. Downstream readers see a dest-partitioned
     * table — the queryable DLQ/track-fails analog
     * (/root/reference/basic/source.go:47-49).
+    *
+    * A driver-held batch (its optimized plan is a `LocalRelation`, as
+    * every write of a [[FrizzleStream]] epoch within the bus's driver
+    * bound is: at most `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+    * of rows, 64 MiB by default) is written on the driver, with no Spark
+    * job: one file, through Hadoop `FileSystem` ([[graft.io.DriverParquet]]),
+    * with the schema, encodings and footer a Spark write gives it. Any
+    * other batch is written by Spark.
     */
   final class ParquetDirSink(outDir: String) extends BusSink {
     // The bus consults this before write and dead-letters rows whose
@@ -118,9 +127,14 @@ object FileAdapters {
 
     def write(batch: Dataset[Msg], dest: String, batchId: Long): Unit = {
       requireSafeDest(dest)
-      batch.toDF()
-        .write.mode("overwrite")
-        .parquet(s"$outDir/dest=$dest/batch_id=$batchId")
+      val path = s"$outDir/dest=$dest/batch_id=$batchId"
+      val df = batch.toDF()
+      GraftBridge.driverRows(df) match {
+        case Some(rows) =>
+          val (conf, ws) = GraftBridge.parquetWrite(df.sparkSession, df.schema)
+          graft.io.DriverParquet.overwrite(new Path(path), conf, ws, rows.iterator)
+        case None => df.write.mode("overwrite").parquet(path)
+      }
     }
   }
 }
@@ -227,7 +241,7 @@ final class RateSource(rowsPerSecond: Int) extends BusSource {
   * tests that only observe counters.
   */
 final class NoopSink extends BusSink {
-  def write(batch: Dataset[Msg], dest: String, batchId: Long): Unit = {
-    batch.queryExecution.toRdd.count(): Unit // evaluate, discard
-  }
+  def write(batch: Dataset[Msg], dest: String, batchId: Long): Unit =
+    // a driver-held batch is already evaluated; any other is run and dropped
+    if (GraftBridge.driverRows(batch).isEmpty) batch.queryExecution.toRdd.count(): Unit
 }

@@ -8,8 +8,10 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Bus stats counters — the analog of the reference's statsd buckets
   * ctr.rcv / ctr.send / ctr.ack / ctr.fail / ctr.failsink / ctr.error
@@ -79,6 +81,18 @@ private[bus] final case class FailConfig(sink: Option[BusSink], dest: String)
   *     destination) run as ONE concurrent wave on a bus-owned pool, the
   *     analog of the reference's sinks being called from many goroutines;
   *     the epoch commits only after every write has returned.
+  *   - A small epoch is written from the driver. The epoch's one Spark job
+  *     counts the (dest, failed) census and returns the routed rows while
+  *     they fit the driver bound: `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+  *     (64 MiB by default) of `UnsafeRow` bytes, the size at which
+  *     [[SeenHashIndex.dedupEpoch]] coalesces an epoch to one write task.
+  *     Each of the job's n partitions returns its rows only while they take
+  *     at most bound/n bytes, so the driver holds at most the bound. Within
+  *     it the epoch continues as a driver-held `LocalRelation`: its
+  *     dead-letter and per-destination frames fold into `LocalRelation`s,
+  *     which [[MemorySink]], [[NoopSink]] and
+  *     [[FileAdapters.ParquetDirSink]] take with no further job. Above it
+  *     the writes read the epoch's cached frame on Spark.
   *   - AddOptions works on a LIVE bus (/root/reference/frizzle.go:82-87,
   *     including FailSink rewiring mid-run, options.go:35-41,88-90), with
   *     EPOCH granularity: receive transforms, send transforms, the fail
@@ -336,18 +350,23 @@ final class FrizzleStream(
         col("dest").cast("string").as("dest"), col("failed").cast("boolean").as("failed"))
       .persist()
     try {
-      // Single stats pass: one (dest, failed) census yields every counter
-      // and the per-dest send counts. Destinations are topic names — a
-      // small bounded set by design, so collecting one micro-batch's census
-      // (≤ 3 rows per dest) is driver-safe at any data scale. A row whose
-      // `failed` is null, or that is not failed and has a null `dest`,
-      // counts in rcv and ack only: it is neither failed nor sendable.
-      // Counted per partition and summed here: one job, no shuffle, and it
-      // fills `routed`'s cache for the writes. The rows are read as the
+      // The epoch's one job. Single stats pass: one (dest, failed) census
+      // yields every counter and the per-dest send counts. Destinations
+      // are topic names — a small bounded set by design, so collecting one
+      // micro-batch's census (≤ 3 rows per dest) is driver-safe at any
+      // data scale. A row whose `failed` is null, or that is not failed
+      // and has a null `dest`, counts in rcv and ack only: it is neither
+      // failed nor sendable. Counted per partition and summed here: no
+      // shuffle, and it fills `routed`'s cache. The rows are read as the
       // plan's own internal rows, so the epoch pays for no encoder and no
-      // SQL execution around this bookkeeping job.
-      val census = routed.select("dest", "failed").queryExecution.toRdd
-        .mapPartitions(FrizzleStream.censusOf).collect()
+      // SQL execution around this job. Each partition also returns its
+      // rows while they fit its share of the driver bound (see the class
+      // doc), so the driver never holds more than the bound.
+      val bound = GraftBridge.advisoryPartitionBytes(routed.sparkSession)
+      val rdd = routed.queryExecution.toRdd
+      val share = bound / math.max(1, rdd.getNumPartitions)
+      val parts = rdd.mapPartitions(FrizzleStream.censusOf(routed.schema, share)).collect()
+      val census = parts.toSeq.flatMap(_._1)
         .groupMapReduce(_._1)(_._2)(_ + _)
         .toSeq.map { case ((d, f), n) => (d, f, n) }
       val total = census.map(_._3).sum
@@ -356,7 +375,13 @@ final class FrizzleStream(
       val nSend = destCounts.map(_._2).sum
       stats.addRcv(total)
 
-      val sendable = routed.filter(!col("failed") && col("dest").isNotNull)
+      // within the bound the epoch goes on driver-held: every frame below
+      // folds into a LocalRelation, and the sinks take it with no job
+      val epoch =
+        if (parts.forall(_._2.isDefined))
+          GraftBridge.localFrame(routed.sparkSession, routed.schema, parts.toSeq.flatMap(_._2.get))
+        else routed
+      val sendable = epoch.filter(!col("failed") && col("dest").isNotNull)
 
       // A4/A7 unaddressable-dest routing: dest is a data-computed value, so
       // a dest the sink cannot address (sink.safeDest) must dead-letter the
@@ -382,7 +407,7 @@ final class FrizzleStream(
         val unsafeCond =
           if (unsafeSet.isEmpty) lit(false)
           else !col("failed") && col("dest").isin(unsafeSet: _*)
-        val dead = routed.filter(col("failed") || unsafeCond)
+        val dead = epoch.filter(col("failed") || unsafeCond)
           .select("id", "data", "ts").as[Msg]
         () => fs.write(dead, epochFailCfg.dest, batchId)
       }
@@ -519,16 +544,32 @@ final class FrizzleStream(
 object FrizzleStream {
   private val busIds = new AtomicLong()
 
-  /** One partition's (dest, failed) rows counted by value. */
-  private def censusOf(rows: Iterator[InternalRow])
-      : Iterator[((Option[String], Option[Boolean]), Long)] = {
+  /** One partition of a routed epoch (id, data, ts, dest, failed): its
+    * (dest, failed) values counted, and its rows, copied as `UnsafeRow`s,
+    * if together they take at most `share` bytes. The rows are dropped as
+    * soon as they pass `share`, so a task holds at most `share` bytes of
+    * them.
+    */
+  private def censusOf(schema: StructType, share: Long)(rows: Iterator[InternalRow])
+      : Iterator[(Seq[((Option[String], Option[Boolean]), Long)], Option[Array[InternalRow]])] = {
     val n = scala.collection.mutable.HashMap[(Option[String], Option[Boolean]), Long]()
+    lazy val toUnsafe = UnsafeProjection.create(schema)
+    var held = Option(Array.newBuilder[InternalRow])
+    var bytes = 0L
     rows.foreach { r =>
-      val k = (if (r.isNullAt(0)) None else Some(r.getUTF8String(0).toString),
-        if (r.isNullAt(1)) None else Some(r.getBoolean(1)))
+      val k = (if (r.isNullAt(3)) None else Some(r.getUTF8String(3).toString),
+        if (r.isNullAt(4)) None else Some(r.getBoolean(4)))
       n(k) = n.getOrElse(k, 0L) + 1
+      held.foreach { h =>
+        val u = r match {
+          case u: UnsafeRow => u.copy()
+          case _ => toUnsafe(r).copy()
+        }
+        bytes += u.getSizeInBytes
+        if (bytes <= share) h += u else held = None
+      }
     }
-    n.iterator
+    Iterator((n.toSeq, held.map(_.result())))
   }
 
   /** Lift a per-message routing rule into the set-oriented processor: the

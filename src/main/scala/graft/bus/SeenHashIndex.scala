@@ -134,6 +134,27 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
 
   import spark.implicits._
 
+  /** `dir` resolved once through Hadoop `Path`, as an absolute local
+    * path: the driver reads and writes runs with `java.nio` and Spark
+    * reads and writes them through `file:` URIs of the same directory, so both see one
+    * index whatever the session's default filesystem is. A `file:` scheme is
+    * stripped; any other scheme is refused here, since its runs would land
+    * on the driver's local disk.
+    */
+  private val root: Path = {
+    val uri = new org.apache.hadoop.fs.Path(dir).toUri
+    require(uri.getScheme == null || uri.getScheme == "file",
+      s"SeenHashIndex dir '$dir': the index keeps its runs on the driver's " +
+        "local disk, so it takes a local path or a file: URI; other stores " +
+        "need its I/O on Hadoop FileSystem (ROADMAP D7)")
+    Paths.get(uri.getPath).toAbsolutePath
+  }
+
+  private def runDir(label: Long): Path = root.resolve(s"epoch=$label")
+
+  /** A local path as the `file:` URI Spark reads and writes it by. */
+  private def uriOf(p: Path): String = new org.apache.hadoop.fs.Path(p.toUri).toString
+
   /** Hashes ingested before `epochId` (empty frame if no prior epoch) —
     * the FULL logical view, one per-run streaming scan unioned (runs are
     * mixed-layout: raw single-file and bucketed merged dirs cannot share
@@ -168,7 +189,7 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
 
   private def readRun(label: Long, buckets: Option[Seq[Int]]): DataFrame = {
     val base = runFrameCache.getOrElseUpdate(label,
-      spark.read.schema("h BIGINT").parquet(s"$dir/epoch=$label"))
+      spark.read.schema("h BIGINT").parquet(uriOf(runDir(label))))
     buckets.fold(base)(bs => base.filter(col("b").isin(bs: _*))).select("h")
   }
 
@@ -181,7 +202,6 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
 
   /** Epoch partition values currently on disk. */
   def epochs(): Seq[Long] = {
-    val root = Paths.get(dir)
     if (!Files.isDirectory(root)) Nil
     else {
       val st = Files.list(root)
@@ -282,7 +302,7 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     */
   private def mergeRuns(group: Seq[(Long, Long)]): Long = {
     val label = math.min(0L, epochs().min) - 1
-    val out = Paths.get(s"$dir/epoch=$label")
+    val out = runDir(label)
     // parquet footer row counts: an upper bound on the merged distinct
     // cardinality (exact unless a torn compaction left duplicate runs),
     // cheap enough to pick the path and size buckets and bloom up front
@@ -304,14 +324,14 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
         .reduce(_.union(_)).distinct()
         .withColumn("b", pmod(col("h"), lit(nb)).cast("int"))
         .repartition(col("b"))
-        .write.partitionBy("b").mode("error").parquet(out.toString)
+        .write.partitionBy("b").mode("error").parquet(uriOf(out))
       Files.writeString(out.resolve("_run_weight"), weight)
       Files.writeString(out.resolve("_nbuckets"), nb.toString)
       writeBloom(out, sparkBloomOf(out, rowBound))
     }
     onBeforeDelete()
     group.foreach { case (e, _) =>
-      deleteRecursively(Paths.get(s"$dir/epoch=$e"))
+      deleteRecursively(runDir(e))
       evictCached(e)
     }
     dirBytes(out)
@@ -319,7 +339,7 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
 
   /** Epoch count a run represents (its `_run_weight` sidecar; raw = 1). */
   private def weightOf(e: Long): Long = {
-    val p = Paths.get(s"$dir/epoch=$e", "_run_weight")
+    val p = runDir(e).resolve("_run_weight")
     if (Files.exists(p)) Files.readString(p).trim.toLong else 1L
   }
 
@@ -327,7 +347,7 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     * small merged runs = 1).
     */
   private def nBucketsOf(e: Long): Int = {
-    val p = Paths.get(s"$dir/epoch=$e", "_nbuckets")
+    val p = runDir(e).resolve("_nbuckets")
     if (Files.exists(p)) Files.readString(p).trim.toInt else 1
   }
 
@@ -371,7 +391,7 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     * never read.
     */
   private def dataFilesOf(e: Long): Seq[Path] = {
-    val run = Paths.get(s"$dir/epoch=$e")
+    val run = runDir(e)
     if (!Files.isDirectory(run)) return Nil
     val st = Files.walk(run)
     try st.iterator().asScala.filter { f =>
@@ -458,7 +478,7 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     * merges and the missing-sidecar self-heal.
     */
   private def sparkBloomOf(runDir: Path, expectedItems: Long): BloomFilter =
-    spark.read.schema("h BIGINT").parquet(runDir.toString)
+    spark.read.schema("h BIGINT").parquet(uriOf(runDir))
       .stat.bloomFilter("h", math.max(1L, expectedItems), bloomFpp)
 
   private def writeBloom(runDir: Path, bf: BloomFilter): Unit = {
@@ -474,7 +494,7 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
 
   private def bloomFor(label: Long): Option[BloomFilter] =
     bloomCache.getOrElseUpdate(label, {
-      val run = Paths.get(s"$dir/epoch=$label")
+      val run = runDir(label)
       val p = run.resolve("_bloom")
       try {
         if (!Files.exists(p)) writeBloom(run, sparkBloomOf(run, rowCountOf(label)))
@@ -618,7 +638,7 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     */
   private def appendKnownDistinct(hashes: Array[Long], epochId: Long): Unit = {
     java.util.Arrays.sort(hashes)
-    val out = Paths.get(s"$dir/epoch=$epochId")
+    val out = runDir(epochId)
     deleteRecursively(out) // a replay overwrites its previous attempt
     Files.createDirectories(out)
     writeHashes(out, hashes)

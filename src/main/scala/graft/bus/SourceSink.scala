@@ -39,6 +39,14 @@ trait BusSource {
   * under the epoch's Spark local properties, and the epoch commits only
   * after all of them have returned. `close` is never called while a write
   * runs.
+  *
+  * An epoch within the bus's driver bound (its routed rows take at most
+  * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, 64 MiB by default)
+  * reaches `write` as a driver-held batch: its optimized plan is a
+  * `LocalRelation`, so collecting it starts no Spark job. The in-repo sinks
+  * write such a batch on the driver ([[FileAdapters.ParquetDirSink]] through
+  * Hadoop `FileSystem`); any other batch reaches `write` as a frame over
+  * the epoch's cached rows.
   */
 trait BusSink {
   def write(batch: Dataset[Msg], dest: String, batchId: Long): Unit
@@ -166,8 +174,8 @@ final class MemoryChain(spark: SparkSession,
   // returns success — but if the first delivery is then rolled back
   // (cap refusal, addData failure remove the key), the epoch ends up
   // neither admitted nor forwarded while one caller observed success: a
-  // silent-loss window the loud-refusal design exists to exclude (r18
-  // ADVICE). Serializing the whole method is cheap here — this is the
+  // silent-loss window the loud-refusal design exists to exclude.
+  // Serializing the whole method is cheap here — this is the
   // driver-side test/local adapter; production chains use the
   // executor-side parquet spool (FileAdapters.chainSource).
   def write(batch: Dataset[Msg], dest: String, batchId: Long): Unit = synchronized {
@@ -184,8 +192,8 @@ final class MemoryChain(spark: SparkSession,
     val key = (batchId, dest)
     // Dedup BEFORE the epoch-cap guard: a redelivered already-admitted
     // epoch must stay a tolerated replay even when the ledger sits exactly
-    // at the cap (r17 ADVICE — cap-then-dedup broke at-least-once replay
-    // tolerance precisely at the boundary). add() is the atomic admit;
+    // at the cap, which checking the cap first would refuse — breaking
+    // at-least-once replay tolerance at the boundary. add() is the atomic admit;
     // a NEW epoch that pushes the ledger past the cap is rolled back and
     // refused loudly.
     if (!seenBatches.add(key)) { replayCounter.incrementAndGet(); return }
@@ -201,8 +209,9 @@ final class MemoryChain(spark: SparkSession,
       val rows = batch.collect()
       if (rows.nonEmpty) {
         // Reserve capacity with addAndGet-then-check (not get-then-add):
-        // concurrent sink tasks must not jointly overshoot the row cap
-        // (r17 ADVICE). Over-reservation is rolled back before refusing.
+        // with get-then-add, concurrent sink writes could each pass the
+        // check and jointly overshoot the row cap. Over-reservation is
+        // rolled back before refusing.
         val reserved = forwardedCounter.addAndGet(rows.length.toLong)
         if (reserved > maxBufferedRows) {
           forwardedCounter.addAndGet(-rows.length.toLong)

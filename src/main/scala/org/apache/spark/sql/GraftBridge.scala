@@ -28,6 +28,47 @@ object GraftBridge {
     spark.asInstanceOf[classic.SparkSession].sessionState.conf
       .getConf(internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
 
+  /** `rows` as a driver-held frame with `schema`'s columns: one
+    * `LocalRelation`. Catalyst folds filters and projections over it back
+    * into a `LocalRelation` (`ConvertToLocalRelation`), so frames built on
+    * it stay driver-held and their actions start no Spark job.
+    */
+  def localFrame(spark: SparkSession, schema: types.StructType,
+      rows: Seq[catalyst.InternalRow]): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      catalyst.plans.logical.LocalRelation(catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
+  /** `df`'s rows when its optimized plan is a `LocalRelation` (a frame the
+    * driver already holds, such as one built on [[localFrame]]); None
+    * when evaluating it takes a Spark job.
+    */
+  def driverRows(df: Dataset[_]): Option[Seq[catalyst.InternalRow]] =
+    df.asInstanceOf[classic.Dataset[_]].queryExecution.optimizedPlan match {
+      case r: catalyst.plans.logical.LocalRelation => Some(r.data)
+      case _ => None
+    }
+
+  /** What a Spark parquet write of `schema` under `spark`'s confs gives
+    * each of its tasks: the session's Hadoop conf as
+    * `ParquetUtils.prepareWrite` fills it (write support, schema, output
+    * timestamp type, legacy format, field ids, compression codec, summary
+    * level), and a `ParquetWriteSupport` built under the session's SQL
+    * conf, which it reads its datetime and INT96 rebase modes from. A file
+    * written with the two carries the schema, encodings and
+    * `org.apache.spark.sql.parquet.row.metadata` footer of a Spark write.
+    */
+  def parquetWrite(spark: SparkSession, schema: types.StructType)
+      : (org.apache.hadoop.conf.Configuration,
+         org.apache.parquet.hadoop.api.WriteSupport[catalyst.InternalRow]) = {
+    import execution.datasources.parquet.{ParquetOptions, ParquetUtils, ParquetWriteSupport}
+    val state = spark.asInstanceOf[classic.SparkSession].sessionState
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(state.newHadoopConf())
+    ParquetUtils.prepareWrite(state.conf, job, schema,
+      new ParquetOptions(Map.empty[String, String], state.conf))
+    (job.getConfiguration,
+      internal.SQLConf.withExistingConf(state.conf)(new ParquetWriteSupport))
+  }
+
   /** Run `body` on `pool` under the calling thread's Spark local properties
     * (job group, `streaming.sql.batchId`, SQL execution id) and active
     * session, as if the calling thread had run it: its jobs are cancelled

@@ -1244,45 +1244,250 @@ class BusSpec extends SparkSpec {
     assert(jobs <= 2, s"reading the runs back is driver work, yet $jobs Spark jobs ran")
   }
 
-  test("a bus epoch on 3 destinations starts one census job and one job per write") {
-    // (group, batch id) of every job started while the bus runs; the
-    // epoch stage records its own (the micro-batch thread's), so jobs of
-    // any other query are not counted
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
+  /** Counts each bus epoch's Spark jobs: [[tag]], called in the epoch
+    * stage, records the epoch's (job group, batch id) from its micro-batch
+    * thread, and [[perEpoch]] counts the jobs started under each recorded
+    * key while [[during]] ran, so jobs of any other query do not count.
+    */
+  private final class EpochJobs {
+    private val started = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    private val epochs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    private val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         if (j.properties != null)
           started.add((j.properties.getProperty("spark.jobGroup.id"),
             j.properties.getProperty("streaming.sql.batchId")))
     }
-    val epochs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    def tag(e: Long): Unit =
+      epochs.add((spark.sparkContext.getLocalProperty("spark.jobGroup.id"), e.toString))
+    def during[T](body: => T): T = {
+      spark.sparkContext.addSparkListener(listener)
+      try body
+      finally {
+        org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    }
+    def perEpoch: Seq[Int] = epochs.asScala.toSeq.map(k => started.asScala.count(_ == k))
+  }
+
+  /** The test session with the bus's driver bound (the advisory partition
+    * size) at 1 byte: every epoch takes the Spark write path.
+    */
+  private lazy val aboveBound = org.apache.spark.sql.GraftBridge.sessionWithConf(
+    spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes", "1")
+
+  /** Jobs per epoch and sent rows of a 2-epoch bus on `session` routing 30
+    * messages an epoch to 3 destinations of one [[NoopSink]].
+    */
+  private def noopBusJobs(session: org.apache.spark.sql.SparkSession): (Seq[Int], Long) = {
+    val jobs = new EpochJobs
     val route = FrizzleStream.exprProcessor(dest = col("data").cast("string"),
       failed = lit(false))
-    val src = new MemorySource(spark)
-    val bus = new FrizzleStream(spark, src, route, new NoopSink,
+    val src = new MemorySource(session)
+    val bus = new FrizzleStream(session, src, route, new NoopSink,
       checkpointDir = Some(Files.createTempDirectory("busjobs").toString),
-      epochProcess = Some((df, e) => {
-        epochs.add((spark.sparkContext.getLocalProperty("spark.jobGroup.id"),
-          e.toString))
-        route(df)
-      }))
-    spark.sparkContext.addSparkListener(listener)
-    try {
+      epochProcess = Some((df, e) => { jobs.tag(e); route(df) }))
+    jobs.during {
       bus.start()
       for (round <- 0 until 2) {
         src.put((0 until 30).map(i => Msg.utf8(s"$round-$i", Seq("x", "y", "z")(i % 3))): _*)
         bus.awaitIdle()
       }
       assert(bus.flushAndClose(10000))
-    } finally {
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-      spark.sparkContext.removeSparkListener(listener)
     }
-    val perEpoch = epochs.asScala.toSeq.map(k => started.asScala.count(_ == k))
-    assert(perEpoch.size == 2 && perEpoch.forall(_ == 4),
-      s"jobs per epoch (1 census + 3 writes each): $perEpoch")
-    assert(bus.stats.snapshot("send") == 60)
+    (jobs.perEpoch, bus.stats.snapshot("send"))
+  }
+
+  test("a driver-held bus epoch on 3 NoopSink destinations starts one job") {
+    val (perEpoch, sent) = noopBusJobs(spark)
+    assert(perEpoch == Seq(1, 1), s"jobs per epoch (1 census-and-collect job each): $perEpoch")
+    assert(sent == 60)
+  }
+
+  test("above the driver bound, a bus epoch on 3 destinations starts one census job and one job per write") {
+    val (perEpoch, sent) = noopBusJobs(aboveBound)
+    assert(perEpoch == Seq(4, 4), s"jobs per epoch (1 census + 3 writes each): $perEpoch")
+    assert(sent == 60)
+  }
+
+  /** Messages of spool file `f`: every destination, a dead letter, a null
+    * id, an empty payload and one payload that every file repeats.
+    */
+  private def dedupShapedFile(f: Int): Seq[(String, String)] =
+    (0 until 9).map(i => (s"$f-$i", s"${Seq("x", "y", "z", "FAIL")(i % 4)};f$f-$i")) ++
+      Seq((null, s"y;null-id-$f"), (s"$f-empty", ""), (s"$f-dup", "x;shared"))
+
+  private def writeJsonLines(dir: java.nio.file.Path, name: String,
+      msgs: Seq[(String, String)]): Unit = {
+    val b64 = java.util.Base64.getEncoder
+    val lines = msgs.map { case (id, p) =>
+      val idJson = if (id == null) "null" else s""""$id""""
+      s"""{"id":$idJson,"data_b64":"${b64.encodeToString(p.getBytes("UTF-8"))}"}"""
+    }
+    val tmp = Files.write(dir.resolveSibling(s".$name"), lines.asJava)
+    Files.move(tmp, dir.resolve(name), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** Run 2 epochs of the bus_dedup shape on `session`: a JSON spool, a
+    * [[SeenHashIndex.dedupEpoch]] stage, 3 routes on one
+    * [[FileAdapters.ParquetDirSink]] and dead letters on another. Returns
+    * the jobs per epoch and every delivered (id, payload, dest, batch id).
+    */
+  private def dedupShapedRun(session: org.apache.spark.sql.SparkSession)
+      : (Seq[Int], Seq[(String, String, String, Long)]) = {
+    import spark.implicits._
+    val root = Files.createTempDirectory("busdedupshape")
+    val spool = Files.createDirectories(root.resolve("spool"))
+    val idx = new SeenHashIndex(session, root.resolve("index").toString)
+    val route = FrizzleStream.exprProcessor(
+      dest = substring_index(decode(col("data"), "UTF-8"), ";", 1),
+      failed = col("dest") === "FAIL")
+    val jobs = new EpochJobs
+    val bus = new FrizzleStream(session, new JsonDirSource(spool.toString, 1), route,
+      new FileAdapters.ParquetDirSink(root.resolve("out").toString),
+      Some(new FileAdapters.ParquetDirSink(root.resolve("dead").toString)),
+      failDest = "dead",
+      checkpointDir = Some(root.resolve("ckpt").toString),
+      epochProcess = Some((df, e) => { jobs.tag(e); route(idx.dedupEpoch(df, e)) }))
+    jobs.during {
+      bus.start()
+      for (f <- 0 until 2) { writeJsonLines(spool, s"part-$f.json", dedupShapedFile(f)); bus.awaitIdle() }
+      assert(bus.flushAndClose(10000))
+    }
+    val rows = Seq("out", "dead").flatMap { d =>
+      spark.read.parquet(root.resolve(d).toString)
+        .select(col("id"), decode(col("data"), "UTF-8"), col("dest").cast("string"),
+          col("batch_id").cast("long"))
+        .as[(String, String, String, Long)].collect().toSeq
+    }
+    (jobs.perEpoch, rows.sortBy(r => (r._4, r._3, r._2)))
+  }
+
+  test("a bus_dedup-shaped epoch starts 2 jobs within the driver bound and 6 above it, delivering the same rows") {
+    val (heldJobs, heldRows) = dedupShapedRun(spark)
+    val (sparkJobs, sparkRows) = dedupShapedRun(aboveBound)
+    // the dedup collect and the census-and-collect job; above the bound
+    // also one write job per destination and one for the dead letters
+    assert(heldJobs == Seq(2, 2), s"jobs per driver-held epoch: $heldJobs")
+    assert(sparkJobs == Seq(6, 6), s"jobs per epoch above the bound: $sparkJobs")
+    assert(heldRows == sparkRows, s"driver writes $heldRows vs Spark writes $sparkRows")
+    // epoch 0: 12 messages; epoch 1: 10, its copies of the shared and the
+    // empty payload dropped. The empty payload routes to the unaddressable
+    // dest "", so it is dead-lettered beside the 4 FAIL rows.
+    assert(heldRows.size == 22 && heldRows.count(_._3 == "dead") == 5 &&
+      heldRows.count(_._2 == "x;shared") == 1 && heldRows.exists(_._1 == null) &&
+      heldRows.exists(_._2.isEmpty), s"delivered: $heldRows")
+  }
+
+  test("a driver-held frame writes parquet that reads back as the Spark write of it does") {
+    import spark.implicits._
+    val ts = java.sql.Timestamp.valueOf("2024-02-29 23:59:59.123456")
+    val msgs = Seq(Msg.utf8("a", "plain", ts), Msg.utf8(null, "null id", ts),
+      Msg.utf8("b", "null ts", null), Msg("c", Array.emptyByteArray, ts),
+      Msg.utf8("ünï-😀", "é", ts))
+    val held = msgs.toDS()
+    assert(org.apache.spark.sql.GraftBridge.driverRows(held).isDefined &&
+      org.apache.spark.sql.GraftBridge.driverRows(held.repartition(1)).isEmpty,
+      "precondition: one frame driver-held, its repartition not")
+    val root = Files.createTempDirectory("busparity")
+    val sink = new FileAdapters.ParquetDirSink(root.toString)
+    val (_, driverJobs) = jobsStartedBy(sink.write(held, "driver", 0L))
+    sink.write(held.repartition(1), "spark", 0L)
+    assert(driverJobs == 0, s"the driver write started $driverJobs Spark jobs")
+    def read(d: String) = spark.read.parquet(root.resolve(s"dest=$d/batch_id=0").toString)
+    assert(read("driver").schema == read("spark").schema)
+    assert(read("driver").exceptAll(read("spark")).isEmpty &&
+      read("spark").exceptAll(read("driver")).isEmpty)
+    assert(read("driver").as[Msg].collect().map(m => (m.id, m.dataUtf8, m.ts)).toSet ==
+      msgs.map(m => (m.id, m.dataUtf8, m.ts)).toSet)
+    def footer(d: String) = {
+      val dir = root.resolve(s"dest=$d/batch_id=0")
+      val st = Files.list(dir)
+      val Seq(f) = try st.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).toList
+      finally st.close()
+      assert(f.startsWith("part-00000-") && f.endsWith(".snappy.parquet"), f)
+      assert(Files.exists(dir.resolve("_SUCCESS")), s"$d: no _SUCCESS marker")
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(dir.resolve(f).toUri),
+          spark.sparkContext.hadoopConfiguration))
+      try {
+        val meta = r.getFooter.getFileMetaData
+        val codecs = r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec)).toSet
+        (meta.getSchema, meta.getKeyValueMetaData.asScala.toMap, codecs)
+      } finally r.close()
+    }
+    val (dSchema, dMeta, dCodecs) = footer("driver")
+    val (sSchema, sMeta, sCodecs) = footer("spark")
+    assert(dSchema == sSchema, s"file schema: $dSchema vs $sSchema")
+    assert(dMeta.contains("org.apache.spark.sql.parquet.row.metadata") && dMeta == sMeta,
+      s"footer metadata: $dMeta vs $sMeta")
+    assert(dCodecs == sCodecs, s"codecs: $dCodecs vs $sCodecs")
+  }
+
+  test("a crash-left hidden file in a batch_id dir is invisible to readers and a replay overwrites it") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("buscrash")
+    val spool = root.resolve("spool")
+    val sink = new FileAdapters.ParquetDirSink(spool.toString)
+    sink.write(Seq(Msg.utf8("1", "abc")).toDS(), "mid", 0L)
+    // epoch 1 crashed between its driver write and the rename: its
+    // batch_id dir holds only the hidden file, with a row no epoch delivered
+    new FileAdapters.ParquetDirSink(root.resolve("donor").toString)
+      .write(Seq(Msg.utf8("9", "ghost")).toDS(), "mid", 1L)
+    val donorDir = root.resolve("donor/dest=mid/batch_id=1")
+    val st = Files.list(donorDir)
+    val donor = try st.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).next()
+    finally st.close()
+    val crashed = Files.createDirectories(spool.resolve("dest=mid/batch_id=1"))
+    Files.copy(donor, crashed.resolve(s".${donor.getFileName}"))
+    def payloads = spark.read.parquet(spool.toString).select(col("data").cast("string"))
+      .as[String].collect().sorted.toSeq
+    assert(payloads == Seq("abc"), "Spark's reader must skip the hidden file")
+    val end = new MemorySink
+    val downstream = new FrizzleStream(spark, FileAdapters.chainSource(spool.toString, "mid"),
+      FrizzleStream.exprProcessor(dest = lit("out"), failed = lit(false)), end,
+      checkpointDir = Some(root.resolve("ckpt").toString))
+    downstream.start()
+    try {
+      downstream.awaitIdle()
+      assert(end.sent("out").map(_.dataUtf8) == Seq("abc"),
+        "a chained bus must not stream the hidden file")
+      // the replay of epoch 1 replaces the crashed dir
+      sink.write(Seq(Msg.utf8("2", "def")).toDS(), "mid", 1L)
+      val left = Files.list(crashed)
+      val names = try left.iterator().asScala.map(_.getFileName.toString).toList finally left.close()
+      assert(!names.exists(n => n.startsWith(".part") && !n.endsWith(".crc")) &&
+        names.count(_.endsWith(".parquet")) == 1, s"replayed dir: $names")
+      assert(payloads == Seq("abc", "def"))
+      downstream.awaitIdle()
+      assert(end.sent("out").map(_.dataUtf8).sorted == Seq("abc", "def"))
+    } finally assert(downstream.flushAndClose(10000))
+  }
+
+  test("a SeenHashIndex given a file: URI keeps its runs in that directory") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("seenidx_uri")
+    val idx = new SeenHashIndex(spark, s"file:$tmp")
+    for (e <- 0 until 2)
+      idx.append(spark.range(e * 100L, e * 100L + 100).select(col("id").as("h")), e)
+    assert(Files.isDirectory(tmp.resolve("epoch=0")) && Files.isDirectory(tmp.resolve("epoch=1")),
+      s"runs must land in $tmp")
+    assert(!Files.exists(java.nio.file.Paths.get(s"file:$tmp")),
+      "no run may land under the working directory's file: subtree")
+    assert(idx.epochs().sorted == Seq(0L, 1L))
+    assert(idx.seenBefore(2).as[Long].collect().sorted.toSeq == (0L until 200L))
+    // the bare path and the file:/// form open the same index
+    for (same <- Seq(tmp.toString, tmp.toUri.toString))
+      assert(new SeenHashIndex(spark, same).seenBefore(2).count() == 200L, same)
+  }
+
+  test("a SeenHashIndex refuses a non-file URI at construction") {
+    val e = intercept[IllegalArgumentException](new SeenHashIndex(spark, "hdfs://x/y"))
+    assert(e.getMessage.contains("hdfs://x/y") && e.getMessage.contains("D7"), e.getMessage)
   }
 
   test("bus epochs with a checkpoint and parquet sinks start no chmod or readlink process") {
