@@ -1,23 +1,24 @@
 package graft.bus
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.io.FileNotFoundException
+import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
-import org.apache.parquet.ParquetReadOptions
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.mapreduce.lib.output.FileOutputCommitter
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.column.impl.ColumnReadStoreImpl
-import org.apache.parquet.conf.PlainParquetConfiguration
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetOutputFormat}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter}
-import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.sketch.BloomFilter
+
+import graft.io.DriverParquet
 
 /** Seen-hash index maintained ACROSS micro-batches — the streaming
   * realization of [[graft.ops.Dedup.incrementalDedup]]'s scale claim: at
@@ -105,6 +106,19 @@ import org.apache.spark.util.sketch.BloomFilter
   * dedups and writes its run on the driver with no Spark job; only a
   * merge that will be bucketed runs as a Spark job.
   *
+  * Storage: `dir` may be any Hadoop path. Every driver-side read, write,
+  * list, rename and delete goes through Hadoop `FileSystem` on the
+  * session's Hadoop conf, and Spark reads and writes the same paths. A
+  * driver-written data file is committed by a write under a hidden name
+  * plus a rename ([[graft.io.DriverParquet]]). Where rename is
+  * copy-then-delete, a crash between the two steps leaves a complete
+  * visible file beside the hidden one: a replayed epoch deletes its run
+  * first, and a merged run without its `_run_weight` is a weight-1
+  * duplicate that a later compaction folds in. Runs are walked with
+  * `listStatus`: a located status (`listFiles`) or a status's permission
+  * makes Hadoop's local filesystem fork `ls -ld` per file without
+  * `libhadoop`.
+  *
   * @param compactEvery compact when the index holds this many epoch
   *   partitions (0 = never); also the tiering fanout (runs per size class
   *   before they merge, min 2). The directory count then stays
@@ -134,26 +148,33 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
 
   import spark.implicits._
 
-  /** `dir` resolved once through Hadoop `Path`, as an absolute local
-    * path: the driver reads and writes runs with `java.nio` and Spark
-    * reads and writes them through `file:` URIs of the same directory, so both see one
-    * index whatever the session's default filesystem is. A `file:` scheme is
-    * stripped; any other scheme is refused here, since its runs would land
-    * on the driver's local disk.
+  /** The Hadoop conf of every driver-side file operation (the session's,
+    * as a Spark parquet write of `h BIGINT` gets it) and the write support
+    * of the driver-written run files. Those files are plain-encoded and
+    * uncompressed (distinct 64-bit hashes neither repeat nor compress, and
+    * an uncompressed write allocates no page-size compressor buffer), and
+    * a run directory gets no `_SUCCESS` marker.
     */
-  private val root: Path = {
-    val uri = new org.apache.hadoop.fs.Path(dir).toUri
-    require(uri.getScheme == null || uri.getScheme == "file",
-      s"SeenHashIndex dir '$dir': the index keeps its runs on the driver's " +
-        "local disk, so it takes a local path or a file: URI; other stores " +
-        "need its I/O on Hadoop FileSystem (ROADMAP D7)")
-    Paths.get(uri.getPath).toAbsolutePath
+  private val (conf, hashWrite) = {
+    val (c, ws) = GraftBridge.parquetWrite(spark, StructType.fromDDL("h BIGINT"))
+    c.set(ParquetOutputFormat.COMPRESSION, "UNCOMPRESSED")
+    c.setBoolean(ParquetOutputFormat.ENABLE_DICTIONARY, false)
+    c.setBoolean(FileOutputCommitter.SUCCESSFUL_JOB_OUTPUT_DIR_MARKER, false)
+    (c, ws)
   }
 
-  private def runDir(label: Long): Path = root.resolve(s"epoch=$label")
+  private val fs: FileSystem = new Path(dir).getFileSystem(conf)
 
-  /** A local path as the `file:` URI Spark reads and writes it by. */
-  private def uriOf(p: Path): String = new org.apache.hadoop.fs.Path(p.toUri).toString
+  /** `dir` qualified on its Hadoop `FileSystem` (a bare path takes the
+    * session's default filesystem), so any Hadoop path works. The driver
+    * reads, writes, lists, renames and deletes runs through [[fs]], and
+    * Spark reads and writes the same qualified paths: one I/O path, one
+    * index. A driver-written data file is committed by a write under a
+    * hidden name plus a rename ([[graft.io.DriverParquet]]).
+    */
+  private val root: Path = fs.makeQualified(new Path(dir))
+
+  private def runDir(label: Long): Path = new Path(root, s"epoch=$label")
 
   /** Hashes ingested before `epochId` (empty frame if no prior epoch) —
     * the FULL logical view, one per-run streaming scan unioned (runs are
@@ -189,7 +210,7 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
 
   private def readRun(label: Long, buckets: Option[Seq[Int]]): DataFrame = {
     val base = runFrameCache.getOrElseUpdate(label,
-      spark.read.schema("h BIGINT").parquet(uriOf(runDir(label))))
+      spark.read.schema("h BIGINT").parquet(runDir(label).toString))
     buckets.fold(base)(bs => base.filter(col("b").isin(bs: _*))).select("h")
   }
 
@@ -201,28 +222,19 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     appendKnownDistinct(hashes.toDF("h").distinct().as[Long].collect(), epochId)
 
   /** Epoch partition values currently on disk. */
-  def epochs(): Seq[Long] = {
-    if (!Files.isDirectory(root)) Nil
-    else {
-      val st = Files.list(root)
-      try {
-        val it = st.iterator()
-        val buf = Seq.newBuilder[Long]
-        while (it.hasNext) {
-          val name = it.next().getFileName.toString
-          if (name.startsWith("epoch=")) buf += name.stripPrefix("epoch=").toLong
-        }
-        buf.result()
-      } finally st.close()
-    }
-  }
+  def epochs(): Seq[Long] =
+    try fs.listStatus(root).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("epoch=")).map(_.stripPrefix("epoch=").toLong)
+    catch { case _: FileNotFoundException => Nil }
 
   /** Cumulative bytes written by [[compact]] merges over this instance's
     * lifetime — the quantity whose growth BusSpec bounds to prove the
     * tiered scheme's write amplification is O(log epochs) per hash, not
-    * O(epochs) (the single-level failure mode). Includes sidecar bytes
-    * (blooms are ~2.4 B/hash — they ride the same log-shaped rewrite
-    * schedule as the data they summarize).
+    * O(epochs) (the single-level failure mode). Counts every file the
+    * merged run's filesystem lists, so sidecar bytes are included (blooms
+    * are ~2.4 B/hash — they ride the same log-shaped rewrite schedule as
+    * the data they summarize) and a checksummed filesystem's hidden `.crc`
+    * files are not.
     */
   def compactBytesWritten: Long = _compactBytes.get()
   private val _compactBytes = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -303,20 +315,23 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
   private def mergeRuns(group: Seq[(Long, Long)]): Long = {
     val label = math.min(0L, epochs().min) - 1
     val out = runDir(label)
-    // parquet footer row counts: an upper bound on the merged distinct
-    // cardinality (exact unless a torn compaction left duplicate runs),
-    // cheap enough to pick the path and size buckets and bloom up front
-    val rowBound = group.map { case (e, _) => rowCountOf(e) }.sum
-    val weight = group.map(_._2).sum.toString
+    // row counts (a driver-held run's array length, else its parquet
+    // footers): an upper bound on the merged distinct cardinality (exact
+    // unless a torn compaction left duplicate runs), cheap enough to pick
+    // the path and size buckets and bloom up front
+    val rowBound = group.map { case (e, _) =>
+      runHashes.get(e).fold(rowCountOf(e))(_.length.toLong)
+    }.sum
+    val weight = group.map(_._2).sum.toString.getBytes(UTF_8)
     if (rowBound < 2 * bucketRows) {
       val all = new mutable.ArrayBuilder.ofLong
       group.foreach { case (e, _) =>
         runHashes.get(e).fold(readHashes(e, all))(all ++= _)
       }
       val merged = sortedDistinct(all.result())
-      Files.createDirectory(out) // a fresh label: never an existing run
-      writeHashes(out, merged)
-      Files.writeString(out.resolve("_run_weight"), weight)
+      // a fresh label: the overwrite deletes no run
+      DriverParquet.overwrite(out, conf, hashWrite, merged.iterator.map(InternalRow(_)))
+      writeSidecar(out, "_run_weight")(_.write(weight))
       runHashes(label) = merged
     } else {
       val nb = math.ceil(rowBound.toDouble / bucketRows).toInt
@@ -324,31 +339,42 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
         .reduce(_.union(_)).distinct()
         .withColumn("b", pmod(col("h"), lit(nb)).cast("int"))
         .repartition(col("b"))
-        .write.partitionBy("b").mode("error").parquet(uriOf(out))
-      Files.writeString(out.resolve("_run_weight"), weight)
-      Files.writeString(out.resolve("_nbuckets"), nb.toString)
-      writeBloom(out, sparkBloomOf(out, rowBound))
+        .write.partitionBy("b").mode("error").parquet(out.toString)
+      writeSidecar(out, "_run_weight")(_.write(weight))
+      writeSidecar(out, "_nbuckets")(_.write(nb.toString.getBytes(UTF_8)))
+      writeSidecar(out, "_bloom")(sparkBloomOf(out, rowBound).writeTo)
     }
     onBeforeDelete()
     group.foreach { case (e, _) =>
-      deleteRecursively(runDir(e))
+      fs.delete(runDir(e), true)
       evictCached(e)
     }
-    dirBytes(out)
+    fs.getContentSummary(out).getLength
   }
 
-  /** Epoch count a run represents (its `_run_weight` sidecar; raw = 1). */
-  private def weightOf(e: Long): Long = {
-    val p = runDir(e).resolve("_run_weight")
-    if (Files.exists(p)) Files.readString(p).trim.toLong else 1L
-  }
-
-  /** Bucket-partition count of a run (its `_nbuckets` sidecar; raw and
-    * small merged runs = 1).
+  /** Epoch count a run represents (a merged run's `_run_weight` sidecar;
+    * raw = 1). Raw runs (labels ≥ 0) have no sidecars, so only merged runs
+    * are looked up.
     */
-  private def nBucketsOf(e: Long): Int = {
-    val p = runDir(e).resolve("_nbuckets")
-    if (Files.exists(p)) Files.readString(p).trim.toInt else 1
+  private def weightOf(e: Long): Long =
+    if (e >= 0) 1L else sidecar(e, "_run_weight").fold(1L)(_.toLong)
+
+  /** Bucket-partition count of a run (a bucketed run's `_nbuckets`
+    * sidecar; raw and small merged runs = 1).
+    */
+  private def nBucketsOf(e: Long): Int =
+    if (e >= 0) 1 else sidecar(e, "_nbuckets").fold(1)(_.toInt)
+
+  /** The text of run `e`'s sidecar `name`, None when it has none. */
+  private def sidecar(e: Long, name: String): Option[String] =
+    try {
+      val in = fs.open(new Path(runDir(e), name))
+      try Some(new String(in.readAllBytes(), UTF_8).trim) finally in.close()
+    } catch { case _: FileNotFoundException => None }
+
+  private def writeSidecar(run: Path, name: String)(body: java.io.OutputStream => Unit): Unit = {
+    val os = fs.create(new Path(run, name), true)
+    try body(os) finally os.close()
   }
 
   /** ⌊log_fanout(weight)⌋ by integer division (no float edge cases). */
@@ -359,57 +385,30 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     c
   }
 
-  private def dirBytes(p: java.nio.file.Path): Long = {
-    if (!Files.exists(p)) return 0L
-    val st = Files.walk(p)
-    try {
-      var total = 0L
-      val it = st.iterator()
-      while (it.hasNext) {
-        val f = it.next()
-        if (Files.isRegularFile(f)) total += Files.size(f)
-      }
-      total
-    } finally st.close()
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val st = Files.list(p)
-      try {
-        val it = st.iterator()
-        while (it.hasNext) deleteRecursively(it.next())
-      } finally st.close()
-    }
-    Files.deleteIfExists(p)
-  }
-
   /** A run's data files: the `.parquet` files a Spark read of the run
     * lists — at the top level of a raw run or under a bucketed run's `b=`
     * directories, with no `_`- or `.`-prefixed name on the way, so a
     * hidden temp file or `_temporary` directory left by a crashed write is
     * never read.
     */
-  private def dataFilesOf(e: Long): Seq[Path] = {
-    val run = runDir(e)
-    if (!Files.isDirectory(run)) return Nil
-    val st = Files.walk(run)
-    try st.iterator().asScala.filter { f =>
-      Files.isRegularFile(f) && f.getFileName.toString.endsWith(".parquet") &&
-        run.relativize(f).iterator().asScala.forall { part =>
-          val name = part.toString
-          !name.startsWith("_") && !name.startsWith(".")
-        }
-    }.toList
-    finally st.close()
+  private def dataFilesOf(e: Long): Seq[FileStatus] = {
+    // listStatus only: see the class doc's storage paragraph
+    def walk(p: Path): Seq[FileStatus] =
+      fs.listStatus(p).toSeq.filter { st =>
+        val name = st.getPath.getName
+        !name.startsWith("_") && !name.startsWith(".")
+      }.flatMap { st =>
+        if (st.isDirectory) walk(st.getPath)
+        else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
+        else Nil
+      }
+    try walk(runDir(e)) catch { case _: FileNotFoundException => Nil }
   }
 
-  /** Driver-side parquet access: plain options, no Hadoop configuration. */
-  private lazy val readOptions =
-    ParquetReadOptions.builder(new PlainParquetConfiguration()).build()
+  private lazy val readOptions = HadoopReadOptions.builder(conf).build()
 
-  private def openFile(f: Path): ParquetFileReader =
-    ParquetFileReader.open(new LocalInputFile(f), readOptions)
+  private def openFile(f: FileStatus): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf), readOptions)
 
   /** Row count of a run from its parquet footers, read on the driver (no
     * Spark job).
@@ -446,26 +445,6 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
       } finally r.close()
     }
 
-  /** Write `hashes` as the run's one data file, `h BIGINT` as Spark
-    * writes it: to a hidden temp name (invisible to every reader), then an
-    * atomic rename. Plain-encoded and uncompressed — distinct 64-bit
-    * hashes neither compress nor repeat.
-    */
-  private def writeHashes(runDir: Path, hashes: Array[Long]): Unit = {
-    val name = s"part-00000-${java.util.UUID.randomUUID()}.parquet"
-    val tmp = runDir.resolve(s".$name")
-    val w = ExampleParquetWriter.builder(new LocalOutputFile(tmp))
-      .withConf(new PlainParquetConfiguration())
-      .withType(SeenHashIndex.HashSchema)
-      .withCompressionCodec(CompressionCodecName.UNCOMPRESSED)
-      .withDictionaryEncoding(false)
-      .build()
-    val rows = new SimpleGroupFactory(SeenHashIndex.HashSchema)
-    try hashes.foreach(h => w.write(rows.newGroup().append("h", h)))
-    finally w.close()
-    Files.move(tmp, runDir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-  }
-
   /** `hs` sorted with duplicates removed (sorts `hs` in place). */
   private def sortedDistinct(hs: Array[Long]): Array[Long] = {
     java.util.Arrays.sort(hs)
@@ -477,14 +456,9 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
   /** A run's bloom built by one Spark job over its parquet — for bucketed
     * merges and the missing-sidecar self-heal.
     */
-  private def sparkBloomOf(runDir: Path, expectedItems: Long): BloomFilter =
-    spark.read.schema("h BIGINT").parquet(uriOf(runDir))
+  private def sparkBloomOf(run: Path, expectedItems: Long): BloomFilter =
+    spark.read.schema("h BIGINT").parquet(run.toString)
       .stat.bloomFilter("h", math.max(1L, expectedItems), bloomFpp)
-
-  private def writeBloom(runDir: Path, bf: BloomFilter): Unit = {
-    val os = Files.newOutputStream(runDir.resolve("_bloom"))
-    try bf.writeTo(os) finally os.close()
-  }
 
   /** A bucketed run's bloom, loaded on the driver and cached per label. A
     * missing sidecar self-heals (rebuilt from parquet, then cached);
@@ -495,10 +469,10 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
   private def bloomFor(label: Long): Option[BloomFilter] =
     bloomCache.getOrElseUpdate(label, {
       val run = runDir(label)
-      val p = run.resolve("_bloom")
+      val p = new Path(run, "_bloom")
       try {
-        if (!Files.exists(p)) writeBloom(run, sparkBloomOf(run, rowCountOf(label)))
-        val is = Files.newInputStream(p)
+        if (!fs.exists(p)) writeSidecar(run, "_bloom")(sparkBloomOf(run, rowCountOf(label)).writeTo)
+        val is = fs.open(p)
         try Some(BloomFilter.readFrom(is)) finally is.close()
       } catch { case _: Exception => None }
     })
@@ -638,12 +612,10 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     */
   private def appendKnownDistinct(hashes: Array[Long], epochId: Long): Unit = {
     java.util.Arrays.sort(hashes)
-    val out = runDir(epochId)
-    deleteRecursively(out) // a replay overwrites its previous attempt
-    Files.createDirectories(out)
-    writeHashes(out, hashes)
     // replay overwrite ⇒ anything cached for this label is stale
     evictCached(epochId)
+    // the overwrite deletes a replay's previous attempt first
+    DriverParquet.overwrite(runDir(epochId), conf, hashWrite, hashes.iterator.map(InternalRow(_)))
     runHashes(epochId) = hashes
   }
 
@@ -682,10 +654,6 @@ object SeenHashIndex {
       else java.util.Arrays.compareUnsigned(a.id, b.id)
     c < 0 || (c == 0 && a.rid < b.rid)
   }
-
-  /** A run's file schema: the one column Spark writes for `h BIGINT`. */
-  private val HashSchema =
-    MessageTypeParser.parseMessageType("message spark_schema { optional int64 h; }")
 
   /** [[ColumnReadStoreImpl]] wants a record converter; the driver read
     * takes values straight off the column reader and never calls it.

@@ -546,8 +546,8 @@ class BusSpec extends SparkSpec {
   }
 
   test("seen-hash index self-compacts mid-stream: bounded dirs, exact answer, replay converges") {
-    // the r11 verdict's operational hole: one epoch=N/ dir per micro-batch
-    // grows unboundedly. With compactEvery=3 the index must (a) compact
+    // without compaction the index grows one epoch=N/ dir per micro-batch,
+    // without bound. With compactEvery=3 the index must (a) compact
     // WHILE the stream runs, (b) keep the partition count bounded, (c)
     // still produce exactly q_dedup_incremental's batch answer, and (d)
     // stay replay-idempotent after a compaction has rewritten history.
@@ -875,24 +875,17 @@ class BusSpec extends SparkSpec {
   }
 
   test("tiered compaction: O(log) dirs, sub-quadratic rewrite bytes, exact parity, torn-compaction safe") {
-    // the r12 verdict's one weak component: single-level compaction
-    // rewrote the WHOLE index every compactEvery epochs — O(N²/k)
-    // cumulative bytes. The tiered scheme must, over a 24-epoch run:
-    // (a) keep the directory count O(log epochs), (b) keep TOTAL bytes
-    // written by compaction a small multiple of the index size (measured,
-    // not argued — single-level would be ~8-11× here), (c) preserve exact
-    // survivor parity with a driver-side set simulation, (d) stay
-    // replay-idempotent, and (e) survive a torn compaction (crash after
-    // the merged run is staged, before inputs are deleted) with the index
-    // still answering exactly — the staged-write commit protocol's point.
+    // a single-level compaction rewrites the WHOLE index every
+    // compactEvery epochs — O(N²/k) cumulative bytes. The tiered scheme
+    // must, over a 24-epoch run: (a) keep the directory count O(log
+    // epochs), (b) keep TOTAL bytes written by compaction a small multiple
+    // of the index size (measured, not argued — single-level would be
+    // ~8-11× here), (c) preserve exact survivor parity with a driver-side
+    // set simulation, (d) stay replay-idempotent, and (e) survive a torn
+    // compaction (crash after the merged run is staged, before inputs are
+    // deleted) with the index still answering exactly — the staged-write
+    // commit protocol's point.
     import spark.implicits._
-    def bytesUnder(p: java.nio.file.Path): Long = {
-      if (!Files.exists(p)) return 0L
-      val st = Files.walk(p)
-      try st.iterator().asScala
-        .filter(Files.isRegularFile(_)).map(Files.size).sum
-      finally st.close()
-    }
     val idxDir = Files.createTempDirectory("seenidx_tiered").toString
     val idx = new SeenHashIndex(spark, idxDir, compactEvery = 3)
     val nEpochs = 24
@@ -925,8 +918,8 @@ class BusSpec extends SparkSpec {
     // (b) measured write amplification: every hash is rewritten at most
     // ⌈log_3 24⌉ = 3 times, so cumulative compaction bytes must stay
     // within ~4× the final index's on-disk size (parquet per-file overhead
-    // gives the headroom). The r12 single-level scheme measured ~8-11×
-    // here and grows linearly with epoch count; this bound does not.
+    // gives the headroom). A single-level scheme measures ~8-11× here and
+    // grows linearly with epoch count; this bound does not.
     val totalIndexBytes = bytesUnder(java.nio.file.Paths.get(idxDir))
     assert(totalIndexBytes > 0, "index must be materialized on disk")
     assert(idx.compactBytesWritten <= 4L * totalIndexBytes,
@@ -943,11 +936,21 @@ class BusSpec extends SparkSpec {
     assert(idx.seenBefore(nEpochs).distinct().count() == before,
       "replay must converge, not grow the index")
     // (e) torn compaction: force a crash AFTER the merged run is staged,
-    // BEFORE the inputs are deleted. History must never be lost — the
-    // index still answers exactly (duplicate hashes across runs are
-    // harmless to the anti-join), and the next compaction self-heals.
+    // BEFORE the inputs are deleted
+    tornCompaction(spark, identity)
+  }
+
+  /** A crash after a merged run is staged and before its inputs are
+    * deleted, on `session` with the index at `at(local dir)`. History must
+    * never be lost — the index still answers exactly (duplicate hashes
+    * across runs are harmless to the anti-join), and the next compaction
+    * self-heals.
+    */
+  private def tornCompaction(session: org.apache.spark.sql.SparkSession,
+      at: String => String): Unit = {
+    import spark.implicits._
     val tornDir = Files.createTempDirectory("seenidx_torn").toString
-    val idx2 = new SeenHashIndex(spark, tornDir, compactEvery = 3)
+    val idx2 = new SeenHashIndex(session, at(tornDir), compactEvery = 3)
     val all = scala.collection.mutable.Set[String]()
     for (e <- 0 until 3) {
       val ps = (0 until 100).map(i => s"torn-$e-$i")
@@ -987,7 +990,7 @@ class BusSpec extends SparkSpec {
   }
 
   test("bucketed index: merged-run layout, exact dedup through buckets, bloom self-heal") {
-    // r20's batch-proportional lookup: merged runs above ~2·bucketRows lay
+    // the batch-proportional lookup: merged runs above ~2·bucketRows lay
     // out as b=pmod(h,N) partitions with _nbuckets and _bloom sidecars;
     // dedupEpoch must answer EXACTLY through the bucketed+bloomed path,
     // and a deleted _bloom must degrade safely (full candidacy) and
@@ -1061,14 +1064,14 @@ class BusSpec extends SparkSpec {
   }
 
   test("bucketed index: per-epoch index reads are batch-proportional, not index-proportional") {
-    // THE r19 weak-component fix, asserted as a number: dedup a small
+    // the batch-proportional lookup, asserted as a number: dedup a small
     // all-fresh epoch against a large bucketed index and bound the
     // parquet records actually read. Bloom pruning keeps true-negative
     // hashes away from the index entirely (fpp=1e-4 ⇒ ~0 expected false
     // positives at this batch size), so the lookup should read ~no index
     // rows; the only parquet reads are append-side bookkeeping (the new
-    // run's bloom build). The pre-r20 shape read ALL index rows every
-    // epoch — this assertion fails it by >10×.
+    // run's bloom build). An anti-join against the whole index reads ALL
+    // index rows every epoch — this assertion fails it by >10×.
     import spark.implicits._
     val idxDir = Files.createTempDirectory("seenidx_prop").toString
     val idx = new SeenHashIndex(spark, idxDir, compactEvery = 2,
@@ -1132,13 +1135,32 @@ class BusSpec extends SparkSpec {
       .toDF("id", "data")
   }
 
-  /** A run directory's files, as names relative to it. */
+  /** Whether `f` is a Hadoop checksum sidecar (`.<name>.crc`), the files
+    * a checksummed filesystem writes beside each file and hides from its
+    * listings.
+    */
+  private def isCrc(f: java.nio.file.Path): Boolean = {
+    val name = f.getFileName.toString
+    name.startsWith(".") && name.endsWith(".crc")
+  }
+
+  /** The files below `p`, `.crc` sidecars skipped. */
+  private def filesUnder(p: java.nio.file.Path): List[java.nio.file.Path] = {
+    if (!Files.exists(p)) return Nil
+    val st = Files.walk(p)
+    try st.iterator().asScala.filter(f => Files.isRegularFile(f) && !isCrc(f)).toList
+    finally st.close()
+  }
+
+  /** Bytes of the files below `p` as `SeenHashIndex.compactBytesWritten`
+    * counts them: every file the filesystem lists, `.crc` sidecars not.
+    */
+  private def bytesUnder(p: java.nio.file.Path): Long = filesUnder(p).map(Files.size).sum
+
+  /** A run directory's files, `.crc` sidecars skipped, as names relative to it. */
   private def runFiles(idxDir: String, label: Long): Seq[String] = {
     val run = java.nio.file.Paths.get(s"$idxDir/epoch=$label")
-    val st = Files.walk(run)
-    try st.iterator().asScala.filter(Files.isRegularFile(_))
-      .map(run.relativize(_).toString).toList.sorted
-    finally st.close()
+    filesUnder(run).map(run.relativize(_).toString).sorted
   }
 
   private def visibleParquet(idxDir: String, label: Long): Seq[String] =
@@ -1223,9 +1245,15 @@ class BusSpec extends SparkSpec {
   }
 
   test("a reopened index rebuilds its unbucketed runs from disk and answers exactly") {
+    reopenAnswersExactly(spark, identity)
+  }
+
+  /** The reopen test on `session` with the index at `at(local dir)`. */
+  private def reopenAnswersExactly(session: org.apache.spark.sql.SparkSession,
+      at: String => String): Unit = {
     import spark.implicits._
     val idxDir = Files.createTempDirectory("seenidx_reopen").toString
-    val first = new SeenHashIndex(spark, idxDir, compactEvery = 3)
+    val first = new SeenHashIndex(session, at(idxDir), compactEvery = 3)
     for (e <- 0 until 4)
       first.dedupEpoch(dedupFrame(e, (0 until 200).map(i => s"ro-$e-$i")), e).collect()
     // epochs 0-2 merged on the driver at epoch 3, beside epoch 3's raw run
@@ -1233,7 +1261,7 @@ class BusSpec extends SparkSpec {
     assert(runs.size == 2 && runs.head < 0 && runs(1) == 3L &&
       runs.forall(l => !runFiles(idxDir, l).contains("_nbuckets")),
       s"precondition: a driver-merged run and a raw run: $runs")
-    val reopened = new SeenHashIndex(spark, idxDir, compactEvery = 3)
+    val reopened = new SeenHashIndex(session, at(idxDir), compactEvery = 3)
     val fresh = (0 until 100).map(i => s"ro-new-$i")
     val batch = dedupFrame(4, (0 until 50).map(i => s"ro-0-$i") ++
       (0 until 50).map(i => s"ro-3-$i") ++ fresh ++ fresh.take(10))
@@ -1485,48 +1513,143 @@ class BusSpec extends SparkSpec {
       assert(new SeenHashIndex(spark, same).seenBefore(2).count() == 200L, same)
   }
 
-  test("a SeenHashIndex refuses a non-file URI at construction") {
-    val e = intercept[IllegalArgumentException](new SeenHashIndex(spark, "hdfs://x/y"))
-    assert(e.getMessage.contains("hdfs://x/y") && e.getMessage.contains("D7"), e.getMessage)
+  /** The test session with [[CopyRenameFs]]'s `cprn:` scheme bound: a
+    * store whose rename is copy-then-delete, as on an object store.
+    */
+  private lazy val copyRename = CopyRenameFs.session(spark)
+
+  test("on a copy-then-delete rename store, a replayed dedup epoch converges, a crash mid-rename included") {
+    replayConverges(copyRename, CopyRenameFs.uri, crashFirstAttempt = true)
+  }
+
+  test("on a copy-then-delete rename store, a torn compaction keeps the index exact and self-heals") {
+    tornCompaction(copyRename, CopyRenameFs.uri)
+    // a crash inside the merged run's rename: its data file is copied into
+    // place, its _run_weight not yet written, so it is a weight-1
+    // duplicate of its inputs
+    import spark.implicits._
+    val dir = Files.createTempDirectory("seenidx_torn_rename").toString
+    val idx = new SeenHashIndex(copyRename, CopyRenameFs.uri(dir), compactEvery = 3)
+    for (e <- 0 until 3)
+      idx.dedupEpoch(dedupFrame(e, (0 until 100).map(i => s"tr-$e-$i")), e).collect()
+    intercept[java.io.IOException](
+      CopyRenameFs.crashingRenames(dir, _.endsWith(".parquet"))(idx.compact(3)))
+    val Seq(half) = idx.epochs().filter(_ < 0)
+    assert(visibleParquet(dir, half).size == 1 && !runFiles(dir, half).contains("_run_weight") &&
+      idx.epochs().count(_ >= 0) == 3, s"half-renamed run: ${runFiles(dir, half)}")
+    assert(idx.seenBefore(3).distinct().count() == 300L,
+      "a half-renamed merge must not lose or duplicate logical history")
+    // epoch 3 self-compacts first: the four weight-1 runs merge into one
+    val mixed = (0 until 50).map(i => s"tr-2-$i") ++ (0 until 50).map(i => s"tr-new-$i")
+    val survivors = idx.dedupEpoch(dedupFrame(3, mixed), 3).select("data").as[String].collect().toSet
+    assert(survivors == (0 until 50).map(i => s"tr-new-$i").toSet,
+      "post-crash dedup must drop every already-seen payload")
+    assert(idx.epochs().sorted == Seq(-2L, 3L) && idx.seenBefore(4).distinct().count() == 350L,
+      s"the next compaction folds every leftover in: ${idx.epochs().sorted}")
+  }
+
+  test("on a copy-then-delete rename store, a reopened index rebuilds its unbucketed runs and answers exactly") {
+    reopenAnswersExactly(copyRename, CopyRenameFs.uri)
+  }
+
+  test("on a copy-then-delete rename store, index merges run on the driver below the bucket threshold and on Spark above it") {
+    mergesBySize(copyRename, CopyRenameFs.uri)
+  }
+
+  test("an index whose .crc files were deleted reopens and answers as with them") {
+    // an index written before its I/O went through Hadoop FileSystem has
+    // no .crc sidecar beside its driver-written files
+    import spark.implicits._
+    val withCrc = Files.createTempDirectory("seenidx_crc")
+    // bucketRows=64: the first merge (300 hashes) is bucketed on Spark,
+    // the second (60) merged on the driver; epochs 6 and 7 stay raw
+    val build = new SeenHashIndex(spark, withCrc.toString, compactEvery = 3, bucketRows = 64L)
+    for (e <- 0 until 8)
+      build.dedupEpoch(dedupFrame(e, (0 until (if (e < 3) 100 else 20)).map(i => s"crc-$e-$i")), e)
+        .collect()
+    val runs = build.epochs().sorted
+    assert(runs == Seq(-2L, -1L, 6L, 7L) &&
+      runFiles(withCrc.toString, -1L).contains("_nbuckets") &&
+      !runFiles(withCrc.toString, -2L).contains("_nbuckets"),
+      s"precondition: a bucketed, a driver-merged and two raw runs: $runs")
+    // the same index without its .crc files (a walk lists parents first)
+    val noCrc = Files.createTempDirectory("seenidx_nocrc")
+    val st = Files.walk(withCrc)
+    val all = try st.iterator().asScala.toList finally st.close()
+    for (f <- all) {
+      val to = noCrc.resolve(withCrc.relativize(f).toString)
+      if (Files.isDirectory(f)) Files.createDirectories(to)
+      else if (!isCrc(f)) Files.copy(f, to)
+    }
+    assert(all.exists(isCrc), "precondition: the index writes .crc sidecars")
+    val (a, b) = (new SeenHashIndex(spark, withCrc.toString, compactEvery = 3, bucketRows = 64L),
+      new SeenHashIndex(spark, noCrc.toString, compactEvery = 3, bucketRows = 64L))
+    assert(b.epochs().sorted == runs && runs.forall(l => b.rowCountOf(l) == a.rowCountOf(l)))
+    val fresh = (0 until 30).map(i => s"crc-new-$i")
+    val batch = dedupFrame(8, Seq(0, 4, 6, 7).flatMap(e => (0 until 10).map(i => s"crc-$e-$i")) ++
+      fresh ++ fresh.take(5))
+    val (outA, outB) = (a.dedupEpoch(batch, 8).select("data").as[String].collect().sorted.toSeq,
+      b.dedupEpoch(batch, 8).select("data").as[String].collect().sorted.toSeq)
+    assert(outA == fresh.sorted && outB == outA, s"survivors with .crc $outA, without $outB")
+    a.compact(9)
+    b.compact(9)
+    val (seenA, seenB) = (a.seenBefore(9).as[Long].collect().sorted.toSeq,
+      b.seenBefore(9).as[Long].collect().sorted.toSeq)
+    assert(seenA.size == 300 + 5 * 20 + 30 && seenB == seenA,
+      "the merges of both copies must hold the same hashes")
   }
 
   test("bus epochs with a checkpoint and parquet sinks start no chmod or readlink process") {
-    // every process the JVM starts while two epochs run: file source log,
-    // offsets and commits logs, route and dead-letter parquet writes
+    // every process the JVM starts while five epochs run: file source log,
+    // offsets and commits logs, a dedup index (compactEvery = 2: driver
+    // merges at epochs 2 and 4, a cascade at 4), route and dead-letter
+    // parquet writes; then the index reopened and read back from disk
     val root = Files.createTempDirectory("busforks")
     val spool = Files.createDirectories(root.resolve("spool"))
     val b64 = java.util.Base64.getEncoder
     def put(f: Int): Unit = {
       val lines = (0 until 9).map { i =>
-        val payload = Seq("x", "y", "fail")(i % 3)
+        val payload = s"${Seq("x", "y", "fail")(i % 3)};$f-$i"
         s"""{"id":"$f-$i","data_b64":"${b64.encodeToString(payload.getBytes("UTF-8"))}"}"""
       }
       val tmp = Files.write(root.resolve(s"part-$f.json"), lines.asJava)
       Files.move(tmp, spool.resolve(tmp.getFileName), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     }
-    val data = col("data").cast("string")
-    val bus = new FrizzleStream(spark, new JsonDirSource(spool.toString, 1),
-      FrizzleStream.exprProcessor(dest = when(data =!= "fail", data), failed = data === "fail"),
+    val data = substring_index(col("data").cast("string"), ";", 1)
+    val idx = new SeenHashIndex(spark, root.resolve("index").toString, compactEvery = 2)
+    val route = FrizzleStream.exprProcessor(dest = when(data =!= "fail", data),
+      failed = data === "fail")
+    val bus = new FrizzleStream(spark, new JsonDirSource(spool.toString, 1), route,
       new FileAdapters.ParquetDirSink(root.resolve("out").toString),
       Some(new FileAdapters.ParquetDirSink(root.resolve("dlq").toString)),
-      checkpointDir = Some(root.resolve("ckpt").toString))
+      checkpointDir = Some(root.resolve("ckpt").toString),
+      epochProcess = Some((df, e) => route(idx.dedupEpoch(df, e))))
     val rec = new jdk.jfr.Recording()
     rec.enable("jdk.ProcessStart")
     val commands = try {
       rec.start()
       bus.start()
-      for (f <- 0 until 2) { put(f); bus.awaitIdle() }
+      for (f <- 0 until 5) { put(f); bus.awaitIdle() }
       assert(bus.flushAndClose(10000))
+      // a restarted bus reopens its index, which lists every run and reads
+      // it back from its parquet footers and pages
+      import spark.implicits._
+      val reopened = new SeenHashIndex(spark, root.resolve("index").toString, compactEvery = 2)
+      val kept = reopened.dedupEpoch(Seq(Msg.utf8("r0", "x;0-0"), Msg.utf8("r1", "x;new")).toDF(), 5)
+        .select(col("data").cast("string")).as[String].collect()
+      assert(kept.toSeq == Seq("x;new"), s"the reopened index keeps only the new payload: ${kept.toSeq}")
       rec.stop()
       val dump = root.resolve("forks.jfr")
       rec.dump(dump)
       jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
         .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command"))
     } finally rec.close()
-    assert(bus.stats.snapshot("send") == 12 && bus.stats.snapshot("failsink") == 6)
+    assert(bus.stats.snapshot("send") == 30 && bus.stats.snapshot("failsink") == 15)
     for (d <- Seq("out/dest=x", "out/dest=y", "dlq/dest=failed"))
-      assert(Files.isDirectory(root.resolve(s"$d/batch_id=1")), d)
-    val forks = commands.filter(_.matches("""(\S*/)?(chmod|readlink)\b.*"""))
+      assert(Files.isDirectory(root.resolve(s"$d/batch_id=4")), d)
+    assert(idx.epochs().sorted == Seq(-3L, 4L, 5L),
+      s"runs 0-3 merged on the driver, epoch 5 from the reopened index: ${idx.epochs()}")
+    val forks = commands.filter(_.matches("""(\S*/)?(chmod|readlink|ls|stat)\b.*"""))
     assert(forks.isEmpty, s"${forks.size} of ${commands.size} process starts " +
       s"${forks.groupBy(_.takeWhile(_ != ' ')).view.mapValues(_.size).toMap}: ${forks.take(4)}")
   }
@@ -1599,12 +1722,18 @@ class BusSpec extends SparkSpec {
   }
 
   test("index merges: below the bucket threshold on the driver with no job, above it bucketed on Spark") {
+    mergesBySize(spark, identity)
+  }
+
+  /** The two merge paths on `session` with the index at `at(local dir)`. */
+  private def mergesBySize(session: org.apache.spark.sql.SparkSession,
+      at: String => String): Unit = {
     import spark.implicits._
     val smallDir = Files.createTempDirectory("seenidx_drivermerge").toString
     val bigDir = Files.createTempDirectory("seenidx_sparkmerge").toString
-    val small = new SeenHashIndex(spark, smallDir)
+    val small = new SeenHashIndex(session, at(smallDir))
     // bucketRows=64: the 600-hash merge clears 2·bucketRows and buckets
-    val big = new SeenHashIndex(spark, bigDir, bucketRows = 64L)
+    val big = new SeenHashIndex(session, at(bigDir), bucketRows = 64L)
     for (idx <- Seq(small, big); e <- 0 until 2)
       idx.append(spark.range(e * 300L, (e + 1) * 300L).select(col("id").as("h")), e)
     val (_, smallJobs) = jobsStartedBy(small.compact(2))
@@ -1651,13 +1780,28 @@ class BusSpec extends SparkSpec {
   }
 
   test("a replayed dedup epoch overwrites its driver-written run and converges") {
+    replayConverges(spark, identity, crashFirstAttempt = false)
+  }
+
+  /** The replay test on `session` with the index at `at(local dir)`. With
+    * `crashFirstAttempt`, the epoch's first attempt dies between the copy
+    * and the delete of its data file's rename ([[CopyRenameFs]] only).
+    */
+  private def replayConverges(session: org.apache.spark.sql.SparkSession,
+      at: String => String, crashFirstAttempt: Boolean): Unit = {
     import spark.implicits._
     val idxDir = Files.createTempDirectory("seenidx_replay").toString
-    val idx = new SeenHashIndex(spark, idxDir)
+    val idx = new SeenHashIndex(session, at(idxDir))
     for (e <- 0 until 2)
       idx.dedupEpoch(dedupFrame(e, (0 until 100).map(i => s"rp-$e-$i")), e).collect()
     val batch = dedupFrame(2, (0 until 30).map(i => s"rp-1-$i") ++
       (0 until 70).map(i => s"rp-new-$i"))
+    if (crashFirstAttempt) {
+      intercept[java.io.IOException](CopyRenameFs.crashingRenames(idxDir,
+        _.endsWith(".parquet"))(idx.dedupEpoch(batch, 2)))
+      assert(runFiles(idxDir, 2).size == 2 && visibleParquet(idxDir, 2).size == 1,
+        s"the crash leaves the data file copied beside its hidden source: ${runFiles(idxDir, 2)}")
+    }
     val first = idx.dedupEpoch(batch, 2).select("data").as[String].collect().toSet
     val before = idx.seenBefore(3).as[Long].collect().sorted.toSeq
     val Seq(firstFile) = visibleParquet(idxDir, 2)
@@ -1713,13 +1857,6 @@ class BusSpec extends SparkSpec {
     // dominates at this scaled-down epoch size). A super-logarithmic
     // scheme fails both well before epoch 600.
     import spark.implicits._
-    def bytesUnder(p: java.nio.file.Path): Long = {
-      if (!Files.exists(p)) return 0L
-      val st = Files.walk(p)
-      try st.iterator().asScala
-        .filter(Files.isRegularFile(_)).map(Files.size).sum
-      finally st.close()
-    }
     val fanout = 4
     val nEpochs = 600
     val idxDir = Files.createTempDirectory("seenidx_soak")
