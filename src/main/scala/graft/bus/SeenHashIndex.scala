@@ -85,13 +85,6 @@ import graft.io.DriverParquet
   * the raw runs; with `compactEvery = 0` every run stays raw, so the whole
   * index sits on the driver at 8 B per hash.
   *
-  * A bucketed run whose `_bloom` sidecar is missing (a crash between the
-  * parquet commit and the sidecar write) degrades safely: every batch
-  * hash is a candidate for it (full-read verification, still exact);
-  * [[bloomFor]] self-heals by rebuilding the sidecar from the run's
-  * parquet on first touch. Unbucketed runs carry no `_bloom`; one left by
-  * an earlier layout is ignored.
-  *
   * Compaction: a long-running bus writes one `epoch=N/` directory per
   * micro-batch — ~86k/day at a 1 s trigger. [[compact]] merges runs in
   * SIZE CLASSES (LSM shape): each hash is rewritten O(log epochs) times
@@ -117,7 +110,12 @@ import graft.io.DriverParquet
   * duplicate that a later compaction folds in. Runs are walked with
   * `listStatus`: a located status (`listFiles`) or a status's permission
   * makes Hadoop's local filesystem fork `ls -ld` per file without
-  * `libhadoop`.
+  * `libhadoop`. The root listing is the one record of which runs exist,
+  * and [[dedupEpoch]] lists the root once: its threshold check, its
+  * compaction cascade (which updates the label list as it merges) and its
+  * lookup share that listing. What cannot change for a label — its
+  * weight, bucket count, hashes, bloom and Spark frame — is held in one
+  * [[Run]] record per label, so no run's sidecar is read twice.
   *
   * @param compactEvery compact when the index holds this many epoch
   *   partitions (0 = never); also the tiering fanout (runs per size class
@@ -184,35 +182,77 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     * instead.
     */
   def seenBefore(epochId: Long): DataFrame = {
-    val runs = epochs().filter(_ < epochId)
-    if (runs.isEmpty) emptyHashes
-    else runs.map(readRun(_, None)).reduce(_.union(_))
+    val labels = epochs().filter(_ < epochId)
+    if (labels.isEmpty) emptyHashes
+    else labels.map(run(_).frame.select("h")).reduce(_.union(_))
   }
 
   private def emptyHashes: DataFrame =
     spark.range(0).select(col("id").as("h"))
 
-  /** One run's hashes; `buckets = Some(bs)` prunes a bucketed run to the
-    * named `b=` partitions.
+  /** What the index holds of one run label: only what cannot change
+    * between the run's write and its deletion, each part loaded on first
+    * use unless the write that made the run passed it in. [[runs]] drops
+    * the record when the label is overwritten (a replayed epoch) or
+    * deleted (a merge input), so no part is ever stale.
     *
-    * The base frame is CACHED per label: runs are immutable between
-    * creation and deletion, but a fresh `spark.read.parquet` re-lists the
-    * run's whole directory tree (InMemoryFileIndex build — 512 `b=`
-    * subdirs on a 67 M-hash tier) on EVERY epoch, a per-epoch cost that
-    * grows with index size even when only two bucket files are read —
-    * exactly the ∝-index creep this class exists to kill. One listing per
-    * run lifetime; [[evictCached]] drops the entry when the run is
-    * overwritten (replay) or deleted (compaction). The data schema is
-    * given, not inferred: inference is one footer-reading Spark job per
-    * run on first touch (a bucketed run's `b` still comes from its paths).
+    * @param layout (weight, bucket count) as the merge wrote them; else
+    *   1 and 1 for a raw run (labels ≥ 0 have no sidecars) and a merged
+    *   run's `_run_weight` and `_nbuckets` sidecars, read once (1 when
+    *   missing)
+    * @param wrote an unbucketed run's hashes as its driver write wrote them
+    * @param built a bucketed run's bloom as its merge built it
     */
-  private val runFrameCache = mutable.Map[Long, DataFrame]()
+  private final class Run(val label: Long, layout: Option[(Long, Int)] = None,
+      wrote: Option[Array[Long]] = None, built: Option[BloomFilter] = None) {
+    val dir: Path = runDir(label)
 
-  private def readRun(label: Long, buckets: Option[Seq[Int]]): DataFrame = {
-    val base = runFrameCache.getOrElseUpdate(label,
-      spark.read.schema("h BIGINT").parquet(runDir(label).toString))
-    buckets.fold(base)(bs => base.filter(col("b").isin(bs: _*))).select("h")
+    lazy val (weight, nBuckets) = layout.getOrElse(
+      if (label >= 0) (1L, 1)
+      else (sidecar("_run_weight").fold(1L)(_.toLong), sidecar("_nbuckets").fold(1)(_.toInt)))
+
+    /** The run's hashes, sorted and distinct, held on the driver (see the
+      * class doc for the memory bound).
+      */
+    lazy val hashes: Array[Long] = wrote.getOrElse(readHashes(dir))
+
+    /** A bucketed run's bloom. A missing `_bloom` (a crash between the
+      * parquet commit and the sidecar write) self-heals: it is rebuilt
+      * from the run's parquet and written. A failed load or rebuild
+      * degrades to None: every hash is a candidate for the run
+      * (full-read verification, still exact). Unbucketed runs carry no
+      * `_bloom`; one left by an earlier layout is never read.
+      */
+    lazy val bloom: Option[BloomFilter] = built.orElse {
+      val p = new Path(dir, "_bloom")
+      try {
+        if (!fs.exists(p)) writeSidecar(dir, "_bloom")(sparkBloomOf(dir, rowCountOf(label)).writeTo)
+        val is = fs.open(p)
+        try Some(BloomFilter.readFrom(is)) finally is.close()
+      } catch { case _: Exception => None }
+    }
+
+    /** The run's Spark frame. A fresh `spark.read.parquet` re-lists the
+      * run's whole directory tree (512 `b=` subdirs on a 67 M-hash tier),
+      * so one listing per run lifetime keeps the per-epoch cost off the
+      * index size. The data schema is given, not inferred: inference is
+      * one footer-reading Spark job per run (a bucketed run's `b` still
+      * comes from its paths).
+      */
+    lazy val frame: DataFrame = spark.read.schema("h BIGINT").parquet(dir.toString)
+
+    /** The text of this run's sidecar `name`, None when it has none. */
+    private def sidecar(name: String): Option[String] =
+      try {
+        val in = fs.open(new Path(dir, name))
+        try Some(new String(in.readAllBytes(), UTF_8).trim) finally in.close()
+      } catch { case _: FileNotFoundException => None }
   }
+
+  /** The [[Run]] record of each label this instance has touched. */
+  private val runs = mutable.Map[Long, Run]()
+
+  private def run(label: Long): Run = runs.getOrElseUpdate(label, new Run(label))
 
   /** Record `hashes` as epoch `epochId`'s survivors (overwrite = replay
     * idempotent): their distinct values are collected to the driver (a raw
@@ -278,31 +318,41 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     *
     * @return bytes written by this call (0 if no class was full)
     */
-  def compact(uptoEpoch: Long): Long = {
+  def compact(uptoEpoch: Long): Long = compactRuns(epochs(), uptoEpoch)._2
+
+  /** [[compact]] over `labels`, the runs on disk, with no listing of its
+    * own: each merge replaces its inputs in the list by its fresh label.
+    *
+    * @return the runs on disk after the merges, and the bytes written
+    */
+  private def compactRuns(labels: Seq[Long], uptoEpoch: Long): (Seq[Long], Long) = {
     val fanout = math.max(2, compactEvery)
+    var now = labels
     var written = 0L
     var merged = true
     while (merged) {
       merged = false
-      val runs = epochs().filter(_ < uptoEpoch).map(e => (e, weightOf(e)))
-      runs.groupBy { case (_, w) => sizeClass(w, fanout) }
+      now.filter(_ < uptoEpoch).map(run)
+        .groupBy(r => sizeClass(r.weight, fanout))
         .toSeq.sortBy(_._1)
         .find(_._2.sizeCompare(fanout) >= 0)
         .foreach { case (_, group) =>
-          written += mergeRuns(group)
+          val label = math.min(0L, now.min) - 1
+          written += mergeRuns(group, label)
+          val inputs = group.map(_.label).toSet
+          now = now.filterNot(inputs) :+ label
           merged = true // cascade: the new run may fill the next class
         }
     }
     _compactBytes.addAndGet(written)
-    written
+    (now, written)
   }
 
-  /** Merge one size-class group into a single run at a fresh negative
-    * label. Below ~2 bucket files of hashes (`rowBound < 2·bucketRows`)
-    * the merge runs on the driver with no Spark job: the inputs' `h`
-    * values (their driver-held arrays, or their parquet files when not
-    * held) are deduplicated, written as one file and kept as the new
-    * run's driver-held array. Above it the merged run is hash-BUCKETED
+  /** Merge one size-class group into a single run at the fresh negative
+    * `label`. Below ~2 bucket files of hashes (`rowBound < 2·bucketRows`)
+    * the merge runs on the driver with no Spark job: the inputs' hashes
+    * are deduplicated, written as one file and kept as the new run's
+    * driver-held array. Above it the merged run is hash-BUCKETED
     * (`b = pmod(h, N)` partitions) by a Spark job, so [[dedupEpoch]]'s
     * verification can read candidate buckets instead of the whole tier;
     * inputs are read per-run (mixed raw/bucketed layouts), and the bucket
@@ -312,65 +362,44 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     * count and bloom — is complete, keeping the crash window's only
     * artifacts harmless duplicates.
     */
-  private def mergeRuns(group: Seq[(Long, Long)]): Long = {
-    val label = math.min(0L, epochs().min) - 1
+  private def mergeRuns(group: Seq[Run], label: Long): Long = {
     val out = runDir(label)
-    // row counts (a driver-held run's array length, else its parquet
-    // footers): an upper bound on the merged distinct cardinality (exact
-    // unless a torn compaction left duplicate runs), cheap enough to pick
-    // the path and size buckets and bloom up front
-    val rowBound = group.map { case (e, _) =>
-      runHashes.get(e).fold(rowCountOf(e))(_.length.toLong)
-    }.sum
-    val weight = group.map(_._2).sum.toString.getBytes(UTF_8)
-    if (rowBound < 2 * bucketRows) {
+    // row counts (an unbucketed run's hashes, else its parquet footers):
+    // an upper bound on the merged distinct cardinality (exact unless a
+    // torn compaction left duplicate runs), cheap enough to pick the path
+    // and size buckets and bloom up front
+    val rowBound = group.map(r =>
+      if (r.nBuckets == 1) r.hashes.length.toLong else rowCountOf(r.label)).sum
+    val weight = group.map(_.weight).sum
+    val weightText = weight.toString.getBytes(UTF_8)
+    runs(label) = if (rowBound < 2 * bucketRows) {
       val all = new mutable.ArrayBuilder.ofLong
-      group.foreach { case (e, _) =>
-        runHashes.get(e).fold(readHashes(e, all))(all ++= _)
-      }
+      group.foreach(all ++= _.hashes)
       val merged = sortedDistinct(all.result())
       // a fresh label: the overwrite deletes no run
       DriverParquet.overwrite(out, conf, hashWrite, merged.iterator.map(InternalRow(_)))
-      writeSidecar(out, "_run_weight")(_.write(weight))
-      runHashes(label) = merged
+      writeSidecar(out, "_run_weight")(_.write(weightText))
+      new Run(label, Some((weight, 1)), wrote = Some(merged))
     } else {
       val nb = math.ceil(rowBound.toDouble / bucketRows).toInt
-      group.map { case (e, _) => readRun(e, None) }
+      group.map(_.frame.select("h"))
         .reduce(_.union(_)).distinct()
         .withColumn("b", pmod(col("h"), lit(nb)).cast("int"))
         .repartition(col("b"))
         .write.partitionBy("b").mode("error").parquet(out.toString)
-      writeSidecar(out, "_run_weight")(_.write(weight))
+      writeSidecar(out, "_run_weight")(_.write(weightText))
       writeSidecar(out, "_nbuckets")(_.write(nb.toString.getBytes(UTF_8)))
-      writeSidecar(out, "_bloom")(sparkBloomOf(out, rowBound).writeTo)
+      val bloom = sparkBloomOf(out, rowBound)
+      writeSidecar(out, "_bloom")(bloom.writeTo)
+      new Run(label, Some((weight, nb)), built = Some(bloom))
     }
     onBeforeDelete()
-    group.foreach { case (e, _) =>
-      fs.delete(runDir(e), true)
-      evictCached(e)
+    group.foreach { r =>
+      runs.remove(r.label)
+      fs.delete(r.dir, true)
     }
     fs.getContentSummary(out).getLength
   }
-
-  /** Epoch count a run represents (a merged run's `_run_weight` sidecar;
-    * raw = 1). Raw runs (labels ≥ 0) have no sidecars, so only merged runs
-    * are looked up.
-    */
-  private def weightOf(e: Long): Long =
-    if (e >= 0) 1L else sidecar(e, "_run_weight").fold(1L)(_.toLong)
-
-  /** Bucket-partition count of a run (a bucketed run's `_nbuckets`
-    * sidecar; raw and small merged runs = 1).
-    */
-  private def nBucketsOf(e: Long): Int =
-    if (e >= 0) 1 else sidecar(e, "_nbuckets").fold(1)(_.toInt)
-
-  /** The text of run `e`'s sidecar `name`, None when it has none. */
-  private def sidecar(e: Long, name: String): Option[String] =
-    try {
-      val in = fs.open(new Path(runDir(e), name))
-      try Some(new String(in.readAllBytes(), UTF_8).trim) finally in.close()
-    } catch { case _: FileNotFoundException => None }
 
   private def writeSidecar(run: Path, name: String)(body: java.io.OutputStream => Unit): Unit = {
     val os = fs.create(new Path(run, name), true)
@@ -391,7 +420,7 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     * hidden temp file or `_temporary` directory left by a crashed write is
     * never read.
     */
-  private def dataFilesOf(e: Long): Seq[FileStatus] = {
+  private def dataFilesOf(run: Path): Seq[FileStatus] = {
     // listStatus only: see the class doc's storage paragraph
     def walk(p: Path): Seq[FileStatus] =
       fs.listStatus(p).toSeq.filter { st =>
@@ -402,7 +431,7 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
         else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
         else Nil
       }
-    try walk(runDir(e)) catch { case _: FileNotFoundException => Nil }
+    try walk(run) catch { case _: FileNotFoundException => Nil }
   }
 
   private lazy val readOptions = HadoopReadOptions.builder(conf).build()
@@ -414,16 +443,17 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     * Spark job).
     */
   private[graft] def rowCountOf(e: Long): Long =
-    dataFilesOf(e).map { f =>
+    dataFilesOf(runDir(e)).map { f =>
       val r = openFile(f)
       try r.getRecordCount finally r.close()
     }.sum
 
-  /** Append every `h` value of run `e` to `into`, read on the driver (no
-    * Spark job) column-chunk by column-chunk.
+  /** The `h` values of the run at `run`, sorted and distinct, read on the
+    * driver (no Spark job) column-chunk by column-chunk.
     */
-  private def readHashes(e: Long, into: mutable.ArrayBuilder.ofLong): Unit =
-    dataFilesOf(e).foreach { f =>
+  private def readHashes(run: Path): Array[Long] = {
+    val into = new mutable.ArrayBuilder.ofLong
+    dataFilesOf(run).foreach { f =>
       val r = openFile(f)
       try {
         val meta = r.getFooter.getFileMetaData
@@ -444,6 +474,8 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
         }
       } finally r.close()
     }
+    sortedDistinct(into.result())
+  }
 
   /** `hs` sorted with duplicates removed (sorts `hs` in place). */
   private def sortedDistinct(hs: Array[Long]): Array[Long] = {
@@ -459,44 +491,6 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
   private def sparkBloomOf(run: Path, expectedItems: Long): BloomFilter =
     spark.read.schema("h BIGINT").parquet(run.toString)
       .stat.bloomFilter("h", math.max(1L, expectedItems), bloomFpp)
-
-  /** A bucketed run's bloom, loaded on the driver and cached per label. A
-    * missing sidecar self-heals (rebuilt from parquet, then cached);
-    * rebuild failure degrades to None = every hash is a candidate.
-    */
-  private val bloomCache = mutable.Map[Long, Option[BloomFilter]]()
-
-  private def bloomFor(label: Long): Option[BloomFilter] =
-    bloomCache.getOrElseUpdate(label, {
-      val run = runDir(label)
-      val p = new Path(run, "_bloom")
-      try {
-        if (!fs.exists(p)) writeSidecar(run, "_bloom")(sparkBloomOf(run, rowCountOf(label)).writeTo)
-        val is = fs.open(p)
-        try Some(BloomFilter.readFrom(is)) finally is.close()
-      } catch { case _: Exception => None }
-    })
-
-  /** An unbucketed run's hashes, sorted and distinct, held on the driver
-    * per label: filled by the driver writes ([[appendKnownDistinct]], the
-    * driver merge) from the arrays they wrote, or read from the run's
-    * parquet on first touch (a reopened index). See the class doc for the
-    * memory bound.
-    */
-  private val runHashes = mutable.Map[Long, Array[Long]]()
-
-  private def hashesOf(label: Long): Array[Long] =
-    runHashes.getOrElseUpdate(label, {
-      val all = new mutable.ArrayBuilder.ofLong
-      readHashes(label, all)
-      sortedDistinct(all.result())
-    })
-
-  private def evictCached(label: Long): Unit = {
-    bloomCache.remove(label)
-    runFrameCache.remove(label)
-    runHashes.remove(label)
-  }
 
   /** The bus epoch stage over (id, data, ts) message frames, string ids:
     * keep the first copy per payload hash WITHIN the epoch (min id, nulls
@@ -528,10 +522,12 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
         .foreach(_.unpersist(blocking = false)))
     prevEpochBlocks = Nil
     // self-compaction on the partition-count threshold, BEFORE the lookup:
-    // the lookup then lists a bounded directory set. Compacting here (vs a
-    // side thread) keeps the single-writer invariant for free.
-    if (compactEvery > 0 && epochs().count(_ < epochId) >= compactEvery)
-      compact(epochId)
+    // the lookup then probes a bounded run set. Compacting here (vs a side
+    // thread) keeps the single-writer invariant for free. One listing
+    // serves the check, the cascade and the lookup.
+    var labels = epochs()
+    if (compactEvery > 0 && labels.count(_ < epochId) >= compactEvery)
+      labels = compactRuns(labels, epochId)._1
     // materialize once: the collect below computes the tagged rows into
     // the checkpoint, which the returned frame then reads — the source is
     // read once, and the row ids the driver picks by stay fixed
@@ -551,7 +547,7 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
       if (j < 0 || SeenHashIndex.precedes(rows(i), rows(j))) first(rows(i).h) = i
     }
     val hashes = first.keys.toArray
-    val seen = seenOf(hashes, epochId)
+    val seen = seenOf(hashes, labels.filter(_ < epochId))
     appendKnownDistinct(hashes.filterNot(seen), epochId)
     val dropped = Set.newBuilder[Any]
     var keptBytes = 0L
@@ -571,23 +567,23 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     kept.drop("__h", "__rid").coalesce(parts.toInt)
   }
 
-  /** The subset of `hashes` present in runs below `epochId`: unbucketed
-    * runs answer exactly from their driver-held arrays; bucketed runs by a
+  /** The subset of `hashes` present in the runs `labels`: unbucketed runs
+    * answer exactly from their driver-held arrays; bucketed runs by a
     * driver-side bloom probe, then one verification job over the touched
     * buckets (no job when no bucketed run may hold a hash).
     */
-  private def seenOf(hashes: Array[Long], epochId: Long): Set[Long] = {
+  private def seenOf(hashes: Array[Long], labels: Seq[Long]): Set[Long] = {
     // a set: a torn compaction can leave the same hash in two runs
     val seen = mutable.HashSet[Long]()
     val candidates = mutable.HashSet[Long]()
-    val touched = epochs().filter(_ < epochId).sorted.flatMap { label =>
-      val nb = nBucketsOf(label)
+    val touched = labels.sorted.map(run).flatMap { r =>
+      val nb = r.nBuckets
       if (nb == 1) {
-        val run = hashesOf(label)
-        hashes.foreach(h => if (java.util.Arrays.binarySearch(run, h) >= 0) seen += h)
+        val held = r.hashes
+        hashes.foreach(h => if (java.util.Arrays.binarySearch(held, h) >= 0) seen += h)
         None
       } else {
-        val bloom = bloomFor(label)
+        val bloom = r.bloom
         val buckets = mutable.SortedSet[Int]()
         hashes.foreach { h =>
           if (bloom.forall(_.mightContainLong(h))) {
@@ -595,7 +591,8 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
             buckets += (((h % nb) + nb) % nb).toInt
           }
         }
-        if (buckets.isEmpty) None else Some(readRun(label, Some(buckets.toSeq)))
+        if (buckets.isEmpty) None
+        else Some(r.frame.filter(col("b").isin(buckets.toSeq: _*)).select("h"))
       }
     }
     if (touched.nonEmpty)
@@ -612,11 +609,11 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     */
   private def appendKnownDistinct(hashes: Array[Long], epochId: Long): Unit = {
     java.util.Arrays.sort(hashes)
-    // replay overwrite ⇒ anything cached for this label is stale
-    evictCached(epochId)
+    // replay overwrite ⇒ the label's record is stale
+    runs.remove(epochId)
     // the overwrite deletes a replay's previous attempt first
     DriverParquet.overwrite(runDir(epochId), conf, hashWrite, hashes.iterator.map(InternalRow(_)))
-    runHashes(epochId) = hashes
+    runs(epochId) = new Run(epochId, wrote = Some(hashes))
   }
 
   /** A lazy localCheckpoint (its blocks fill on the first job that reads

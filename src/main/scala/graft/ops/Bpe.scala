@@ -81,9 +81,9 @@ object Bpe {
     * ~the batch factor; BpeSpec pins the two loops merge-for-merge.
     */
   def trainMerges(docs: DataFrame, nMerges: Int): Seq[(Int, String, String, Long)] = {
-    // lazy checkpoints throughout the loop (r21): the round's collect is
-    // the action that materializes them — an eager checkpoint spent one
-    // extra driver-scheduled job per round for the same reuse.
+    // lazy checkpoints throughout the loop: the round's collect is the
+    // action that materializes them — an eager checkpoint spends one extra
+    // driver-scheduled job per round for the same reuse.
     var vocab = wordVocab(docs).localCheckpoint(eager = false)
     val rules = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
     var i = 0
@@ -108,7 +108,9 @@ object Bpe {
     * (ONE driver round-trip) and accept the longest ranking PREFIX that a
     * static argument proves the sequential loop would have picked in the
     * same order — so a 32k-vocab train needs ~nMerges/acceptedPerRound
-    * driver round-trips instead of 32k, with BIT-IDENTICAL output.
+    * driver round-trips instead of 32k, with BIT-IDENTICAL output
+    * (rounds against nMerges at production merge counts: PROFILE_r17.txt
+    * §2).
     *
     * Why a prefix of the snapshot ranking is safe: applying merge
     * (a, b) → ab only (i) ZEROES the (a, b) row itself, (ii) DECREASES
@@ -135,22 +137,13 @@ object Bpe {
     * diverge); it is re-ranked fresh next round.
     */
   def trainMergesBatched(docs: DataFrame, nMerges: Int,
-      batchCap: Int = 32): Seq[(Int, String, String, Long)] =
-    trainMergesBatchedStats(docs, nMerges, batchCap)._1
-
-  /** [[trainMergesBatched]] plus the round count (= driver round-trips),
-    * the number tools.BpeBench ledgers against nMerges.
-    */
-  def trainMergesBatchedStats(docs: DataFrame, nMerges: Int,
-      batchCap: Int = 32): (Seq[(Int, String, String, Long)], Int) = {
+      batchCap: Int = 32): Seq[(Int, String, String, Long)] = {
     require(batchCap >= 1)
-    var rounds = 0
     // lazy per-round checkpoints: materialized by the round's collect
     var vocab = wordVocab(docs).localCheckpoint(eager = false)
     val rules = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
     var exhausted = false
     while (rules.size < nMerges && !exhausted) {
-      rounds += 1
       val pc = pairCounts(vocab).localCheckpoint(eager = false)
       // Neighbor maxima feed the created-pair ceiling; joined onto the
       // bounded top-k frame so ONE collect carries everything the
@@ -191,7 +184,7 @@ object Bpe {
         }.localCheckpoint(eager = false)
       }
     }
-    (rules.toSeq, rounds)
+    rules.toSeq
   }
 
   /** Corpus-scale encode: apply an ordered merge-rule list to a frame

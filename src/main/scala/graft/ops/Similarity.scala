@@ -47,10 +47,10 @@ object Similarity {
         posexplode(graft.expr.LshSignatures(col("embedding"), nBits, nTables)))
       .select(col("vec_id"), col("pos").as("tbl"), col("col").as("bkt"))
 
-  /** The kNN family's bucket-occupancy cap (r18). autoNBits holds the
+  /** The kNN family's bucket-occupancy cap. autoNBits holds the
     * EXPECTED occupancy at ~32, but real embeddings are clustered and the
     * hot-bucket tail grows with the corpus — measured on the scale
-    * fixtures (ScaleProbe lib_collision_census): p99 occupancy 92 at
+    * fixtures (lib_collision_census, PROFILE_r18.txt): p99 occupancy 92 at
     * 200 k vectors → 142 at 2 M (max 215 → 818), which makes the
     * collision JOIN INPUT super-linear (619 → 931 collision rows per
     * vector per decade) — the true residual behind the family's 13-14×
@@ -86,11 +86,11 @@ object Similarity {
   /** Auto-size the LSH bucket-bit count from the corpus size: nBits =
     * ⌈log2(n / targetBucket)⌉ clamped to [minBits, maxBits], holding the
     * EXPECTED bucket occupancy n/2^nBits ≈ targetBucket constant as the
-    * corpus grows — the r11 verdict's "documented manual knob, not
-    * auto-derived" made code. Candidate-join cost per table is
-    * Σ bucket², so constant occupancy keeps the whole family linear in n;
-    * recall lost to finer buckets is bought back with nTables (recall for
-    * a cos=c pair is 1-(1-p^nBits)^nTables, p = 1-acos(c)/π). minBits=4
+    * corpus grows, derived rather than left a manual knob. Candidate-join
+    * cost per table is Σ bucket², so constant occupancy keeps the whole
+    * family linear in n; recall lost to finer buckets is bought back with
+    * nTables (recall for a cos=c pair is 1-(1-p^nBits)^nTables,
+    * p = 1-acos(c)/π). minBits=4
     * reproduces the fixture-validated setting at the sf0.01 oracle scale
     * (500/32 → exactly 4), so the statically-rendered oracle SQL and the
     * auto-derived plan stay in lockstep where the driver verifies; the
@@ -114,8 +114,8 @@ object Similarity {
     * derives at the scale the driver verifies. At any larger scale the
     * declared key keeps auto-sizing (the production shape, measured
     * ~linear at sf10's 200 k vectors) and the oracle is never consulted
-    * there — this replaces the r15 nBits=4 pin that made the declared
-    * keys quadratic off the verify fixture. */
+    * there — a fixed nBits=4 would make the declared keys quadratic off
+    * the verify fixture. */
   private[graft] val VerifyFixtureEmbCount = 500L
   /** = 4 at the 500-vector verify fixture. */
   private[graft] val OracleBits: Int = autoNBits(VerifyFixtureEmbCount)
@@ -133,9 +133,9 @@ object Similarity {
     * O(sum of bucket sizes²), never all-pairs.
     *
     * The vectors RIDE the bucket rows and the cosine is evaluated INLINE
-    * in the self-join output (r16): at constant occupancy t the candidate
-    * stream is ~t/2 × the bucket stream, so the old narrow-bucket +
-    * rescore-join form (attach vectors to candidates by id) moved ~16×
+    * in the self-join output: at constant occupancy t the candidate
+    * stream is ~t/2 × the bucket stream, so a narrow-bucket +
+    * rescore-join form (attach vectors to candidates by id) moves ~16×
     * more vector bytes than this one pays for the wide bucket exchange —
     * and that exchange is shared by both join sides (ReuseExchange).
     * Measured at sf100's 2 M vectors: the rescore form's b_id-side
@@ -276,29 +276,26 @@ object Similarity {
     //    ONE map-side-combined bounded fold (BottomKDistinct) — the
     //    collision stream shuffles once, not three times (distinct + two
     //    joins). Measured 166 s → 64 s warm at the 200k-vector 100× point
-    //    (PROFILE_sf10, r16 shape); the wide bucket exchange (codes
+    //    (PROFILE_sf10.txt); the wide bucket exchange (codes
     //    payload) is the price, paid once for both join sides by
     //    ReuseExchange.
     if (dedupFirst.getOrElse(bits <= 8)) {
-      // r22 rework of the coarse-bits branch tail: the old shape was
-      // distinct → two code-attach joins → row_number window, i.e. a
-      // collision-sized (src, dst) DISTINCT exchange (~780 k records at
-      // sf0.1 — the family's single largest shuffle at the small scales)
-      // plus a full sorted window exchange of the scored stream. Both are
-      // gone: the raw collision stream goes straight through the
-      // code-attach joins (narrow bucket rows — the joins broadcast at
-      // this branch's ≤8-bit scales, where codes are ≤ ~8 k rows by
-      // autoNBits construction) into the SAME BottomKPairs bounded fold
-      // the production branch uses. Duplicate collisions are collapsed
-      // INSIDE the fold — sound because qdist is a function of (src,
-      // dst), so duplicates are exact (the aggregate's scaladoc carries
+      // The coarse-bits branch tail: the raw collision stream goes
+      // straight through the code-attach joins (narrow bucket rows — the
+      // joins broadcast at this branch's ≤8-bit scales, where codes are
+      // ≤ ~8 k rows by autoNBits construction) into the SAME BottomKPairs
+      // bounded fold the production branch uses, with no collision-sized
+      // (src, dst) DISTINCT exchange (~780 k records at sf0.1, which would
+      // be the family's single largest shuffle at the small scales) and no
+      // sorted window exchange of the scored stream. Duplicate collisions
+      // are collapsed INSIDE the fold — sound because qdist is a function
+      // of (src, dst), so duplicates are exact (the aggregate's scaladoc carries
       // the losslessness argument) — and partial aggregation collapses to
       // ≤ k pairs per (src, map partition) BEFORE the wire, no sort
       // anywhere. The price is re-computing the cheap int-fold qdist once
-      // per duplicate collision instead of once per pair — the r16
-      // distinct existed to avoid exactly that, but it predates the r18
-      // fold; measured at sf0.1 (Profile counts): shuffle records 969 k →
-      // ~165 k, bytes 7.2 → ~2.5 MB, same rows out. Identical output by
+      // per duplicate collision instead of once per pair; against a
+      // distinct-first tail at sf0.1 (Profile counts) shuffle records go
+      // 969 k → ~165 k and bytes 7.2 → ~2.5 MB, same rows out. Identical output by
       // the fold's contract (qdist ASC, dst ASC, rn = position+1);
       // SimilaritySpec pins the two strategies' equality. Same
       // boundedAggFrame scoping (and the same composition caveat in the
@@ -334,9 +331,7 @@ object Similarity {
         .join(codes.select(col("vec_id").as("dst"), col("codes").as("cd")),
           "dst")
         .select(col("src"), col("dst"),
-          expr("aggregate(zip_with(cs, cd, (x, y) -> (CAST(x AS INT) - y) " +
-            "* (CAST(x AS INT) - y)), " +
-            "CAST(0 AS BIGINT), (acc, v) -> acc + v)").as("qdist"))
+          int8SquaredL2("cs", "cd").as("qdist"))
       knnFold(scored, k)
     } else {
       val buckets = withBucketCapSub(
@@ -348,10 +343,9 @@ object Similarity {
           .select(col("vec_id"), col("codes"),
             col("pos").as("tbl"), col("col").as("bkt")),
         KnnMaxBucket)
-        // ONE map-side-combined bounded fold (r18; supersedes the r17
-        // three-stage tail). r17's per-bucket row_number prune fixed the
-        // collision-stream disk-fill but kept an in-stage SORT of the
-        // whole joined partition (n log n in partition rows — the
+        // ONE map-side-combined bounded fold. A per-bucket row_number
+        // prune avoids the collision-stream disk-fill but keeps an
+        // in-stage SORT of the whole joined partition (n log n in partition rows — the
         // measured super-linear residual of the family's sf100 decades)
         // plus two more shuffles ((src,dst) min-agg, per-src rank
         // window). The native BottomKPairs aggregate (expr/BottomKPairs
@@ -375,13 +369,20 @@ object Similarity {
                 && col("a.sub") === col("b.sub")
                 && col("a.vec_id") =!= col("b.vec_id"))
             .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
-              expr("aggregate(zip_with(a.codes, b.codes, (x, y) -> " +
-                "(CAST(x AS INT) - y) * (CAST(x AS INT) - y)), " +
-                "CAST(0 AS BIGINT), (acc, v) -> acc + v)")
-                .as("qdist")),
+              int8SquaredL2("a.codes", "b.codes").as("qdist")),
           k)
     }
   }
+
+  /** Squared L2 distance between the int8 code arrays `u` and `v` (SQL
+    * expressions): one `aggregate(zip_with(…))` fold, each difference
+    * widened to INT and the sum to BIGINT. `x` and `y` name the lambda's
+    * elements, which appear in the executed plan's text.
+    */
+  private def int8SquaredL2(u: String, v: String, x: String = "x",
+      y: String = "y"): org.apache.spark.sql.Column =
+    expr(s"aggregate(zip_with($u, $v, ($x, $y) -> (CAST($x AS INT) - $y) * (CAST($x AS INT) - $y)), " +
+      "CAST(0 AS BIGINT), (acc, v) -> acc + v)")
 
   /** Both kNN strategies' tail: fold the scored (src, dst, qdist) pair
     * stream to each src's k nearest as (src, dst, qdist, rn) rows, qdist
@@ -739,13 +740,13 @@ object Similarity {
       // min |cos − floor| 1.3e-4 — both 1e8× the cross-engine double-fold
       // divergence, so the bucket bits and the floor filter agree exactly.
       "q_embed_neardup_all",
-      // The declared key runs the AUTO-SIZED production path (r15 verdict
-      // item 1): the oracle SQL below is statically rendered at
+      // The declared key runs the AUTO-SIZED production path: the oracle
+      // SQL below is statically rendered at
       // autoNBits(VerifyFixtureEmbCount) = 4 bits, which is exactly what
       // the live auto path derives on the 500-vector verify fixture — so
       // the hash-match holds where the driver checks, and at sf10's
       // 200 k vectors the same declared key runs 13-bit buckets
-      // (constant occupancy, ~linear) instead of the r15 pin's
+      // (constant occupancy, ~linear) instead of a fixed 4-bit pin's
       // quadratic 16-bucket self-join.
       (s, d) => lshNearDupPairs(tbl(s, d, "embeddings"))
         .transform(df => sortOnce(df)(asc_nulls_first("a_id"), asc_nulls_first("b_id"))),
@@ -780,7 +781,7 @@ object Similarity {
               |ORDER BY vec_id ASC NULLS FIRST, bench_id ASC NULLS FIRST""".stripMargin)
     ),
     Q(
-      // Decontamination AUDIT REPORT (r13): the census a curation run
+      // Decontamination AUDIT REPORT: the census a curation run
       // actually ships — every corpus doc flagged by EITHER tier, with
       // per-tier evidence and the method verdict (exact n-gram hit /
       // fuzzy embedding match / both). ONE consistent held-out split
@@ -912,8 +913,8 @@ object Similarity {
       // neighbors per probe by squared-L2 over the quantized codes —
       // integer arithmetic end to end, so unlike every float distance in
       // this family the ranking is hash-exact across engines and the
-      // whole ANN step is oracle-checkable. Since r10 the DECLARED query
-      // runs the engine's PACKED scan (packedQuantizedTopK: one row per
+      // whole ANN step is oracle-checkable. The DECLARED query runs the
+      // engine's PACKED scan (packedQuantizedTopK: one row per
       // vector, distance as a single zip_with/aggregate fold — no per-dim
       // explode of the corpus anywhere in the distance path); the oracle
       // SQL still computes it per-dim, which is exactly the cross-check:
@@ -953,7 +954,7 @@ object Similarity {
              |ORDER BY probe_id ASC NULLS FIRST, rn ASC NULLS FIRST""".stripMargin)
     ),
     Q(
-      // K-means ASSIGNMENT step over the packed int8 codes (r15) — the
+      // K-means ASSIGNMENT step over the packed int8 codes — the
       // index-build primitive behind an IVF coarse quantizer (q_sim_cosine
       // _ivf probes the cells this step constructs): every vector assigns
       // to its nearest of K centroids by squared-L2 over the quantized
@@ -1003,7 +1004,7 @@ object Similarity {
              |ORDER BY cent_id ASC NULLS FIRST""".stripMargin)
     ),
     Q(
-      // K-means UPDATE step (r15) — the second Lloyd primitive, completing
+      // K-means UPDATE step — the second Lloyd primitive, completing
       // the IVF coarse-quantizer build pair with q_kmeans_assign: per-cell
       // floor-mean of the assigned vectors' int8 codes → new centroids,
       // reported as the per-cell census (size, new-code checksums, and
@@ -1069,7 +1070,7 @@ object Similarity {
              |ORDER BY m.cent_id ASC NULLS FIRST""".stripMargin)
     ),
     Q(
-      // SemDeDup-style semantic prune (r13, after Abbas et al. 2023):
+      // SemDeDup-style semantic prune (after Abbas et al. 2023):
       // collapse each semantic near-dup cluster to ONE representative and
       // emit the surviving corpus — the curation op that SHRINKS a 100 TB
       // embedding corpus, where the neardup/cluster keys only report on
@@ -1240,22 +1241,22 @@ object Similarity {
       Some(s"""WITH ${knnEdgesSqlCtes(OracleBits, 16, 3)},
               |deg AS (SELECT src AS v, COUNT(*) AS deg FROM edges GROUP BY 1),
               |nn AS (SELECT COUNT(*) AS n FROM deg),
-              |r0 AS (SELECT v, deg, 1099511627776 // n AS r,
+              |rank0 AS (SELECT v, deg, 1099511627776 // n AS r,
               |         (15 * (1099511627776 // n)) // 100 AS tele
               |       FROM deg CROSS JOIN nn),
-              |c1 AS (SELECT e.dst AS v, CAST(SUM(r0.r // r0.deg) AS BIGINT) AS cin
-              |       FROM edges e JOIN r0 ON r0.v = e.src GROUP BY 1),
-              |r1 AS (SELECT r0.v, r0.deg, r0.tele,
-              |         r0.tele + (85 * COALESCE(c1.cin, 0)) // 100 AS r
-              |       FROM r0 LEFT JOIN c1 ON c1.v = r0.v),
-              |c2 AS (SELECT e.dst AS v, CAST(SUM(r1.r // r1.deg) AS BIGINT) AS cin
-              |       FROM edges e JOIN r1 ON r1.v = e.src GROUP BY 1),
-              |r2 AS (SELECT r1.v, r1.deg, r1.tele,
-              |         r1.tele + (85 * COALESCE(c2.cin, 0)) // 100 AS r
-              |       FROM r1 LEFT JOIN c2 ON c2.v = r1.v)
+              |c1 AS (SELECT e.dst AS v, CAST(SUM(rank0.r // rank0.deg) AS BIGINT) AS cin
+              |       FROM edges e JOIN rank0 ON rank0.v = e.src GROUP BY 1),
+              |rank1 AS (SELECT rank0.v, rank0.deg, rank0.tele,
+              |         rank0.tele + (85 * COALESCE(c1.cin, 0)) // 100 AS r
+              |       FROM rank0 LEFT JOIN c1 ON c1.v = rank0.v),
+              |c2 AS (SELECT e.dst AS v, CAST(SUM(rank1.r // rank1.deg) AS BIGINT) AS cin
+              |       FROM edges e JOIN rank1 ON rank1.v = e.src GROUP BY 1),
+              |rank2 AS (SELECT rank1.v, rank1.deg, rank1.tele,
+              |         rank1.tele + (85 * COALESCE(c2.cin, 0)) // 100 AS r
+              |       FROM rank1 LEFT JOIN c2 ON c2.v = rank1.v)
               |SELECT v AS vec_id, CAST(deg AS BIGINT) AS deg,
               |  CAST(r AS BIGINT) AS pr
-              |FROM r2
+              |FROM rank2
               |ORDER BY vec_id ASC NULLS FIRST""".stripMargin)
     ),
     Q(
@@ -1267,13 +1268,13 @@ object Similarity {
       // MUTUAL edge is evidence both points sit in the same local
       // structure. Both ranks ride along (the UMAP-style edge weight
       // inputs); qdist is symmetric so one side's copy suffices.
-      // Scale shape (r18): the symmetrization is ONE map-side-combined
+      // Scale shape: the symmetrization is ONE map-side-combined
       // aggregate at canonical-pair grain, not a self-join — each
       // directed edge maps to (min(src,dst), max(src,dst)) carrying its
       // rank on the side it came from, and the pair survives iff both
-      // rank slots fill. Replaces the r17 reversed-key equi-join, which
-      // shuffled the edge frame TWICE (both join sides) and needed a
-      // localCheckpoint to share it; the agg shuffles it once, combines
+      // rank slots fill. A reversed-key equi-join would shuffle the edge
+      // frame TWICE (both join sides) and need a localCheckpoint to share
+      // it; the agg shuffles it once, combines
       // map-side, and checkpoints nothing. Each direction appears at
       // most once (the graph is rn-deduped), so min() over the one-sided
       // rank columns is exact, not a tie-break.
@@ -1373,9 +1374,9 @@ object Similarity {
   def pageRankInt(edges: org.apache.spark.sql.DataFrame,
       iters: Int = 2, scale: Long = 1L << 40): org.apache.spark.sql.DataFrame = {
     require(iters >= 0 && scale > 0, s"need iters >= 0, scale > 0; got ($iters, $scale)")
-    // localCheckpoint, not persist (r21 note): the whole unrolled PageRank
-    // is ONE action, so AQE's runtime exchange reuse already shares the
-    // edge exchange across deg + both iterations' joins — measured: a
+    // localCheckpoint, not persist: the whole unrolled PageRank is ONE
+    // action, so AQE's runtime exchange reuse already shares the edge
+    // exchange across deg + both iterations' joins — measured: a
     // persist() here cut <5% of shuffle records while ADDING cache-fill
     // jobs and leaking a CacheManager entry per call (this function
     // returns lazily, so it can never unpersist its own cache; repeated
@@ -1383,11 +1384,11 @@ object Similarity {
     val e = edges.select(col("src"), col("dst")).localCheckpoint(eager = false)
     val deg = e.groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
     val nRow = deg.agg(count(lit(1)).as("n"))
-    val r0 = deg.crossJoin(broadcast(nRow))
+    val rank0 = deg.crossJoin(broadcast(nRow))
       .select(col("v"), col("deg"),
         expr(s"${scale}L div n").as("r"),
         expr(s"(15L * (${scale}L div n)) div 100L").as("tele"))
-    (1 to iters).foldLeft(r0) { (r, _) =>
+    (1 to iters).foldLeft(rank0) { (r, _) =>
       val contrib = e
         .join(r.select(col("v").as("src"), expr("r div deg").as("c")), "src")
         .groupBy(col("dst").as("v")).agg(sum(col("c")).as("cin"))
@@ -1478,14 +1479,14 @@ object Similarity {
       .select(
         expr("transform(mns, s -> cast(s.mn as double))").as("mn_arr"),
         expr("transform(mxs, s -> cast(s.mx as double))").as("mx_arr"))
-    // Codes are SMALLINT on the wire (r21, guide §2.3 "narrower types"):
-    // values are 0..255 by construction, and the packed array rides the
-    // kNN family's dominant exchange (the wide bucket shuffle) — 2 bytes
-    // per element instead of the old BIGINT's 8 cuts that exchange's code
-    // payload 4×. Same integer VALUES (the clamp arithmetic is unchanged,
-    // the final cast is exact), so every distance fold and the per-dim
-    // oracle cross-check are bit-identical; consumers cast to INT inside
-    // their (x-y)*(x-y) lambdas because a smallint product can overflow.
+    // Codes are SMALLINT on the wire (narrower types): values are 0..255
+    // by construction, and the packed array rides the kNN family's
+    // dominant exchange (the wide bucket shuffle) — 2 bytes per element
+    // instead of a BIGINT's 8 cuts that exchange's code payload 4×. The
+    // integer VALUES are those of the clamp arithmetic (the final cast is
+    // exact), so every distance fold and the per-dim oracle cross-check
+    // agree bit for bit; the folds (int8SquaredL2) widen to INT before
+    // multiplying because a smallint product can overflow.
     emb.crossJoin(broadcast(statsRow))
       .withColumn("codes", expr(
         """transform(embedding, (x, i) ->
@@ -1516,10 +1517,7 @@ object Similarity {
     val probes = codes.filter(col("vec_id") < nProbes)
       .select(col("vec_id").as("probe_id"), col("codes").as("pcodes"))
     codes.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-      .withColumn("qdist", expr(
-        "aggregate(zip_with(codes, pcodes, (a, b) -> " +
-          "(CAST(a AS INT) - b) * (CAST(a AS INT) - b)), " +
-          "CAST(0 AS BIGINT), (acc, v) -> acc + v)"))
+      .withColumn("qdist", int8SquaredL2("codes", "pcodes", "a", "b"))
       .withColumn("rn", row_number().over(
         Window.partitionBy("probe_id")
           .orderBy(asc_nulls_first("qdist"), asc_nulls_first("vec_id"))))
@@ -1559,10 +1557,7 @@ object Similarity {
   def assignToCentroids(codes: org.apache.spark.sql.DataFrame,
       cents: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     codes.crossJoin(broadcast(cents))
-      .withColumn("qdist", expr(
-        "aggregate(zip_with(codes, ccodes, (a, b) -> " +
-          "(CAST(a AS INT) - b) * (CAST(a AS INT) - b)), " +
-          "CAST(0 AS BIGINT), (acc, v) -> acc + v)"))
+      .withColumn("qdist", int8SquaredL2("codes", "ccodes", "a", "b"))
       .withColumn("rn", row_number().over(
         Window.partitionBy("vec_id")
           .orderBy(asc_nulls_first("qdist"), asc_nulls_first("cent_id"))))

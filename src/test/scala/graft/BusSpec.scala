@@ -1556,6 +1556,47 @@ class BusSpec extends SparkSpec {
     mergesBySize(copyRename, CopyRenameFs.uri)
   }
 
+  test("on a copy-then-delete rename store, a dedup epoch lists the index once and opens no touched run's sidecar again") {
+    // bus_dedup-shaped epochs at compactEvery = 2; bucketRows = 64 makes
+    // 2-run merges (80 hashes) driver merges and 4-epoch merges (160)
+    // bucketed Spark merges
+    import spark.implicits._
+    val dir = Files.createTempDirectory("seenidx_fscalls").toString
+    val sidecars = Set("_run_weight", "_nbuckets", "_bloom")
+    def index() = new SeenHashIndex(copyRename, CopyRenameFs.uri(dir), compactEvery = 2, bucketRows = 64L)
+    /** Each epoch's root listings and the sidecars it opened. */
+    def run(idx: SeenHashIndex, es: Range): Seq[(Long, Int, Seq[String])] = es.map { e =>
+      val fresh = (0 until 40).map(i => s"fc-$e-$i")
+      val repeats = if (e == 0) Nil else (0 until 10).map(i => s"fc-${e - 1}-$i")
+      val (out, listed, opened) = CopyRenameFs.callsUnder(dir)(
+        idx.dedupEpoch(dedupFrame(e, fresh ++ repeats ++ fresh.take(5)), e)
+          .select(col("data").cast("string")).as[String].collect())
+      assert(out.sorted.toSeq == fresh.sorted, s"epoch $e keeps exactly its fresh payloads")
+      (e.toLong, listed.count(_ == dir),
+        opened.filter(p => sidecars(p.split('/').last)).map(_.stripPrefix(dir + "/")))
+    }
+    val writer = run(index(), 0 until 11)
+    val runs = index().epochs().sorted
+    assert(runs == Seq(-8L, -7L, 10L) && runFiles(dir, -7L).contains("_nbuckets") &&
+      !runFiles(dir, -8L).contains("_nbuckets"),
+      s"precondition: driver and Spark merges, a bucketed and an unbucketed merged run: $runs")
+    assert(writer.forall(_._2 == 1), s"root listings per epoch: ${writer.map(c => c._1 -> c._2)}")
+    assert(writer.forall(_._3.isEmpty),
+      s"the instance wrote every run it touched, yet opened sidecars: ${writer.filter(_._3.nonEmpty)}")
+    // a reopened index reads each merged run's sidecars once, on first touch
+    val reopened = index()
+    val later = run(reopened, 11 until 14)
+    assert(later.forall(_._2 == 1), s"root listings per epoch: ${later.map(c => c._1 -> c._2)}")
+    // (-8 is unbucketed: its missing _nbuckets fails before any open)
+    assert(later.head._3.sorted == Seq("epoch=-7/_bloom", "epoch=-7/_nbuckets", "epoch=-7/_run_weight",
+      "epoch=-8/_run_weight") && later.tail.forall(_._3.isEmpty),
+      s"sidecar opens per epoch: $later")
+    // the public compact lists the root once, merges included
+    val (_, listed, _) = CopyRenameFs.callsUnder(dir)(reopened.compact(14))
+    assert(reopened.epochs().sorted == Seq(-11L, -10L, -7L) && listed.count(_ == dir) == 1,
+      s"compact(14): runs ${reopened.epochs().sorted}, ${listed.count(_ == dir)} root listings")
+  }
+
   test("an index whose .crc files were deleted reopens and answers as with them") {
     // an index written before its I/O went through Hadoop FileSystem has
     // no .crc sidecar beside its driver-written files

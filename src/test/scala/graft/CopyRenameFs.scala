@@ -2,7 +2,11 @@ package graft
 
 import java.net.URI
 
-import org.apache.hadoop.fs.{FileUtil, LocalFileSystem, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileUtil, LocalFileSystem, Path}
 import org.apache.spark.sql.{GraftBridge, SparkSession}
 
 import graft.io.ForkFreeRawLocalFileSystem
@@ -10,7 +14,8 @@ import graft.io.ForkFreeRawLocalFileSystem
 /** The local disk under the scheme `cprn:`, with the one difference an
   * object store has for a writer: rename is not atomic. It copies the
   * source and then deletes it, and [[CopyRenameFs.betweenSteps]] runs
-  * between the two steps, so a test can crash a rename half done.
+  * between the two steps, so a test can crash a rename half done. Its
+  * `listStatus` and `open` calls are recorded for [[CopyRenameFs.callsUnder]].
   */
 class CopyRenameRawFs extends ForkFreeRawLocalFileSystem {
   override def getUri: URI = CopyRenameFs.Uri
@@ -24,6 +29,16 @@ class CopyRenameRawFs extends ForkFreeRawLocalFileSystem {
     CopyRenameFs.betweenSteps(src)
     delete(src, true)
   }
+
+  override def listStatus(f: Path): Array[FileStatus] = {
+    CopyRenameFs.listed.add(f.toUri.getPath)
+    super.listStatus(f)
+  }
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    CopyRenameFs.opened.add(f.toUri.getPath)
+    super.open(f, bufferSize)
+  }
 }
 
 /** `fs.cprn.impl`: [[CopyRenameRawFs]] with Hadoop's `.crc` checksums, as
@@ -36,6 +51,21 @@ class CopyRenameFs extends LocalFileSystem(new CopyRenameRawFs) {
 object CopyRenameFs {
   val Scheme = "cprn"
   val Uri: URI = URI.create(s"$Scheme:///")
+
+  /** The paths `listStatus` and `open` were called with, in call order. */
+  private[graft] val listed, opened = new ConcurrentLinkedQueue[String]()
+
+  /** `body`'s result with the local paths under `dir` that it listed and
+    * opened, in call order (a `.crc` checksum file opened beside a file
+    * is a call of its own; an open of a missing file fails before it).
+    */
+  def callsUnder[T](dir: String)(body: => T): (T, Seq[String], Seq[String]) = {
+    listed.clear()
+    opened.clear()
+    val out = body
+    def under(q: ConcurrentLinkedQueue[String]) = q.asScala.toSeq.filter(_.startsWith(dir))
+    (out, under(listed), under(opened))
+  }
 
   /** Called with a rename's source after the copy, before the delete. */
   @volatile var betweenSteps: Path => Unit = _ => ()
