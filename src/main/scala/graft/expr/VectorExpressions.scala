@@ -82,8 +82,4 @@ object VectorExpressions {
   def vectorDot(a: Column, b: Column): Column =
     GraftBridge.column(
       VectorDot(GraftBridge.expression(a), GraftBridge.expression(b)))
-
-  /** Native L2 norm: sqrt(v·v). */
-  def vectorNorm(v: Column): Column =
-    org.apache.spark.sql.functions.sqrt(vectorDot(v, v))
 }

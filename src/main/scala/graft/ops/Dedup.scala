@@ -15,20 +15,21 @@ import org.apache.spark.sql.functions._
   *     32 minhashes → 8 bands × 4 rows; a pair collides iff some band
   *     signature matches. Join is on (band, signature) buckets — cost is
   *     O(sum of bucket sizes²·selectivity), never corpus².
-  *   - q_simhash_dedup buckets 64-bit SimHash prefixes — constant per-doc
-  *     state, groupBy on a 16-bit prefix.
+  *   - q_simhash_dedup groups 60-bit SimHash fingerprints — constant
+  *     per-doc state (60 bit sums), one groupBy on the fingerprint.
   *
-  * MinHash/SimHash values are engine-specific (xxhash64 seeds) → no SQL
-  * oracle; planted-duplicate recall is asserted in ScalaTest
-  * (graft.DedupSpec).
+  * MinHash and SimHash hash their shingles/tokens with md5 slices, a
+  * standardized digest, so both tiers face the DuckDB hash oracle;
+  * DedupSpec additionally pins planted-duplicate recall and the MinHash
+  * Jaccard estimate.
   */
 object Dedup {
 
   private val NumHashes = 32
   private val BandSize = 4 // → 8 bands
 
-  /** Smallest prime above 2^32 — modulus of the portable MinHash
-    * permutation family (see [[minhashSignaturesPortable]]). */
+  /** Smallest prime above 2^32 — modulus of the MinHash permutation
+    * family (see [[minhashSignatures]]). */
   private val MinhashP = 4294967311L
 
   /** 32 fixed affine-permutation constants (a_j odd, b_j; both 31-bit) —
@@ -62,10 +63,10 @@ object Dedup {
     * string-building formulation this replaces). Hashing token hashes is
     * the same set identity as hashing the space-joined shingle string
     * (xxhash64 mixes children in sequence and skips nulls), without
-    * allocating the ~25-byte string per shingle. Shared by the minhash
-    * sketch tier AND the exact tier (TextOps.q_jaccard_shingles) — one
-    * definition, so the cross-tier "same shingles" equivalence cannot
-    * drift.
+    * allocating the ~25-byte string per shingle. Shared by the exact
+    * tiers (TextOps' q_jaccard_shingles, q_jaccard_containment and
+    * q_ngram_novelty) — one definition, so they cannot drift apart on
+    * what a shingle is.
     */
   private[ops] def shingleHashStream(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     shingleHashStreamPos(docs, 3).select("doc_id", "h1")
@@ -88,59 +89,18 @@ object Dedup {
       .withColumnRenamed("col", "h1")
   }
 
-  /** Per-document MinHash signature (NumHashes longs) over a
-    * (doc_id, text) frame. Each shingle is hashed once (tuple-hashed,
-    * never materialized as a string); the k minhash functions then re-hash
-    * the resulting 8-byte value with k seeds (fixed-width long hashing —
-    * no re-scan of the shingle text per function, and no overflow under
-    * ANSI arithmetic, unlike h1 + i·h2 double hashing). This cuts the hash
-    * work in the hot scan by ~10× vs per-function string hashing. The
-    * component-match fraction of two signatures is an unbiased estimator
-    * of shingle-set Jaccard (σ = √(J(1−J)/k) — property-tested against
-    * exact Jaccard in DedupSpec).
-    */
-  def minhashSignatures(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    shingleHashStream(docs)
-      .groupBy("doc_id")
-      .agg(array((0 until NumHashes).map { h =>
-        min(xxhash64(lit(h), col("h1")))
-      }: _*).as("sig"))
-
-  /** Banded MinHash-LSH candidate pairs (a_id < b_id) over any
-    * (doc_id, text) frame. Formulated as explode → 32 MIN aggregates: the
-    * mins combine map-side, so the shuffle carries 32 longs per document —
-    * the 100 TB-safe shape (a per-row 32-pass array-lambda chain re-scans
-    * every shingle 32× and was measured 4× slower). Reused by Pipeline.
-    */
-  def minhashPairs(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val sigs = minhashSignatures(docs)
-    val banded = sigs.select(col("doc_id"),
-      explode(array((0 until NumHashes / BandSize).map { b =>
-        struct(lit(b).as("band"),
-          xxhash64(slice(col("sig"), b * BandSize + 1, BandSize)).as("bsig"))
-      }: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bsig").as("bsig"))
-    // the self-join's two sides are identical subtrees — ReuseExchange
-    // dedups the shuffle, so signatures are computed once without caching
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
-  }
-
-  /** PORTABLE-HASH shingle stream: 32-bit md5-slice hash of each 3-token
-    * shingle STRING — `conv(substr(md5(s),1,8),16,10)` here ≡
+  /** md5-slice shingle stream: 32-bit hash of each 3-token shingle STRING
+    * as (doc_id, x) — `conv(substr(md5(s),1,8),16,10)` here ≡
     * `CAST('0x'||substr(md5(s),1,8) AS BIGINT)` in DuckDB, because md5 is
     * a standardized digest (unlike xxhash64's engine-specific seeding).
     * Shingle definition matches [[shingleHashStreamPos]]: one shingle per
     * token offset, docs shorter than 3 tokens contribute the whole doc.
-    * This is the hash tier that lets the MinHash family face a DuckDB
-    * hash oracle; the xxhash64 stream stays the library default (tuple
-    * hashing skips the per-shingle string build — measured ~2× cheaper
-    * in the scan; identical banding/shuffle SHAPE either way).
+    * MinHash reads this stream so its signatures match the oracle's bit
+    * for bit; the exact tiers keep the xxhash64 [[shingleHashStream]],
+    * whose tuple hashing skips the per-shingle string build (measured ~2×
+    * cheaper in the scan).
     */
-  private[ops] def shingleHashStreamPortable(
+  private[ops] def shingleMd5Stream(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val toks = col("toks")
     docs
@@ -152,37 +112,44 @@ object Dedup {
             16, 10).cast("long"))).as("x"))
   }
 
-  /** MinHash signature over the portable shingle stream: the j-th
-    * component is min over shingles of (a_j·x + b_j) mod P — the classic
+  /** Per-document MinHash signature (NumHashes longs) over a
+    * (doc_id, text) frame: the j-th component is min over the
+    * [[shingleMd5Stream]] hashes x of (a_j·x + b_j) mod P — the classic
     * affine permutation family, all BIGINT arithmetic, bit-identical on
-    * any engine. Same shape as [[minhashSignatures]]: explode → 32 MIN
-    * aggregates, map-side combine, 32 longs per doc on the exchange.
+    * any engine. Explode → 32 MIN aggregates: the mins combine map-side,
+    * so the shuffle carries 32 longs per document (a per-row 32-pass
+    * array-lambda chain re-scans every shingle 32× and was measured 4×
+    * slower). The component-match fraction of two signatures estimates
+    * shingle-set Jaccard (σ = √(J(1−J)/k) — property-tested against exact
+    * Jaccard in DedupSpec).
     */
-  def minhashSignaturesPortable(
+  def minhashSignatures(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    shingleHashStreamPortable(docs)
+    shingleMd5Stream(docs)
       .groupBy("doc_id")
       .agg(array(MinhashPerms.map { case (a, b) =>
         min((lit(a) * col("x") + lit(b)) % lit(MinhashP))
       }: _*).as("sig"))
 
-  /** Banded LSH pairs over the portable signatures. One deliberate delta
-    * vs [[minhashPairs]]: the band key is the raw 4-long slice (array
-    * equality in the join), not xxhash64(slice) — a band-hash collision
-    * between different slices would be invisible to the oracle's exact
-    * tuple comparison, so the declared form joins on the tuple itself
-    * (Spark still hash-partitions the array key; the exchange shape is
-    * unchanged, the key is 32 bytes instead of 8).
+  /** Banded MinHash-LSH candidate pairs (a_id < b_id) over any
+    * (doc_id, text) frame, from [[minhashSignatures]]. The band key is the
+    * raw 4-long slice (array equality in the join), not a hash of it — a
+    * band-hash collision between different slices would be invisible to
+    * the oracle's exact tuple comparison, so the join is on the tuple
+    * itself (Spark still hash-partitions the array key; the key is 32
+    * bytes instead of 8). Reused by Pipeline.nearDupRemoval.
     */
-  def minhashPairsPortable(
+  def minhashPairs(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val sigs = minhashSignaturesPortable(docs)
+    val sigs = minhashSignatures(docs)
     val banded = sigs.select(col("doc_id"),
       explode(array((0 until NumHashes / BandSize).map { b =>
         struct(lit(b).as("band"),
           slice(col("sig"), b * BandSize + 1, BandSize).as("bsig"))
       }: _*)).as("bb"))
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bsig").as("bsig"))
+    // the self-join's two sides are identical subtrees — ReuseExchange
+    // dedups the shuffle, so signatures are computed once without caching
     banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig")
           && col("a.doc_id") < col("b.doc_id"))
@@ -190,7 +157,7 @@ object Dedup {
       .distinct()
   }
 
-  /** DuckDB CTE replica of [[minhashPairsPortable]] ending in
+  /** DuckDB CTE replica of [[minhashPairs]] ending in
     * `pairs(a_id, b_id)` — rendered from the SAME MinhashPerms constants
     * the Spark plan uses (the lshPairsSqlCtes pattern). The oracle's pair
     * predicate is "ANY band's 4 components all equal", checked on an
@@ -262,12 +229,12 @@ object Dedup {
       // cost, not correctness, is at stake) — dedup once up front
       .distinct()
     // Materialize the edge list ONCE, already hash-partitioned by the
-    // per-round join key (r21, guide §2.4): every propagation round joins
-    // edges on dst, and the old localCheckpoint materialized it with
-    // UnknownPartitioning, so every round re-shuffled the EDGE-GRAIN frame
-    // — r rounds moved the whole edge set r times (exchange reuse cannot
-    // help ACROSS actions, and each round's convergence aggregate is its
-    // own action). persist() keeps the cached plan's HashPartitioning(dst)
+    // per-round join key: every propagation round joins edges on dst, and
+    // a localCheckpoint would materialize it with UnknownPartitioning, so
+    // every round would re-shuffle the EDGE-GRAIN frame — r rounds moving
+    // the whole edge set r times (exchange reuse cannot help ACROSS
+    // actions, and each round's convergence aggregate is its own
+    // action). persist() keeps the cached plan's HashPartitioning(dst)
     // visible to the planner (localCheckpoint does not — measured: even an
     // eager checkpoint reports UnknownPartitioning under AQE here), so each
     // round only shuffles the node-grain label frame to meet it. The cache
@@ -308,17 +275,17 @@ object Dedup {
     var prevSum: java.math.BigDecimal = null
     var it = 0
     var converged = false
-    // try/finally (r21 ADVICE): a Spark job failure — or the documented
+    // try/finally: a Spark job failure — or the documented
     // ANSI decimal-overflow throw in the convergence sum — inside the loop
     // must not leak the edge cache entry + blocks for the session's life.
     try {
       // ONE round per convergence check. Batching 2 rounds per O(1) check
-      // (r21 verdict item 6) was tried this round and MEASURED WORSE at
-      // sf0.1: convergence is detected up to 2 rounds late, and each late
-      // round is a full join+agg+jump pass — jobs 29→40 (q_dedup_clusters)
-      // / 65→74 (q_semdedup_prune), shuffle records +10-25%. The saved
-      // driver round trips are milliseconds; the wasted rounds are real
-      // distributed work that grows with the graph. Reverted.
+      // MEASURES WORSE at sf0.1: convergence is detected up to 2 rounds
+      // late, and each late round is a full join+agg+jump pass — jobs
+      // 29→40 (q_dedup_clusters) / 65→74 (q_semdedup_prune), shuffle
+      // records +10-25%. The saved driver round trips are milliseconds;
+      // the wasted rounds are real distributed work that grows with the
+      // graph.
       while (!converged && it < maxIter) {
         val next = round(labels)
         // coalesce: sum over an EMPTY labels frame (no candidate pairs at
@@ -476,7 +443,7 @@ object Dedup {
     * set joins back by 8-byte hash, one span materialization).
     */
   def substringDedup(docs: org.apache.spark.sql.DataFrame, k: Int): org.apache.spark.sql.DataFrame = {
-    // NO checkpoint of the span stream (r18): three consumers re-run the
+    // NO checkpoint of the span stream: three consumers re-run the
     // tokenize+hash projection instead. The materialized copy is ~25×
     // the corpus bytes at position-carrying span grain and starved
     // aggregation execution memory at 5 M docs ([UNABLE_TO_ACQUIRE_
@@ -491,9 +458,9 @@ object Dedup {
     // n_spans is a pure function of the token count — max(tokens−k, 0)+1,
     // exactly the row count shingleHashStreamPos emits per doc — so it
     // computes at DOC grain from one cheap projection instead of a third
-    // tokenize+8-hash explode scan + 265 M-row aggregation (r19: that
-    // scan was ~1/3 of the query's sf100 CPU; removing it cut the span
-    // passes from 3 to 2).
+    // tokenize+8-hash explode scan + 265 M-row aggregation (that scan was
+    // ~1/3 of the query's sf100 CPU; computing n_spans here keeps the span
+    // passes at 2, not 3).
     val nSpans = docs.select(col("doc_id"),
       (greatest(size(split(col("text"), " ")) - k, lit(0)) + 1)
         .cast("long").as("n_spans"))
@@ -529,7 +496,7 @@ object Dedup {
   def spanScrub(docs: org.apache.spark.sql.DataFrame, k: Int,
       minDocs: Int = 2): org.apache.spark.sql.DataFrame = {
     // NO checkpoint of the span stream — recompute per consumer, same
-    // resident-copy rationale as substringDedup (r18)
+    // resident-copy rationale as substringDedup
     val spans = shingleHashStreamPos(docs, k)
     val dup = spans.select("h1", "doc_id").distinct()
       .groupBy("h1").agg(count(lit(1)).as("nd"))
@@ -546,13 +513,14 @@ object Dedup {
         explode(sequence(col("pos"), col("pos") + (k - 1))).as("pos"))
       .groupBy("doc_id")
       .agg(collect_set(col("pos")).as("cut"))
-    // Rebuild at DOC grain with array expressions (r21): the old shape
-    // posexploded the corpus token stream, anti-joined it on (doc_id, pos)
-    // — a corpus-token-grain exchange whose HashPartitioning(doc_id, pos)
+    // Rebuild at DOC grain with array expressions: posexploding the corpus
+    // token stream and anti-joining it on (doc_id, pos) would be a
+    // corpus-token-grain exchange whose HashPartitioning(doc_id, pos)
     // does NOT satisfy the rebuild aggregate's doc_id clustering, so the
-    // exploded stream shuffled TWICE (once into the join, once into the
-    // collect_list rebuild, each row paying per-token framing overhead) and
-    // the rebuild itself was an object aggregate (collect_list + sort).
+    // exploded stream would shuffle TWICE (once into the join, once into
+    // the collect_list rebuild, each row paying per-token framing
+    // overhead) and the rebuild would be an object aggregate
+    // (collect_list + sort).
     // Here the text travels ONCE, unexploded, through the doc_id join
     // exchange; the kept positions come from a hash-based array_except
     // (linear in tokens + cut size, left-order-preserving = position-
@@ -562,12 +530,12 @@ object Dedup {
     docs
       .join(covered, Seq("doc_id"), "left")
       .withColumn("toks", split(col("text"), " "))
-      // null-text guard (r21 ADVICE): size(null) is -1 under the legacy
-      // sizeOfNull default, so an unguarded sequence(0, size-1) would
-      // yield [0,-1,-2] and n_removed = -4 where the old posexplode shape
-      // produced -1 (no token rows → n_kept 0 → n_removed = -1 - 0).
-      // Latent only (the fixture has no null text), but the operator is
-      // public — an empty kept_idx restores the old semantics exactly.
+      // null-text guard: size(null) is -1 under the legacy sizeOfNull
+      // default, so an unguarded sequence(0, size-1) would yield
+      // [0,-1,-2] and n_removed = -4 instead of -1 (no tokens → n_kept 0
+      // → n_removed = -1 - 0). Latent only (the fixture has no null
+      // text), but the operator is public — an empty kept_idx keeps
+      // n_removed at -1.
       .withColumn("kept_idx",
         when(col("toks").isNull, typedLit(Seq.empty[Int]))
           .when(col("cut").isNull, expr("sequence(0, size(toks) - 1)"))
@@ -631,12 +599,10 @@ object Dedup {
     Q(
       "q_minhash_neardup",
       (s, d) => {
-        // Banded MinHash-LSH candidate pairs over documents — the
-        // PORTABLE-hash form (md5-slice shingle hash + affine perms; see
-        // minhashPairsPortable), so the full banded pipeline faces a
-        // DuckDB hash oracle (✗→✓ in r16). Identical banding/shuffle
-        // shape to the xxhash64 library default.
-        minhashPairsPortable(tbl(s, d, "documents").select("doc_id", "text"))
+        // Banded MinHash-LSH candidate pairs over documents (md5-slice
+        // shingle hash + affine perms; see minhashPairs), so the full
+        // banded pipeline faces a DuckDB hash oracle.
+        minhashPairs(tbl(s, d, "documents").select("doc_id", "text"))
           .transform(df => sortOnce(df)(asc_nulls_first("a_id"), asc_nulls_first("b_id")))
       },
       Some(s"""WITH ${minhashPairsSqlCtes()}
@@ -692,13 +658,13 @@ object Dedup {
     Q(
       // Near-dup pair clustering: MinHash-LSH candidate pairs → connected
       // components (a dedup decision needs GROUPS, not pairs — keep one
-      // doc per cluster). Portable-hash pairs (see q_minhash_neardup) +
-      // the q_embed_clusters-proven recursive-CTE transitive closure give
-      // this a full DuckDB hash oracle (✗→✓ in r16); DedupSpec's planted
-      // clusters still pin recall semantics.
+      // doc per cluster). The md5-slice MinHash pairs (see
+      // q_minhash_neardup) + the q_embed_clusters-proven recursive-CTE
+      // transitive closure give this a full DuckDB hash oracle;
+      // DedupSpec's planted clusters still pin recall semantics.
       "q_dedup_clusters",
       (s, d) => {
-        connectedComponents(minhashPairsPortable(
+        connectedComponents(minhashPairs(
             tbl(s, d, "documents").select("doc_id", "text")))
           .groupBy("cluster_id")
           .agg(count(lit(1)).as("cluster_size"),
@@ -727,7 +693,7 @@ object Dedup {
         // bit j of the token's md5-slice hash (15 hex chars = 60 bits —
         // the width where both engines' integer arithmetic is exact and
         // sign-free, and the reason this key can face a DuckDB hash
-        // oracle, ✗→✓ in r16). Explode → hash once per token → 60 SUM
+        // oracle). Explode → hash once per token → 60 SUM
         // partial aggregates (map-side combine; shuffle = 60 longs/doc),
         // then assemble the fingerprint and group. Hash each token ONCE in
         // the projection; the 60 bit-sum aggregates only shift/mask the
@@ -790,8 +756,8 @@ object Dedup {
       (s, d) => {
         // Delegates to the reusable operator; the benchmark side shingles
         // only its own 20 docs (pushed-down filter), so the expensive
-        // corpus shingle pass runs exactly once — the double-scan the r7
-        // advice flagged cannot recur in this form.
+        // corpus shingle pass runs exactly once — a second corpus scan
+        // cannot occur in this form.
         val docs = tbl(s, d, "documents").select("doc_id", "text")
         decontaminate(docs.filter(col("doc_id") >= 20),
             docs.filter(col("doc_id") < 20))
@@ -814,7 +780,7 @@ object Dedup {
              |ORDER BY doc_id ASC NULLS FIRST""".stripMargin)
     ),
     Q(
-      // Bloom-pruned decontamination (r13): same answer as
+      // Bloom-pruned decontamination: same answer as
       // q_decontaminate — the bloom is a PRUNE, exact-verified, so false
       // positives cannot surface — via a ~10-bits/key bitmap of the bench
       // shingle hashes probed with codegen'd integer arithmetic. The
@@ -856,7 +822,7 @@ object Dedup {
       // AQE broadcasts when the dup set is small, and that degrades to a
       // plain hash-shuffle join when it isn't — no plan rewrite needed).
       // The spans frame feeds three consumers and is RECOMPUTED per
-      // consumer, not checkpointed — see substringDedup (r18).
+      // consumer, not checkpointed — see substringDedup.
       "q_substring_dedup",
       (s, d) => {
         substringDedup(tbl(s, d, "documents").select("doc_id", "text"), k = 8)
@@ -1010,7 +976,7 @@ object Dedup {
              |ORDER BY doc_id ASC NULLS FIRST""".stripMargin)
     ),
     Q(
-      // Per-source duplication census (r15): exact-dup ratio by source —
+      // Per-source duplication census: exact-dup ratio by source —
       // the triage report that tells a curation run WHERE its duplication
       // lives before any dedup executes. Spark counts distinct 8-byte
       // content hashes (the family's wire convention: strings never
@@ -1038,16 +1004,16 @@ object Dedup {
              |ORDER BY source ASC NULLS FIRST""".stripMargin)
     ),
     Q(
-      // Dedup threshold-sweep curve (r17): how many near-dup pairs (and
+      // Dedup threshold-sweep curve: how many near-dup pairs (and
       // how many affected docs) each Jaccard threshold in {0.5..0.9}
       // would flag — the KNOB-TUNING table a curation run reads before
       // committing to a threshold (too low: false merges; too high:
       // missed dups; the curve's elbow is the decision). Candidates come
-      // from the MINHASH-BANDED tier (minhashPairsPortable — the same
+      // from the MINHASH-BANDED tier (minhashPairs — the same
       // pipeline the production dedup runs, so the curve tunes the knob
       // for the pipeline that will actually use it; an exact
-      // inverted-index sweep was tried first and its intersection
-      // shuffle out-scaled the corpus — disk-full at 500 k docs), then
+      // inverted-index sweep's intersection shuffle out-scales the
+      // corpus — disk-full at 500 k docs), then
       // each candidate is re-scored with its EXACT shingle-set Jaccard
       // (expand only candidate pairs' shingles — cost ∝ candidates, not
       // corpus²) and a 5-row broadcast threshold cross counts the curve.
@@ -1059,15 +1025,15 @@ object Dedup {
       "q_dedup_threshold_sweep",
       (s, d) => {
         val docs = tbl(s, d, "documents")
-        // distinct portable shingles feed the exact re-score of BOTH pair
+        // distinct md5-slice shingles feed the exact re-score of BOTH pair
         // sides and the per-doc set sizes — RECOMPUTED per consumer, not
         // checkpointed: the materialized (doc_id, hash) frame at 5 M docs
         // starved aggregation execution memory at the 8 GB heap (the
-        // resident-copy pattern q_bm25/q_substring_dedup hit, r18;
+        // resident-copy pattern q_bm25/q_substring_dedup hit;
         // PROFILE_r18 §6)
-        val sh = Dedup.shingleHashStreamPortable(docs).distinct()
+        val sh = Dedup.shingleMd5Stream(docs).distinct()
         val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-        val cand = Dedup.minhashPairsPortable(docs)
+        val cand = Dedup.minhashPairs(docs)
         val inter = cand
           .join(sh.select(col("doc_id").as("a_id"), col("x")), "a_id")
           .join(sh.select(col("doc_id").as("b_id"), col("x")), Seq("b_id", "x"))

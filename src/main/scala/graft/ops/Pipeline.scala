@@ -15,10 +15,10 @@ import org.apache.spark.sql.functions._
   *
   * q_pipeline_clean (✓ oracle): quality gate + exact dedup + stats — fully
   * relational, DuckDB-checkable.
-  * q_pipeline_full (✓ oracle since r19): additionally removes MinHash-LSH
+  * q_pipeline_full (✓ oracle): additionally removes MinHash-LSH
   * near-duplicate candidates (keeps the lower doc_id of each candidate
-  * pair) via the PORTABLE md5-slice hash family, so the whole composition
-  * is DuckDB-hash-checkable; PipelineSpec pins planted drop/survive on
+  * pair) via the md5-slice MinHash family, so the whole composition is
+  * DuckDB-hash-checkable; PipelineSpec pins planted drop/survive on
   * top.
   */
 object Pipeline {
@@ -70,15 +70,11 @@ object Pipeline {
   }
 
   /** Near-dup removal: drop the higher doc_id of every MinHash-LSH
-    * candidate pair. Pair generation defaults to Dedup.minhashPairs (one
-    * definition, one set of parameters — the xxhash64 library default);
-    * `pairsFn` lets a caller swap in the portable-hash twin
-    * (Dedup.minhashPairsPortable, identical banding/shuffle shape) when
-    * the composition must face a cross-engine hash oracle.
+    * candidate pair from [[Dedup.minhashPairs]] (one definition, one set
+    * of parameters — the pairs q_minhash_neardup's oracle checks).
     */
-  def nearDupRemoval(df: DataFrame,
-      pairsFn: DataFrame => DataFrame = Dedup.minhashPairs): DataFrame = {
-    val drop = pairsFn(df.select("doc_id", "text"))
+  def nearDupRemoval(df: DataFrame): DataFrame = {
+    val drop = Dedup.minhashPairs(df.select("doc_id", "text"))
       .select(col("b_id").as("doc_id")).distinct()
     df.join(drop, Seq("doc_id"), "left_anti")
   }
@@ -283,19 +279,16 @@ object Pipeline {
     ),
     Q(
       // The FULL composed pipeline: gate → exact dedup → MinHash near-dup
-      // removal → per-lang audit census. r19 ✗→✓: the near-dup stage runs
-      // the PORTABLE-hash pair family (Dedup.minhashPairsPortable — the
-      // same md5-slice shingle hash + affine perms that made
-      // q_minhash_neardup oracle-checkable in r16, identical banding and
-      // shuffle shape to the xxhash64 library default), so the WHOLE
+      // removal → per-lang audit census. The near-dup stage runs
+      // Dedup.minhashPairs, the same md5-slice shingle hash + affine perms
+      // that make q_minhash_neardup oracle-checkable, so the WHOLE
       // composition — both upstream relational stages, the banded
       // candidate generation, the keep-lower-id drop rule, and the final
       // census — faces the DuckDB rows+schema+hash oracle. PipelineSpec
       // additionally pins planted drop/survive behavior.
       "q_pipeline_full",
       (s, d) =>
-        langStats(nearDupRemoval(exactDedup(qualityGate(tbl(s, d, "documents"))),
-          Dedup.minhashPairsPortable)),
+        langStats(nearDupRemoval(exactDedup(qualityGate(tbl(s, d, "documents"))))),
       Some(s"""WITH g AS (
               |  SELECT * FROM documents
               |  WHERE len(string_split(text, ' ')) BETWEEN 20 AND 80),
@@ -560,7 +553,7 @@ object Pipeline {
              |FROM c GROUP BY 1 ORDER BY shard ASC NULLS FIRST""".stripMargin)
     ),
     Q(
-      // k-anonymity census (r15): per (lang, source) stratum size with a
+      // k-anonymity census: per (lang, source) stratum size with a
       // k<50 risk flag — the release-governance audit run before
       // publishing a corpus slice (small strata re-identify their
       // contributors; the same census drives stratified-sample floor

@@ -1565,17 +1565,6 @@ object Similarity {
       .select(col("vec_id"), col("codes"), col("cent_id"), col("qdist"))
   }
 
-  /** K-means UPDATE step: per-cell floor-mean of the assigned vectors'
-    * codes (exact integer mean — `div` floors — so the new centroids are
-    * engine-exact), plus the per-cell convergence diagnostics. The per-dim
-    * sum runs as posexplode → (cent, pos)-keyed agg: map-side combine
-    * bounds the shuffle at K × dims rows PER PARTITION regardless of
-    * corpus size (the one place in the packed family where an explode is
-    * the right shape — the combine collapses it immediately). Returns one
-    * row per populated cell: (cent_id, n_vecs, new_codes, shift_sq) where
-    * shift_sq = ‖new − old‖² over the code space (the Lloyd convergence
-    * measure).
-    */
   /** Corpus mean + top principal component + its eigenvalue, from ONE
     * distributed GramMatrix pass (33 KB of state on the exchange; the
     * bounded 1-row collect is the same rationale as the bloom bitmap
@@ -1618,6 +1607,17 @@ object Similarity {
       .select(passthrough :+ col("embedding"): _*)
   }
 
+  /** K-means UPDATE step: per-cell floor-mean of the assigned vectors'
+    * codes (exact integer mean — `div` floors — so the new centroids are
+    * engine-exact), plus the per-cell convergence diagnostics. The per-dim
+    * sum runs as posexplode → (cent, pos)-keyed agg: map-side combine
+    * bounds the shuffle at K × dims rows PER PARTITION regardless of
+    * corpus size (the one place in the packed family where an explode is
+    * the right shape — the combine collapses it immediately). Returns one
+    * row per populated cell: (cent_id, n_vecs, new_codes, shift_sq) where
+    * shift_sq = ‖new − old‖² over the code space (the Lloyd convergence
+    * measure).
+    */
   def kmeansUpdatePacked(assigned: org.apache.spark.sql.DataFrame,
       cents: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val sums = assigned

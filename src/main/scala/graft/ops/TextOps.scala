@@ -120,22 +120,32 @@ object TextOps {
       .drop("__n_chars_nw")
   }
 
-  /** Set-Jaccard pairs (J > minSim10/10, a_id < b_id) over a pre-tokenized
-    * (doc_id, token) frame via inverted-index equi-join on token — the
-    * token can be a word, an n-gram shingle, or any fingerprint unit.
+  /** The prefix-filtered inverted index both set-similarity joins
+    * ([[jaccardPairs]], [[containmentPairs]]) build — the prefix-filtering
+    * set-similarity join (All-Pairs/PPJoin; see Distributed Streaming Set
+    * Similarity Join, ICDE 2020). Returns `(sh, sizes, pref)`:
+    *   - `sh`: the distinct (doc_id, token) index, tokens hashed to
+    *     xxhash64, with the hot tokens (document frequency > `dfCeiling`)
+    *     removed;
+    *   - `sizes`: (doc_id, sz), each doc's set size over `sh`;
+    *   - `pref`: (doc_id, token, sz), each doc's first `prefLen` tokens in
+    *     global rarity order (df, token), `prefLen` being a Column over
+    *     `sz` that the caller's similarity bound makes lossless.
     *
     * The inverted-index join's cost is Σ(bucket²) over tokens — a stopword
     * at corpus scale is a skew bomb (one token in 10% of a 10B-doc corpus
-    * = 10^17 join rows). `dfCeiling` caps it: tokens whose document
-    * frequency exceeds the ceiling are dropped from the index AND the
-    * set-size counts (semantics: Jaccard over the sub-ceiling vocabulary —
-    * stopwords carry no near-dup signal, which is why prefix filtering is
-    * the standard exact-ish form). The hot set is tiny by definition, so it
-    * broadcasts and the removal join is map-side; the only added shuffle is
-    * one groupBy(token) document-frequency count.
+    * = 10^17 join rows). `dfCeiling` caps it: tokens above the ceiling
+    * leave the index AND the set-size counts (semantics: similarity over
+    * the sub-ceiling vocabulary — stopwords carry no near-dup signal). The
+    * hot set is tiny by definition, so it broadcasts and the removal join
+    * is map-side; the only added shuffle is one groupBy(token) document-
+    * frequency count. Rarity order puts high-df boilerplate tokens LAST,
+    * so they leave every prefix: candidate pairs come from prefixes only.
     */
-  def jaccardPairs(tokens: org.apache.spark.sql.DataFrame,
-      dfCeiling: Long, minSim10: Int = 6): org.apache.spark.sql.DataFrame = {
+  private def prefixIndex(tokens: org.apache.spark.sql.DataFrame,
+      dfCeiling: Long, prefLen: org.apache.spark.sql.Column)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame) = {
     // Hash each token/shingle to xxhash64 ONCE at the scan: every
     // downstream shuffle (distinct, DF count, inverted-index self-join,
     // intersection agg) then moves a fixed 8-byte key instead of a
@@ -144,11 +154,10 @@ object TextOps {
     // semantics are exact up to a 64-bit collision INSIDE one document
     // pair's sets — the corpus-wide expectation stays ≪1 through the
     // billions-of-distinct-shingles range, and this tier is the bounded-
-    // corpus exact path anyway (the MinHash tier, which hashes the same
-    // way, is the 100 TB path).
+    // corpus exact path anyway (the MinHash tier is the 100 TB path).
     // localCheckpoint: the index frame feeds FOUR consumers (the hot-token
-    // DF count, the per-doc sizes, and both sides of the self-join), and
-    // when AQE turns the self-join into a broadcast join there is no
+    // DF count, the per-doc sizes, the prefix and the rescore joins), and
+    // when AQE turns a self-join into a broadcast join there is no
     // exchange for ReuseExchange to share — without the checkpoint the
     // whole scan+generate+distinct pipeline re-executes per consumer
     // (measured 4 full shingle passes at sf0.1, ~40% of query time).
@@ -167,26 +176,6 @@ object TextOps {
     val hot = dfF.filter(col("df") > dfCeiling).select("token")
     val sh = sh0.join(broadcast(hot), Seq("token"), "left_anti")
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    // PREFIX FILTERING (r18 — the All-Pairs/PPJoin family prune, public
-    // algorithm): candidates come from a self-join over each doc's
-    // RAREST (sz − ceil(t·sz) + 1) tokens only, rarity = global (df,
-    // token) order. Lossless for J ≥ t: the size-ratio prune admits only
-    // t·|B| ≤ |A| ≤ |B| partners, so |A∩B| ≥ t·(|A|+|B|)/(1+t) ≥
-    // ceil(t·max(|A|,|B|)) =: α, and by pigeonhole α common tokens
-    // cannot all hide in a doc's last α−1 positions — each side's
-    // static prefix (its own-size formula, ≥ the pair-level |X|−α+1)
-    // must contain a common token. OUTPUT IS PROVABLY UNCHANGED (the
-    // DuckDB oracle keeps the plain all-pairs formulation as the
-    // semantic spec); what changes is the intermediate: candidate pairs
-    // are Σ_token df_prefix², and high-df boilerplate shingles rank
-    // LAST in rarity order so they leave every prefix. Without this the
-    // intersection shuffle is Σ_token df² — measured >42 GB of spill at
-    // 500 k docs (disk-full at 8 and 24 GB heaps alike, PROFILE_r18):
-    // the dfCeiling guard alone bounds the per-token factor but not the
-    // boilerplate MASS under it. Exact inter/union counts then run only
-    // on candidates (the q_dedup_threshold_sweep rescore shape — cost ∝
-    // candidates, not corpus²).
-    val prefLen = col("sz") - expr(s"($minSim10 * sz + 9) div 10") + 1
     val pref = sh.join(dfF, "token")
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
@@ -194,6 +183,35 @@ object TextOps {
       .join(sizes, "doc_id")
       .filter(col("rn") <= prefLen)
       .select("doc_id", "token", "sz")
+    (sh, sizes, pref)
+  }
+
+  /** Set-Jaccard pairs (J > minSim10/10, a_id < b_id) over a pre-tokenized
+    * (doc_id, token) frame via inverted-index equi-join on token — the
+    * token can be a word, an n-gram shingle, or any fingerprint unit.
+    * Tokens whose document frequency exceeds `dfCeiling` are dropped from
+    * the index and the set sizes (see [[prefixIndex]]).
+    */
+  def jaccardPairs(tokens: org.apache.spark.sql.DataFrame,
+      dfCeiling: Long, minSim10: Int = 6): org.apache.spark.sql.DataFrame = {
+    // TWO-SIDED PREFIX FILTER: candidates come from a self-join over each
+    // doc's RAREST (sz − ceil(t·sz) + 1) tokens only. Lossless for J ≥ t:
+    // the size-ratio prune admits only t·|B| ≤ |A| ≤ |B| partners, so
+    // |A∩B| ≥ t·(|A|+|B|)/(1+t) ≥ ceil(t·max(|A|,|B|)) =: α, and by
+    // pigeonhole α common tokens cannot all hide in a doc's last α−1
+    // positions — each side's static prefix (its own-size formula, ≥ the
+    // pair-level |X|−α+1) must contain a common token. OUTPUT IS PROVABLY
+    // UNCHANGED (the DuckDB oracle keeps the plain all-pairs formulation
+    // as the semantic spec); what changes is the intermediate: candidate
+    // pairs are Σ_token df_prefix² instead of Σ_token df² — the latter
+    // measured >42 GB of spill at 500 k docs (disk-full at 8 and 24 GB
+    // heaps alike, PROFILE_r18): the dfCeiling guard alone bounds the
+    // per-token factor but not the boilerplate MASS under it. Exact
+    // inter/union counts then run only on candidates (the
+    // q_dedup_threshold_sweep rescore shape — cost ∝ candidates, not
+    // corpus²).
+    val (sh, _, pref) = prefixIndex(tokens, dfCeiling,
+      col("sz") - expr(s"($minSim10 * sz + 9) div 10") + 1)
     val cand = pref.as("a").join(pref.as("b"),
         col("a.token") === col("b.token") && col("a.doc_id") < col("b.doc_id")
           && col("a.sz") * 10 >= col("b.sz") * minSim10
@@ -215,7 +233,7 @@ object TextOps {
     * A's shingle set mostly inside B's — the duplication mode symmetric
     * Jaccard is blind to (a tweet quoted inside an article scores J ≈ 0
     * but containment ≈ 1; boilerplate/quote inclusion is rampant in web
-    * corpora). Same inverted-index equi-join + dfCeiling skew guard as
+    * corpora). Same prefix-filtered index and dfCeiling skew guard as
     * [[jaccardPairs]] (one shingle materialization, one intersection
     * shuffle), but NO size-ratio join prune — a tiny doc inside a huge
     * one is exactly the signal, so size-incompatible pairs must reach the
@@ -224,33 +242,19 @@ object TextOps {
     */
   def containmentPairs(tokens: org.apache.spark.sql.DataFrame,
       dfCeiling: Long, minCont10: Int = 8): org.apache.spark.sql.DataFrame = {
-    val sh0 = tokens.select(col("doc_id"), xxhash64(col("token")).as("token"))
-      .distinct()
-      .localCheckpoint(eager = false) // same multi-consumer reuse as jaccardPairs
-    val dfF = sh0.groupBy("token").agg(count(lit(1)).as("df"))
-    val hot = dfF.filter(col("df") > dfCeiling).select("token")
-    val sh = sh0.join(broadcast(hot), Seq("token"), "left_anti")
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    // ONE-SIDED prefix filter (r18; see jaccardPairs for the two-sided
-    // form and the measured disk-fill it cures). Containment admits any
-    // size gap, so a SYMMETRIC prefix is unsound (a huge container
-    // paired with a tiny doc needs its full set indexed) — but every
-    // qualifying pair has o > t·min(|A|,|B|), and by pigeonhole the
-    // CONTAINED side's first (sz − (t·sz div 1) ... sz − floor(t·sz))
-    // rarest tokens must hold a common token, which sits ANYWHERE in the
-    // container. So candidates = contained-PREFIX ⋈ FULL index: the
-    // Σ df² blowup becomes Σ df_prefix·df, and boilerplate leaves the
-    // prefix side. Exact rescore on candidates only; both directions
-    // fall out of one a<b candidate set as before.
-    val prefLen = col("sz") - expr(s"($minCont10 * sz) div 10")
-    val pref = sh.join(dfF, "token")
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
-          .orderBy(asc_nulls_first("df"), asc_nulls_first("token"))))
-      .join(sizes, "doc_id")
-      .filter(col("rn") <= prefLen)
-      .select("doc_id", "token")
-    val candRaw = pref.as("p").join(sh.as("f"),
+    // ONE-SIDED prefix filter (see jaccardPairs for the two-sided form and
+    // the measured disk-fill it cures). Containment admits any size gap,
+    // so a SYMMETRIC prefix is unsound (a huge container paired with a
+    // tiny doc needs its full set indexed) — but every qualifying pair
+    // has o > t·min(|A|,|B|), and by pigeonhole the CONTAINED side's first
+    // sz − floor(t·sz) rarest tokens must hold a common token, which sits
+    // ANYWHERE in the container. So candidates = contained-PREFIX ⋈ FULL
+    // index: the Σ df² blowup becomes Σ df_prefix·df, and boilerplate
+    // leaves the prefix side. Exact rescore on candidates only; both
+    // directions fall out of one a<b candidate set.
+    val (sh, sizes, pref) = prefixIndex(tokens, dfCeiling,
+      col("sz") - expr(s"($minCont10 * sz) div 10"))
+    val candRaw = pref.select("doc_id", "token").as("p").join(sh.as("f"),
         col("p.token") === col("f.token")
           && col("p.doc_id") =!= col("f.doc_id"))
       .select(least(col("p.doc_id"), col("f.doc_id")).as("a_id"),
@@ -263,14 +267,13 @@ object TextOps {
       .agg(count(lit(1)).as("inter_cnt"))
       .join(sizes.select(col("doc_id").as("a_id"), col("sz").as("a_sz")), "a_id")
       .join(sizes.select(col("doc_id").as("b_id"), col("sz").as("b_sz")), "b_id")
-    // Both directions from ONE pass over `inter` (r21): the old
-    // dirA.union(dirB) referenced the inter subtree twice, and with no
-    // exchange boundary at its top the WHOLE candidate+rescore pipeline
-    // (prefix join, distinct, two attach joins, intersection agg, two size
-    // joins) executed once per union branch — measured as two full copies
-    // in the physical plan. A conditional 2-slot array + explode emits the
-    // a→b and b→a rows in the same projection; rows are identical to the
-    // union's, order is irrelevant (callers total-order).
+    // Both directions from ONE pass over `inter`: a dirA.union(dirB) would
+    // reference the inter subtree twice, and with no exchange boundary at
+    // its top the WHOLE candidate+rescore pipeline (prefix join, distinct,
+    // two attach joins, intersection agg, two size joins) would execute
+    // once per union branch — two full copies in the physical plan. A
+    // conditional 2-slot array + explode emits the a→b and b→a rows in
+    // the same projection; callers total-order the rows.
     inter
       .select(explode(array(
         when(col("inter_cnt") * 10 > col("a_sz") * minCont10,
@@ -425,8 +428,9 @@ object TextOps {
       // whole-doc shingle (mirrored in the oracle's CASE).
       "q_jaccard_shingles",
       (s, d) => {
-        // Dedup.shingleHashStream: the SAME shingle definition (and hash)
-        // the minhash sketch tier uses — the exact/sketch cross-tier
+        // Dedup.shingleHashStream: the SAME 3-token shingle definition the
+        // MinHash tier uses (which hashes the shingle strings with md5
+        // slices instead, for its oracle) — the exact/sketch cross-tier
         // equivalence depends on it. The tokens fed to jaccardPairs are
         // already 8-byte shingle hashes; its own xxhash64 re-hash of a
         // fixed-width long is noise next to the string hashing it replaces.
@@ -461,10 +465,10 @@ object TextOps {
              |ORDER BY a_id ASC NULLS FIRST, b_id ASC NULLS FIRST""".stripMargin)
     ),
     Q(
-      // Directional containment-duplication census (r13): shingle-set
+      // Directional containment-duplication census: shingle-set
       // containment > 0.8 — doc-inside-doc duplication (quotes,
       // boilerplate inclusion) that symmetric Jaccard scores near zero.
-      // Same shingle definition/hash as the jaccard and minhash tiers;
+      // Same shingle definition/hash as q_jaccard_shingles;
       // both directions fall out of ONE a<b intersection count, so the
       // cost over q_jaccard_shingles is only the lost size-ratio join
       // prune — which containment semantics genuinely forbid.
@@ -509,7 +513,7 @@ object TextOps {
              |ORDER BY contained_id ASC NULLS FIRST, container_id ASC NULLS FIRST""".stripMargin)
     ),
     Q(
-      // Corpus-novelty scoring (r15): per doc, the fraction of its distinct
+      // Corpus-novelty scoring: per doc, the fraction of its distinct
       // 3-gram shingles whose GLOBAL first appearance (min doc_id) is this
       // doc — low novelty flags documents that mostly restate earlier
       // corpus content (near-copies, boilerplate assemblies, quote farms),
@@ -588,7 +592,7 @@ object TextOps {
              |ORDER BY cnt DESC NULLS LAST, bg ASC NULLS FIRST LIMIT 30""".stripMargin)
     ),
     Q(
-      // Collocation mining (r15): top adjacent-token pairs by LIFT —
+      // Collocation mining: top adjacent-token pairs by LIFT —
       // p(xy) / (p(x)·p(y)) = (c_xy·N²) / (M·c_x·c_y) — the classic
       // PMI-family collocation extractor (raw bigram frequency just
       // returns function-word pairs; lift surfaces pairs that co-occur
@@ -917,14 +921,14 @@ object TextOps {
       // at the scan so every shuffle (the distinct for DF, the occurrence
       // join on token, the per-doc rollup) moves an 8-byte key, never the
       // string. TWO independent streaming scans feed the DF count and the
-      // occurrence join — NO resident copy (r19): the previous shape
-      // localCheckpointed the exploded (doc_id, hash) frame to share it,
-      // and at sf100 that ~250 M-row materialization starved execution
-      // memory through the protected storage fraction — the exact q_bm25/
+      // occurrence join — NO resident copy: localCheckpointing the
+      // exploded (doc_id, hash) frame to share it is a ~250 M-row
+      // materialization at sf100 that starves execution memory through
+      // the protected storage fraction — the exact q_bm25/
       // q_session_window resident-copy cliff (measured 31× decade sf10→
       // sf100, GCLocker thrash at the 8 GB ledger heap — PROFILE_r19).
-      // Tokenize-twice is a cheap streaming
-      // projection; a data-sized copy is impossible at 100 TB. Exact
+      // Tokenize-twice is a cheap streaming projection; a data-sized copy
+      // is impossible at 100 TB. Exact
       // integer numerator, ONE final IEEE division. Collision caveat as
       // the shingle family: a 64-bit token collision merges two DF
       // counts — expectation ≪1 through billions of distinct tokens.
@@ -999,9 +1003,9 @@ object TextOps {
     Q(
       // HTML boilerplate stripping — the raw-web extraction step. The
       // corpus is plain text, so markup is synthesized around each doc
-      // (same convention as q_pii_scrub's contact field) — and since r10
-      // the markup VARIES deterministically per doc_id across five
-      // adversarial shapes: `>` inside quoted attributes, named/decimal/
+      // (same convention as q_pii_scrub's contact field) — and the markup
+      // VARIES deterministically per doc_id across five adversarial
+      // shapes: `>` inside quoted attributes, named/decimal/
       // hex entities, comments containing bare `>`, self-closing tags,
       // ADJACENT script/script and script/style blocks, and a trailing
       // unclosed tag (which by the documented grammar survives as text).
@@ -1134,14 +1138,13 @@ object TextOps {
       "q_bm25",
       (s, d) => {
         val terms = Seq("spark", "vector", "dup")
-        // TWO independent scans, NO caching (r18): the previous shape
-        // localCheckpointed the tokenized corpus (doc_id + full token
-        // array) to share it between the stats agg and the tf explode —
-        // at 5 M docs that materialization is multi-GB of block-manager
-        // storage, and the protected storage fraction starved the tf
-        // aggregation's execution memory ([AGGREGATE_OUT_OF_MEMORY] at
-        // the 8 GB heap every other sf100 key runs under; reproduced +
-        // fixed this round, PROFILE_r18). Tokenizing twice is a cheap
+        // TWO independent scans, NO caching: localCheckpointing the
+        // tokenized corpus (doc_id + full token array) to share it between
+        // the stats agg and the tf explode is, at 5 M docs, multi-GB of
+        // block-manager storage, and the protected storage fraction
+        // starves the tf aggregation's execution memory
+        // ([AGGREGATE_OUT_OF_MEMORY] at the 8 GB heap every other sf100
+        // key runs under, PROFILE_r18). Tokenizing twice is a cheap
         // streaming projection; holding the tokenized corpus is a
         // resident copy that grows with the data — at 100 TB the scan
         // is repeatable, the copy is impossible.
@@ -1212,7 +1215,7 @@ object TextOps {
              |LIMIT 20""".stripMargin)
     ),
     Q(
-      // Flesch-style readability score (r15): reading ease from words,
+      // Flesch-style readability score: reading ease from words,
       // vowel-group syllable proxy ([aeiouy]+ runs — the standard
       // dictionary-free estimate), and 16-token pseudo-sentences (the
       // fixture has no sentence punctuation; a fixed window is the
@@ -1385,7 +1388,7 @@ object TextOps {
       // bigram vocab on its hash — strings never shuffle.
       "q_bigram_surprisal",
       (s, d) => {
-        // r19: bigrams assemble by ZIPPING the hashed-token array in a
+        // Bigrams assemble by ZIPPING the hashed-token array in a
         // pure projection — no per-doc lead() window (which shuffled +
         // sorted the whole 600 M-row token stream) and no localCheckpoint
         // (the resident-copy cliff at sf100, see q_unigram_surprisal);
@@ -1465,7 +1468,7 @@ object TextOps {
       // broadcast-joins back.
       "q_importance_weights",
       (s, d) => {
-        // r19: no doc×bucket checkpoint (a ~20 GB resident copy at sf100 —
+        // No doc×bucket checkpoint (a ~20 GB resident copy at sf100 —
         // the resident-copy cliff, see q_unigram_surprisal). The stream is
         // a def; the corpus AND target bucket counts fold into ONE
         // conditional aggregation over it (count + count-if-en per bucket

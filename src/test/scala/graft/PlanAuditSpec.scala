@@ -139,13 +139,13 @@ class PlanAuditSpec extends SparkSpec
   }
 
   // The "self-join computes its shared subtree once" claims
-  // (Dedup.minhashPairs, Similarity.lshNearDupPairs), pinned: the two join
-  // sides are identical subtrees, so the planner's ReuseExchange rule must
-  // dedup the signature/bucket shuffle. Audited with AQE off — under AQE
-  // the same dedup happens via stage reuse, which has no stable plan-string
-  // marker; the static rule is the contract. Since the r16 vectors-ride-
-  // buckets reshape the bucket frame carries the embedding payload, so at
-  // the tiny test fixture the join side fits the broadcast threshold and
+  // (Dedup.minhashPairs — the md5-slice MinHash family q_minhash_neardup
+  // runs — and Similarity.lshNearDupPairs), pinned: the two join sides are
+  // identical subtrees, so the planner's ReuseExchange rule must dedup the
+  // signature/bucket shuffle. Audited with AQE off — under AQE the same
+  // dedup happens via stage reuse, which has no stable plan-string marker;
+  // the static rule is the contract. The bucket frame carries the
+  // embedding payload (vectors ride buckets), so at the tiny test fixture the join side fits the broadcast threshold and
   // plans as BroadcastHashJoin — equally shuffle-free (the bucket subtree
   // is still built once; the broadcast IS the dedup), so accept either
   // marker. A SortMergeJoin WITHOUT ReusedExchange is the regression.
