@@ -4,14 +4,17 @@ import java.util.concurrent.{CompletableFuture, CompletionException,
   ConcurrentLinkedQueue, ExecutorService, Executors, TimeUnit}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow,
+  UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Bus stats counters — the analog of the reference's statsd buckets
   * ctr.rcv / ctr.send / ctr.ack / ctr.fail / ctr.failsink / ctr.error
@@ -81,18 +84,25 @@ private[bus] final case class FailConfig(sink: Option[BusSink], dest: String)
   *     destination) run as ONE concurrent wave on a bus-owned pool, the
   *     analog of the reference's sinks being called from many goroutines;
   *     the epoch commits only after every write has returned.
-  *   - A small epoch is written from the driver. The epoch's one Spark job
-  *     counts the (dest, failed) census and returns the routed rows while
-  *     they fit the driver bound: `spark.sql.adaptive.advisoryPartitionSizeInBytes`
-  *     (64 MiB by default) of `UnsafeRow` bytes, the size at which
+  *   - A small epoch is routed and written from the driver. The driver
+  *     bound is `spark.sql.adaptive.advisoryPartitionSizeInBytes` (64 MiB
+  *     by default) of `UnsafeRow` bytes, the size at which
   *     [[SeenHashIndex.dedupEpoch]] coalesces an epoch to one write task.
-  *     Each of the job's n partitions returns its rows only while they take
-  *     at most bound/n bytes, so the driver holds at most the bound. Within
-  *     it the epoch continues as a driver-held `LocalRelation`: its
-  *     dead-letter and per-destination frames fold into `LocalRelation`s,
-  *     which [[MemorySink]], [[NoopSink]] and
-  *     [[FileAdapters.ParquetDirSink]] take with no further job. Above it
-  *     the writes read the epoch's cached frame on Spark.
+  *     An epoch the driver already holds — its plan folds into a
+  *     `LocalRelation`, as a dedup stage's output within the bound does —
+  *     starts no job: its (dest, failed) census is counted and its rows
+  *     are split into the dead-letter frame and one frame per destination
+  *     in one driver pass, with no cache. Any other epoch is cached and
+  *     counted by one Spark job, whose n partitions each also return their
+  *     rows while they take at most bound/n bytes; when every partition
+  *     did, the epoch is split on the driver the same way. Driver memory
+  *     per epoch: the held rows (at most the bound) and the routed rows
+  *     Catalyst folds from them (one more copy); the split adds no copy of
+  *     a folded row, its (id, data, ts) rows sharing their values, and
+  *     copies a returned `UnsafeRow`'s payload once. Each split frame is a
+  *     `LocalRelation`, which [[MemorySink]], [[NoopSink]] and
+  *     [[FileAdapters.ParquetDirSink]] take with no further job. Above the
+  *     bound the writes filter the epoch's cached frame on Spark.
   *   - AddOptions works on a LIVE bus (/root/reference/frizzle.go:82-87,
   *     including FailSink rewiring mid-run, options.go:35-41,88-90), with
   *     EPOCH granularity: receive transforms, send transforms, the fail
@@ -134,9 +144,9 @@ final class FrizzleStream(
     // every BusStats delta is forwarded here; default keeps stats in-process
     statsSink: StatsSink = NoopStatsSink) {
 
-  import spark.implicits._
-
   val stats = new BusStats(statsSink)
+  // every frame a sink gets is typed with this one encoder, derived once
+  private val msgEncoder: Encoder[Msg] = Encoders.product[Msg]
   private val eventQueue = new ConcurrentLinkedQueue[BusEvent]()
   // fail sinks replaced by a live withFailSink rewire: closed (once) in
   // flushAndClose, after the query has stopped — never mid-run
@@ -345,43 +355,54 @@ final class FrizzleStream(
     // (reference re-reads f.tforms per message, frizzle.go:97-102; epoch
     // granularity is our documented consistency unit)
     val received = epochReceiveTransforms.foldLeft(batch)((df, t) => t.onReceive(df))
-    val routed = epochProcess.map(_(received, batchId)).getOrElse(process(received))
+    val processed = epochProcess.map(_(received, batchId)).getOrElse(process(received))
       .select(col("id"), col("data"), col("ts"),
         col("dest").cast("string").as("dest"), col("failed").cast("boolean").as("failed"))
-      .persist()
+    var cached: Option[DataFrame] = None
     try {
-      // The epoch's one job. Single stats pass: one (dest, failed) census
-      // yields every counter and the per-dest send counts. Destinations
-      // are topic names — a small bounded set by design, so collecting one
-      // micro-batch's census (≤ 3 rows per dest) is driver-safe at any
-      // data scale. A row whose `failed` is null, or that is not failed
-      // and has a null `dest`, counts in rcv and ack only: it is neither
-      // failed nor sendable. Counted per partition and summed here: no
-      // shuffle, and it fills `routed`'s cache. The rows are read as the
-      // plan's own internal rows, so the epoch pays for no encoder and no
-      // SQL execution around this job. Each partition also returns its
-      // rows while they fit its share of the driver bound (see the class
-      // doc), so the driver never holds more than the bound.
-      val bound = GraftBridge.advisoryPartitionBytes(routed.sparkSession)
-      val rdd = routed.queryExecution.toRdd
-      val share = bound / math.max(1, rdd.getNumPartitions)
-      val parts = rdd.mapPartitions(FrizzleStream.censusOf(routed.schema, share)).collect()
-      val census = parts.toSeq.flatMap(_._1)
-        .groupMapReduce(_._1)(_._2)(_ + _)
-        .toSeq.map { case ((d, f), n) => (d, f, n) }
-      val total = census.map(_._3).sum
-      val nFailed = census.collect { case (_, Some(true), n) => n }.sum
-      val destCounts = census.collect { case (Some(d), Some(false), n) => (d, n) }
+      // An epoch the driver already holds (its plan folds into a
+      // LocalRelation, as a dedup stage's output within the bound does;
+      // the fold runs the processor, so inside this try) is routed with no
+      // job and no cache. Any other epoch is cached on a fresh plan:
+      // `processed` was optimized before the cache existed, so its own
+      // plan would not read it.
+      val driverHeld = GraftBridge.driverRows(processed)
+      val routed = if (driverHeld.isDefined) processed else {
+        val c = GraftBridge.rehome(processed.sparkSession, processed).persist()
+        cached = Some(c)
+        c
+      }
+      // (dest, failed) → the epoch's count of rows, and the rows of each
+      // key when the driver holds them. Destinations are topic names — a small
+      // bounded set by design, so the census (≤ 3 keys per dest) is
+      // driver-safe at any data scale. A row whose `failed` is null, or
+      // that is not failed and has a null `dest`, counts in rcv and ack
+      // only: it is neither failed nor sendable.
+      val (census, byKey) = driverHeld match {
+        case Some(rows) =>
+          val by = FrizzleStream.routeHeld(routed.schema, rows)
+          (by.map { case (k, rs) => (k, rs.size.toLong) }.toSeq, Some(by))
+        case None =>
+          // The epoch's one job, counted per partition and summed here: no
+          // shuffle, and it fills `routed`'s cache. The rows are read as
+          // the plan's own internal rows, so the epoch pays for no encoder
+          // and no SQL execution around this job. Each partition also
+          // returns its rows while they fit its share of the driver bound
+          // (see the class doc), so the driver never holds more than the
+          // bound.
+          val bound = GraftBridge.advisoryPartitionBytes(routed.sparkSession)
+          val rdd = routed.queryExecution.toRdd
+          val share = bound / math.max(1, rdd.getNumPartitions)
+          val parts = rdd.mapPartitions(FrizzleStream.censusOf(routed.schema, share)).collect()
+          (parts.toSeq.flatMap(_._1).groupMapReduce(_._1)(_._2)(_ + _).toSeq,
+            Option.when(parts.forall(_._2.isDefined))(
+              FrizzleStream.routeHeld(routed.schema, parts.toSeq.flatMap(_._2.get))))
+      }
+      val total = census.map(_._2).sum
+      val nFailed = census.collect { case ((_, Some(true)), n) => n }.sum
+      val destCounts = census.collect { case ((Some(d), Some(false)), n) => (d, n) }
       val nSend = destCounts.map(_._2).sum
       stats.addRcv(total)
-
-      // within the bound the epoch goes on driver-held: every frame below
-      // folds into a LocalRelation, and the sinks take it with no job
-      val epoch =
-        if (parts.forall(_._2.isDefined))
-          GraftBridge.localFrame(routed.sparkSession, routed.schema, parts.toSeq.flatMap(_._2.get))
-        else routed
-      val sendable = epoch.filter(!col("failed") && col("dest").isNotNull)
 
       // A4/A7 unaddressable-dest routing: dest is a data-computed value, so
       // a dest the sink cannot address (sink.safeDest) must dead-letter the
@@ -397,25 +418,41 @@ final class FrizzleStream(
           unsafeDests.map(_._1).mkString("'", "', '", "'")))
       }
 
+      // the (id, data, ts) frame of driver-held rows: a LocalRelation
+      val msgSchema = StructType(routed.schema.take(3))
+      def held(rows: Seq[InternalRow]): DataFrame =
+        GraftBridge.localFrame(routed.sparkSession, msgSchema, rows)
+
       // A7 fail + dead-letter route: processor-marked fails AND
       // unaddressable-dest rows, as ONE write per epoch — an idempotent
       // fail sink dedups on (batchId, dest), so two separate writes to
       // (batchId, failDest) would silently drop the second set.
       val nDead = nFailed + nUnsafe
       val deadWrite = if (nDead == 0) None else epochFailCfg.sink.map { fs =>
-        val unsafeSet = unsafeDests.map(_._1).toSeq
-        val unsafeCond =
-          if (unsafeSet.isEmpty) lit(false)
-          else !col("failed") && col("dest").isin(unsafeSet: _*)
-        val dead = epoch.filter(col("failed") || unsafeCond)
-          .select("id", "data", "ts").as[Msg]
-        () => fs.write(dead, epochFailCfg.dest, batchId)
+        val unsafeSet = unsafeDests.map(_._1).toSet
+        val dead = byKey match {
+          case Some(by) => held(by.toSeq.collect {
+            case ((d, Some(f)), rows) if f || d.exists(unsafeSet) => rows
+          }.flatten)
+          case None =>
+            val unsafeCond =
+              if (unsafeSet.isEmpty) lit(false)
+              else !col("failed") &&
+                GraftBridge.inSet(col("dest"), unsafeSet.map(UTF8String.fromString).toSet[Any])
+            routed.filter(col("failed") || unsafeCond).select("id", "data", "ts")
+        }
+        val out = dead.as[Msg](msgEncoder)
+        () => fs.write(out, epochFailCfg.dest, batchId)
       }
 
       // A4 send + send-transform chain, routed per (addressable) destination.
       val destWrites = safeDests.toSeq.map { case (dest, _) =>
-        val out0 = sendable.filter(col("dest") === dest).select("id", "data", "ts")
-        val out = epochSendTransforms.foldLeft(out0)((df, t) => t.onSend(df)).as[Msg]
+        val out0 = byKey match {
+          case Some(by) => held(by((Some(dest), Some(false))))
+          case None =>
+            routed.filter(!col("failed") && col("dest") === dest).select("id", "data", "ts")
+        }
+        val out = epochSendTransforms.foldLeft(out0)((df, t) => t.onSend(df)).as[Msg](msgEncoder)
         () => sink.write(out, dest, batchId)
       }
 
@@ -439,7 +476,7 @@ final class FrizzleStream(
         stats.incrError()
         eventQueue.add(BusEvent("error", s"batch $batchId: ${e.getMessage}"))
         throw e
-    } finally routed.unpersist()
+    } finally cached.foreach(_.unpersist())
   }
 
   /** Run one epoch's writes as one concurrent wave on the write pool and
@@ -544,32 +581,69 @@ final class FrizzleStream(
 object FrizzleStream {
   private val busIds = new AtomicLong()
 
+  /** A routed row's (dest, failed) key. */
+  private type Key = (Option[String], Option[Boolean])
+
+  private def keyOf(r: InternalRow): Key =
+    (if (r.isNullAt(3)) None else Some(r.getUTF8String(3).toString),
+      if (r.isNullAt(4)) None else Some(r.getBoolean(4)))
+
   /** One partition of a routed epoch (id, data, ts, dest, failed): its
-    * (dest, failed) values counted, and its rows, copied as `UnsafeRow`s,
-    * if together they take at most `share` bytes. The rows are dropped as
-    * soon as they pass `share`, so a task holds at most `share` bytes of
-    * them.
+    * (dest, failed) values counted, and its rows while they fit `share`
+    * bytes ([[holdWithin]]).
     */
   private def censusOf(schema: StructType, share: Long)(rows: Iterator[InternalRow])
-      : Iterator[(Seq[((Option[String], Option[Boolean]), Long)], Option[Array[InternalRow]])] = {
-    val n = scala.collection.mutable.HashMap[(Option[String], Option[Boolean]), Long]()
-    lazy val toUnsafe = UnsafeProjection.create(schema)
+      : Iterator[(Seq[(Key, Long)], Option[Array[InternalRow]])] = {
+    val n = mutable.HashMap[Key, Long]()
+    val held = holdWithin(schema, share, rows) { r =>
+      val k = keyOf(r)
+      n(k) = n.getOrElse(k, 0L) + 1
+    }
+    Iterator((n.toSeq, held))
+  }
+
+  /** The first `schema.length` columns of each of `rows`, copied as
+    * `UnsafeRow`s, if together they take at most `share` bytes; `visit`
+    * sees every row. The copies are dropped as soon as they pass `share`,
+    * so a task holds at most `share` bytes of them. The bus's census job
+    * and [[SeenHashIndex.dedupEpoch]]'s collect both hold an epoch's rows
+    * through this, each partition with its share of the driver bound.
+    */
+  private[bus] def holdWithin(schema: StructType, share: Long, rows: Iterator[InternalRow])(
+      visit: InternalRow => Unit): Option[Array[InternalRow]] = {
+    lazy val toUnsafe = UnsafeProjection.create(schema.fields.toSeq.zipWithIndex.map {
+      case (f, i) => BoundReference(i, f.dataType, f.nullable)
+    })
     var held = Option(Array.newBuilder[InternalRow])
     var bytes = 0L
     rows.foreach { r =>
-      val k = (if (r.isNullAt(3)) None else Some(r.getUTF8String(3).toString),
-        if (r.isNullAt(4)) None else Some(r.getBoolean(4)))
-      n(k) = n.getOrElse(k, 0L) + 1
+      visit(r)
       held.foreach { h =>
         val u = r match {
-          case u: UnsafeRow => u.copy()
+          case u: UnsafeRow if u.numFields == schema.length => u.copy()
           case _ => toUnsafe(r).copy()
         }
         bytes += u.getSizeInBytes
         if (bytes <= share) h += u else held = None
       }
     }
-    Iterator((n.toSeq, held.map(_.result())))
+    held.map(_.result())
+  }
+
+  /** Driver-held routed rows (id, data, ts, dest, failed) split by their
+    * (dest, failed) key in one pass, each cut to its (id, data, ts): a
+    * new three-field row over the same values, so a folded row's values
+    * are shared, not copied (an `UnsafeRow`'s payload is copied once).
+    */
+  private def routeHeld(schema: StructType, rows: Seq[InternalRow])
+      : scala.collection.Map[Key, Seq[InternalRow]] = {
+    val types = schema.fields.take(3).map(_.dataType)
+    val by = mutable.LinkedHashMap[Key, mutable.ArrayBuffer[InternalRow]]()
+    rows.foreach { r =>
+      by.getOrElseUpdate(keyOf(r), mutable.ArrayBuffer()) +=
+        new GenericInternalRow(Array.tabulate[Any](3)(i => r.get(i, types(i))))
+    }
+    by.map { case (k, rs) => (k, rs.toSeq) }
   }
 
   /** Lift a per-message routing rule into the set-oriented processor: the

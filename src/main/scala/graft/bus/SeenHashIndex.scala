@@ -71,11 +71,17 @@ import graft.io.DriverParquet
   *      shuffle.''' Each epoch tags its rows with the payload hash and a
   *      row id into one lazily checkpointed frame; the one collect of
   *      (hash, id, row id, payload length) reads the source once and fills
-  *      the checkpoint in the same job. The driver picks each hash's first
-  *      copy, and the output is the checkpoint filtered by
-  *      `NOT InSet(dropped row ids)`: no window exchange, no join, no
-  *      broadcast. The survivors' run is written on the driver from the
-  *      same array, so the append is no Spark job either.
+  *      the checkpoint in the same job. Each of its n partitions also
+  *      returns its rows while they take at most 1/n of the driver bound,
+  *      `spark.sql.adaptive.advisoryPartitionSizeInBytes` (64 MiB by
+  *      default). The driver picks each hash's first copy. Within the
+  *      bound the output is the surviving rows as a driver-held
+  *      `LocalRelation`, which a [[FrizzleStream]] routes with no further
+  *      job; the driver then holds the epoch's rows, at most the bound.
+  *      Above it the output is the checkpoint filtered by
+  *      `NOT InSet(dropped row ids)`. Either way: no window exchange, no
+  *      join, no broadcast. The survivors' run is written on the driver
+  *      from the same array, so the append is no Spark job either.
   *
   * Driver memory: 8 B per hash of every unbucketed run, on top of the
   * buckets' blooms (~3 B per hash). With compaction on, a size class
@@ -500,14 +506,17 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     *
     * Lookup shape (see class doc): the batch tagged with its payload hash
     * and a row id, lazily checkpointed → ONE job collecting (hash, id, row
-    * id, payload length) that also fills the checkpoint → the driver picks
-    * each hash's first copy and probes the distinct hashes (driver-held
-    * arrays, then blooms and ONE verification job only if a bucketed run
-    * may hold one) → the checkpoint filtered by `NOT InSet(dropped row
-    * ids)`. The survivor hashes are written on the driver from the
-    * driver-held array. Work per epoch is bounded by the batch (+
-    * fpp·|batch| false-positive reads per bucketed run), independent of
-    * total index size.
+    * id, payload length) that also fills the checkpoint and returns each
+    * partition's rows while they fit its share of the driver bound → the
+    * driver picks each hash's first copy and probes the distinct hashes
+    * (driver-held arrays, then blooms and ONE verification job only if a
+    * bucketed run may hold one) → within the bound, the surviving rows as
+    * a driver-held `LocalRelation` (driver memory: the epoch's rows, at
+    * most one advisory partition); above it, the checkpoint filtered by
+    * `NOT InSet(dropped row ids)`. The survivor hashes are written on the
+    * driver from the driver-held array. Work per epoch is bounded by the
+    * batch (+ fpp·|batch| false-positive reads per bucketed run),
+    * independent of total index size.
     */
   def dedupEpoch(batch: DataFrame, epochId: Long): DataFrame = {
     // free the PREVIOUS epoch's checkpoint blocks first: foreachBatch's
@@ -529,18 +538,22 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     if (compactEvery > 0 && labels.count(_ < epochId) >= compactEvery)
       labels = compactRuns(labels, epochId)._1
     // materialize once: the collect below computes the tagged rows into
-    // the checkpoint, which the returned frame then reads — the source is
-    // read once, and the row ids the driver picks by stay fixed
+    // the checkpoint, which the returned frame reads above the driver
+    // bound — the source is read once, and the row ids the driver picks by
+    // stay fixed
     val tagged = batch.withColumn("__h", xxhash64(col("data")))
       .withColumn("__rid", monotonically_increasing_id())
       .transform(checkpointTracked)
     // read as the plan's own internal rows: no encoder and no SQL
-    // execution around this bookkeeping collect
-    val rows = tagged.select(col("__h"), col("id").cast("binary"), col("__rid"),
+    // execution around this collect. Each partition returns its tags and,
+    // while they fit its share of the driver bound, its rows.
+    val rdd = tagged.select(col("*"), col("id").cast("binary"),
         coalesce(octet_length(col("data")), lit(0)))
-      .queryExecution.executedPlan.executeCollect()
-      .map(r => SeenHashIndex.Tag(r.getLong(0),
-        if (r.isNullAt(1)) null else r.getBinary(1), r.getLong(2), r.getInt(3)))
+      .queryExecution.toRdd
+    val advisory = GraftBridge.advisoryPartitionBytes(batch.sparkSession)
+    val share = advisory / math.max(1, rdd.getNumPartitions)
+    val parts = rdd.mapPartitions(SeenHashIndex.tagsOf(batch.schema, share)).collect()
+    val rows = parts.flatMap(_._1)
     val first = mutable.LongMap[Int]() // hash -> index of its first copy
     for (i <- rows.indices) {
       val j = first.getOrElse(rows(i).h, -1)
@@ -549,22 +562,27 @@ final class SeenHashIndex(spark: SparkSession, dir: String,
     val hashes = first.keys.toArray
     val seen = seenOf(hashes, labels.filter(_ < epochId))
     appendKnownDistinct(hashes.filterNot(seen), epochId)
-    val dropped = Set.newBuilder[Any]
-    var keptBytes = 0L
-    for (i <- rows.indices) {
-      val r = rows(i)
-      if (first(r.h) == i && !seen(r.h)) keptBytes += r.len else dropped += r.rid
+    def kept(i: Int): Boolean = first(rows(i).h) == i && !seen(rows(i).h)
+    if (parts.forall(_._2.isDefined)) {
+      // within the bound: the survivors as a driver-held frame, so the
+      // bus routes them with no further job
+      val held = parts.flatMap(_._2.get)
+      GraftBridge.localFrame(batch.sparkSession, batch.schema,
+        rows.indices.collect { case i if kept(i) => held(i) })
+    } else {
+      val dropped = Set.newBuilder[Any]
+      var keptBytes = 0L
+      for (i <- rows.indices) if (kept(i)) keptBytes += rows(i).len else dropped += rows(i).rid
+      val droppedSet = dropped.result()
+      val out =
+        if (droppedSet.isEmpty) tagged
+        else tagged.filter(!GraftBridge.inSet(col("__rid"), droppedSet))
+      // the partitioning AQE gave the old window exchange's output: one
+      // partition per advisory size of payload, so each destination's write
+      // runs as one task per partition, not one per source split
+      val nParts = math.max(1L, (keptBytes + advisory - 1) / advisory)
+      out.drop("__h", "__rid").coalesce(nParts.toInt)
     }
-    val droppedSet = dropped.result()
-    val kept =
-      if (droppedSet.isEmpty) tagged
-      else tagged.filter(!GraftBridge.inSet(col("__rid"), droppedSet))
-    // the partitioning AQE gave the old window exchange's output: one
-    // partition per advisory size of payload, so each destination's write
-    // runs as one task per partition, not one per source split
-    val advisory = GraftBridge.advisoryPartitionBytes(spark)
-    val parts = math.max(1L, (keptBytes + advisory - 1) / advisory)
-    kept.drop("__h", "__rid").coalesce(parts.toInt)
   }
 
   /** The subset of `hashes` present in the runs `labels`: unbucketed runs
@@ -639,6 +657,22 @@ object SeenHashIndex {
     * for a null id), row id, payload bytes.
     */
   private final case class Tag(h: Long, id: Array[Byte], rid: Long, len: Int)
+
+  /** One partition of a tagged epoch — the batch's `n` columns, then
+    * hash, row id, id as bytes and payload bytes: its tags, and its
+    * batch columns while they fit `share` bytes
+    * ([[FrizzleStream.holdWithin]]).
+    */
+  private def tagsOf(batch: StructType, share: Long)(rows: Iterator[InternalRow])
+      : Iterator[(Array[Tag], Option[Array[InternalRow]])] = {
+    val n = batch.length
+    val tags = Array.newBuilder[Tag]
+    val held = FrizzleStream.holdWithin(batch, share, rows) { r =>
+      tags += Tag(r.getLong(n), if (r.isNullAt(n + 2)) null else r.getBinary(n + 2),
+        r.getLong(n + 1), r.getInt(n + 3))
+    }
+    Iterator((tags.result(), held))
+  }
 
   /** Whether `a` is an earlier copy than `b`: smaller id, nulls first, in
     * UTF-8 byte order — Spark's string order, which `String.compareTo`'s

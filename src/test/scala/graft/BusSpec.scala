@@ -1186,10 +1186,11 @@ class BusSpec extends SparkSpec {
     assert(out.sorted.toSeq == fresh.sorted,
       "exactly one copy of each fresh payload must survive")
     assert(idx.epochs().sorted == Seq(0L, 1L, 2L, 3L), "no compaction ran")
-    // 2 = the collect that reads the source and fills the checkpoint, and
-    // the output collect: the first copies are picked, every (unbucketed)
-    // run is probed and the survivors' run is written on the driver
-    assert(jobs <= 2, s"one dedup epoch started $jobs Spark jobs, bound 2")
+    // 1 = the collect that reads the source, fills the checkpoint and
+    // returns the rows: the first copies are picked, every (unbucketed)
+    // run is probed and the survivors' run is written on the driver, and
+    // the output is driver-held, so collecting it starts no job
+    assert(jobs <= 1, s"one dedup epoch started $jobs Spark jobs, bound 1")
   }
 
   test("dedup epoch keeps the first copies the row_number window keeps") {
@@ -1240,8 +1241,9 @@ class BusSpec extends SparkSpec {
     val (out, jobs) = jobsStartedBy(
       idx.dedupEpoch(batch, 4).select("data").as[String].collect())
     assert(out.sorted.toSeq == fresh.sorted, "exactly the fresh payloads survive")
-    // the materializing collect, the verification job, the output collect
-    assert(jobs == 3, s"a dedup epoch against a bucketed run started $jobs Spark jobs")
+    // the materializing collect and the verification job; the output is
+    // driver-held
+    assert(jobs == 2, s"a dedup epoch against a bucketed run started $jobs Spark jobs")
   }
 
   test("a reopened index rebuilds its unbucketed runs from disk and answers exactly") {
@@ -1269,7 +1271,7 @@ class BusSpec extends SparkSpec {
       reopened.dedupEpoch(batch, 4).select("data").as[String].collect())
     assert(out.sorted.toSeq == fresh.sorted,
       "seen payloads of the merged and the raw run must be dropped, fresh ones kept once")
-    assert(jobs <= 2, s"reading the runs back is driver work, yet $jobs Spark jobs ran")
+    assert(jobs <= 1, s"reading the runs back is driver work, yet $jobs Spark jobs ran")
   }
 
   /** Counts each bus epoch's Spark jobs: [[tag]], called in the epoch
@@ -1393,12 +1395,13 @@ class BusSpec extends SparkSpec {
     (jobs.perEpoch, rows.sortBy(r => (r._4, r._3, r._2)))
   }
 
-  test("a bus_dedup-shaped epoch starts 2 jobs within the driver bound and 6 above it, delivering the same rows") {
+  test("a bus_dedup-shaped epoch starts 1 job within the driver bound and 6 above it, delivering the same rows") {
     val (heldJobs, heldRows) = dedupShapedRun(spark)
     val (sparkJobs, sparkRows) = dedupShapedRun(aboveBound)
-    // the dedup collect and the census-and-collect job; above the bound
-    // also one write job per destination and one for the dead letters
-    assert(heldJobs == Seq(2, 2), s"jobs per driver-held epoch: $heldJobs")
+    // the dedup collect, which hands the bus a driver-held epoch; above the
+    // bound also the census job, one write job per destination and one for
+    // the dead letters
+    assert(heldJobs == Seq(1, 1), s"jobs per driver-held epoch: $heldJobs")
     assert(sparkJobs == Seq(6, 6), s"jobs per epoch above the bound: $sparkJobs")
     assert(heldRows == sparkRows, s"driver writes $heldRows vs Spark writes $sparkRows")
     // epoch 0: 12 messages; epoch 1: 10, its copies of the shared and the
@@ -1407,6 +1410,77 @@ class BusSpec extends SparkSpec {
     assert(heldRows.size == 22 && heldRows.count(_._3 == "dead") == 5 &&
       heldRows.count(_._2 == "x;shared") == 1 && heldRows.exists(_._1 == null) &&
       heldRows.exists(_._2.isEmpty), s"delivered: $heldRows")
+  }
+
+  /** A [[MemorySink]] that cannot address the dest `bad`. */
+  private final class BadDestSink extends BusSink {
+    val inner = new MemorySink
+    def write(batch: org.apache.spark.sql.Dataset[Msg], dest: String, batchId: Long): Unit =
+      inner.write(batch, dest, batchId)
+    override def safeDest(dest: String): Boolean = dest != "bad"
+  }
+
+  /** Run a bus with a [[SeenHashIndex.dedupEpoch]] stage and a send
+    * transform on `session` over one epoch per routing case. A payload
+    * `<dest>;<flag>;<n>` routes to `<dest>` (null when empty), with
+    * `failed` true for flag `t`, false for `f` and null otherwise; the
+    * stage never sees a `skip` payload. Returns each destination's (id,
+    * payload) pairs, the dead letters', the counters and the jobs per
+    * epoch.
+    */
+  private def routingCases(session: org.apache.spark.sql.SparkSession)
+      : (Map[String, Seq[(String, String)]], Seq[(String, String)], Map[String, Long], Seq[Int]) = {
+    val idx = new SeenHashIndex(session, Files.createTempDirectory("busrouting_idx").toString)
+    val text = decode(col("data"), "UTF-8")
+    val field = split(text, ";")
+    val route = FrizzleStream.exprProcessor(
+      dest = when(field.getItem(0) =!= "", field.getItem(0)),
+      failed = when(field.getItem(1) === "t", true).when(field.getItem(1) === "f", false))
+    val sink = new BadDestSink
+    val dlq = new MemorySink
+    val jobs = new EpochJobs
+    val src = new MemorySource(session)
+    val bus = new FrizzleStream(session, src, route, sink, Some(dlq), failDest = "dead",
+      sendTransforms = Seq(SeparatorTransform.utf8("|")),
+      checkpointDir = Some(Files.createTempDirectory("busrouting_ck").toString),
+      epochProcess = Some((df, e) => {
+        jobs.tag(e)
+        route(idx.dedupEpoch(df.filter(!text.startsWith("skip")), e))
+      }))
+    val epochs = Seq(
+      // sent to a and b; failed null; not failed with a null dest; an
+      // unaddressable dest; a failed row; a later copy of a payload
+      Seq("1" -> "a;f;1", "2" -> "b;f;2", "3" -> "a;n;3", "4" -> ";f;4",
+        "5" -> "bad;f;5", "6" -> "a;t;6", "9" -> "a;f;1"),
+      // every row already seen: no survivor
+      Seq("7" -> "a;f;1", "8" -> "b;f;2"),
+      // no row reaches the stage: an empty epoch
+      Seq("10" -> "skip;f;10"),
+      // one destination
+      Seq("11" -> "b;f;11"))
+    jobs.during {
+      bus.start()
+      for (e <- epochs) { src.put(e.map { case (id, p) => Msg.utf8(id, p) }: _*); bus.awaitIdle() }
+      assert(bus.flushAndClose(10000))
+    }
+    def pairs(ms: Seq[Msg]) = ms.map(m => (m.id, m.dataUtf8)).sorted
+    (sink.inner.dests.map(d => d -> pairs(sink.inner.sent(d))).toMap, pairs(dlq.sent("dead")),
+      bus.stats.snapshot, jobs.perEpoch)
+  }
+
+  test("driver-held and Spark routing deliver the same rows and count the same for every routing case") {
+    val (heldSent, heldDead, heldStats, heldJobs) = routingCases(spark)
+    val (sparkSent, sparkDead, sparkStats, sparkJobs) = routingCases(aboveBound)
+    assert(heldJobs.size == 4 && heldJobs.forall(_ <= 1) && sparkJobs.head > 1,
+      s"precondition: driver-held epochs $heldJobs, Spark epochs $sparkJobs")
+    assert(heldSent == sparkSent, s"sent: driver $heldSent vs Spark $sparkSent")
+    assert(heldDead == sparkDead, s"dead letters: driver $heldDead vs Spark $sparkDead")
+    assert(heldStats == sparkStats, s"counters: driver $heldStats vs Spark $sparkStats")
+    assert(heldSent == Map("a" -> Seq("1" -> "a;f;1|"), "b" -> Seq("11" -> "b;f;11|", "2" -> "b;f;2|")),
+      s"sent: $heldSent")
+    assert(heldDead == Seq("5" -> "bad;f;5", "6" -> "a;t;6"), s"dead letters: $heldDead")
+    assert(heldStats == Map("rcv" -> 7L, "send" -> 3L, "ack" -> 5L, "fail" -> 2L,
+      "failsink" -> 2L, "error" -> 0L), s"counters: $heldStats")
   }
 
   test("a driver-held frame writes parquet that reads back as the Spark write of it does") {
