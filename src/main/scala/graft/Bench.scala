@@ -12,10 +12,9 @@ object Bench {
     // sort, hash agg, expand+distinct agg, window, broadcast join,
     // conditional projection, generator, JSON parse) so the timed pass
     // measures plan cost, not first-query compilation — the first entry
-    // otherwise absorbs several seconds of uniform session warm-up (the
-    // r03→r02 "regressions" on three agg queries were exactly this: map
-    // iteration order shifted when keys were added, and the newly-early
-    // queries absorbed the residual JIT; warm_min plan cost was flat).
+    // otherwise absorbs several seconds of uniform session warm-up (and
+    // when added keys move a query to the front, it shows a "regression"
+    // that is only residual JIT; its warm_min plan cost stays flat).
     // …plus the custom-expression and iterative-join shapes the generic
     // warm-up misses: LshSignatures codegen (q_sim_cosine_lsh),
     // the md5-slice shingle fingerprint (q_doc_fingerprint), and the looped
@@ -25,14 +24,14 @@ object Bench {
     // …and q_media_decode: the media fixture materializes ONCE per scale
     // factor (a ~3.5 s one-time synthesis at sf0.1 on a cold cache) —
     // warming it here keeps that one-time cost out of the timed pass.
-    // …and q_kmeans_assign (r15): the packed-quantization + zip_with-fold
+    // …and q_kmeans_assign: the packed-quantization + zip_with-fold
     // codegen shape shared with q_sim_quantized_topk — neither was in the
     // warm list, so whichever ran first absorbed that shape's JIT.
-    // …and q_kmeans_update (r15 batch 3): supersets the assign shapes and
+    // …and q_kmeans_update: supersets the assign shapes and
     // adds the posexplode → combine → sort_array(collect_list) rebuild
     // (measured ~7 s of first-run JIT at sf0.1 against ~1 s warm plan
     // cost — by far the largest cold/warm gap in the inventory).
-    // …and q_bpe_train (r15): the 10-round merge loop's aggregate()-fold
+    // …and q_bpe_train: the 10-round merge loop's aggregate()-fold
     // codegen compiles fresh per round shape — ~9 s cold vs ~1.8 s warm
     // plan cost at sf0.1 (PROFILE_r15), the q_kmeans_update situation.
     Seq("q_sort_limit", "q_agg_group", "q_agg_distinct", "q_window_rank",
@@ -48,12 +47,11 @@ object Bench {
     // Sorted key order: STABLE across rounds (a Map's iteration order
     // reshuffles as keys are added, which moves where residual warm-up
     // cost lands and makes per-query numbers incomparable round-to-round).
-    // Per-query success flag (r15): through r14 a throwing query was billed
-    // as a ~0.06 s "success" (`catch { case _ => -1L }` inside the timed
-    // lambda) and the JSON looked like a fully-passing bench on a tree
-    // where 21% of the inventory could not execute. A failed query now
-    // lands in `"failed":[...]`, is excluded from the total, and forces a
-    // nonzero exit code.
+    // Per-query success flag: a throwing query billed as a fast "success"
+    // would make the JSON look like a fully-passing bench on a tree where
+    // part of the inventory cannot execute. A failed query lands in
+    // `"failed":[...]`, is excluded from the total, and forces a nonzero
+    // exit code.
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       // Snapshot pre-existing persistent RDD ids so the post-query cleanup
       // below drops ONLY blocks this query created — a blanket unpersist
@@ -84,12 +82,12 @@ object Bench {
     // 3-decimal seconds via Locale.ROOT: ms precision is below box noise,
     // and a locale-default format would emit comma decimals (invalid JSON)
     // on e.g. a de_DE JVM.
-    def r3(v: Double): String =
+    def secs3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     // Only SUCCESSFUL queries contribute timings — a failure's wall time is
     // analysis-error latency, not plan cost, and must not pollute the
     // round-over-round per-query comparison.
-    val qs = results.collect { case (k, v, true) => "\"" + k + "\":" + r3(v) }
+    val qs = results.collect { case (k, v, true) => "\"" + k + "\":" + secs3(v) }
       .mkString("{", ",", "}")
     val failed = results.collect { case (k, _, false) => "\"" + k + "\"" }
     val total = results.collect { case (_, v, true) => v }.sum
@@ -107,7 +105,7 @@ object Bench {
     // repo root under `sbt runMain`) so it lands in the commit.
     try {
       val lines = results.sortBy(_._1).map { case (k, v, ok) =>
-        s"""  "$k": ${if (ok) r3(v) else "\"FAILED\""}"""
+        s"""  "$k": ${if (ok) secs3(v) else "\"FAILED\""}"""
       }
       val body =
         lines.mkString(s"""{\n  "_sf": "$sfDir",\n  "_cpus": "$cpus",\n""", ",\n", "\n}\n")
@@ -116,7 +114,7 @@ object Bench {
       System.err.println(s"[bench] per-query artifact write failed: $e")
     }
     // LAST line: compact total-only JSON, guaranteed to fit the tail window.
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${secs3(total)},"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"sf":"$sfDir"}""")
     if (failed.nonEmpty) sys.exit(1)
   }
 

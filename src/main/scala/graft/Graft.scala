@@ -15,8 +15,9 @@ import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
   * 128 default session-wide — that low default is the memory safety valve
   * for every unbounded object aggregate (collect_list/collect_set and any
   * user-added typed agg). A raised 2^21 threshold was measured to OOM a
-  * 15 M-group small-k aggregate (q_topk_agg, ~0.5 KB boxed buffer per
-  * group × 32 concurrent tasks) at sf100 inside the standard 8 GB heap —
+  * 15 M-group small-k aggregate (q_topk_agg on a boxed-tuple buffer,
+  * ~0.5 KB per group × 32 concurrent tasks) at sf100 inside the standard
+  * 8 GB heap —
   * the per-group buffer bound alone does not cap memory; group count per
   * task does, and that is data-dependent. The engine's bounded typed
   * aggregates that genuinely need the hash path at high group counts (the

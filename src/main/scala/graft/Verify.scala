@@ -4,11 +4,10 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
-  * Failure contract (r15): a throwing query must NEVER silently vanish from
-  * the round's report — through r14 a broken key just printed to stderr and
-  * wrote no parquet, so the driver's report *omitted* it instead of showing
-  * `err`, and a 26-query breakage survived two rounds unnoticed. Every run
-  * now also writes `_errors.json` (key → exception message; `{}` when
+  * Failure contract: a throwing query must NEVER silently vanish from
+  * the report — a broken key that only printed to stderr and wrote no
+  * parquet would be *omitted* from the compare instead of showing `err`.
+  * Every run also writes `_errors.json` (key → exception message; `{}` when
   * clean) so each declared key always yields an adjudicable row.
   */
 object Verify {

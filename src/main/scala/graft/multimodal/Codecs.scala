@@ -16,7 +16,7 @@ import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, Audi
   * static readers are thread-safe per invocation since each read allocates
   * its own ImageReader).
   *
-  * Video is real too since r10: [[VideoCodec]] hand-parses the RIFF/
+  * Video is real too: [[VideoCodec]] hand-parses the RIFF/
   * MJPEG-AVI container (the JDK ships no demuxer) and the frames are
   * JPEGs this ImageCodec decodes.
   */

@@ -535,8 +535,8 @@ object MediaOps {
                   // picture. Without it the Hamming tier's fixture
                   // answer is EMPTY at all scales — the documents
                   // fixture has no exact text dups, so seed =
-                  // xxhash64(text) never collides (the r16 verdict's
-                  // vacuous-oracle trap). NonVacuousSpec +
+                  // xxhash64(text) never collides (a vacuous oracle:
+                  // an empty answer matches anything). NonVacuousSpec +
                   // MultimodalSpec pin the planted pairs.
                   if (id < 500 && math.floorMod(id, 125) == 7) {
                     val base = ImageCodec.synthPng(0x517CC1B727220A95L, 48, 48)

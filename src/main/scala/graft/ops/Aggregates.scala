@@ -294,7 +294,7 @@ object Aggregates {
              |ORDER BY l_returnflag ASC NULLS FIRST""".stripMargin)
     ),
     Q(
-      // Heavy hitters per group via sketch-then-verify (r13): pass 1 runs
+      // Heavy hitters per group via sketch-then-verify: pass 1 runs
       // a Misra–Gries summary (graft.functions.MisraGries — O(k) state,
       // map-side-combined, only ≤ k candidates per lang cross the shuffle)
       // whose superset guarantee makes it a sound PRUNER for "tokens with
@@ -390,7 +390,7 @@ object Aggregates {
       // INSPECTABLE in the result; CountMinSpec pins both bounds plus
       // merge algebra.
       //
-      // r18: DuckDB-oracled end to end. Keys use the PORTABLE 60-bit
+      // DuckDB-oracled end to end. Keys use the PORTABLE 60-bit
       // md5-slice hash (not the xxhash64 library default), the finished
       // sketch's 4096 cells persist to parquet (IndexFrames — the same
       // build-then-probe shape as the media hash indexes), and the oracle

@@ -13,7 +13,7 @@ import org.apache.spark.sql.DataFrame
   * ScalaTest-pinned.
   *
   * Index dirs are keyed by fixture basename PLUS an 8-hex md5 of the
-  * canonical absolute path (r17 ADVICE): two different datasets whose
+  * canonical absolute path: two different datasets whose
   * directories are both named `sf0.01` (a regenerated or temp fixture)
   * must not overwrite each other's index, or the oracle would compare
   * against whatever run wrote last. The oracle SQL pins the one fixture
@@ -44,7 +44,7 @@ object IndexFrames {
   /** Per-process token: non-oracle fixtures write under a pid-scoped
     * subtree so two concurrent JVMs (parallel bench + verify, two test
     * runs) over the same fixture can never interleave an overwrite-delete
-    * with the other's read-back (r18 ADVICE). Only the pinned oracle
+    * with the other's read-back. Only the pinned oracle
     * fixture keeps the stable path the oracle SQL renders.
     */
   private val procToken =
@@ -57,7 +57,7 @@ object IndexFrames {
     * The write runs at query-construction time — deliberate: Verify always
     * constructs before the driver's DuckDB pass reads the frame.
     *
-    * Concurrency (r18 ADVICE): non-oracle fixtures write under a
+    * Concurrency: non-oracle fixtures write under a
     * per-process subtree (no cross-JVM sharing is ever needed — the frame
     * is read back only by this session). The oracle fixture must keep the
     * exact path the oracle SQL pins, so it stages to a process-unique tmp

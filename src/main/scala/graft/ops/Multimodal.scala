@@ -15,7 +15,7 @@ import graft.multimodal.MediaOps
   *
   * Codec invariants are pinned by graft.MultimodalSpec (DuckDB cannot
   * decode media, so decode/frame/chunk/feature keys carry no SQL oracle).
-  * The four dedup-census keys ARE oracled since r17: they persist their
+  * The four dedup-census keys ARE oracled: they persist their
   * per-asset hash frame (see [[graft.ops.IndexFrames]]) and both engines
   * census the same parquet bytes — grouping, banding and the Hamming join
   * get the full rows+schema+hash check.
@@ -26,7 +26,7 @@ object Multimodal {
   // graft.ops.IndexFrames (one parquet dir per (fixture-key, hash kind)),
   // then compute the census FROM THE PERSISTED FRAME — see IndexFrames'
   // Scaladoc for the build-then-census rationale, the oracle-readability
-  // argument, and the collision-safe dir keying (r17 ADVICE).
+  // argument, and the collision-safe dir keying.
   private def persistHashFrame(df: org.apache.spark.sql.DataFrame,
       d: String, name: String): org.apache.spark.sql.DataFrame =
     IndexFrames.persist(df, d, name)
@@ -38,7 +38,7 @@ object Multimodal {
     Q(
       "q_media_decode",
       (s, d) => {
-        // Decode parallelism comes from the SCAN since r21: the media
+        // Decode parallelism comes from the SCAN: the media
         // fixture reads under a 2 MB-split session clone (see
         // MediaOps.mediaFromDocuments), so the codec work fans out where
         // the bytes are read and the old repartition — a full shuffle of
@@ -123,7 +123,7 @@ object Multimodal {
       // decoded_ok=false fallbacks are excluded (fabricated hashes must
       // not cluster with genuine pixel hashes). Invariance + fallback
       // semantics pinned in MultimodalSpec; no SQL oracle (JDK codec).
-      // r17: the census half is now DuckDB-oracled — the hash frame is
+      // The census half is DuckDB-oracled: the hash frame is
       // persisted (see MediaHashRoot) and both engines census the same
       // parquet bytes; only the codec stays ScalaTest-only.
       "q_media_phash_dup",
@@ -156,9 +156,9 @@ object Multimodal {
       // shuffle. The fixture's planted text dups synthesize identical
       // images, so distance-0 pairs exist at every scale. Banding
       // guarantee + planted-resize recall pinned in MultimodalSpec.
-      // r17: banding + Hamming join run over the persisted hash index and
-      // are replicated in the oracle SQL — the pigeonhole tier itself is
-      // now rows+schema+hash checked, not just spec-pinned.
+      // Banding + Hamming join run over the persisted hash index and are
+      // replicated in the oracle SQL, so the pigeonhole tier itself is
+      // rows+schema+hash checked, not just spec-pinned.
       "q_media_phash_neardup",
       (s, d) => {
         val idx = persistHashFrame(
@@ -240,7 +240,7 @@ object Multimodal {
               |ORDER BY vhash ASC NULLS FIRST""".stripMargin)
     ),
     Q(
-      // Cross-modal provenance census (r17): image-dup rate PER SOURCE —
+      // Cross-modal provenance census: image-dup rate PER SOURCE —
       // which provider ships duplicated imagery, the procurement-facing
       // rollup of q_media_phash_dup (same relationship q_dup_ratio_by_
       // source has to q_dedup_docs_exact, one modality over). Joins the

@@ -579,24 +579,22 @@ object Pipeline {
       // sample a curator pins next to every corpus release), and exactly a
       // KMV distinct sketch: the k-th smallest hash h_k estimates the
       // stratum's cardinality as (k−1)·2^32/h_k. Physical plan is the
-      // graft.functions.TopKByValue bounded aggregate over the NEGATED
-      // hash — map tasks reduce each stratum slice to ≤k pairs BEFORE the
-      // exchange (see q_topk_agg), while the oracle's window form shuffles
-      // every row. Hash = the shared Knuth multiplicative hash (exact
-      // integer ops on both engines, overflow-safe per q_split_assign);
-      // h < 2^32 so the Double negation is exact.
+      // BottomKPairs bounded aggregate over the hash — map tasks reduce
+      // each stratum slice to ≤k pairs BEFORE the exchange (see
+      // q_topk_agg), while the oracle's window form shuffles every row.
+      // Hash = the shared Knuth multiplicative hash (exact integer ops on
+      // both engines, overflow-safe per q_split_assign).
       "q_bottomk_sample",
       (s, d) => {
-        val bottomk = graft.functions.TopK.topkByValue(5)
         tbl(s, d, "documents")
           .select(col("lang"), col("doc_id"),
             (col("doc_id") % 1000003L * 2654435761L % 4294967296L).as("h"))
           .groupBy("lang")
-          .agg(bottomk((-col("h")).cast("double"), col("doc_id")).as("bot"))
+          .agg(graft.expr.BottomKPairs(col("h"), col("doc_id"), 5).as("bot"))
           .select(col("lang"), posexplode(col("bot")))
           .select(col("lang"),
-            col("col._2").as("doc_id"),
-            (-col("col._1")).cast("long").as("h"),
+            col("col.id").as("doc_id"),
+            col("col.qd").as("h"),
             (col("pos") + 1).cast("long").as("rn"))
           .orderBy(asc_nulls_first("lang"), asc_nulls_first("rn"))
       },

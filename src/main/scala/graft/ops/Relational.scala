@@ -286,7 +286,7 @@ object Relational {
              |ORDER BY event_id ASC NULLS FIRST""".stripMargin)
     ),
     Q(
-      // FORWARD as-of (r13): each event takes the EARLIEST order of the
+      // FORWARD as-of: each event takes the EARLIEST order of the
       // same user STRICTLY AFTER the event timestamp — the attribution
       // question ("which order did this touchpoint lead to?"), the mirror
       // of q_asof_join's "latest state at event time". Same sorted-merge
@@ -334,7 +334,7 @@ object Relational {
              |ORDER BY event_id ASC NULLS FIRST""".stripMargin)
     ),
     Q(
-      // NEAREST as-of (r15): each event takes the order of the same user
+      // NEAREST as-of: each event takes the order of the same user
       // with the smallest |o_orderdate − ts| — the sensor-fusion /
       // reading-alignment third member of the as-of family (backward =
       // state at event time, forward = attribution target, nearest =
@@ -404,7 +404,7 @@ object Relational {
              |ORDER BY event_id ASC NULLS FIRST""".stripMargin)
     ),
     Q(
-      // SCD Type-2 history reconstruction (r13): treat orders as a
+      // SCD Type-2 history reconstruction: treat orders as a
       // change-log per customer and rebuild the slowly-changing-dimension
       // row set — each change is valid from its own date until the NEXT
       // change for the same key (lead), the last one open-ended
@@ -456,7 +456,7 @@ object Relational {
              |ORDER BY o_custkey ASC NULLS FIRST, version ASC NULLS FIRST""".stripMargin)
     ),
     Q(
-      // CDC changelog apply / MERGE (r13): the snapshot complement to
+      // CDC changelog apply / MERGE: the snapshot complement to
       // q_scd2_history (which keeps every version): apply an ordered
       // change log latest-wins per key, honoring delete markers, and emit
       // the CURRENT state only — the upsert primitive every incremental

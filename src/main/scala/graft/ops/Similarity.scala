@@ -238,12 +238,15 @@ object Similarity {
     * same auto-sized buckets as the near-dup family) and the re-rank is
     * an integer fold over packed int8 codes — hash-exact, so unlike a
     * float-cosine kNN graph the whole artifact holds under a DuckDB hash
-    * oracle. The candidate distinct is one collision-sized shuffle
-    * (needed: a pair colliding in several tables must rank ONCE); the
-    * top-k window compiles to WindowGroupLimit (per-partition top-k
-    * before the src exchange).
+    * oracle. Both plans of the collision stream end in one bounded fold
+    * ([[knnFold]]): a pair colliding in several tables ranks ONCE because
+    * its duplicate collisions collapse inside the fold, and each map task
+    * reduces a src to ≤ k pairs before the one src exchange. The plans
+    * differ in where the codes travel: the coarse-bits plan joins them
+    * onto a narrow (src, dst) collision stream, the production plan
+    * carries them on the bucket rows.
     *
-    * Session scoping caveat (fold branch, `dedupFirst = false`): the
+    * Session scoping caveat (both plans, through [[knnFold]]): the
     * returned frame is re-homed onto [[graft.Graft.boundedAggFrame]]'s
     * session clone, whose only conf delta is the raised
     * ObjectHashAggregate fallback threshold the BottomKPairs fold needs.
@@ -263,22 +266,22 @@ object Similarity {
       dedupFirst: Option[Boolean] = None): org.apache.spark.sql.DataFrame = {
     val bits = if (nBits > 0) nBits
       else autoNBits(knownCount.getOrElse(emb.count()))
-    // Two result-identical strategies, selected by bucket granularity
-    // (override with `dedupFirst` — SimilaritySpec pins their equality):
-    //  - COARSE buckets (≤8 bits): a candidate pair collides in MANY
-    //    tables (per-table collision odds 2^-bits), so dedup the (src,
-    //    dst) set FIRST (distinct) and fold the distance once per pair,
-    //    at the price of two code-attach joins. 3.9 s vs 6.1 s warm at
-    //    the pinned-4-bit sf0.1 audit point.
+    // Two result-identical plans, selected by bucket granularity
+    // (`dedupFirst` overrides the choice — SimilaritySpec pins their
+    // equality). Both fold through the same knnFold:
+    //  - COARSE buckets (≤8 bits): the bucket rows stay narrow (vec_id
+    //    only), and two broadcast joins attach the codes to the (src,
+    //    dst) collision stream. A pair collides in many tables here
+    //    (per-table collision odds 2^-bits), and the codes are small
+    //    enough to broadcast. Carrying the codes on the bucket rows here
+    //    too measured slower at 500 vectors (1.37 → 1.62 s, 6 → 10 jobs).
     //  - PRODUCTION occupancy (auto bits): the dup factor is ~1, so the
     //    codes RIDE the bucket rows, the distance folds map-side right in
-    //    the bucket join's output, and the whole top-k-per-src reduces in
-    //    ONE map-side-combined bounded fold (BottomKDistinct) — the
-    //    collision stream shuffles once, not three times (distinct + two
-    //    joins). Measured 166 s → 64 s warm at the 200k-vector 100× point
-    //    (PROFILE_sf10.txt); the wide bucket exchange (codes
-    //    payload) is the price, paid once for both join sides by
-    //    ReuseExchange.
+    //    the bucket join's output, and the collision stream shuffles
+    //    once, with no code-attach join. Measured 166 s → 64 s warm at
+    //    the 200k-vector 100× point (PROFILE_sf10.txt); the wide bucket
+    //    exchange (codes payload) is the price, paid once for both join
+    //    sides by ReuseExchange.
     if (dedupFirst.getOrElse(bits <= 8)) {
       // The coarse-bits branch tail: the raw collision stream goes
       // straight through the code-attach joins (narrow bucket rows — the
@@ -356,7 +359,7 @@ object Similarity {
         // losslessness argument): NO sort anywhere, partial agg runs
         // map-side in the join's output stage, and the ONE exchange
         // carries ≤ k pairs per (src, map partition). SimilaritySpec pins
-        // result equality with the dedup-first path.
+        // result equality with the coarse-bits plan.
         // boundedAggFrame: the fold needs the ObjectHashAggregate fallback
         // threshold raised past the 128 default (which would demote it to
         // sort-based after 128 src groups, re-introducing the sort) — but

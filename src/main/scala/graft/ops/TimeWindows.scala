@@ -55,9 +55,8 @@ object TimeWindows {
     ),
     Q(
       // Per-user sessions with a 30-minute inactivity gap. ScalaTest checks
-      // against a gaps-and-islands formulation — and since r11 the SAME
-      // formulation is the DuckDB oracle (previously a weaker rows-only
-      // row): session boundaries at exact-µs integers (session_window
+      // against a gaps-and-islands formulation, and the SAME formulation
+      // is the DuckDB oracle: session boundaries at exact-µs integers (session_window
       // merges at timestamp precision; ties within one µs are gap-0 and
       // land in one session either way), session start/end floored to
       // seconds as exact integer division, so the whole row is
@@ -76,9 +75,7 @@ object TimeWindows {
           // is session-grain (≈ event count — ~95 M rows at sf100), so
           // the checkpointed shape's materialized copy outgrows the block
           // manager and becomes a full disk round-trip — measured sf100
-          // 73.2 s checkpointed vs 43.7 s recomputed (clean method; the
-          // r16 "19×" measurement for the recompute shape predates the
-          // Profile block-manager fix and was measuring eviction). At
+          // 73.2 s checkpointed vs 43.7 s recomputed. At
           // sf10, where the copy fits in memory, the checkpoint is ~1.1 s
           // better — the 100 TB design point decides the default here.
           .transform(df => sortOnce(df, corpusGrain = true)(
@@ -150,12 +147,11 @@ object TimeWindows {
       // semantics hand-rolled): the value at 1-based sorted index ⌈q·n⌉.
       // No interpolation anywhere — the output is a value PICKED from the
       // data, bit-identical on any engine, so this key is hash-oracled
-      // (r13; was no_oracle while it carried GK-sketch columns — the
-      // sketch surface lives on as [[percentileSummary]], ScalaTest-
+      // (the GK-sketch surface is [[percentileSummary]], ScalaTest-
       // bounded, because sketch interpolation is engine-specific).
       // Rank math is integer-only: ⌈n/2⌉ = (n+1) div 2,
       // ⌈19n/20⌉ = (19n+19) div 20 — mirrored with // in the SQL.
-      // Scale (r15 rewrite): DISTINCT-VALUE COMPRESSION, the
+      // Scale: DISTINCT-VALUE COMPRESSION, the
       // q_group_quantiles shape — the corpus-sized work is a map-side-
       // combinable (event_type, value) count (measured 10 M rows → 280 k
       // distinct pairs at sf10), and the rank window walks distinct
@@ -205,7 +201,7 @@ object TimeWindows {
       // Statistical moments per event_type: stddev/variance/skewness/
       // kurtosis plus a cross-column correlation. All single-pass
       // partial-aggregatable power sums — the 100 TB shape. Hash-oracled
-      // since r12 via the q_exact_moments recipe generalized to 4th order:
+      // via the q_exact_moments recipe generalized to 4th order:
       // values are quantized to exact integers (floor(value·10⁴) — floor,
       // not round: both engines floor identical doubles identically),
       // Σx..Σx⁴ and the u/xu cross sums accumulate in DECIMAL(38,0)
@@ -317,7 +313,7 @@ object TimeWindows {
              |ORDER BY event_type ASC NULLS FIRST""".stripMargin)
     ),
     Q(
-      // Windowed drift monitor (r13): per (day, event_type) exact
+      // Windowed drift monitor: per (day, event_type) exact
       // count/mean/sd — the continuously-running feed-health dashboard
       // (a shifting per-window mean/sd is how a corrupted upstream feed
       // announces itself). ONE definition for batch and streaming:
@@ -351,7 +347,7 @@ object TimeWindows {
              |ORDER BY day ASC NULLS FIRST, event_type ASC NULLS FIRST""".stripMargin)
     ),
     Q(
-      // Anomaly census per event_type (r13): flag events further than 3
+      // Anomaly census per event_type: flag events further than 3
       // sample standard deviations from the group mean, report the
       // outlier count and the extreme |z| — the data-quality monitor a
       // production feed runs continuously. Two-pass broadcast shape:
@@ -416,7 +412,7 @@ object TimeWindows {
              |ORDER BY event_type ASC NULLS FIRST""".stripMargin)
     ),
     Q(
-      // Robust anomaly census per event_type (r13): modified z-score
+      // Robust anomaly census per event_type: modified z-score
       // |0.6745·(x − median)/MAD| > 3.5 (Iglewicz-Hoaglin) — the outlier
       // test that survives heavy tails, where mean/σ (q_zscore_outliers)
       // gets dragged by the outliers it is hunting. ENTIRELY exact until
@@ -432,7 +428,7 @@ object TimeWindows {
       // corpus never shuffles on a new key.
       "q_robust_outliers",
       (s, d) => {
-        // r15 rewrite — DISTINCT-VALUE COMPRESSION end to end (the
+        // DISTINCT-VALUE COMPRESSION end to end (the
         // q_percentiles lesson from PROFILE_sf10): the corpus-sized work
         // is ONE map-side-combinable (event_type, xq) count; both rank
         // windows (median, MAD) and the final census walk compressed
@@ -492,13 +488,13 @@ object TimeWindows {
              |ad AS (
              |  SELECT q.event_type, xq, med_q, ABS(xq - med_q) AS ad
              |  FROM q JOIN med USING (event_type)),
-             |r2 AS (
+             |ad_ranked AS (
              |  SELECT event_type, ad,
              |    row_number() OVER (PARTITION BY event_type
              |      ORDER BY ad ASC NULLS FIRST) AS rn,
              |    count(*) OVER (PARTITION BY event_type) AS n
              |  FROM ad),
-             |mad AS (SELECT event_type, ad AS mad_q FROM r2
+             |mad AS (SELECT event_type, ad AS mad_q FROM ad_ranked
              |        WHERE rn = (n + 1) // 2),
              |mz AS (
              |  SELECT a.event_type, med_q, mad_q,
@@ -637,7 +633,7 @@ object TimeWindows {
       // cardinality architecture: sketches are partial-aggregate state
       // (constant size, here ≤ m=4096 (bucket, reg) rows/day), daily
       // sketches persist and any period rolls up by register-max, never
-      // by rescan. r19 ✗→✓: the sketch state is the engine's OWN portable
+      // by rescan. Hash-oracled: the sketch state is the engine's OWN portable
       // register table (bucket = low 12 bits of the 60-bit md5-slice user
       // hash, reg = HLL rho of the remaining 48 bits = 49 − bitlength,
       // pure integers both engines), so the full pipeline — per-day
@@ -714,7 +710,7 @@ object TimeWindows {
              |ORDER BY day ASC NULLS FIRST""".stripMargin)
     ),
     Q(
-      // Per-group exact discrete percentiles (r13): p50/p90/p99 of value
+      // Per-group exact discrete percentiles: p50/p90/p99 of value
       // per event_type via DISTINCT-VALUE COMPRESSION — groupBy
       // (group, value) count (map-side combinable: the only corpus-sized
       // shuffle carries one row per distinct value, not per event), then

@@ -180,24 +180,24 @@ object Windows {
       // Same answer as q_topk_per_group, different physical plan — the
       // 100 TB top-k path. The window form shuffles EVERY order row to its
       // group's reducer and sorts the whole group before discarding all
-      // but 3 rows; this form aggregates with graft.functions.TopKByValue
-      // (TypedImperativeAggregate under udaf), so each map task reduces
-      // its slice of a group to ≤3 pairs BEFORE the exchange — the shuffle
-      // carries ≤ 3·(#map partitions) rows per customer instead of the
-      // customer's full order count. Plan-audited (TopKSpec): two
-      // ObjectHashAggregate phases, zero Window operators. The oracle is
-      // the window SQL — same rows prove the rewrite is semantics-
-      // preserving.
+      // but 3 rows; this form folds with the bounded BottomKPairs
+      // aggregate over the negated price (price DESC, key ASC), so each
+      // map task reduces its slice of a group to ≤3 pairs BEFORE the
+      // exchange — the shuffle carries ≤ 3·(#map partitions) rows per
+      // customer instead of the customer's full order count. Plan-audited
+      // (TopKSpec): two ObjectHashAggregate phases, zero Window operators.
+      // The oracle is the window SQL — same rows prove the rewrite is
+      // semantics-preserving.
       "q_topk_agg",
       (s, d) => {
-        val topk = graft.functions.TopK.topkByValue(3)
         tbl(s, d, "orders")
           .groupBy("o_custkey")
-          .agg(topk(col("o_totalprice"), col("o_orderkey")).as("top"))
+          .agg(graft.expr.BottomKPairs(-col("o_totalprice"), col("o_orderkey"), 3)
+            .as("top"))
           .select(col("o_custkey"), posexplode(col("top")))
           .select(col("o_custkey"),
-            col("col._2").as("o_orderkey"),
-            col("col._1").as("o_totalprice"),
+            col("col.id").as("o_orderkey"),
+            (-col("col.qd")).as("o_totalprice"),
             (col("pos") + 1).cast("long").as("rn"))
           .transform(df => sortOnce(df)(asc_nulls_first("o_custkey"), asc_nulls_first("rn")))
       },

@@ -32,7 +32,7 @@ package object ops {
       run: (SparkSession, String) => DataFrame,
       oracle: Option[String] = None)
 
-  /** Parquet schema cache for [[tbl]] (r21). Every bare
+  /** Parquet schema cache for [[tbl]]. Every bare
     * `spark.read.parquet(path)` pays path resolution + file listing +
     * FOOTER-READ SCHEMA INFERENCE — measured ~100-150 ms per call on the
     * bench box, and the 189-query inventory makes ~300 such calls against
@@ -44,7 +44,7 @@ package object ops {
     * flag changes how a timestamp[ns] column is inferred (LongType vs
     * error), and sessions with different settings must not share entries.
     *
-    * IMMUTABLE-FIXTURE ASSUMPTION (r21 ADVICE): the cache never
+    * IMMUTABLE-FIXTURE ASSUMPTION: the cache never
     * invalidates. If a fixture path were rewritten with a DIFFERENT
     * schema inside one JVM, `read.schema(stale)` would not fail the way
     * re-inference would — it silently yields nulls/miscast columns. The
@@ -127,9 +127,7 @@ package object ops {
     * 43.7 — while at sf10, where the copy fits in memory, the checkpoint
     * still wins by ~15%; at the 100 TB design point the copy would be
     * TB-scale, so recompute wins by construction). Callers whose output
-    * is corpus-grain pass corpusGrain = true to take the recompute shape
-    * — the r16 claim that recompute measured 19× there predates the
-    * Profile block-manager fix and was measuring eviction, not the plan.
+    * is corpus-grain pass corpusGrain = true to take the recompute shape.
     */
   def sortOnce(df: DataFrame, corpusGrain: Boolean = false)(keys: Column*): DataFrame =
     if (corpusGrain) df.orderBy(keys: _*)

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *
   * Same schemas, same value shapes and cardinalities as the driver tables
   * (events.ts is written as a µs timestamp_ntz — parquet timestamp[us] —
-  * matching the driver fixture since r14; `graft.ops.tbl` type-switches on
+  * matching the driver fixture; `graft.ops.tbl` type-switches on
   * the ts encoding so either generation reads identically). Every column
   * derives from xxhash64(salt, id): generation
   * is partition-independent and reproducible at any parallelism, with no
@@ -148,7 +148,7 @@ object DataGen {
         .cast("timestamp_ntz").as("l_shipdate")), "lineitem")
 
     // events: ts is a µs TIMESTAMP_NTZ (parquet timestamp[us], what the
-    // driver fixture ships as of r14 — it was timestamp[ns] through r12) —
+    // driver fixture ships; older fixtures carry timestamp[ns]) —
     // monotone in event_id over 30 days from 2024-01-01, with sub-step
     // jitter. The instant is computed in exact ns integer arithmetic and
     // floored to µs with `div` (a double division would lose precision: ns

@@ -24,7 +24,7 @@ object Profile {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Shuffle-partition sizing is per-SF, not per-core: at sf100 (600 M
     // lineitem) 32 partitions put ~19 M rows per sort-merge-join task and
-    // the UnsafeExternalSorter exhausts execution memory (measured r16);
+    // the UnsafeExternalSorter exhausts execution memory;
     // 256 keeps per-task state bounded while AQE coalesces the excess on
     // small inputs. Default stays the driver-contract 32; override with
     // SPARK_GRAFT_SHUFFLE at sf ≥ 100 (the same dial a real cluster sets

@@ -521,6 +521,9 @@ class SimilaritySpec extends SparkSpec {
 
   test("BottomKPairs: k smallest (dist,id), exact-dup dedup, partition-layout-free") {
     import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.types.{ArrayType, StructType}
+    def pairsType(ddl: String) = ArrayType(StructType.fromDDL(ddl), containsNull = false)
     // ties in dist (3,150)/(3,200), exact duplicates (the multi-table
     // collision case), and a below-bar straggler (9,50)
     val rows = Seq(
@@ -536,9 +539,49 @@ class SimilaritySpec extends SparkSpec {
     assert(got(2L) == Seq((1L, 1L)))
     // merge path: any partition layout gives the identical answer
     (2 to 7).foreach(p => assert(run(p) == got, s"layout $p diverged"))
+    assert(rows.groupBy("g").agg(graft.expr.BottomKPairs(col("qd"), col("id"), 3).as("tk"))
+      .schema("tk").dataType == pairsType("qd BIGINT NOT NULL, id BIGINT NOT NULL"))
+
+    // DOUBLE value: negatives, -0.0 beside 0.0, ±Infinity, NaN, value ties
+    // broken by key, and a null value and a null key (both skipped). The
+    // answer is Spark's own row_number() over the non-null rows; -0.0
+    // comes back as 0.0, and the doubles compare by bits so NaN matches.
+    val inf = Double.PositiveInfinity
+    val drows = Seq[(Long, Option[Double], Option[Long])](
+      (1L, Some(-1.0), Some(1L)), (1L, Some(0.0), Some(3L)),
+      (1L, Some(-0.0), Some(4L)), (1L, Some(-0.0), Some(2L)),
+      (1L, Some(5.0), Some(5L)), (1L, None, Some(6L)), (1L, Some(-9.0), None),
+      (2L, Some(inf), Some(1L)), (2L, Some(Double.NaN), Some(2L)),
+      (2L, Some(-inf), Some(3L)), (2L, Some(Double.NaN), Some(0L)),
+      (2L, Some(1e308), Some(4L)), (2L, Some(-1e308), Some(5L)),
+      (3L, Some(Double.NaN), Some(1L)), (3L, Some(-2.5), Some(2L)),
+      (4L, Some(-3.0), Some(1L)), (4L, Some(-3.0), Some(0L)),
+      (4L, Some(-4.0), Some(9L)), (4L, Some(-0.5), Some(2L)),
+      (4L, Some(-100.25), Some(7L)), (4L, Some(-3.0), Some(5L))
+    ).toDF("g", "v", "key")
+    def bits(v: Double) = java.lang.Double.doubleToLongBits(if (v == 0.0) 0.0 else v)
+    val want = drows.filter(col("v").isNotNull && col("key").isNotNull)
+      .withColumn("rn", row_number().over(Window.partitionBy("g").orderBy("v", "key")))
+      .filter(col("rn") <= 4)
+      .as[(Long, Double, Long, Int)].collect()
+      .groupBy(_._1).map { case (g, rs) =>
+        g -> rs.sortBy(_._4).map(r => (bits(r._2), r._3)).toSeq }
+    val dfold = (parts: Int) => drows.repartition(parts).groupBy("g")
+      .agg(graft.expr.BottomKPairs(col("v"), col("key"), 4).as("tk"))
+    assert(dfold(1).schema("tk").dataType ==
+      pairsType("qd DOUBLE NOT NULL, id BIGINT NOT NULL"))
+    (1 to 7).foreach { p =>
+      val gotD = dfold(p).as[(Long, Seq[(Double, Long)])].collect()
+        .map { case (g, tk) =>
+          g -> tk.map { case (v, key) =>
+            (java.lang.Double.doubleToLongBits(v), key) } }.toMap
+      assert(gotD == want, s"DOUBLE path, layout $p")
+    }
   }
 
-  test("knnGraphQuantized: dedup-first and fold-in-join strategies are result-identical") {
+  // one plan joins the codes onto a narrow collision stream
+  // (dedupFirst = true), the other carries them on the bucket rows
+  test("knnGraphQuantized: code-join and code-carrying plans agree") {
     import spark.implicits._
     val emb = graft.ops.tbl(spark, sfDir, "embeddings")
     def run(emb: org.apache.spark.sql.DataFrame, dedupFirst: Boolean) =
@@ -547,12 +590,12 @@ class SimilaritySpec extends SparkSpec {
         .as[(Long, Long, Long, Long)].collect().sorted.toSeq
     val graph = run(emb, true)
     assert(graph == run(emb, false),
-      "the strategy knob must change the plan shape, never the graph")
+      "the plan choice must change the plan shape, never the graph")
     // null cases: a null embedding (no buckets), and the first vector with
     // its last element dropped (it shares most of that vector's buckets,
     // but zip_with pads its shorter codes with nulls, so every distance it
     // has is null). Neither has a rank, so neither enters the graph, and
-    // the rest of the graph is unchanged on both strategies.
+    // the rest of the graph is unchanged on both plans.
     val first = emb.orderBy("vec_id").limit(1)
     val nextId = emb.agg(max("vec_id")).as[Long].head() + 1
     val withNulls = emb
